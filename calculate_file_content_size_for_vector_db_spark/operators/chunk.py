@@ -18,9 +18,12 @@ Two implementations:
    returning ``array<struct<chunk_text,start_index>>`` + posexplode.
    Arrow-batched: one Python roundtrip per partition batch, not per row.
 
-Scale notes: both are narrow transforms — no shuffle. Skew (one
-1,652-page doc among 15-page docs, reference README.md:20) is handled
-upstream by extracting per-page rows; AQE rebalances post-explode.
+Scale notes: both are narrow transforms — no shuffle. The PDF sizing
+path does not go through ``chunk_recursive``: ``sources.extract.
+extract_chunks`` calls ``split_text_recursive`` in the same Python loop
+that parses each file, so page text never makes a second Python hop. A
+file is parsed and split inside one task, so one huge file (the
+reference's 1,652-page doc, README.md:20) is one task's work.
 """
 
 from __future__ import annotations

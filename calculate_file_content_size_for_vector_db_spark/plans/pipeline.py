@@ -11,8 +11,9 @@ Two input modes:
 - ``DocumentPipeline`` — the fixture/`documents`-table mode: text is
   already extracted (the `documents` parquet stands in for
   post-extraction PDF text, FIXTURES.md A).
-- ``pdf_pipeline`` (sources/extract.py) — real binaryFile scan + pypdf,
-  optional dependency.
+- ``pdf_size_report`` — the CLI's mode: binaryFile scan of one folder,
+  then one fused extract + split pass (``sources.extract.extract_chunks``;
+  pypdf is an optional dependency).
 """
 
 from __future__ import annotations
@@ -22,10 +23,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from calculate_file_content_size_for_vector_db_spark.functions.text import preprocess_text
+from calculate_file_content_size_for_vector_db_spark.functions.text import basename, preprocess_text
 from calculate_file_content_size_for_vector_db_spark.operators import chunk as chunk_ops
 from calculate_file_content_size_for_vector_db_spark.operators import metrics
-from calculate_file_content_size_for_vector_db_spark.sources.io import read_table
+from calculate_file_content_size_for_vector_db_spark.sources.extract import extract_chunks
+from calculate_file_content_size_for_vector_db_spark.sources.io import read_table, scan_files
 
 
 @dataclass
@@ -78,3 +80,56 @@ class DocumentPipeline:
         (files, chunks, summary) as DataFrames instead of dict lists."""
         docs = read_table(self.spark, sf_dir, "documents")
         return self.per_file(docs), self.chunks(docs), self.summary(docs)
+
+
+@dataclass
+class SizeReport:
+    """One folder's size report, lazily built.
+
+    - ``per_file``: path, pages, file_size, chunks, text_size, ratio
+      (2 decimals), filename.
+    - ``summary``: the CSV table (filename, file_size, text_size, chunks,
+      ratio) with one row per file plus SUM TOTAL, built on ``per_file``.
+      It rolls up on ``path``, so same-named files in different
+      subfolders stay separate rows.
+
+    Each action recomputes from the scan; a caller that reads a frame
+    more than once persists it (the CLI does, ``cli._cached``).
+    """
+
+    per_file: DataFrame
+    summary: DataFrame
+
+
+def pdf_size_report(
+    spark: SparkSession,
+    folder: str,
+    chunk_size: int = chunk_ops.DEFAULT_CHUNK_SIZE,
+    chunk_overlap: int = 0,
+    file_type: str = ".pdf",
+) -> SizeReport:
+    """The reference's process_files (pdf_reader.py:505-546) over one
+    folder of files: scan -> fused extract + split -> preprocess ->
+    per-file agg -> rollup. Raises at once when the folder is missing
+    (the scan lists files eagerly); nothing else runs until an action.
+    """
+    files = scan_files(spark, folder, extension=file_type)
+    chunked = extract_chunks(files, chunk_size, chunk_overlap).withColumn(
+        "chunk_length", F.length(preprocess_text("chunk_text")).cast("int")
+    )
+    per_file = (
+        chunked.groupBy("path")
+        .agg(
+            F.first("n_pages").alias("pages"),
+            F.first("file_size").alias("file_size"),
+            F.count("*").alias("chunks"),
+            F.sum("chunk_length").cast("long").alias("text_size"),
+        )
+        .withColumn("ratio", metrics.ratio("file_size", "text_size", 2))
+        .withColumn("filename", basename("path"))
+    )
+    # the SUM TOTAL label has no "/", so basename keeps it as it is
+    summary = metrics.rollup_summary(per_file, name_col="path").select(
+        basename("path").alias("filename"), "file_size", "text_size", "chunks", "ratio"
+    )
+    return SizeReport(per_file, summary)

@@ -1,12 +1,22 @@
-"""SRC3: PDF -> per-page text, as distributed mapInPandas plumbing
+"""SRC3: PDF -> text, as distributed mapInPandas plumbing
 (SURVEY.md section 2.1 SRC3; reference pdf_reader.py:442-443 uses
 langchain's PyPDFLoader driver-side per process).
 
-Spark-first shape: the `binaryFile` scan yields (path, content bytes);
-``extract_pages`` fans each file out to one row PER PAGE. That page-row
-granularity is what kills the reference's skew problem (one 1,652-page
-file pinning a worker, README.md:20): downstream chunking/aggregation
-re-parallelizes over pages, and AQE rebalances the post-extract shuffle.
+Spark-first shape: the `binaryFile` scan yields (path, content bytes)
+and one Python loop per partition parses each file. Two outputs share
+that loop:
+
+- ``extract_pages`` emits one row per page (path, page_number,
+  page_text, n_pages, file_size);
+- ``extract_chunks`` also runs the recursive split on every page in the
+  same loop and emits one row per chunk (path, n_pages, file_size,
+  chunk_text). This is the sizing path: page text never crosses Arrow
+  into the JVM and back into a second Python worker for splitting.
+
+A file is parsed, and its pages split, inside one task either way: PDFs
+are not splittable mid-file, so one huge file (the reference's
+1,652-page outlier, README.md:20) is one task's work. Parallelism comes
+from spreading files over tasks (``partitioning.spread``).
 
 Parsing backend: pypdf when importable (not in this container). The
 fallback is a minimal parser for the uncompressed single-stream PDFs
@@ -19,7 +29,7 @@ from __future__ import annotations
 
 import io
 import re
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -29,6 +39,11 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+)
+
+from calculate_file_content_size_for_vector_db_spark.operators.chunk import (
+    DEFAULT_CHUNK_SIZE,
+    split_text_recursive,
 )
 
 try:
@@ -45,6 +60,15 @@ PAGE_SCHEMA = StructType(
         StructField("page_text", StringType()),
         StructField("n_pages", IntegerType()),
         StructField("file_size", LongType()),
+    ]
+)
+
+CHUNK_SCHEMA = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("n_pages", IntegerType()),
+        StructField("file_size", LongType()),
+        StructField("chunk_text", StringType()),
     ]
 )
 
@@ -121,23 +145,55 @@ def extract_pdf_text(data: bytes) -> list[str]:
     return _extract_pages_fallback(data)
 
 
-def extract_pages(files: DataFrame, path_col: str = "path", content_col: str = "content") -> DataFrame:
-    """binaryFile rows -> one row per page (path, page_number 0-based,
-    page_text, n_pages, file_size). Arrow-batched per partition."""
+def _map_files(
+    files: DataFrame,
+    schema: StructType,
+    rows_for: Callable[[str, list[str], int], Iterable[tuple]],
+    path_col: str,
+    content_col: str,
+) -> DataFrame:
+    """Parse every file once and emit ``rows_for(path, pages, file_size)``;
+    one Arrow-batched Python loop per partition."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf_batch in batches:
             rows = []
             for path, content in zip(pdf_batch[path_col], pdf_batch[content_col]):
                 data = bytes(content)
-                pages = extract_pdf_text(data)
-                for i, text in enumerate(pages):
-                    rows.append((path, i, text, len(pages), len(data)))
-            yield pd.DataFrame(rows, columns=[f.name for f in PAGE_SCHEMA.fields])
+                rows.extend(rows_for(path, extract_pdf_text(data), len(data)))
+            yield pd.DataFrame(rows, columns=schema.fieldNames())
 
     from calculate_file_content_size_for_vector_db_spark.partitioning import spread
 
-    return spread(files.select(path_col, content_col)).mapInPandas(_extract, PAGE_SCHEMA)
+    return spread(files.select(path_col, content_col)).mapInPandas(_parse, schema)
+
+
+def extract_pages(files: DataFrame, path_col: str = "path", content_col: str = "content") -> DataFrame:
+    """binaryFile rows -> one row per page (path, page_number 0-based,
+    page_text, n_pages, file_size). Arrow-batched per partition."""
+
+    def _pages(path: str, pages: list[str], size: int) -> Iterator[tuple]:
+        return ((path, i, text, len(pages), size) for i, text in enumerate(pages))
+
+    return _map_files(files, PAGE_SCHEMA, _pages, path_col, content_col)
+
+
+def extract_chunks(
+    files: DataFrame, chunk_size: int = DEFAULT_CHUNK_SIZE, chunk_overlap: int = 0
+) -> DataFrame:
+    """binaryFile rows -> one row per chunk (path, n_pages, file_size,
+    chunk_text): ``extract_pages`` then ``chunk_recursive`` on page_text,
+    fused into one Python pass. A file whose pages hold no text emits no
+    rows, as a page with no chunks does in ``chunk_recursive``."""
+
+    def _chunks(path: str, pages: list[str], size: int) -> Iterator[tuple]:
+        return (
+            (path, len(pages), size, chunk)
+            for text in pages
+            for chunk in split_text_recursive(text, chunk_size, chunk_overlap)
+        )
+
+    return _map_files(files, CHUNK_SCHEMA, _chunks, "path", "content")
 
 
 def text_to_pdf_udf(first_page_chars: int = 100):

@@ -81,3 +81,34 @@ def test_corrupt_pdf_among_good_files(spark):
     out = extract_pages(files).collect()
     assert {r.path for r in out} == {"good.pdf"}
     assert out[0].page_text == "fine text"
+
+
+def test_extract_chunks_matches_pages_then_chunk_recursive(spark):
+    """The fused extract + split pass emits exactly the chunk rows of
+    extract_pages followed by chunk_recursive on page_text: golden
+    bytes, corrupt/empty files, a multi-page file with a page far over
+    chunk_size (and one unbroken run that falls back to the character
+    separator), with overlap and without."""
+    from calculate_file_content_size_for_vector_db_spark.operators.chunk import chunk_recursive
+    from calculate_file_content_size_for_vector_db_spark.sources.extract import extract_chunks
+
+    long_page = " ".join(f"word{i}" for i in range(120)) + "\n\nnext para " + "x" * 90
+    rows = [
+        ("golden.pdf", GOLDEN_PDF),
+        ("multi.pdf", make_simple_pdf(["short", long_page, "", "tail page"])),
+        ("corrupt.pdf", b"%PDF-1.4\ngarbage \xff\xfe truncated"),
+        ("empty.pdf", b""),
+    ]
+    files = spark.createDataFrame(rows, "path string, content binary")
+    for size, overlap in [(40, 10), (64, 0)]:
+        fused = sorted(tuple(r) for r in extract_chunks(files, size, overlap).collect())
+        staged = chunk_recursive(
+            extract_pages(files),
+            size,
+            overlap,
+            text_col="page_text",
+            keep_cols=["path", "n_pages", "file_size"],
+        ).select("path", "n_pages", "file_size", "chunk_text")
+        assert fused == sorted(tuple(r) for r in staged.collect()), (size, overlap)
+        assert {p for p, *_ in fused} == {"golden.pdf", "multi.pdf"}
+        assert sum(p == "multi.pdf" for p, *_ in fused) > 4
