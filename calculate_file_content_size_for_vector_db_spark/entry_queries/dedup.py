@@ -535,8 +535,10 @@ FROM reach GROUP BY src
 """,
 )
 def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative connected-components clustering of near-duplicates
-    (oracle: transitive closure via recursive CTE)."""
+    """Connected-components clustering of near-duplicates by star
+    contraction (dedup.neardup_clusters; the scale ladder showed
+    min-label propagation failing to converge at 200k docs). Oracle:
+    transitive closure via recursive CTE."""
     from calculate_file_content_size_for_vector_db_spark.operators.dedup import neardup_clusters
 
     return neardup_clusters(_docs(spark, sf_dir), threshold=0.5)
@@ -591,17 +593,17 @@ def dedup_survivors_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_clusters_star", None)  # oracle assigned below — identical to dedup_clusters
 def dedup_clusters_star_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The deployment-scale CC path under the SAME oracle as
-    dedup_clusters: large-star/small-star contraction (dedup.
-    star_components, O(log^2 n) rounds on any structure) must produce
-    exactly the label-propagation fixpoint — component-min labels —
-    so the recursive-CTE transitive closure verifies both. This row
-    exists because the scale ladder showed pointer jumping failing to
-    converge on a 200k-doc graph; the replacement algorithm gets a
-    driver-checked correctness row, not just unit tests."""
+    """Star-contraction CC (dedup.star_components, large-star/small-
+    star, O(log^2 n) rounds on any structure) under dedup_clusters'
+    oracle verbatim: component-min labels, verified by the
+    recursive-CTE transitive closure. Star contraction replaced
+    min-label propagation after the scale ladder showed pointer
+    jumping failing to converge on a 200k-doc graph; it is now the
+    only CC path, so this row runs the same plan as dedup_clusters
+    and keeps its registered name for the driver's inventory."""
     from calculate_file_content_size_for_vector_db_spark.operators.dedup import neardup_clusters
 
-    return neardup_clusters(_docs(spark, sf_dir), threshold=0.5, method="star")
+    return neardup_clusters(_docs(spark, sf_dir), threshold=0.5)
 
 
 REGISTRY["dedup_clusters_star"].oracle = REGISTRY["dedup_clusters"].oracle
@@ -685,7 +687,7 @@ def dedup_clusters_append_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_sh = shingle_sets(batch).persist()
     batch_bands = bands_from_shingle_sets(batch_sh).persist()
     stored = neardup_clusters(
-        corpus, threshold=0.5, method="star", bands_df=corpus_bands, shingles_df=corpus_sh
+        corpus, threshold=0.5, bands_df=corpus_bands, shingles_df=corpus_sh
     )
     cross = incremental_neardup_pairs(
         batch,
@@ -771,9 +773,8 @@ def dedup_takedown_recluster_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from calculate_file_content_size_for_vector_db_spark.operators.dedup import (
         bands_from_shingle_sets,
         cluster_takedown,
-        minhash_lsh_pairs,
+        neardup_clusters,
         shingle_sets,
-        star_components,
     )
 
     docs = _docs(spark, sf_dir)
@@ -793,17 +794,12 @@ def dedup_takedown_recluster_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands_from_shingle_sets(
         spark.read.parquet(f"{store}/shingles")
     ).write.parquet(f"{store}/bands")
-    pairs = minhash_lsh_pairs(
+    neardup_clusters(
         docs,
         0.5,
         bands_df=spark.read.parquet(f"{store}/bands"),
         shingles_df=spark.read.parquet(f"{store}/shingles"),
-    )
-    star_components(
-        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    ).select(F.col("node").alias("doc_id"), "cluster_id").write.parquet(
-        f"{store}/labels"
-    )
+    ).write.parquet(f"{store}/labels")
     takedown = docs.where(F.col("doc_id") % _TAKEDOWN_MOD == 0).select("doc_id")
     return cluster_takedown(
         spark.read.parquet(f"{store}/labels"),
@@ -884,16 +880,15 @@ def dedup_upsert_relabel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from calculate_file_content_size_for_vector_db_spark.operators.dedup import (
         bands_from_shingle_sets,
         dedup_upsert,
-        minhash_lsh_pairs,
+        neardup_clusters,
         shingle_sets,
-        star_components,
     )
 
     docs = _docs(spark, sf_dir)
     store = tempfile.mkdtemp(prefix="dedup_upsert_")
     # Build the band/shingle stores FIRST, then cluster from the
-    # stored artifacts (minhash_lsh_pairs' bands_df/shingles_df hook)
-    # instead of neardup_clusters' from-text path: the signature and
+    # stored artifacts (neardup_clusters' bands_df/shingles_df hook)
+    # instead of its from-text path: the signature and
     # shingle passes run ONCE instead of three times, labels are
     # byte-identical (same bands -> same pairs -> same star fixpoint;
     # measured 8.7s -> 2.8s for the labels leg at sf0.01, PLANS.md
@@ -908,14 +903,9 @@ def dedup_upsert_relabel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).write.parquet(f"{store}/bands_v1")
     stored_bands = spark.read.parquet(f"{store}/bands_v1")
     stored_shingles = spark.read.parquet(f"{store}/shingles_v1")
-    pairs = minhash_lsh_pairs(
+    neardup_clusters(
         docs, 0.5, bands_df=stored_bands, shingles_df=stored_shingles
-    )
-    star_components(
-        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    ).select(F.col("node").alias("doc_id"), "cluster_id").write.parquet(
-        f"{store}/labels_v1"
-    )
+    ).write.parquet(f"{store}/labels_v1")
     changed = docs.where(F.col("doc_id") % _TAKEDOWN_MOD == 0).select(
         "doc_id", F.concat(F.col("text"), F.lit(" spark spark hash")).alias("text")
     )

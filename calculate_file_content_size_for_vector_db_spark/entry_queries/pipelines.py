@@ -1533,9 +1533,8 @@ def upsert_face_relabel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from calculate_file_content_size_for_vector_db_spark.operators.dedup import (
         bands_from_shingle_sets,
-        minhash_lsh_pairs,
+        neardup_clusters,
         shingle_sets,
-        star_components,
     )
     from calculate_file_content_size_for_vector_db_spark.streaming.upsert import upsert_face
 
@@ -1552,17 +1551,12 @@ def upsert_face_relabel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands_from_shingle_sets(
         spark.read.parquet(f"{store}/shingles")
     ).write.parquet(f"{store}/bands")
-    pairs = minhash_lsh_pairs(
+    neardup_clusters(
         docs,
         0.5,
         bands_df=spark.read.parquet(f"{store}/bands"),
         shingles_df=spark.read.parquet(f"{store}/shingles"),
-    )
-    star_components(
-        pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    ).select(F.col("node").alias("doc_id"), "cluster_id").write.parquet(
-        f"{store}/labels"
-    )
+    ).write.parquet(f"{store}/labels")
     changed = docs.where(F.col("doc_id") % 13 == 0).select(
         "doc_id", F.concat(F.col("text"), F.lit(" spark spark hash")).alias("text")
     )

@@ -715,9 +715,7 @@ def leakage_safe_split(
     threshold: float = 0.5,
     text_col: str = "text",
     key: str = "doc_id",
-    pointer_jumping: bool = False,
     max_bucket_size: int | None = None,
-    method: str = "label",
 ) -> DataFrame:
     """(key, cluster_id, split): train/test assignment where every
     near-duplicate CLUSTER lands on one side — the leakage guard a
@@ -731,24 +729,18 @@ def leakage_safe_split(
     their every member) test, reproducible with no RNG and stable
     under re-runs as long as ids are stable.
 
-    Plan: the near-dup CC labeling (bounded rounds — use
-    ``method="star"`` for unbounded-diameter / adversarial-id corpora,
-    where it is the O(log^2 n)-round guarantee pointer jumping only
-    approximates) + one left join back onto the corpus + a narrow
-    projection. Nothing beyond the clustering itself is more than
-    linear."""
+    Plan: the near-dup CC labeling (neardup_clusters: star
+    contraction, O(log^2 n) rounds on any graph structure — the scale
+    ladder showed min-label propagation, even with pointer jumping,
+    failing to converge at 200k docs) + one left join back onto the
+    corpus + a narrow projection. Nothing beyond the clustering itself
+    is more than linear."""
     from calculate_file_content_size_for_vector_db_spark.operators.dedup import (
         neardup_clusters,
     )
 
     clusters = neardup_clusters(
-        df,
-        threshold,
-        text_col,
-        key,
-        pointer_jumping=pointer_jumping,
-        max_bucket_size=max_bucket_size,
-        method=method,
+        df, threshold, text_col, key, max_bucket_size=max_bucket_size
     )
     cluster = F.coalesce(F.col("cluster_id"), F.col(key))
     return (

@@ -815,9 +815,7 @@ def line_dedup_rewrite(
     )
 
 
-def star_components(
-    edges: DataFrame, max_rounds: int | None = None
-) -> DataFrame:
+def star_components(edges: DataFrame) -> DataFrame:
     """(node, cluster_id): connected components by alternating
     large-star / small-star contraction (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC 2014) — O(log^2 n)
@@ -834,22 +832,26 @@ def star_components(
     itself) to that minimum. Both are one groupBy-min plus one keyed
     join per round — edges re-key but never multiply (outputs are
     distinct subsets of neighbor links). The fixpoint is a forest of
-    stars rooted at each component's minimum id; rounds
-    localCheckpoint the edge set (each op references it 2-3x — the
-    exponential-plan lesson from the label loop applies here too).
+    stars rooted at each component's minimum id, so every node is
+    labeled with its component's minimum id.
+
+    Every round localCheckpoints the edge set: each op references it
+    2-3 times, so with persist() (which caches the data but keeps the
+    logical plan) the plan grows exponentially in rounds and the
+    driver OOMs rendering it (the 200k-doc ladder tier); the
+    checkpoint materializes the round and cuts lineage to an RDD scan.
 
     ``edges``: (src, dst) pairs, either direction, self-loops ignored.
     Output covers every node incident to an edge; roots label
     themselves.
 
-    ``max_rounds``: convergence cap. The default (None) is sized from
-    the node count as max(30, ceil(log2 n)^2) — the theoretical bound
-    is O(log^2 n) alternations, so a fixed 30 could be legitimately
-    exceeded by a huge adversarial graph (log2(10^9)^2 ~ 900) even
-    though OBSERVED convergence is ~2*log2(n) (ladder graphs, 200k
-    nodes: 9 alternations). Callers who know their structure can pass
-    a tighter cap; hitting the derived cap still raises, because at
-    that point the edge set is cycling, not converging.
+    Convergence cap: max(30, ceil(log2 n)^2) rounds for n nodes — the
+    theoretical bound is O(log^2 n) alternations, so a fixed 30 could
+    be legitimately exceeded by a huge adversarial graph
+    (log2(10^9)^2 ~ 900) even though OBSERVED convergence is
+    ~2*log2(n) (ladder graphs, 200k nodes: 9 alternations). Hitting
+    the cap raises, because at that point the edge set is cycling, not
+    converging.
     """
     import math
     E = (
@@ -864,9 +866,8 @@ def star_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if max_rounds is None:
-        n = all_nodes.count()  # already checkpointed — a cheap metadata-ish scan
-        max_rounds = max(30, math.ceil(math.log2(max(n, 2))) ** 2)
+    n = all_nodes.count()  # already checkpointed — a cheap metadata-ish scan
+    round_cap = max(30, math.ceil(math.log2(max(n, 2))) ** 2)
 
     def _large(e: DataFrame) -> DataFrame:
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -905,7 +906,7 @@ def star_components(
         )
 
     n_prev = None
-    for _ in range(max_rounds):
+    for _ in range(round_cap):
         new_e = _small(_large(E)).localCheckpoint(eager=True)
         # Convergence = set equality. Both frames are distinct sets
         # (initial E and every _small output end in .distinct()), so
@@ -926,11 +927,10 @@ def star_components(
             break
     else:
         raise RuntimeError(
-            f"star_components did not converge in {max_rounds} rounds "
+            f"star_components did not converge in {round_cap} rounds "
             "(cap = max(30, ceil(log2 n)^2), at or above the theoretical "
             "O(log^2 n) alternation bound) — the edge set is cycling, not "
-            "converging; pass a larger max_rounds only if you have reason "
-            "to believe the graph is legitimately beyond the bound."
+            "converging."
         )
     children = E.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
     return (
@@ -1248,59 +1248,35 @@ def neardup_clusters(
     threshold: float = 0.5,
     text_col: str = "text",
     key: str = "doc_id",
-    max_iterations: int = 20,
-    pointer_jumping: bool = False,
     max_bucket_size: int | None = None,
-    method: str = "label",
+    method: str = "star",
     bands_df: DataFrame | None = None,
     shingles_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Connected components over the near-dup pair graph: every doc in
-    a duplicate cluster gets the cluster's smallest doc id as label.
+    """(key, cluster_id): connected components over the near-dup pair
+    graph — every doc in a duplicate cluster gets the cluster's
+    smallest doc id as label; docs in no verified pair are absent.
+
+    Plan: minhash_lsh_pairs, then star_components (large-star/small-
+    star contraction, O(log^2 n) rounds on ANY graph structure). Star
+    contraction is the only CC algorithm because the scale ladder
+    showed min-label propagation failing at 200k docs: its rounds grow
+    with the pair graph's diameter (chained near-dups — boilerplate
+    drift, mirror chains — make that diameter proportional to the
+    chain length), and even with pointer jumping it left 1105 labels
+    moving after 20 rounds under adversarial id placement. A cap hit
+    raises instead of returning a partial labeling that would split
+    one true cluster.
 
     ``bands_df`` / ``shingles_df`` pass through to minhash_lsh_pairs'
     precomputed-artifact hooks (callers that also feed an incremental
     pair join from the same corpus artifacts share one signature pass).
 
-    ``method="star"`` delegates to star_components (large-star/small-
-    star contraction, O(log^2 n) rounds on ANY structure) — the
-    deployment-scale path after the ladder showed pointer jumping's
-    doubling argument fails under adversarial id placement (it is a
-    heuristic, not a bound: the min id of a propagation window can sit
-    mid-window, pointing nowhere new). Identical output — both
-    fixpoints are component-min labels — so the oracle is unchanged.
-
-    Iterative min-label propagation (the standard distributed CC
-    algorithm): labels start as self, each round every node takes the
-    min label in its neighborhood, stop at fixpoint. Rounds needed =
-    graph diameter (near-dup clusters are tiny, so 2-4 in practice);
-    each round is one join + one aggregation. The driver-side loop only
-    carries a row COUNT per iteration — no data is collected.
-
-    Non-convergence RAISES rather than returning a silently-partial
-    labeling (VERDICT r06 item 6): a 100-TB crawl with CHAINED
-    near-dups (doc_i ~ doc_{i+1} for thousands of i — boilerplate
-    drift, mirror chains) has pair-graph diameter proportional to the
-    chain length, and exceeding ``max_iterations`` there would split
-    one true cluster into several, under-deduplicating with no signal.
-    Wrong-but-loud beats wrong-but-quiet for a dedup gate; callers on
-    such corpora should raise ``max_iterations`` (cost is one
-    join+agg per round) or set ``pointer_jumping=True``.
-
-    ``pointer_jumping``: after each neighborhood-min step, every node
-    additionally adopts its LABEL'S label (one extra keyed self-join
-    per round). The label forest's depth then HALVES as propagation
-    distance doubles, so convergence needs O(log diameter) rounds
-    instead of O(diameter) — the standard Shiloach-Vishkin shortcut,
-    same O(log n)-round class as large-star/small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) without its re-edging phase; edges still never move.
-    Output is identical (labels only ever jump to an id already
-    labeling a same-component node, and the fixpoints coincide:
-    component-min self-labels), so the oracle is unchanged — pinned by
-    tests. OFF by default to keep the registered query's pinned plan;
-    the unbounded-diameter deployment turns it on.
+    ``method``: only ``"star"`` is accepted, for callers that still
+    name it; any other value raises ValueError.
     """
+    if method != "star":
+        raise ValueError(f"neardup_clusters: method must be 'star', got {method!r}")
     pairs = minhash_lsh_pairs(
         df,
         threshold,
@@ -1310,106 +1286,9 @@ def neardup_clusters(
         bands_df=bands_df,
         shingles_df=shingles_df,
     )
-    if method == "star":
-        return star_components(
-            pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-        ).select(F.col("node").alias(key), "cluster_id")
-    edges = (
+    return star_components(
         pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-        .unionByName(pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
-    ).persist()
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .persist()
-    )
-    changed = -1
-    prev_sum = None
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = labels.join(
-            neighbor_min, labels.node == neighbor_min.src, "left"
-        ).select(
-            "node",
-            F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
-        )
-        if pointer_jumping:
-            # label := label(label) — one keyed self-join; halves the
-            # forest depth every round (propagation distance doubles)
-            lab2 = new_labels.select(
-                F.col("node").alias("pnode"), F.col("label").alias("plabel")
-            )
-            new_labels = new_labels.join(
-                lab2, new_labels.label == lab2.pnode, "left"
-            ).select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("plabel"), F.col("label"))
-                ).alias("label"),
-            )
-        # localCheckpoint, not persist: persist() caches the DATA but
-        # keeps the LOGICAL plan, and each round's plan embeds the
-        # previous round's 2-3 times (neighbor join + optional pointer
-        # jump), so plan size grows exponentially in rounds — by ~round
-        # 10 the driver OOMs merely RENDERING the plan string for the
-        # cache name. localCheckpoint materializes the round AND cuts
-        # lineage to an RDD scan, the standard iterative-graph move;
-        # on a cluster, set a checkpoint dir + .checkpoint() for
-        # executor-loss tolerance on long jobs.
-        new_labels = new_labels.localCheckpoint(eager=True)
-        # Convergence via the label-sum invariant: labels are MONOTONE
-        # non-increasing per node (every update is least(old, ...)) over
-        # a fixed node set, so the exact label sum strictly decreases
-        # unless NO label moved — one shuffle-free aggregate over the
-        # checkpointed frame replaces the old per-round keyed self-join
-        # + filter + count (two exchanges per round, guide §2.4).
-        # decimal(38,0) keeps the sum exact at any corpus size (1e9
-        # rows x 1e18 ids overflows a long).
-        new_sum = new_labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        if prev_sum is None:
-            prev_sum = labels.agg(
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-            ).collect()[0]["s"]
-        changed = 0 if new_sum == prev_sum else 1
-        prev_sum = new_sum
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        # Failure path only (ADVICE r15): recover the how-close-was-it
-        # diagnostic the sum-invariant fast path no longer tracks — one
-        # keyed pass comparing the last two checkpointed label frames.
-        prev = labels  # labels still points at the last round's frame
-        nm = (
-            edges.join(prev, edges.dst == prev.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        still_moving = (
-            prev.join(nm, prev.node == nm.src, "left")
-            .where(F.coalesce(F.col("nmin"), F.col("label")) < F.col("label"))
-            .count()
-        )
-        labels.unpersist()
-        edges.unpersist()
-        raise RuntimeError(
-            f"neardup_clusters: min-label propagation did not converge in "
-            f"{max_iterations} rounds ({still_moving} labels still moving) — "
-            "the near-dup graph has diameter > max_iterations (chained "
-            "near-dups?). Raise max_iterations, or use star-contraction CC "
-            "for unbounded-diameter graphs."
-        )
-    out = labels.select(F.col("node").alias(key), F.col("label").alias("cluster_id"))
-    edges.unpersist()
-    return out
+    ).select(F.col("node").alias(key), "cluster_id")
 
 
 def dedup_survivors(
@@ -1418,12 +1297,13 @@ def dedup_survivors(
     text_col: str = "text",
     key: str = "doc_id",
     max_bucket_size: int | None = None,
-    method: str = "label",
 ) -> DataFrame:
     """(key): the KEPT document ids after near-dup collapse — every doc
     except cluster members that aren't their cluster's minimum id.
     This is the materialized view a training pipeline actually writes
-    downstream of LSH + connected components.
+    downstream of LSH + connected components (neardup_clusters: star
+    contraction, the one CC path, because the scale ladder showed
+    min-label propagation failing to converge at 200k docs).
 
     Plan: on a typical corpus the loser set is small (only docs in
     some near-dup cluster, minus one keeper each) and AQE broadcasts
@@ -1434,7 +1314,7 @@ def dedup_survivors(
     where AQE's size check falls back to a shuffled anti join.
     """
     clusters = neardup_clusters(
-        df, threshold, text_col, key, max_bucket_size=max_bucket_size, method=method
+        df, threshold, text_col, key, max_bucket_size=max_bucket_size
     )
     losers = clusters.where(F.col("cluster_id") != F.col(key)).select(key)
     return df.select(key).join(losers, key, "left_anti")

@@ -586,11 +586,11 @@ def _bpe_train_reprs(
     the vocab-sized repr table: the rewrite references the previous
     round's reprs AND the best-pair row (itself derived from those
     reprs), so a lazy chain would nest the plan exponentially in
-    rounds — the neardup_clusters lesson applied at design time.
+    rounds — the star_components lesson applied at design time.
 
     The winning pair is fetched to the driver as ONE scalar row per
-    round (the label-propagation convergence-probe pattern — a 5-field
-    scalar, not data): the rewrite then runs on literal search/replace
+    round (a convergence-probe-style driver scalar — 5 fields, not
+    data): the rewrite then runs on literal search/replace
     strings with no per-round broadcast build, and the round costs one
     job (pair agg + argmax) plus the repr checkpoint, instead of the
     pre-r16 three (best checkpoint, emptiness probe, broadcast-build +

@@ -490,47 +490,17 @@ def test_dup_rate_by_source_within_source_semantics(spark):
 def test_neardup_clusters_chained_corpus_guard_and_convergence(spark):
     """VERDICT r06 item 6: a CHAINED near-dup corpus (rolling word
     windows — doc_i ~ doc_{i+1..i+3}, nothing farther) has pair-graph
-    diameter ~n/3, so min-label propagation must either converge or
-    RAISE — never return a silently-partial labeling that splits one
-    true cluster."""
-    import pytest
-
+    diameter ~n/3; clustering must still land every doc in ONE
+    cluster, never a silently-partial labeling that splits it."""
     from calculate_file_content_size_for_vector_db_spark.operators.dedup import neardup_clusters
 
     words = [f"w{i:03d}" for i in range(200)]
-    L, s, n = 30, 3, 9  # J(offset d) = (L-s*d-2)/(L+s*d-2): >=0.5 iff d<=3
+    L, s, n = 30, 3, 15  # J(offset d) = (L-s*d-2)/(L+s*d-2): >=0.5 iff d<=3
     rows = [(i, " ".join(words[i * s : i * s + L])) for i in range(n)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        neardup_clusters(df, threshold=0.5, max_iterations=1)
-    out = neardup_clusters(df, threshold=0.5, max_iterations=20).collect()
-    assert len(out) == n  # every doc is in some pair, so every doc labeled
+    out = neardup_clusters(df, threshold=0.5).collect()
+    assert sorted(r.doc_id for r in out) == list(range(n))  # every doc labeled
     assert {r.cluster_id for r in out} == {0}  # ONE chain-connected cluster
-
-
-def test_neardup_clusters_pointer_jumping_fewer_rounds_same_output(spark):
-    """pointer_jumping=True (label := label(label) each round) must
-    converge in O(log diameter) rounds — on the 15-doc chain it lands
-    in 3 where plain min-label still raises at 4 — and produce the
-    IDENTICAL labeling (fixpoints coincide: component-min self-labels),
-    so the registered query's oracle is unchanged."""
-    import pytest
-
-    from calculate_file_content_size_for_vector_db_spark.operators.dedup import neardup_clusters
-
-    words = [f"w{i:03d}" for i in range(200)]
-    L, s, n = 30, 3, 15
-    rows = [(i, " ".join(words[i * s : i * s + L])) for i in range(n)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        neardup_clusters(df, threshold=0.5, max_iterations=4)
-    fast = neardup_clusters(
-        df, threshold=0.5, max_iterations=3, pointer_jumping=True
-    ).collect()
-    slow = neardup_clusters(df, threshold=0.5, max_iterations=20).collect()
-    as_map = lambda rs: {r.doc_id: r.cluster_id for r in rs}
-    assert as_map(fast) == as_map(slow)
-    assert set(as_map(fast).values()) == {0}
 
 
 def test_dedup_pair_quality_matrix_semantics(spark):
@@ -750,7 +720,9 @@ def test_cluster_append_empty_batch_is_identity(spark):
     assert got == {10: 10, 20: 10, 50: 50}
 
 
-def test_neardup_clusters_star_equals_label_method(spark):
+def test_neardup_clusters_component_min_labels(spark):
+    import pytest
+
     rows = []
     for i in range(12):
         rows.append((i, f"unique filler number {i} one two three {i}"))
@@ -759,16 +731,13 @@ def test_neardup_clusters_star_equals_label_method(spark):
     rows[8] = (8, rows[2][1])
     rows[9] = (9, rows[3][1])
     df = _docs(spark, rows)
-    lab = {
+    got = {
         (r.doc_id, r.cluster_id)
         for r in dedup.neardup_clusters(df, threshold=0.5).collect()
     }
-    star = {
-        (r.doc_id, r.cluster_id)
-        for r in dedup.neardup_clusters(df, threshold=0.5, method="star").collect()
-    }
-    assert star == lab
-    assert {(2, 2), (5, 2), (8, 2), (3, 3), (9, 3)} <= star
+    assert got == {(2, 2), (5, 2), (8, 2), (3, 3), (9, 3)}
+    with pytest.raises(ValueError, match="method"):
+        dedup.neardup_clusters(df, threshold=0.5, method="label")
 
 
 def test_neardup_clusters_precomputed_artifact_hooks(spark):
@@ -782,14 +751,14 @@ def test_neardup_clusters_precomputed_artifact_hooks(spark):
     df = _docs(spark, rows)
     inline = {
         (r.doc_id, r.cluster_id)
-        for r in dedup.neardup_clusters(df, threshold=0.5, method="star").collect()
+        for r in dedup.neardup_clusters(df, threshold=0.5).collect()
     }
     bands = dedup.minhash_bands(dedup.minhash_signature(df))
     sh = dedup.shingle_sets(df)
     hooked = {
         (r.doc_id, r.cluster_id)
         for r in dedup.neardup_clusters(
-            df, threshold=0.5, method="star", bands_df=bands, shingles_df=sh
+            df, threshold=0.5, bands_df=bands, shingles_df=sh
         ).collect()
     }
     assert hooked == inline
@@ -961,7 +930,7 @@ def _takedown_fixture(spark, rows, takedown_ids):
     """Build (stored labels, takedown, bands, shingles) the way the
     registered query does — from the corpus itself."""
     docs = _docs(spark, rows)
-    stored = dedup.neardup_clusters(docs, threshold=0.5, method="star")
+    stored = dedup.neardup_clusters(docs, threshold=0.5)
     bands = dedup.minhash_bands(dedup.minhash_signature(docs))
     sh = dedup.shingle_sets(docs)
     td = spark.createDataFrame([(i,) for i in takedown_ids], "doc_id long")
@@ -1019,7 +988,7 @@ def test_cluster_takedown_bridge_removal_splits_and_equals_rebuild(spark):
     remaining = docs.where(F.col("doc_id") != 101)
     rebuild = {
         (r.doc_id, r.cluster_id)
-        for r in dedup.neardup_clusters(remaining, threshold=0.5, method="star").collect()
+        for r in dedup.neardup_clusters(remaining, threshold=0.5).collect()
     }
     assert got == rebuild
 
@@ -1043,7 +1012,7 @@ def test_cluster_takedown_equals_rebuild_on_mixed_corpus(spark):
     remaining = docs.join(td, "doc_id", "left_anti")
     rebuild = {
         (r.doc_id, r.cluster_id)
-        for r in dedup.neardup_clusters(remaining, threshold=0.5, method="star").collect()
+        for r in dedup.neardup_clusters(remaining, threshold=0.5).collect()
     }
     assert got == rebuild
 
@@ -1170,7 +1139,7 @@ def test_cluster_takedown_whole_cluster_vanishes(spark):
 
 def _upsert_fixture(spark, rows):
     docs = _docs(spark, rows)
-    stored = dedup.neardup_clusters(docs, threshold=0.5, method="star")
+    stored = dedup.neardup_clusters(docs, threshold=0.5)
     bands = dedup.minhash_bands(dedup.minhash_signature(docs))
     sh = dedup.shingle_sets(docs)
     return docs, stored, bands, sh
@@ -1200,7 +1169,7 @@ def test_dedup_upsert_equals_rebuild_on_current_corpus(spark):
     )
     got = _labels(dedup.dedup_upsert(stored, batch, bands, sh))
     current = docs.where(~F.col("doc_id").isin(11, 99)).unionByName(batch)
-    rebuild = _labels(dedup.neardup_clusters(current, threshold=0.5, method="star"))
+    rebuild = _labels(dedup.neardup_clusters(current, threshold=0.5))
     assert got == rebuild
     # the readable motions: 11 now labels with group 2's min (11 < 20
     # makes it the NEW component min), 99 joins group 1 under min 10
@@ -1275,5 +1244,5 @@ def test_dedup_upsert_randomized_equals_rebuild(spark, seed):
     batch = _docs(spark, batch_rows)
     got = _labels(dedup.dedup_upsert(stored, batch, bands, sh))
     current = docs.where(~F.col("doc_id").isin(*(changed + new_ids))).unionByName(batch)
-    rebuild = _labels(dedup.neardup_clusters(current, threshold=0.5, method="star"))
+    rebuild = _labels(dedup.neardup_clusters(current, threshold=0.5))
     assert got == rebuild

@@ -59,7 +59,7 @@ def _seed(spark, store):
     docs.write.parquet(f"{store}/admitted")
     dedup.minhash_bands(dedup.minhash_signature(docs)).write.parquet(f"{store}/bands")
     dedup.shingle_sets(docs).write.parquet(f"{store}/shingles")
-    dedup.neardup_clusters(docs, method="star").write.parquet(f"{store}/labels")
+    dedup.neardup_clusters(docs).write.parquet(f"{store}/labels")
 
 
 def _rows_of(spark, path):
@@ -125,7 +125,7 @@ def test_lifecycle_face_composes_solo_verbs_and_keeps_ghosts_out(spark, tmp_path
     current = spark.createDataFrame(CURRENT, "doc_id long, text string")
     want = {
         (r.doc_id, r.cluster_id)
-        for r in dedup.neardup_clusters(current, method="star").collect()
+        for r in dedup.neardup_clusters(current).collect()
     }
     assert face_snap["labels"] == want
 

@@ -1023,7 +1023,7 @@ def test_streaming_takedown_face_purges_all_stores_and_is_idempotent(spark, tmp_
     bands = dedup.minhash_bands(dedup.minhash_signature(docs))
     bands.write.parquet(f"{store}/bands")
     dedup.shingle_sets(docs).write.parquet(f"{store}/shingles")
-    dedup.neardup_clusters(docs, method="star").write.parquet(f"{store}/labels")
+    dedup.neardup_clusters(docs).write.parquet(f"{store}/labels")
     ivf_centroids(vecs).write.parquet(f"{store}/index/centroids")
     ivf_append_assign(vecs, spark.read.parquet(f"{store}/index/centroids")).write.parquet(
         f"{store}/index/assign"
@@ -1070,9 +1070,7 @@ def test_streaming_takedown_face_purges_all_stores_and_is_idempotent(spark, tmp_
     }
     want_labels = {
         (r.doc_id, r.cluster_id)
-        for r in dedup.neardup_clusters(
-            docs.where(~F.col("doc_id").isin(1, 22)), method="star"
-        ).collect()
+        for r in dedup.neardup_clusters(docs.where(~F.col("doc_id").isin(1, 22))).collect()
     }
     assert got_labels == want_labels == {(2, 2), (3, 2), (10, 10), (11, 10), (20, 20), (21, 20)}
 
@@ -1199,7 +1197,7 @@ def test_streaming_upsert_face_rewrites_all_stores_and_is_idempotent(spark, tmp_
     docs.write.parquet(f"{store}/admitted")
     dedup.minhash_bands(dedup.minhash_signature(docs)).write.parquet(f"{store}/bands")
     dedup.shingle_sets(docs).write.parquet(f"{store}/shingles")
-    dedup.neardup_clusters(docs, method="star").write.parquet(f"{store}/labels")
+    dedup.neardup_clusters(docs).write.parquet(f"{store}/labels")
     ivf_centroids(vecs).write.parquet(f"{store}/index/centroids")
     cents = spark.read.parquet(f"{store}/index/centroids")
     ivf_append_assign(vecs, cents).write.parquet(f"{store}/index/assign")
@@ -1260,7 +1258,7 @@ def test_streaming_upsert_face_rewrites_all_stores_and_is_idempotent(spark, tmp_
     }
     want_labels = {
         (r.doc_id, r.cluster_id)
-        for r in dedup.neardup_clusters(current, method="star").collect()
+        for r in dedup.neardup_clusters(current).collect()
     }
     assert got_labels == want_labels
     assert (21, 21) not in got_labels  # 21 became a singleton: no row

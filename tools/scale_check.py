@@ -217,8 +217,8 @@ def run_tier(spark, n_docs: int, n_vec: int, only: set[str] | None = None) -> di
     # joins — expect ~linear; the SAMPLED variant amortizes training
     # like pq_encode_sampled), the Gopher repetition explodes, graded
     # contamination (shingle equi-join, benchmark side 1%), the
-    # probe-2 exact IVF search, and the dedup-aware split (CC over
-    # capped LSH pairs + pointer jumping for the bounded-round bound)
+    # probe-2 exact IVF search, and the dedup-aware split (star-
+    # contraction CC over capped LSH pairs)
     from calculate_file_content_size_for_vector_db_spark.operators.curation import (
         contamination_score,
         leakage_safe_split,
@@ -247,13 +247,9 @@ def run_tier(spark, n_docs: int, n_vec: int, only: set[str] | None = None) -> di
     t("topk_ivf_probe2", similarity.topk_ivf(emb, emb.where("vec_id < 10"), probes=2))
     t(
         "leakage_safe_split_capped",
-        # star CC, not pointer jumping: the 200k-doc tier PROVED the
-        # jump heuristic non-convergent here (1105 labels still moving
-        # after 20 rounds — adversarial id placement voids the
-        # doubling argument); star contraction carries an O(log^2 n)
-        # round bound. Thunk: the contraction rounds run eagerly at
+        # Thunk: the star-contraction rounds run eagerly at
         # construction (localCheckpoint), so build inside the timer.
-        lambda: leakage_safe_split(docs, max_bucket_size=64, method="star"),
+        lambda: leakage_safe_split(docs, max_bucket_size=64),
     )
     # wave 13/14 additions: the trained tokenizer (vocab-bounded — the
     # word dict of the synthetic corpus caps at |V|^3-ish shingle
