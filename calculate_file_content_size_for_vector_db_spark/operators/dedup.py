@@ -815,6 +815,82 @@ def line_dedup_rewrite(
     )
 
 
+def _both(a: Column, b: Column) -> Column:
+    """Two rows out of every input row: inline(array(a, b))."""
+    return F.inline(F.array(a, b))
+
+
+def _large_star(e: DataFrame) -> DataFrame:
+    """Every node links its LARGER neighbors to the minimum of its
+    closed neighborhood."""
+    sym = e.select(
+        _both(F.struct("u", "v"), F.struct(F.col("v").alias("u"), F.col("u").alias("v")))
+    )
+    m = F.least("u", F.min("v").over(Window.partitionBy("u")))
+    return (
+        sym.withColumn("m", m)
+        .where(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .where(F.col("u") != F.col("v"))
+    )
+
+
+def _small_star(e: DataFrame) -> DataFrame:
+    """Edges orient toward the smaller endpoint; every node links its
+    smaller neighbors and itself to the minimum of those neighbors."""
+    d = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+    m = F.min("v").over(Window.partitionBy("u"))
+    # the closing .distinct() is load-bearing: the star-forest test
+    # counts parents per child, so a duplicated (child, root) row would
+    # read as two parents and the loop would never stop
+    return (
+        d.withColumn("m", m)
+        .select(
+            _both(
+                F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+                F.struct("u", F.col("m").alias("v")),
+            )
+        )
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _star_input(edges: DataFrame) -> DataFrame:
+    """(u, v) rows of ``edges`` without self-loops, localCheckpointed
+    lazily so the edge lineage runs once, inside the first round."""
+    return (
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _star_round(e: DataFrame):
+    """One large-star + small-star alternation and its convergence
+    aggregate: (child -> parent edges, Row(n=node count, bad=nodes
+    that break the star-forest shape)). The edges are localCheckpointed
+    lazily and the aggregate, the round's first action, materializes
+    them."""
+    out = _small_star(_large_star(e)).localCheckpoint(eager=False)
+    # per node: c = its parent count, p = whether it is a parent
+    per = (
+        out.select(
+            _both(
+                F.struct(F.col("u").alias("x"), F.lit(1).alias("c"), F.lit(False).alias("p")),
+                F.struct(F.col("v").alias("x"), F.lit(0).alias("c"), F.lit(True).alias("p")),
+            )
+        )
+        .groupBy("x")
+        .agg(F.sum("c").alias("c"), F.max("p").alias("p"))
+    )
+    bad = (F.col("c") > 1) | ((F.col("c") > 0) & F.col("p"))
+    stats = per.agg(
+        F.count("*").alias("n"), F.count(F.when(bad, 1)).alias("bad")
+    ).first()
+    return out, stats
+
+
 def star_components(edges: DataFrame) -> DataFrame:
     """(node, cluster_id): connected components by alternating
     large-star / small-star contraction (Kiveris et al., "Connected
@@ -829,113 +905,69 @@ def star_components(edges: DataFrame) -> DataFrame:
     large-star: every node links its LARGER neighbors to the minimum
     of its closed neighborhood; small-star: edges orient toward the
     smaller endpoint and every node links its smaller neighbors (and
-    itself) to that minimum. Both are one groupBy-min plus one keyed
-    join per round — edges re-key but never multiply (outputs are
-    distinct subsets of neighbor links). The fixpoint is a forest of
-    stars rooted at each component's minimum id, so every node is
-    labeled with its component's minimum id.
+    itself) to that minimum. Each step is one windowed min per node
+    (one exchange keyed by node, no aggregate-then-join) — edges
+    re-key but never multiply (outputs are subsets of neighbor links;
+    small-star's closing distinct drops the repeats).
 
-    Every round localCheckpoints the edge set: each op references it
-    2-3 times, so with persist() (which caches the data but keeps the
-    logical plan) the plan grows exponentially in rounds and the
-    driver OOMs rendering it (the 200k-doc ladder tier); the
-    checkpoint materializes the round and cuts lineage to an RDD scan.
+    Stopping rule: a round ends with ONE group-by aggregate over its
+    output that asks whether it is a star forest — every child has
+    exactly one parent and no parent is also a child. The first round
+    that yields a star forest is the last. Why its roots are the
+    component minima:
+      1. each star step keeps the node set and the connected
+         components of the edge set (every link it drops is replaced
+         by a path through a neighborhood minimum, Kiveris et al.);
+      2. every edge a round emits points from the larger id (child)
+         to the smaller (parent), since both links of small-star go
+         to a minimum of smaller neighbors;
+      3. in a star forest each star is one component of the edge set,
+         so by (1) exactly one component of the input graph, and by
+         (2) its root is smaller than every child: the component min.
+    A star forest is also a fixpoint of both steps, so this rule stops
+    no later than a set-equality test (count + exceptAll per round)
+    would, and skips the extra round such a test needs to see nothing
+    change.
 
-    ``edges``: (src, dst) pairs, either direction, self-loops ignored.
-    Output covers every node incident to an edge; roots label
-    themselves.
+    Every round's edge set is localCheckpointed (lazily — the
+    convergence aggregate materializes it): the aggregate and the next
+    round both read it, and the cut keeps the plan from growing with
+    the round count (persist() caches the data but keeps the logical
+    plan; when each step referenced its input 2-3 times that plan grew
+    exponentially and the driver OOMed rendering it at the 200k-doc
+    ladder tier).
 
-    Convergence cap: max(30, ceil(log2 n)^2) rounds for n nodes — the
-    theoretical bound is O(log^2 n) alternations, so a fixed 30 could
-    be legitimately exceeded by a huge adversarial graph
+    ``edges``: (src, dst) pairs, either direction, self-loops and
+    duplicates ignored. Output covers every node incident to an edge:
+    children -> root rows plus one root -> root row per star.
+
+    Convergence cap: max(30, ceil(log2 n)^2) rounds for n nodes, with
+    n read from the first round's convergence aggregate (by (1) it is
+    the input's node count, at most 2|E|, so no separate count runs).
+    The theoretical bound is O(log^2 n) alternations, so a fixed 30
+    could be legitimately exceeded by a huge adversarial graph
     (log2(10^9)^2 ~ 900) even though OBSERVED convergence is
     ~2*log2(n) (ladder graphs, 200k nodes: 9 alternations). Hitting
     the cap raises, because at that point the edge set is cycling, not
     converging.
     """
     import math
-    E = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    all_nodes = (
-        E.select(F.col("u").alias("node"))
-        .unionByName(E.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = all_nodes.count()  # already checkpointed — a cheap metadata-ish scan
-    round_cap = max(30, math.ceil(math.log2(max(n, 2))) ** 2)
 
-    def _large(e: DataFrame) -> DataFrame:
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("_mv"))
-            .select("u", F.least("u", "_mv").alias("m"))
-        )
-        # no trailing .distinct(): _small normalizes and dedups its
-        # input as its FIRST op, so deduping here costs a full edge-set
-        # exchange per round for rows the next exchange re-dedups
-        # anyway (map-side partial aggregation absorbs the duplicates)
-        return (
-            sym.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-        )
-
-    def _small(e: DataFrame) -> DataFrame:
-        # INVARIANT (load-bearing): _small's output ends in .distinct(),
-        # and the initial E is .distinct() — the convergence test below
-        # relies on BOTH frames being duplicate-free sets (equal counts
-        # + one-sided exceptAll-emptiness ⇒ set equality). Dropping
-        # either dedup silently breaks the loop's termination proof.
-        d = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        m = d.groupBy("u").agg(F.min("v").alias("m"))
-        relink = d.join(m, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
-        self_link = m.select("u", F.col("m").alias("v"))
-        return (
-            relink.unionByName(self_link)
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    n_prev = None
-    for _ in range(round_cap):
-        new_e = _small(_large(E)).localCheckpoint(eager=True)
-        # Convergence = set equality. Both frames are distinct sets
-        # (initial E and every _small output end in .distinct()), so
-        # |new_e| == |E| plus new_e ⊆ E (one-directional exceptAll)
-        # implies equality — the second, reverse exceptAll job the
-        # pre-r15 loop paid per round is redundant. Counts are
-        # shuffle-free scans of the checkpointed RDDs, and E's count
-        # is simply last round's, so each round pays ONE tiny count
-        # job + ONE exceptAll probe (which short-circuits via
-        # limit(1) on any non-converged round).
-        n_prev = E.count() if n_prev is None else n_prev
-        n_new = new_e.count()
-        diff = 1
-        if n_new == n_prev:
-            diff = new_e.exceptAll(E).limit(1).count()
-        E, n_prev = new_e, n_new
-        if diff == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"star_components did not converge in {round_cap} rounds "
-            "(cap = max(30, ceil(log2 n)^2), at or above the theoretical "
-            "O(log^2 n) alternation bound) — the edge set is cycling, not "
-            "converging."
-        )
-    children = E.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
-    return (
-        all_nodes.join(children, "node", "left")
-        .select("node", F.coalesce(F.col("cluster_id"), F.col("node")).alias("cluster_id"))
+    E, stats = _star_round(_star_input(edges))
+    round_cap = max(30, math.ceil(math.log2(max(stats.n, 2))) ** 2)
+    rounds = 1
+    while stats.bad:
+        if rounds == round_cap:
+            raise RuntimeError(
+                f"star_components did not converge in {round_cap} rounds "
+                "(cap = max(30, ceil(log2 n)^2), at or above the theoretical "
+                "O(log^2 n) alternation bound) — the edge set is cycling, not "
+                "converging."
+            )
+        E, stats = _star_round(E)
+        rounds += 1
+    return E.select(F.col("u").alias("node"), F.col("v").alias("cluster_id")).unionByName(
+        E.select(F.col("v").alias("node"), F.col("v").alias("cluster_id")).distinct()
     )
 
 
@@ -950,6 +982,9 @@ def cluster_append(
     cluster artifact, completing the store symmetry the incremental
     pair table (incremental_neardup_pairs), the Bloom bitmap
     (bloom_bitmap_append), and the stored IVF index already have.
+    It is also the one contraction cluster_takedown and dedup_upsert
+    run: each hands it the stored rows it keeps plus every edge that
+    can relabel anything.
 
     Algorithm — contract, solve small, relabel:
       1. Map each new edge's endpoints through the stored labeling
@@ -962,121 +997,75 @@ def cluster_append(
          neighborhood-sized, NOT corpus-sized (a day's edges touch a
          day's clusters).
       3. Relabel: stored rows map label→super-label (left join +
-         coalesce keeps untouched clusters verbatim); edge endpoints
-         not in the store get their super-label directly.
+         coalesce keeps untouched clusters verbatim); the new nodes
+         are the contraction's super-nodes that are not stored labels,
+         so their rows come from the contraction's own output and the
+         edge lineage runs once. (A label is a member id — the
+         component min — so a new node, absent from the store, can
+         never be mistaken for one.)
 
     Labels stay component-MIN doc ids: a stored label is the min of
     its members, a new node is itself, and star_components roots at
     the supernode minimum — min of mins = global component min. So
     the result is IDENTICAL to a from-scratch clustering over the
     union pair graph, and the registered query pins exactly that
-    under dedup_clusters' transitive-closure oracle verbatim.
+    under dedup_clusters' transitive-closure oracle verbatim. New
+    nodes whose every edge is a self-loop carry no row (singletons
+    are absent, as in neardup_clusters).
 
-    Cost at 100 TB: batch-sized edge mapping (AQE broadcasts the edge
-    side into the store join), a contracted-graph CC whose node count
-    is the touched-cluster count, and one broadcast map-join over the
-    store scan that any store rewrite pays anyway. A delta-only
-    variant (emit just changed + new rows) drops that last scan to
-    touched-rows; the full view is registered because it is the
-    hash-checkable contract.
+    Cost at 100 TB: batch-sized edge mapping, a contracted-graph CC
+    whose node count is the touched-cluster count, one broadcast
+    map-join over the store scan that any store rewrite pays anyway,
+    and one anti-join of the contraction's output against the label
+    column. A delta-only variant (emit just changed + new rows) drops
+    the store scans to touched-rows; the full view is registered
+    because it is the hash-checkable contract.
     """
     lab = stored_labels.select(
         F.col(key).alias("_n"), F.col("cluster_id").alias("_l")
     )
-    e = (
+    super_edges = (
         new_edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    mapped = (
-        e.join(lab.withColumnsRenamed({"_n": "src", "_l": "_ls"}), "src", "left")
+        .join(lab.withColumnsRenamed({"_n": "src", "_l": "_ls"}), "src", "left")
         .join(lab.withColumnsRenamed({"_n": "dst", "_l": "_ld"}), "dst", "left")
         .select(
-            F.coalesce(F.col("_ls"), F.col("src")).alias("su"),
-            F.coalesce(F.col("_ld"), F.col("dst")).alias("sv"),
+            F.coalesce(F.col("_ls"), F.col("src")).alias("src"),
+            F.coalesce(F.col("_ld"), F.col("dst")).alias("dst"),
         )
     )
-    super_edges = (
-        mapped.where(F.col("su") != F.col("sv"))
-        .select(F.col("su").alias("src"), F.col("sv").alias("dst"))
-        .distinct()
-    )
-    supmap = star_components(super_edges).select(
-        F.col("node").alias("_sn"), F.col("cluster_id").alias("_sl")
-    )
+    # star_components drops the self-loops an in-cluster edge maps to
+    supmap = star_components(super_edges)
     out_store = (
         stored_labels.join(
-            supmap, stored_labels["cluster_id"] == F.col("_sn"), "left"
+            supmap.withColumnsRenamed({"node": "_sn", "cluster_id": "_sl"}),
+            stored_labels["cluster_id"] == F.col("_sn"),
+            "left",
         )
         .select(
             F.col(key),
             F.coalesce(F.col("_sl"), F.col("cluster_id")).alias("cluster_id"),
         )
     )
-    new_nodes = (
-        e.select(F.col("src").alias("_n"))
-        .unionByName(e.select(F.col("dst").alias("_n")))
-        .distinct()
-        .join(lab.select("_n"), "_n", "left_anti")
-    )
-    out_new = (
-        new_nodes.join(supmap, new_nodes["_n"] == F.col("_sn"), "left")
-        .select(
-            F.col("_n").alias(key),
-            F.coalesce(F.col("_sl"), F.col("_n")).alias("cluster_id"),
-        )
-    )
+    out_new = supmap.join(
+        stored_labels.select(F.col("cluster_id").alias("node")), "node", "left_anti"
+    ).select(F.col("node").alias(key), "cluster_id")
     return out_store.unionByName(out_new)
 
 
-def cluster_takedown(
+def _takedown_repair(
     stored_labels: DataFrame,
     takedown: DataFrame,
     corpus_bands: DataFrame,
     corpus_shingles: DataFrame,
-    threshold: float = 0.5,
-    key: str = "doc_id",
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """(key, cluster_id): right-to-be-forgotten maintenance of the
-    stored cluster labeling — remove a takedown set's documents and
-    repair ONLY the clusters they belonged to, without re-clustering
-    the corpus. The delete-path counterpart of cluster_append: append
-    merges components (new edges only connect), takedown can SPLIT
-    them (a removed doc may be the bridge between two halves) and can
-    change a cluster's label (the removed doc may BE the component
-    minimum), so untouched-cluster reuse plus a localized re-CC is the
-    only safe shortcut — and it is safe, because near-dup edges never
-    cross component boundaries: removing nodes cannot connect
-    anything, so every post-takedown component lies entirely inside
-    one pre-takedown cluster.
-
-    Algorithm:
-      1. touched = stored clusters containing a takedown doc;
-         untouched rows are kept VERBATIM from the store.
-      2. Surviving members of touched clusters re-pair from the STORED
-         band/shingle artifacts (semi-join to survivors, band self-join,
-         exact-Jaccard verify) — no document is re-shingled.
-         ``max_bucket_size`` applies the minhash_lsh_pairs hub-bucket
-         cap with the capped-REBUILD counting universe: bucket sizes
-         are counted over ALL survivor rows corpus-wide (restricted to
-         buckets present in the touched slice, so the count stays
-         takedown-neighborhood-sized), so repairing a labeling built
-         from capped pairs equals a capped from-scratch rebuild on the
-         survivors — a corpus-wide hub bucket stays suppressed even
-         where the touched slice alone would fall under the cap.
-      3. star_components over those edges relabels the survivors;
-         survivors that lost all their edges drop out of the frame
-         (singletons carry no row, matching neardup_clusters).
-
-    Cost at 100 TB: the takedown set is tiny (legal/opt-out requests),
-    touched clusters are near-dup-cluster-sized, so every stage after
-    the two store semi-joins is takedown-neighborhood-sized. The
-    registered query pins the equality against a from-scratch
-    clustering of the corpus minus the takedown set (dedup_clusters'
-    transitive-closure oracle with the takedown predicate pushed into
-    the pair table).
-    """
+    threshold: float,
+    key: str,
+    max_bucket_size: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(untouched labels, repair edges) of a takedown: the stored rows
+    of clusters that lost no member, kept verbatim, and the verified
+    near-dup edges among the surviving members of the touched clusters
+    (src, dst). cluster_takedown contracts them; dedup_upsert adds its
+    batch edges first. See cluster_takedown for the algorithm."""
     td = takedown.select(key).distinct()
     touched_cl = (
         stored_labels.join(td, key, "left_semi").select("cluster_id").distinct()
@@ -1134,10 +1123,66 @@ def cluster_takedown(
         )
         .select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     )
-    repaired = star_components(edges).select(
-        F.col("node").alias(key), "cluster_id"
+    return untouched, edges
+
+
+def cluster_takedown(
+    stored_labels: DataFrame,
+    takedown: DataFrame,
+    corpus_bands: DataFrame,
+    corpus_shingles: DataFrame,
+    threshold: float = 0.5,
+    key: str = "doc_id",
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """(key, cluster_id): right-to-be-forgotten maintenance of the
+    stored cluster labeling — remove a takedown set's documents and
+    repair ONLY the clusters they belonged to, without re-clustering
+    the corpus. The delete-path counterpart of cluster_append: append
+    merges components (new edges only connect), takedown can SPLIT
+    them (a removed doc may be the bridge between two halves) and can
+    change a cluster's label (the removed doc may BE the component
+    minimum), so untouched-cluster reuse plus a localized re-CC is the
+    only safe shortcut — and it is safe, because near-dup edges never
+    cross component boundaries: removing nodes cannot connect
+    anything, so every post-takedown component lies entirely inside
+    one pre-takedown cluster.
+
+    Algorithm:
+      1. touched = stored clusters containing a takedown doc;
+         untouched rows are kept VERBATIM from the store.
+      2. Surviving members of touched clusters re-pair from the STORED
+         band/shingle artifacts (semi-join to survivors, band self-join,
+         exact-Jaccard verify) — no document is re-shingled.
+         ``max_bucket_size`` applies the minhash_lsh_pairs hub-bucket
+         cap with the capped-REBUILD counting universe: bucket sizes
+         are counted over ALL survivor rows corpus-wide (restricted to
+         buckets present in the touched slice, so the count stays
+         takedown-neighborhood-sized), so repairing a labeling built
+         from capped pairs equals a capped from-scratch rebuild on the
+         survivors — a corpus-wide hub bucket stays suppressed even
+         where the touched slice alone would fall under the cap.
+      3. cluster_append(untouched rows, those edges) — the one
+         contraction. It is exact: the repair edges touch only
+         survivors of touched clusters, which are absent from the
+         untouched rows, so the contraction labels them as new nodes
+         while every untouched row keeps its label; survivors that
+         lost all their edges drop out of the frame (singletons carry
+         no row, matching neardup_clusters).
+
+    Cost at 100 TB: the takedown set is tiny (legal/opt-out requests),
+    touched clusters are near-dup-cluster-sized, so every stage after
+    the two store semi-joins is takedown-neighborhood-sized. The
+    registered query pins the equality against a from-scratch
+    clustering of the corpus minus the takedown set (dedup_clusters'
+    transitive-closure oracle with the takedown predicate pushed into
+    the pair table).
+    """
+    untouched, repair = _takedown_repair(
+        stored_labels, takedown, corpus_bands, corpus_shingles, threshold, key,
+        max_bucket_size,
     )
-    return untouched.unionByName(repaired)
+    return cluster_append(untouched, repair, key=key)
 
 
 def dedup_upsert(
@@ -1160,26 +1205,32 @@ def dedup_upsert(
     is a delete THEN an insert: its old near-dup edges are stale (the
     content that justified them is gone), so the composition is
 
-      1. cluster_takedown(stored, changed ids, OLD bands/shingles) —
-         purge + localized re-CC, giving exactly the survivor-corpus
-         labeling (the takedown equality already pinned),
+      1. cluster_takedown's first half on (stored, changed ids, OLD
+         bands/shingles): the untouched rows, kept verbatim, and the
+         repair edges among the survivors of touched clusters,
       2. survivor artifacts = bands/shingles ANTI-JOIN changed ids
          (the store rewrite a takedown pays anyway),
       3. new edges = incremental_neardup_pairs(changed docs vs the
          survivor artifacts)  UNION  minhash_lsh_pairs(changed docs
          alone) — between them every pair of the current corpus that
          touches a changed doc, both batch-sized,
-      4. cluster_append(purged labels, those edges).
+      4. cluster_append(untouched rows, repair ∪ step-3 edges) — ONE
+         contraction per upsert, not one for the takedown and another
+         for the append.
 
     Equality with a from-scratch clustering of the current corpus
     (survivors' old text + the batch's new text) follows because the
-    current pair graph partitions into survivor<->survivor edges
-    (whose CC the takedown output encodes — near-dup edges never
-    cross component boundaries), changed<->survivor and
-    changed<->changed edges (enumerated in step 3); cluster_append's
-    contract-solve-relabel then reproduces the CC of the union graph
-    with component-min labels. Replay-safe: re-upserting the same
-    batch re-derives the same edges against the same survivors.
+    current pair graph partitions into survivor<->survivor edges and
+    edges touching a changed doc (enumerated in step 3). The
+    survivor<->survivor edges either lie inside an untouched cluster
+    (encoded by its stored label, which the contraction keeps — near-
+    dup edges never cross component boundaries) or join two survivors
+    of one touched cluster (the repair edges). Those survivors and the
+    changed docs are absent from the untouched rows, so the contraction
+    treats them as new nodes, and its contract-solve-relabel reproduces
+    the CC of the union graph with component-min labels. Replay-safe:
+    re-upserting the same batch re-derives the same edges against the
+    same survivors.
 
     New doc ids come through for free (the takedown of an unknown id
     is the pinned identity), so upsert subsumes append — but note the
@@ -1207,16 +1258,11 @@ def dedup_upsert(
     a capped oracle row.
 
     Cost at 100 TB: two store semi/anti-join scans plus batch-sized
-    signature work — the takedown and append costs, composed."""
+    signature work, and one contraction over the touched clusters."""
     changed_ids = changed_docs.select(key)
-    purged = cluster_takedown(
-        stored_labels,
-        changed_ids,
-        corpus_bands,
-        corpus_shingles,
-        threshold=threshold,
-        key=key,
-        max_bucket_size=max_bucket_size,
+    untouched, repair = _takedown_repair(
+        stored_labels, changed_ids, corpus_bands, corpus_shingles, threshold, key,
+        max_bucket_size,
     )
     surv_bands = corpus_bands.join(F.broadcast(changed_ids), key, "left_anti")
     surv_shingles = corpus_shingles.join(F.broadcast(changed_ids), key, "left_anti")
@@ -1240,7 +1286,9 @@ def dedup_upsert(
         bands_df=batch_bands,
         shingles_df=batch_shingles,
     ).select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-    return cluster_append(purged, vs_corpus.unionByName(within_batch), key=key)
+    return cluster_append(
+        untouched, repair.unionByName(vs_corpus).unionByName(within_batch), key=key
+    )
 
 
 def neardup_clusters(

@@ -76,7 +76,9 @@ def swap_rewrite(spark: SparkSession, path: str, df: DataFrame) -> None:
     of the survivors in volatile state. See module docstring."""
     swap = path + _SWAP_SUFFIX
     df.write.mode("overwrite").parquet(swap)
-    spark.read.parquet(swap).write.mode("overwrite").parquet(path)
+    # df.schema: the swap holds df's rows, so re-reading it with the
+    # known schema skips parquet's schema-inference job
+    spark.read.schema(df.schema).parquet(swap).write.mode("overwrite").parquet(path)
     fs, sp, _ = _fs(spark, swap)
     fs.delete(sp, True)
 

@@ -69,6 +69,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from calculate_file_content_size_for_vector_db_spark.operators.dedup import cluster_takedown
 from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
+    _fs,
     face_scope,
     heal_store,
     swap_rewrite,
@@ -76,13 +77,17 @@ from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import
 
 
 def _exists(spark, path: str) -> bool:
-    from pyspark.errors import AnalysisException
-
-    try:
-        spark.read.parquet(path)
-        return True
-    except AnalysisException:
+    """True iff ``path`` exists and holds a non-hidden entry (a name not
+    starting with ``_`` or ``.``) — the stores spark.read.parquet can
+    read. Answered from one Hadoop FS listing, so it runs no Spark job
+    (a parquet read would run a schema-inference job per call)."""
+    fs, hp, _ = _fs(spark, path)
+    if not fs.exists(hp):
         return False
+    return any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(hp)
+    )
 
 
 def _purge_rewrite(

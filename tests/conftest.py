@@ -25,5 +25,26 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def spark_jobs(spark):
+    """count(fn) -> the number of Spark jobs ``fn()`` runs, read through
+    a job group and the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_ORACLE = "/root/testdata/sf0.01"

@@ -666,6 +666,68 @@ def test_star_components_two_components_and_pair(spark):
     assert got == {5: 2, 9: 2, 2: 2, 11: 11, 30: 11, 40: 40, 41: 40}
 
 
+def _union_find(edges):
+    """Reference CC: node -> component min over the non-self-loop edges."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        if u != v:
+            a, b = find(u), find(v)
+            parent[max(a, b)] = min(a, b)
+    return {x: find(x) for x in list(parent)}
+
+
+def _star_graphs():
+    import random
+
+    n = 64
+    perm = sorted(range(n), key=lambda i: (i * 37) % n)
+    rng = random.Random(11)
+    return {
+        "chain": [(i, i + 1) for i in range(40)],
+        "reversed_chain": [(i + 1, i) for i in range(40)],
+        "permuted_path": [(perm[i], perm[i + 1]) for i in range(n - 1)],
+        # rungs (2k, 2k+1) plus both rails (i, i+2)
+        "ladder": [(i, i + 1) for i in range(0, 60, 2)] + [(i, i + 2) for i in range(58)],
+        "random": [(rng.randrange(80), rng.randrange(80)) for _ in range(70)],
+        "star_forest": [(0, i) for i in range(1, 9)] + [(i, 20) for i in range(21, 26)],
+        "duplicate_edges": [(5, 9), (9, 5), (5, 9), (9, 2), (2, 9), (11, 30), (30, 11)],
+        "self_loops_only": [(1, 1), (2, 2), (2, 2)],
+        "empty": [],
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_star_graphs()))
+def test_star_components_matches_union_find(spark, name):
+    edges = _star_graphs()[name]
+    e = spark.createDataFrame(edges, "src long, dst long")
+    got = [(r.node, r.cluster_id) for r in dedup.star_components(e).collect()]
+    assert len(got) == len({node for node, _ in got})  # one row per node
+    assert dict(got) == _union_find(edges)
+
+
+def test_star_components_star_forest_input_stops_within_one_round(spark, spark_jobs):
+    """An input that is already a star forest needs no round beyond the
+    first: the whole call runs no more jobs than one round does. A
+    chain, which needs several rounds, runs more."""
+    schema = "src long, dst long"
+    star = spark.createDataFrame(_star_graphs()["star_forest"], schema)
+    chain = spark.createDataFrame(_star_graphs()["chain"], schema)
+
+    def one_round(e):
+        return spark_jobs(lambda: dedup._star_round(dedup._star_input(e)))
+
+    assert spark_jobs(lambda: dedup.star_components(star)) <= one_round(star)
+    assert spark_jobs(lambda: dedup.star_components(chain)) > one_round(chain)
+
+
 def test_cluster_append_merges_touched_keeps_untouched(spark):
     # stored: {10,20,30} labeled 10, {50,60} labeled 50, {70,80} labeled 70.
     # batch edges: new node 5 bridges the two first clusters (5-20, 5-60)
@@ -1174,6 +1236,40 @@ def test_dedup_upsert_equals_rebuild_on_current_corpus(spark):
     # the readable motions: 11 now labels with group 2's min (11 < 20
     # makes it the NEW component min), 99 joins group 1 under min 10
     assert {(11, 11), (20, 11), (21, 11), (99, 10), (10, 10), (12, 10)} == got
+
+
+def test_dedup_upsert_min_doc_split_joins_untouched_cluster(spark):
+    """Token windows w[a:a+10] near-dup each other at offset 2 (Jaccard
+    0.6) and not at offset 4. Stored: X{2,3} ~ doc 1 ~ Y{4,7}, one
+    cluster under its minimum, doc 1; Z{20,21} is a cluster of its own.
+    Doc 1 is re-delivered further along the stream, between Y and Z:
+    the old cluster splits at its minimum, X stays apart, and Y joins
+    the untouched cluster Z through the new doc 1. (LSH catches a
+    Jaccard-0.6 pair with probability ~0.83; the stored-labels assert
+    checks that it caught this fixture's pairs.)"""
+    w = [f"tok{i}" for i in range(30)]
+
+    def window(a):
+        return " ".join(w[a : a + 10])
+
+    rows = [
+        (1, window(2)),
+        (2, window(0)),
+        (3, window(0)),
+        (4, window(4)),
+        (7, window(4)),
+        (20, window(8)),
+        (21, window(8)),
+    ]
+    docs, stored, bands, sh = _upsert_fixture(spark, rows)
+    assert _labels(stored) == {
+        (1, 1), (2, 1), (3, 1), (4, 1), (7, 1), (20, 20), (21, 20)
+    }
+    batch = _docs(spark, [(1, window(6))])
+    got = _labels(dedup.dedup_upsert(stored, batch, bands, sh))
+    current = docs.where(F.col("doc_id") != 1).unionByName(batch)
+    assert got == _labels(dedup.neardup_clusters(current, threshold=0.5))
+    assert got == {(2, 2), (3, 2), (1, 1), (4, 1), (7, 1), (20, 1), (21, 1)}
 
 
 def test_dedup_upsert_to_singleton_drops_row(spark):

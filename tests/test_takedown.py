@@ -523,6 +523,31 @@ def test_swap_rewrite_and_heal_crash_safety(spark, tmp_path):
     assert not heal_store(spark, live)
 
 
+def test_exists_answers_from_a_listing_without_spark_jobs(spark, spark_jobs, tmp_path):
+    """The faces' store probe: True iff the path exists and holds a
+    non-hidden entry (what spark.read.parquet can read), answered from
+    a file-system listing, so probing runs no Spark job."""
+    from calculate_file_content_size_for_vector_db_spark.streaming.takedown import (
+        _exists,
+    )
+
+    missing = str(tmp_path / "missing")
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    marker_only = tmp_path / "marker_only"
+    marker_only.mkdir()
+    (marker_only / "_SUCCESS").write_text("")
+    (marker_only / "._SUCCESS.crc").write_text("")
+    store = str(tmp_path / "store")
+    spark.createDataFrame([(1,)], "id long").write.parquet(store)
+
+    paths = (missing, str(empty), str(marker_only), store)
+    got = {}
+    jobs = spark_jobs(lambda: got.update({p: _exists(spark, p) for p in paths}))
+    assert got == {missing: False, str(empty): False, str(marker_only): False, store: True}
+    assert jobs == 0
+
+
 def test_postings_upsert_equals_rebuild_and_replay(spark):
     """postings_upsert (the lexical upsert verb, twin of ivf_upsert):
     re-ingest CHANGED docs 1 and 4 with new text, plus a brand-NEW doc
