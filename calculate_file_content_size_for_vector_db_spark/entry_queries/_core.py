@@ -39,16 +39,16 @@ class Q:
     oracle: Optional[str]
 
 
-# Insertion-ordered accumulator only: family modules @register into this
-# dict, then the package __init__ rebinds its OWN `REGISTRY` attribute to
-# a copy pinned to the canonical (_VERIFY_FIRST + _REST_ORDER) order.
-# The package attribute is the one driver-facing dict; import from the
-# package, not from here — registrations made after package import are
-# invisible to the facade by design (the order lists gate them).
+# name -> query, in registration order. Family modules @register into
+# it; the package re-exports this same dict. Import the package, not
+# this module, so every family has registered.
 REGISTRY: dict[str, Q] = {}
 
 
 def register(name: str, oracle: Optional[str] = None):
+    if name in REGISTRY:
+        raise ValueError(f"query {name!r} is already registered")
+
     def deco(fn):
         import functools
 

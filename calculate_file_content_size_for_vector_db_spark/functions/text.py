@@ -33,15 +33,3 @@ def basename(col: Column | str) -> Column:
     """P1 (pdf_reader.py:73,602): os.path.basename as a native expr."""
     c = F.col(col) if isinstance(col, str) else col
     return F.element_at(F.split(c, "/"), -1)
-
-
-def sanitize_path(col: Column | str) -> Column:
-    """S9 (pdf_reader.py:195-215): path -> safe filename.
-
-    non-word/non-dash chars -> underscore, strip leading -_ runs,
-    fall back to 'folder' when empty.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.regexp_replace(c, "[^\\w\\-]", "_")
-    c = F.regexp_replace(c, "^[-_]+", "")
-    return F.when(c == "", F.lit("folder")).otherwise(c)

@@ -226,38 +226,3 @@ def chunk_recursive(
     keep = keep_cols if keep_cols is not None else [c for c in df.columns if c != text_col]
     udf = recursive_chunks_udf(chunk_size, chunk_overlap)
     return explode_chunks(df, udf(F.col(text_col)), keep)
-
-
-def chunk_recursive_udtf(
-    df: DataFrame,
-    chunk_size: int = DEFAULT_CHUNK_SIZE,
-    chunk_overlap: int = 0,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """The same recursive split as a Spark 4 Python UDTF + LATERAL
-    join — the first-class API for one-row-in/many-rows-out transforms
-    (the pandas_udf + posexplode formulation above is the
-    Arrow-batched alternative; tests assert they emit identical rows).
-    """
-    from pyspark.sql.functions import udtf
-
-    size, overlap = chunk_size, chunk_overlap
-
-    @udtf(returnType="chunk_index int, chunk_text string, start_index int")
-    class SplitChunks:
-        def eval(self, text: str):  # noqa: ANN001 — UDTF contract
-            if not text:
-                return
-            for i, (chunk, idx) in enumerate(
-                split_with_start_index(text, size, overlap)
-            ):
-                yield i, chunk, idx
-
-    spark = df.sparkSession
-    spark.udtf.register("split_chunks", SplitChunks)
-    df.select(key_col, text_col).createOrReplaceTempView("_chunk_udtf_in")
-    return spark.sql(
-        f"SELECT i.{key_col}, s.chunk_index, s.chunk_text, s.start_index "
-        f"FROM _chunk_udtf_in i, LATERAL split_chunks(i.{text_col}) s"
-    )

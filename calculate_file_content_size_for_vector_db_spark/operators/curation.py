@@ -558,9 +558,29 @@ def _packed_weights(w: DataFrame) -> DataFrame:
     crossJoin(broadcast(...)): a 1-row broadcast nested loop, bounded
     by construction and allowlisted per consumer in the registry plan
     sweep (an equi-join on a constant key compiles to the same nested
-    loop after constant folding, so there is no BHJ alternative)."""
-    return w.groupBy().agg(
-        F.map_from_entries(F.collect_list(F.struct("b", "wgt"))).alias("wm")
+    loop after constant folding, so there is no BHJ alternative).
+
+    A stored table may repeat or NULL a bucket id, which map_from_entries
+    would reject with an opaque map-key error; the same aggregation
+    counts rows against distinct ids and raises a named error instead."""
+    agg = w.groupBy().agg(
+        F.count("*").alias("n"),
+        F.size(F.collect_set("b")).alias("n_distinct"),
+        F.collect_list(F.struct("b", "wgt")).alias("entries"),
+    )
+    return agg.select(
+        F.when(
+            F.col("n") == F.col("n_distinct"), F.map_from_entries("entries")
+        ).otherwise(
+            F.raise_error(
+                F.format_string(
+                    "weight table needs one row per bucket id b: "
+                    "%d rows, %d distinct non-NULL b",
+                    "n",
+                    "n_distinct",
+                )
+            )
+        ).alias("wm")
     )
 
 

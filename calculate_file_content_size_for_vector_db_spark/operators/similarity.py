@@ -659,11 +659,11 @@ def topk_ivf(
 # ---------------------------------------------------------------------------
 # Block-nested-loop bulk scoring: for ALL-pairs workloads the
 # pair-expansion plans above materialize O(N^2) rows before ranking.
-# This path packs the corpus into ``n_blocks`` array rows
+# This path packs both sides into ``n_blocks`` array rows
 # (collect_list per block — a distributed agg, NOT a driver collect),
-# joins queries x blocks, and reduces each block to its k best
-# candidates with native higher-order functions, so only
-# O(N * n_blocks * k) narrow rows ever shuffle. Exact all-pairs
+# joins query blocks x corpus blocks, and reduces each grid cell to
+# its k best candidates per query, so only O(N * n_blocks * k) narrow
+# rows leave the scoring step. Exact all-pairs
 # scoring is inherently O(N^2) compute no matter the layout; what this
 # buys at scale is (a) no driver-side corpus materialization, (b) no
 # quadratic row blowup, (c) block size as the memory knob
@@ -680,71 +680,6 @@ def unit(col: Column | str) -> Column:
     n = norm(v)
     return F.when(n > 0, F.transform(v, lambda x: x / n)).otherwise(
         F.transform(v, lambda x: x * 0.0)
-    )
-
-
-def _corpus_blocks(
-    embeddings: DataFrame, id_col: str, vec_col: str, n_blocks: int
-) -> DataFrame:
-    """(blk, cands): corpus packed into n_blocks array-of-struct rows.
-    Vectors are pre-normalized ONCE here so per-pair scoring is a
-    single dot product instead of dot + two norms."""
-    return (
-        spread(embeddings)
-        .select(F.col(id_col).alias("nid"), unit(vec_col).alias("nv"))
-        .withColumn("blk", F.pmod(F.col("nid"), F.lit(n_blocks)).cast("int"))
-        .groupBy("blk")
-        .agg(F.collect_list(F.struct("nid", "nv")).alias("cands"))
-    )
-
-
-def topk_blocked(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_blocks: int = 8,
-) -> DataFrame:
-    """Exact top-k neighbors for EVERY query vector, fully distributed.
-
-    Per (query, block) row the block's candidates are scored, the k
-    best kept via array_sort + slice (cosine desc, id asc; zero-norm
-    cosine coalesced to 0.0), then a window over the per-block winners
-    picks the global top k. Self-pairs are excluded.
-    """
-    blocks = _corpus_blocks(embeddings, id_col, vec_col, n_blocks)
-    q = spread(queries).select(
-        F.col(id_col).alias("query_id"), unit(vec_col).alias("qv")
-    )
-    scored = F.transform(
-        F.filter(F.col("cands"), lambda c: c["nid"] != F.col("query_id")),
-        lambda c: F.struct(
-            (-F.round(dot(F.col("qv"), c["nv"]), 6)).alias("negcos"),
-            c["nid"].alias("nid"),
-        ),
-    )
-    block_best = F.slice(F.array_sort(scored), 1, k)
-    # equi-join on block id instead of broadcasting the packed corpus:
-    # each query row is exploded to n_blocks (query_id, blk) probes and
-    # hash-joined against its block row, so corpus memory per executor
-    # is bounded by the blocks that land there, not O(corpus). The
-    # SHUFFLE_HASH hint keeps the optimizer from re-broadcasting the
-    # packed side at fixture scale.
-    probes = q.withColumn("blk", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))))
-    per_block = probes.join(blocks.hint("shuffle_hash"), "blk").select(
-        "query_id", F.explode(block_best).alias("s")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("s.negcos"), F.asc("s.nid"))
-    return (
-        per_block.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("s.nid").alias("neighbor_id"),
-            (-F.col("s.negcos")).alias("cosine"),
-            "rank",
-        )
     )
 
 

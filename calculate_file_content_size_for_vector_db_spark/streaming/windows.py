@@ -172,15 +172,6 @@ def lag_delta(events: DataFrame, key_col: str = "user_id") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def stream_events(spark, sf_dir: str, schema) -> DataFrame:
-    """readStream over the events fixture directory (file micro-batch
-    source) — drives the SAME aggregations as the batch path."""
-    return (
-        spark.readStream.schema(schema)
-        .parquet(f"{sf_dir}/events.parquet")
-    )
-
-
 def run_stream_to_memory(agg: DataFrame, name: str, output_mode: str = "complete"):
     """Execute a streaming aggregation to a memory sink synchronously;
     returns the StreamingQuery (stopped)."""

@@ -154,29 +154,3 @@ class TestFixedChunker:
         df = spark.createDataFrame([(0, "abcdefg")], "doc_id long, text string")
         rows = chunk_fixed(df, chunk_size=3).orderBy("chunk_index").collect()
         assert [r.chunk_text for r in rows] == ["abc", "def", "g"]
-
-
-class TestUDTFVariant:
-    def test_udtf_matches_pandas_udf_path(self, spark):
-        from calculate_file_content_size_for_vector_db_spark.operators.chunk import (
-            chunk_recursive,
-            chunk_recursive_udtf,
-        )
-
-        rows = [
-            (0, "para one\n\npara two is long\n\nshort"),
-            (1, "aa bb cc dd ee ff gg hh"),
-            (2, None),
-            (3, ""),
-            (4, "x" * 55),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        via_udf = {
-            (r.doc_id, r.chunk_index, r.chunk_text, r.start_index)
-            for r in chunk_recursive(df, chunk_size=12, keep_cols=["doc_id"]).collect()
-        }
-        via_udtf = {
-            (r.doc_id, r.chunk_index, r.chunk_text, r.start_index)
-            for r in chunk_recursive_udtf(df, chunk_size=12).collect()
-        }
-        assert via_udtf == via_udf and len(via_udf) > 0

@@ -351,6 +351,22 @@ def test_quality_classifier_sampled_training_scores_full_corpus(spark):
     assert w_sample != w_full  # training really used the sample
 
 
+def test_quality_classifier_rejects_duplicate_stored_weights(spark):
+    """A stored weight table with a repeated bucket id fails with a
+    named error, not Spark's duplicate-map-key error."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from calculate_file_content_size_for_vector_db_spark.operators.curation import (
+        quality_classifier_score,
+    )
+
+    df = spark.createDataFrame([(0, "alpha beta", "en")], "doc_id long, text string, lang string")
+    weights = spark.createDataFrame([(-1, 0.1), (3, 0.2), (3, 0.5)], "b int, wgt double")
+    with pytest.raises(Exception, match="one row per bucket id b: 3 rows, 2 distinct"):
+        quality_classifier_score(df, F.col("lang") == "en", weights_df=weights).collect()
+
+
 def test_leakage_safe_split_clusters_never_straddle(spark):
     """Every near-dup cluster must land wholly on one side; singletons
     split by their own id; ids in the output cover the corpus."""

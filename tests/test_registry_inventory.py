@@ -1,13 +1,19 @@
 """SURVEY.md §8's query inventory is the contract the driver sweep is
 judged against; this pins its counts to the actual registry so the two
-can't drift (VERDICT round 2, "What's wrong" #6)."""
+can't drift (VERDICT round 2, "What's wrong" #6). The order queries()
+returns is computed from the CORRECTNESS history (SURVEY.md §5.1)."""
 
+import json
 import re
 from pathlib import Path
 
-from calculate_file_content_size_for_vector_db_spark.entry_queries import REGISTRY
+import pytest
 
-SURVEY = Path(__file__).resolve().parent.parent / "SURVEY.md"
+import __spark_entry__ as entry
+from calculate_file_content_size_for_vector_db_spark.entry_queries import REGISTRY, register
+
+REPO = Path(__file__).resolve().parent.parent
+SURVEY = REPO / "SURVEY.md"
 
 
 def test_survey_inventory_matches_registry():
@@ -34,43 +40,70 @@ def test_rows_only_queries_are_the_documented_six():
     ], f"rows-only set changed: {rows_only} — update SURVEY.md §8 and this list"
 
 
-def test_verify_window_follows_declared_policy():
-    """SURVEY.md §5.1: the driver verification window is REBUILT each
-    round from the committed CORRECTNESS history — never-checked rows
-    first, then cohorts oldest-round first, each cohort taken whole
-    (internal order free for spill management). tools/verify_window.py
-    is the builder; this pins _VERIFY_FIRST to its check so the window
-    can't silently drift from the history.
+def _committed_latest_rounds() -> dict[str, int]:
+    latest: dict[str, int] = {}
+    for path in REPO.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.split("_r")[1])
+        for name in json.loads(path.read_text()):
+            latest[name] = max(latest.get(name, 0), rnd)
+    return latest
 
-    Cross-round contract (ADVICE r10, softened per ADVICE r11 item
-    4): the driver drops CORRECTNESS_r{N}.json AFTER round N closes,
-    at which point the committed window (built from r01..r{N-1}
-    history, round recorded in _WINDOW_BUILT_FOR_ROUND) is stale by
-    design. Instead of a hard red that could mask real window drift,
-    the test SKIPS with the atomic-rebuild message — the r{N}
-    CORRECTNESS commit and the r{N+1} window rebuild are still the
-    same mandatory first commit of round N+1."""
-    import sys
 
-    import pytest
+def test_queries_lead_with_the_least_recently_checked_rows():
+    """SURVEY.md §5.1: a verification round checks only the head of
+    queries(), so the rows whose latest checked round is oldest (0 =
+    never) come first."""
+    latest = _committed_latest_rounds()
+    rounds = [latest.get(name, 0) for name in entry.queries()]
+    assert rounds == sorted(rounds), rounds[:60]
 
-    sys.path.insert(0, str(SURVEY.parent / "tools"))
-    from verify_window import check_window, latest_driver_round
 
-    from calculate_file_content_size_for_vector_db_spark.entry_queries import (
-        _VERIFY_FIRST,
-        _WINDOW_BUILT_FOR_ROUND,
-    )
+def test_queries_and_oracles_list_every_registered_name_once():
+    order = entry.verification_order()
+    assert sorted(order) == sorted(REGISTRY)  # every name, none repeated
+    assert list(entry.queries()) == order
+    with_oracle = [n for n in order if REGISTRY[n].oracle is not None]
+    assert list(entry.oracle_sql()) == with_oracle
 
-    latest = latest_driver_round()
-    max_round = max(latest.values(), default=0)
-    if max_round >= _WINDOW_BUILT_FOR_ROUND:
-        pytest.skip(
-            f"CORRECTNESS_r{max_round:02d}.json present but the committed "
-            f"window was built for round {_WINDOW_BUILT_FOR_ROUND} from "
-            f"r01..r{_WINDOW_BUILT_FOR_ROUND - 1} history — rebuild "
-            "_VERIFY_FIRST with tools/verify_window.py as the atomic "
-            f"first commit of round {max_round + 1}"
+
+def test_verification_order_from_synthetic_history(tmp_path):
+    reg = list(REGISTRY)
+    history = {
+        1: [reg[5], reg[1], reg[7]],
+        2: [reg[7], reg[0]],
+        3: [reg[2]],
+    }
+    for rnd, names in history.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps({n: {"hash_match": True} for n in names})
         )
-    problems = check_window(_VERIFY_FIRST, list(REGISTRY), latest)
-    assert not problems, problems
+    checked = [reg[1], reg[5], reg[0], reg[7], reg[2]]
+    never = [n for n in reg if n not in checked]
+    assert entry.verification_order(tmp_path) == never + checked
+
+
+def test_verification_order_without_history_is_registration_order(tmp_path):
+    assert entry.verification_order(tmp_path) == list(REGISTRY)
+
+
+@pytest.mark.parametrize(
+    "name, text",
+    [
+        ("CORRECTNESS_r03.json", '{"tpch_q1": '),
+        ("CORRECTNESS_r03.json", '["tpch_q1"]'),
+        ("CORRECTNESS_rX.json", "{}"),
+    ],
+    ids=["truncated-json", "not-an-object", "round-not-a-number"],
+)
+def test_malformed_history_file_raises_with_its_name(tmp_path, name, text):
+    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
+    (tmp_path / name).write_text(text)
+    with pytest.raises(ValueError, match=re.escape(name)):
+        entry.verification_order(tmp_path)
+
+
+def test_duplicate_registration_raises():
+    before = dict(REGISTRY)
+    with pytest.raises(ValueError, match="'rollup_summary' is already registered"):
+        register("rollup_summary")
+    assert REGISTRY == before
