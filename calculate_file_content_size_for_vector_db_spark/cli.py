@@ -25,10 +25,8 @@ import argparse
 import re
 import sys
 import time
-from collections.abc import Iterator
-from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -43,19 +41,10 @@ def _ratio(r: float | None) -> str:
     return "n/a" if r is None else f"{r:,.2f}"
 
 
-@contextmanager
-def _cached(df: DataFrame) -> Iterator[None]:
-    """Persist ``df`` for the block and release it after."""
-    df.persist()
-    try:
-        yield
-    finally:
-        df.unpersist()
-
-
 def _report_folder(spark: SparkSession, folder: str, args: argparse.Namespace) -> list[Row]:
     """Print one folder's table, write its CSV, return the summary rows."""
     from calculate_file_content_size_for_vector_db_spark.plans.pipeline import pdf_size_report
+    from calculate_file_content_size_for_vector_db_spark.session import cache_scope, cached
     from calculate_file_content_size_for_vector_db_spark.sources.io import write_csv
 
     t0 = time.time()
@@ -64,7 +53,8 @@ def _report_folder(spark: SparkSession, folder: str, args: argparse.Namespace) -
     # the console reads them too (the summary is a small rollup over
     # them), else the summary (read by the table and the CSV)
     reads_per_file = args.progress or args.print_metadata
-    with _cached(report.per_file if reads_per_file else report.summary):
+    with cache_scope(spark):
+        cached(report.per_file if reads_per_file else report.summary)
         if args.progress:
             # stream per-file rows to the console as partitions finish
             # (completion order, like the reference's pool workers)

@@ -28,6 +28,7 @@ from calculate_file_content_size_for_vector_db_spark.operators.dedup import (
     PROD_MAX_SHINGLE_FREQ,
 )
 from calculate_file_content_size_for_vector_db_spark.plans.pipeline import DocumentPipeline
+from calculate_file_content_size_for_vector_db_spark.session import release_cache
 from calculate_file_content_size_for_vector_db_spark.sources.io import read_table
 
 FIXTURE_CHUNK_SIZE = 100
@@ -54,13 +55,7 @@ def register(name: str, oracle: Optional[str] = None):
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Several queries persist() intermediates that feed multiple
-            # plan branches and (correctly) never unpersist inside a lazy
-            # builder — but across a 120-query sweep in one session those
-            # caches accumulate in executor memory. Any prior query's
-            # cache is dead weight once its result was materialized, so
-            # each query entry starts from a clean cache.
-            spark.catalog.clearCache()
+            release_cache(spark)
             return fn(spark, sf_dir)
 
         REGISTRY[name] = Q(wrapped, oracle)

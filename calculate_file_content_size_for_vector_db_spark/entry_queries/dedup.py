@@ -6,6 +6,8 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from calculate_file_content_size_for_vector_db_spark.session import cached
 from calculate_file_content_size_for_vector_db_spark.operators.dedup import (
     BLOOM_BITS,
     BLOOM_HASHES,
@@ -248,7 +250,7 @@ def dedup_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.where(F.col("doc_id") % _INCR_BATCH_MOD != 0)
     # one corpus tokenize+shingle pass (r16): sets persist DISK_ONLY
     # (corpus-sized cache rule), bands derive from the cached arrays
-    corpus_sh = shingle_sets(corpus).persist(StorageLevel.DISK_ONLY)
+    corpus_sh = cached(shingle_sets(corpus), StorageLevel.DISK_ONLY)
     corpus_bands = bands_from_shingle_sets(corpus_sh)
     return incremental_neardup_pairs(batch, corpus_bands, corpus_sh)
 
@@ -631,7 +633,7 @@ def dedup_incremental_bloom_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one corpus tokenize+shingle pass (r16, see dedup_incremental_q):
     # the gate, the pair join, and the verify all derive from the
     # persisted shingle sets
-    corpus_sh = shingle_sets(corpus).persist(StorageLevel.DISK_ONLY)
+    corpus_sh = cached(shingle_sets(corpus), StorageLevel.DISK_ONLY)
     corpus_bands = bands_from_shingle_sets(corpus_sh)
     gate = bloom_neardup_prefilter(batch, corpus_bands)
     batch_f = batch.join(
@@ -682,10 +684,10 @@ def dedup_clusters_append_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # competes with the pair joins' execution memory at 100 TB;
     # bench-neutral at sf0.1 (r16 A/B). Batch-sized frames keep the
     # default level.
-    corpus_sh = shingle_sets(corpus).persist(StorageLevel.DISK_ONLY)
-    corpus_bands = bands_from_shingle_sets(corpus_sh).persist(StorageLevel.DISK_ONLY)
-    batch_sh = shingle_sets(batch).persist()
-    batch_bands = bands_from_shingle_sets(batch_sh).persist()
+    corpus_sh = cached(shingle_sets(corpus), StorageLevel.DISK_ONLY)
+    corpus_bands = cached(bands_from_shingle_sets(corpus_sh), StorageLevel.DISK_ONLY)
+    batch_sh = cached(shingle_sets(batch))
+    batch_bands = cached(bands_from_shingle_sets(batch_sh))
     stored = neardup_clusters(
         corpus, threshold=0.5, bands_df=corpus_bands, shingles_df=corpus_sh
     )
@@ -797,8 +799,8 @@ def dedup_takedown_recluster_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     neardup_clusters(
         docs,
         0.5,
-        bands_df=spark.read.parquet(f"{store}/bands"),
-        shingles_df=spark.read.parquet(f"{store}/shingles"),
+        bands_df=cached(spark.read.parquet(f"{store}/bands")),
+        shingles_df=cached(spark.read.parquet(f"{store}/shingles")),
     ).write.parquet(f"{store}/labels")
     takedown = docs.where(F.col("doc_id") % _TAKEDOWN_MOD == 0).select("doc_id")
     return cluster_takedown(
@@ -901,8 +903,8 @@ def dedup_upsert_relabel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands_from_shingle_sets(
         spark.read.parquet(f"{store}/shingles_v1")
     ).write.parquet(f"{store}/bands_v1")
-    stored_bands = spark.read.parquet(f"{store}/bands_v1")
-    stored_shingles = spark.read.parquet(f"{store}/shingles_v1")
+    stored_bands = cached(spark.read.parquet(f"{store}/bands_v1"))
+    stored_shingles = cached(spark.read.parquet(f"{store}/shingles_v1"))
     neardup_clusters(
         docs, 0.5, bands_df=stored_bands, shingles_df=stored_shingles
     ).write.parquet(f"{store}/labels_v1")

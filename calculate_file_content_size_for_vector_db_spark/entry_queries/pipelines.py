@@ -7,6 +7,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from calculate_file_content_size_for_vector_db_spark.session import cache_scope, cached
 from calculate_file_content_size_for_vector_db_spark.entry_queries._core import (
     FIXTURE_CHUNK_SIZE,
     _BPE_N,
@@ -433,7 +434,7 @@ def serving_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already overlaps the independent training subtrees via AQE's
     # concurrent stage materialization, and the eager split only adds
     # job barriers + cache round-trips. See OPTIMIZATION_r16.md.)
-    cents = ivf_centroids(base).persist()
+    cents = cached(ivf_centroids(base))
     routed = ivf_append_assign(batch, cents)
     base_assign = ivf_append_assign(base, cents)
     qv = batch.select(
@@ -582,8 +583,8 @@ def ingest_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one corpus tokenize+shingle pass (r16): the shingle sets persist
     # (the verify join needs them anyway) and the band table derives
     # from the cached arrays (bands_from_shingle_sets — bit-identical)
-    corpus_sh = shingle_sets(corpus).persist(StorageLevel.DISK_ONLY)
-    corpus_bands = bands_from_shingle_sets(corpus_sh).persist(StorageLevel.DISK_ONLY)
+    corpus_sh = cached(shingle_sets(corpus), StorageLevel.DISK_ONLY)
+    corpus_bands = cached(bands_from_shingle_sets(corpus_sh), StorageLevel.DISK_ONLY)
     # (r16 negative result: persisting the BATCH band table and feeding
     # the gate + pair join through the precomputed-bands hooks measured
     # 8.76s -> 10.91s interleaved — the batch subtree is cheap, its
@@ -800,8 +801,8 @@ def ingest_serve_handoff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the band table derives from the persisted shingle sets (r16,
     # bands_from_shingle_sets — bit-identical), so the batch text is
     # tokenized+shingled exactly once
-    batch_sh = shingle_sets(batch_all).persist()
-    batch_bands = bands_from_shingle_sets(batch_sh).persist()
+    batch_sh = cached(shingle_sets(batch_all))
+    batch_bands = cached(bands_from_shingle_sets(batch_sh))
 
     def _ivf_chain():
         spark.sparkContext.setJobDescription("handoff: IVF train + corpus assign")
@@ -1068,7 +1069,7 @@ def ingest_replay_idempotent_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         admitted = admitted.localCheckpoint(eager=True)
         # admitted appends share one batch shingle pass (r16): persist
         # the sets, derive the band append from the cached arrays
-        adm_sh = shingle_sets(admitted).persist()
+        adm_sh = cached(shingle_sets(admitted))
         adm_sh.write.mode("append").parquet(f"{store}/shingles")
         bands_from_shingle_sets(adm_sh).write.mode("append").parquet(f"{store}/bands")
         return admitted, nd
@@ -1242,7 +1243,7 @@ def ingest_takedown_readmit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # admitted appends share one batch shingle pass (r16): the shingle
     # sets persist and the band append derives from the cached arrays
-    adm1_sh = shingle_sets(adm1).persist()
+    adm1_sh = cached(shingle_sets(adm1))
     adm1_sh.write.mode("append").parquet(f"{store}/shingles")
     bands_from_shingle_sets(adm1_sh).write.mode("append").parquet(f"{store}/bands")
     adm1.select("doc_id").write.parquet(f"{store}/ledger")
@@ -1482,12 +1483,13 @@ def composed_faces_ledger_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = tempfile.mkdtemp(prefix="faces_ledger_")
     for t in range(3):
         batch = docs.where(F.col("doc_id") % 3 == t)
-        admitted = gate_batch(
-            batch, f"{store}/bands", f"{store}/shingles", f"{store}/admitted"
-        )
-        if admitted.count():
-            append_card_partials(admitted, t, f"{store}/card")
-            append_drift_marginals(admitted, t, f"{store}/drift")
+        with cache_scope(spark):
+            admitted = gate_batch(
+                batch, f"{store}/bands", f"{store}/shingles", f"{store}/admitted"
+            )
+            if admitted.count():
+                append_card_partials(admitted, t, f"{store}/card")
+                append_drift_marginals(admitted, t, f"{store}/drift")
 
     adm_counts = (
         spark.read.parquet(f"{store}/admitted")
@@ -1526,7 +1528,7 @@ def upsert_face_relabel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     four stores, and the upsert verb itself — not just the batch verb
     the relabel row already covers. Replay/crash seams are pinned
     suite-side (tests/test_streaming.py upsert-face tests; the face
-    runs under store_swap.face_scope per ADVICE r13). At 100 TB the
+    runs under session.cache_scope). At 100 TB the
     trigger is batch-sized by construction (the face's contract);
     the store rewrites are the linear scans a compaction pays."""
     import tempfile
@@ -1554,8 +1556,8 @@ def upsert_face_relabel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     neardup_clusters(
         docs,
         0.5,
-        bands_df=spark.read.parquet(f"{store}/bands"),
-        shingles_df=spark.read.parquet(f"{store}/shingles"),
+        bands_df=cached(spark.read.parquet(f"{store}/bands")),
+        shingles_df=cached(spark.read.parquet(f"{store}/shingles")),
     ).write.parquet(f"{store}/labels")
     changed = docs.where(F.col("doc_id") % 13 == 0).select(
         "doc_id", F.concat(F.col("text"), F.lit(" spark spark hash")).alias("text")
@@ -1642,7 +1644,7 @@ def lifecycle_takedown_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     writeStream.foreachBatch(lifecycle_store_batch) query
     (streaming/lifecycle.py): the takedown verb purges first, then
     the upsert verb re-assigns against the FROZEN stored centroids
-    over the post-purge store, both under one face_scope. The
+    over the post-purge store, both under one cache_scope. The
     returned assignment STORE must hash-equal a from-scratch
     frozen-centroid assignment of the post-trigger corpus (survivors,
     with the re-delivered vectors reversed) — which is simultaneously

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from calculate_file_content_size_for_vector_db_spark.session import cached
 from calculate_file_content_size_for_vector_db_spark.sources.io import read_table
 
 from calculate_file_content_size_for_vector_db_spark.entry_queries._core import _docs, register
@@ -947,13 +949,12 @@ def tpch_q11_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = read_table(spark, sf_dir, "supplier")
     nation = read_table(spark, sf_dir, "nation")
     region = read_table(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
-    value_t = (
+    value_t = cached(
         li.join(F.broadcast(sup), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(nation), F.col("n_nationkey") == F.col("s_nationkey"))
         .join(F.broadcast(region), F.col("r_regionkey") == F.col("n_regionkey"))
         .groupBy("l_partkey")
         .agg(F.sum(_d184("l_extendedprice")).alias("val"))
-        .persist()
     )
     total = value_t.agg(F.sum("val").cast("double").alias("grand_total"))
     return (
@@ -1093,7 +1094,7 @@ def tpch_q15_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
     sup = read_table(spark, sf_dir, "supplier")
-    revenue = (
+    revenue = cached(
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(
             F.sum(
@@ -1101,7 +1102,6 @@ def tpch_q15_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * (F.lit(1).cast("decimal(18,4)") - _d184("l_discount"))
             ).alias("total_revenue")
         )
-        .persist()
     )
     max_rev = revenue.agg(F.max("total_revenue").alias("max_revenue"))
     return (
@@ -1221,11 +1221,10 @@ def tpch_q20_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = read_table(spark, sf_dir, "part").where(F.col("p_name").like("small%"))
     sup = read_table(spark, sf_dir, "supplier")
     nation = read_table(spark, sf_dir, "nation")
-    shipped = (
+    shipped = cached(
         li.join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
         .groupBy(F.col("l_suppkey").alias("sk"))
         .agg(F.sum("l_quantity").alias("qty"))
-        .persist()
     )
     avg_qty = shipped.agg(F.avg("qty").alias("avg_qty"))
     return (

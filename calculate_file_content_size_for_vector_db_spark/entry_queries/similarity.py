@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from calculate_file_content_size_for_vector_db_spark.session import cached
 from calculate_file_content_size_for_vector_db_spark.sources.io import read_table
 
 from calculate_file_content_size_for_vector_db_spark.entry_queries._core import (
@@ -1710,9 +1712,9 @@ def knn_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the iterative chain back-references the edge frame once
     # per round, and an unpersisted lazy build re-runs the topk_grid
     # block-matmul each time (the topk_graph persist fix, same class)
-    edges = topk_grid(emb, emb, k=3).select(
+    edges = cached(topk_grid(emb, emb, k=3).select(
         F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
-    ).persist()
+    ))
     return pagerank(edges, emb.select(F.col("vec_id").alias("node"))).select(
         F.col("node").alias("vec_id"), "pagerank_micro"
     )
@@ -1942,9 +1944,9 @@ def knn_label_propagation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the iterative chain back-references the edge frame once
     # per round, and an unpersisted lazy build re-runs the topk_grid
     # block-matmul each time (the topk_graph persist fix, same class)
-    edges = topk_grid(emb, emb, k=3).select(
+    edges = cached(topk_grid(emb, emb, k=3).select(
         F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
-    ).persist()
+    ))
     seeds = emb.where(F.col("vec_id") % 5 == 0).select(
         F.col("vec_id").alias("node"), "label"
     )
@@ -2379,7 +2381,7 @@ def maxsim_ivf_recall_at_10_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _emb(spark, sf_dir)
-    dtk = _token_bags(emb, "doc_id").persist()
+    dtk = cached(_token_bags(emb, "doc_id"))
     qtk = dtk.where(F.col("doc_id") < 10).withColumnRenamed("doc_id", "query_id")
     exact = topk_maxsim(dtk, qtk, k=_RECALL_K).withColumnRenamed(
         "doc_id", "neighbor_id"
@@ -2465,9 +2467,9 @@ def knn_clustering_coeff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the iterative chain back-references the edge frame once
     # per round, and an unpersisted lazy build re-runs the topk_grid
     # block-matmul each time (the topk_graph persist fix, same class)
-    edges = topk_grid(emb, emb, k=3).select(
+    edges = cached(topk_grid(emb, emb, k=3).select(
         F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
-    ).persist()
+    ))
     return clustering_coefficients(edges, emb.select(F.col("vec_id").alias("node"))).select(
         F.col("node").alias("vec_id"), "degree", "triangles", "clustering_coeff"
     )
@@ -2886,7 +2888,7 @@ def graph_ivf_recall_at_10_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, q, exact = _recall_queries(spark, sf_dir)
     # persist: each beam hop back-references the edge frame; unpersisted,
     # the whole IVF build (kmeans included) re-ran once per hop
-    edges = knn_graph_ivf(emb).persist()
+    edges = cached(knn_graph_ivf(emb))
     return recall_vs_exact(
         exact, topk_graph(emb, q, k=_RECALL_K, hops=_GRAPH_HOPS, edges=edges)
     )
@@ -3847,7 +3849,7 @@ def maxsim_filtered_recall_at_10_q(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     emb = _emb(spark, sf_dir)
-    dtk = _token_bags(emb, "doc_id", with_label=True).persist()
+    dtk = cached(_token_bags(emb, "doc_id", with_label=True))
     qtk = dtk.where(F.col("doc_id") < 10).select(
         F.col("doc_id").alias("query_id"), "tok", "tv"
     )

@@ -15,6 +15,8 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from calculate_file_content_size_for_vector_db_spark.session import cached
+
 # Conservative PII patterns that parse identically under Java regex
 # (Spark) and RE2 (DuckDB): no backrefs, no lookaround.
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -177,7 +179,7 @@ def pack_sequences_salted(
     rng = tok.groupBy(stream_col).agg(
         F.min(key).alias("_kmin"), F.max(key).alias("_kmax")
     )
-    salted = (
+    salted = cached(  # feeds the local window AND the substream totals
         tok.join(F.broadcast(rng), stream_col)
         .withColumn("_delta", F.col(key) - F.col("_kmin"))
         .withColumn(
@@ -186,7 +188,6 @@ def pack_sequences_salted(
         )
         .withColumn("_sub", F.expr("_delta div _w").cast("int"))
         .select(key, stream_col, "n_tokens", "_sub")
-        .persist()  # feeds the local window AND the substream totals
     )
     w_local = (
         Window.partitionBy(stream_col, "_sub")
@@ -624,10 +625,11 @@ def quality_classifier_weights(
     # DISK_ONLY keeps the GD rounds' execution memory clear of the
     # cache (guide §5; bench-neutral at sf0.1, r16 A/B in
     # OPTIMIZATION_r16.md).
-    labeled = (
-        _doc_features(df, text_col, key, n_buckets)
-        .join(df.select(F.col(key), positive.cast("int").alias("y")), key)
-        .persist(StorageLevel.DISK_ONLY)
+    labeled = cached(
+        _doc_features(df, text_col, key, n_buckets).join(
+            df.select(F.col(key), positive.cast("int").alias("y")), key
+        ),
+        StorageLevel.DISK_ONLY,
     )
     n_train = labeled.agg(F.count("*").cast("double").alias("n_train"))
     w = (
@@ -800,9 +802,9 @@ def contamination_score(
     from calculate_file_content_size_for_vector_db_spark.operators.dedup import shingles
     from calculate_file_content_size_for_vector_db_spark.partitioning import spread
 
-    t = spread(train).select(
-        F.col(key), F.explode(shingles(F.col(text_col), n)).alias("g")
-    ).persist()
+    t = cached(
+        spread(train).select(F.col(key), F.explode(shingles(F.col(text_col), n)).alias("g"))
+    )
     totals = t.groupBy(key).agg(F.count("*").cast("bigint").alias("n_grams"))
     b = benchmark.select(F.explode(shingles(F.col(text_col), n)).alias("g")).distinct()
     hits = (

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from calculate_file_content_size_for_vector_db_spark.session import cached
 from calculate_file_content_size_for_vector_db_spark.operators.textstats import (
     token_hash,
     tokens,
@@ -110,7 +111,7 @@ def ngram_jaccard_pairs(
     the size agg); persist it so tokenize+shingle runs once, not three
     times (Spark does not dedupe common subplans).
     """
-    sh = shingle_table(df, text_col, key).persist()
+    sh = cached(shingle_table(df, text_col, key))
     sizes = sh.groupBy(key).agg(F.count("*").alias("n_shingles"))
     joinable = sh
     if max_shingle_freq is not None:
@@ -251,25 +252,25 @@ def minhash_lsh_pairs(
     ``df`` (minhash_bands(minhash_signature(df)) and shingle_sets(df)
     respectively) — callers that already derived them for a store
     rewrite (the streaming upsert face) pass them so the signature
-    pipeline is not recomputed; None derives them here.
+    pipeline is not recomputed; None derives them here. A passed
+    artifact is used as given: caching it is its owner's call.
 
     The band table self-joins (both candidate sides) and the shingle
-    table feeds both verify sides; persist both so the signature
-    pipeline runs once. On the from-text path the band table DERIVES
-    from the persisted shingle sets (r16, bands_from_shingle_sets —
-    bit-identical), so the input text is tokenized+shingled exactly
-    once instead of once per artifact (guide §2.4; interleaved A/B on
-    the same rewrite in dedup_incremental measured ×1.2)."""
+    table feeds both verify sides; the tables derived here are cached
+    so the signature pipeline runs once. On the from-text path the
+    band table DERIVES from the cached shingle sets (r16,
+    bands_from_shingle_sets — bit-identical), so the input text is
+    tokenized+shingled exactly once instead of once per artifact
+    (guide §2.4; interleaved A/B on the same rewrite in
+    dedup_incremental measured ×1.2)."""
     from calculate_file_content_size_for_vector_db_spark.partitioning import spread
 
-    sh = (
-        shingles_df
-        if shingles_df is not None
-        else spread(df).select(F.col(key), shingles(text_col).alias("sh"))
-    ).persist()
-    bands = (
-        bands_df if bands_df is not None else bands_from_shingle_sets(sh, key=key)
-    ).persist()
+    sh = shingles_df
+    if sh is None:
+        sh = cached(spread(df).select(F.col(key), shingles(text_col).alias("sh")))
+    bands = bands_df
+    if bands is None:
+        bands = cached(bands_from_shingle_sets(sh, key=key))
     if max_bucket_size is not None:
         # window count, not a groupBy+self-join — the join form would
         # evaluate the whole signature pipeline twice
@@ -1387,7 +1388,7 @@ def containment_pairs(
     per-doc sizes joined back; only the final arithmetic differs, so
     every scale property (and the hub-shingle cap pattern, if needed)
     carries over."""
-    sh = shingle_table(df, text_col, key).persist()
+    sh = cached(shingle_table(df, text_col, key))
     sizes = sh.groupBy(key).agg(F.count("*").alias("n_shingles"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -1424,7 +1425,7 @@ def minhash_jaccard_estimate(
     Plan shape: the signature table feeds the band join (candidates)
     and both estimate sides; the shingle table feeds both exact sides
     — all equi-joins on doc ids, candidate-bounded."""
-    sig = minhash_signature(df, n_hashes, text_col, key).persist()
+    sig = cached(minhash_signature(df, n_hashes, text_col, key))
     bands = minhash_bands(sig, n_hashes=n_hashes, key=key)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -1452,7 +1453,7 @@ def minhash_jaccard_estimate(
     )
     from calculate_file_content_size_for_vector_db_spark.partitioning import spread
 
-    sh = spread(df).select(F.col(key), shingles(text_col).alias("sh")).persist()
+    sh = cached(spread(df).select(F.col(key), shingles(text_col).alias("sh")))
     return (
         est.join(sh.withColumnsRenamed({key: "a_id", "sh": "sh_a"}), "a_id")
         .join(sh.withColumnsRenamed({key: "b_id", "sh": "sh_b"}), "b_id")
@@ -1539,9 +1540,9 @@ def dedup_pair_quality(
     bounded ops; the comparisons are pair-table joins (candidate-
     bounded) collapsing into 1-row aggregates; the output is one row
     per tier."""
-    truth = ngram_jaccard_pairs(df, threshold, text_col, key).select(
+    truth = cached(ngram_jaccard_pairs(df, threshold, text_col, key).select(
         "a_id", "b_id"
-    ).persist()
+    ))
     n_true = truth.agg(F.count("*").cast("long").alias("n_true"))
 
     def row(method: str, pairs: DataFrame) -> DataFrame:
@@ -1724,7 +1725,7 @@ def ngram_jaccard_prefix_pairs(
     window (doc-keyed), the prefix self-join (rare-key equi-join),
     then a candidate-bounded verify join. At 100 TB the prefix join
     is the standard production form of exact set-similarity."""
-    sh = shingle_table(df, text_col, key).persist()
+    sh = cached(shingle_table(df, text_col, key))
     sizes = sh.groupBy(key).agg(F.count("*").alias("n_shingles"))
     freq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
     w = Window.partitionBy(key).orderBy(F.asc("_df"), F.asc("shingle"))

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from calculate_file_content_size_for_vector_db_spark.session import cached
 from calculate_file_content_size_for_vector_db_spark.partitioning import spread
 
 N_PLANES = 16
@@ -215,7 +216,7 @@ def topk_lsh(
     in parquet at scale) pass it via ``buckets`` so it isn't rebuilt."""
     if buckets is None:
         buckets = lsh_buckets(embeddings, id_col, vec_col)
-    emb_b = embeddings.join(buckets, id_col).persist()
+    emb_b = cached(embeddings.join(buckets, id_col))
     q = emb_b.join(queries.select(id_col), id_col).select(
         F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv"), "bucket"
     )
@@ -254,7 +255,7 @@ def topk_lsh_multiprobe(
     topk_lsh. Candidate count ~ (n_planes+1) * N / 2^n_planes."""
     if buckets is None:
         buckets = lsh_buckets(embeddings, id_col, vec_col)
-    emb_b = embeddings.join(buckets, id_col).persist()
+    emb_b = cached(embeddings.join(buckets, id_col))
     probe = F.explode(
         F.array(
             F.col("bucket"),
@@ -567,15 +568,7 @@ def topk_ivf(
     parquet scan as a pushed filter. Callers with a stored assignment
     table (ann_frontier, a parquet index at scale) pass it via
     ``assign`` (its corpus-side cells are always the argmax
-    assignment; only the query side multi-probes).
-
-    Cache lifetime (ADVICE r15): the k-row centroid persist (like
-    bm25_search's posting slice, the pipelines' artifact tables and
-    knn_graph_ivf's centroid/assign caches) is released by the CALLER
-    — the query registry runs spark.catalog.clearCache() per entry;
-    library consumers in a long-lived session should do the same
-    between calls (the _pq_train docstring states the shared
-    contract)."""
+    assignment; only the query side multi-probes)."""
     if assign is None:
         # Inline build: train once (tiny persisted frame), assign each
         # side with the packed 1-row centroid broadcast. The pre-r15
@@ -588,7 +581,7 @@ def topk_ivf(
         # store genuinely holds only (id, cell).
         if centroids is None:
             centroids = ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col)
-        centroids = centroids.persist()
+        centroids = cached(centroids)
         # the keep= pass-through threads every non-vector input column
         # through the assignment map, so the internal names would
         # collide with same-named input columns at analysis time —
@@ -907,10 +900,6 @@ def _pq_assign(
     )
 
 
-def _maybe_persist(df: DataFrame, persist: bool) -> DataFrame:
-    return df.persist() if persist else df
-
-
 def _pq_train(
     embeddings: DataFrame,
     m: int = PQ_SUBS,
@@ -920,9 +909,8 @@ def _pq_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_df: DataFrame | None = None,
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """(sv, cb): the persisted subvector table plus the per-subspace
+    """(sv, cb): the cached subvector table plus the per-subspace
     k-means codebooks after ``iters`` Lloyd rounds, trained in pure
     DataFrame ops (nothing collected; m*k rows flow between rounds).
     Empty codewords drop out, exactly as in the SQL mirror.
@@ -933,20 +921,14 @@ def _pq_train(
     pays the iterative cost; encode/search still cover every vector.
     Default None trains on the full input (the oracle-mirrored form).
 
-    ``sv`` persists because training re-reads it every round and every
-    caller reuses it once more for the final encode; callers are lazy
-    builders so nothing unpersists mid-plan. Cache lifecycle is the
-    CALLER's: the query registry runs clearCache() per entry; library
-    consumers issuing many PQ queries in one long-lived session should
-    either spark.catalog.clearCache() between them or pass
-    ``persist=False`` (every entry point threads it here) to trade
-    re-computation for zero cache residency."""
-    sv = _maybe_persist(subvectors(embeddings, m, dim, id_col, vec_col), persist)
+    ``sv`` is cached because training re-reads it every round and
+    every caller reuses it once more for the final encode."""
+    sv = cached(subvectors(embeddings, m, dim, id_col, vec_col))
     if train_df is None:
         tsv, tids = sv, embeddings
     else:
         tids = train_df
-        tsv = _maybe_persist(sv.join(train_df.select(id_col), id_col), persist)
+        tsv = cached(sv.join(train_df.select(id_col), id_col))
     first_k = (
         tids.select(id_col)
         .orderBy(id_col)
@@ -984,11 +966,10 @@ def pq_codebooks(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_df: DataFrame | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """(sub, code, cv): the trained per-subspace codebooks (one
     shared training path — _pq_train — for all PQ entry points)."""
-    return _pq_train(embeddings, m, k, iters, dim, id_col, vec_col, train_df, persist)[1]
+    return _pq_train(embeddings, m, k, iters, dim, id_col, vec_col, train_df)[1]
 
 
 def pq_encode(
@@ -1000,7 +981,6 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_df: DataFrame | None = None,
-    persist: bool = True,
     codebooks: DataFrame | None = None,
 ) -> DataFrame:
     """(id, codes): each vector as its array of m codebook codes —
@@ -1010,15 +990,15 @@ def pq_encode(
     stored-artifact hook (the topk_ivf assign=/centroids= pattern):
     pass the parquet-stored codebooks and the encode is a pure
     assignment map with ZERO Lloyd lineage, which is how a daily
-    batch encodes against a frozen quantizer."""
+    batch encodes against a frozen quantizer, caching nothing (each
+    input is read once)."""
     if codebooks is not None:
-        sv = _maybe_persist(subvectors(embeddings, m, dim, id_col, vec_col), persist)
+        sv = subvectors(embeddings, m, dim, id_col, vec_col)
         cb = codebooks
     else:
-        sv, cb = _pq_train(
-            embeddings, m, k, iters, dim, id_col, vec_col, train_df, persist
-        )
-    asg = _pq_assign(sv, _maybe_persist(cb, persist), id_col)
+        sv, cb = _pq_train(embeddings, m, k, iters, dim, id_col, vec_col, train_df)
+        cb = cached(cb)
+    asg = _pq_assign(sv, cb, id_col)
     return asg.groupBy(id_col).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("sub", "code"))), lambda s: s["code"]
@@ -1037,7 +1017,6 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_df: DataFrame | None = None,
-    persist: bool = True,
     candidate_filter: Column | None = None,
     codebooks: DataFrame | None = None,
     codes: DataFrame | None = None,
@@ -1083,10 +1062,8 @@ def pq_topk(
             F.col(id_col), F.posexplode("codes").alias("sub", "code")
         )
     else:
-        sv, cb = _pq_train(
-            embeddings, m, k, iters, dim, id_col, vec_col, train_df, persist
-        )
-        cb = _maybe_persist(cb, persist)
+        sv, cb = _pq_train(embeddings, m, k, iters, dim, id_col, vec_col, train_df)
+        cb = cached(cb)
         code_rows = _pq_assign(sv, cb, id_col)  # corpus code table, N*m rows
     if candidate_filter is not None:
         allowed = embeddings.where(candidate_filter).select(id_col)
@@ -1143,9 +1120,7 @@ def pq_upsert(
     legs are batch-sized against one linear store scan; the caller
     writes to a versioned sibling path and swaps last."""
     purged = stored_codes.join(batch.select(id_col), id_col, "left_anti")
-    fresh = pq_encode(
-        batch, m, k, iters, dim, id_col, vec_col, codebooks=codebooks, persist=False
-    )
+    fresh = pq_encode(batch, m, k, iters, dim, id_col, vec_col, codebooks=codebooks)
     return purged.unionByName(fresh.select(*purged.columns))
 
 
@@ -1158,7 +1133,6 @@ def semantic_dedup_pq(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_df: DataFrame | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """(codes, keeper_id, dup_count): SemDeDup-style coarse semantic
     dedup — vectors whose ALL m PQ codes agree are near-duplicates at
@@ -1166,7 +1140,7 @@ def semantic_dedup_pq(
     m-byte code key (map-side partial), no pairwise stage at all: the
     100-TB first pass, with dedup_embedding as the exact within-bucket
     verifier when the cluster wants it."""
-    codes = pq_encode(embeddings, m, k, iters, dim, id_col, vec_col, train_df, persist)
+    codes = pq_encode(embeddings, m, k, iters, dim, id_col, vec_col, train_df)
     return (
         codes.groupBy("codes")
         .agg(F.min(id_col).alias("keeper_id"), F.count("*").alias("dup_count"))
@@ -1295,7 +1269,6 @@ def topk_ivfpq(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_df: DataFrame | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """IVF×PQ: PQ's ADC scan restricted to the query's top-``probes``
     IVF cells — the canonical billion-scale ANN layout (coarse
@@ -1308,17 +1281,15 @@ def topk_ivfpq(
     rows of ``probes`` cells per query (~probes·N·m/n_cells), not the
     corpus. ``train_df``: optional deterministic sample for codebook
     training (see _pq_train)."""
-    # persist the k centroid rows: with probes >= 2 they feed BOTH the
+    # cache the k centroid rows: with probes >= 2 they feed BOTH the
     # corpus assignment and the query-side _assign_topc, and an
-    # unpersisted cents would re-run the whole unrolled Lloyd lineage
+    # uncached cents would re-run the whole unrolled Lloyd lineage
     # for the second consumer (Spark does not dedupe common subplans)
-    cents = _maybe_persist(
-        ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col), persist
-    )
+    cents = cached(ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col))
     v = embeddings.select(F.col(id_col), as_double(vec_col).alias("v"))
-    assign = _maybe_persist(_assign_to(v, cents, id_col).select(id_col, "cell"), persist)
-    sv, cb = _pq_train(embeddings, m, k, iters, dim, id_col, vec_col, train_df, persist)
-    cb = _maybe_persist(cb, persist)
+    assign = cached(_assign_to(v, cents, id_col).select(id_col, "cell"))
+    sv, cb = _pq_train(embeddings, m, k, iters, dim, id_col, vec_col, train_df)
+    cb = cached(cb)
     codes = _pq_assign(sv, cb, id_col).join(assign, id_col)
     qsv = sv.join(queries.select(id_col), id_col).select(
         F.col(id_col).alias("query_id"), "sub", F.col("sv").alias("qsv")
@@ -2077,7 +2048,6 @@ def pq_reconstruction_error(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_df: DataFrame | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """(sub, n_subvectors, avg_sq_error, max_sq_error): per-subspace
     quantization distortion of the trained PQ codebooks — the index-
@@ -2091,8 +2061,8 @@ def pq_reconstruction_error(
     the m*k codebook onto the subvector table and one m-group
     hash-agg that collapses map-side. Linear in the corpus, no
     pairwise stage."""
-    sv, cb = _pq_train(embeddings, m, k, iters, dim, id_col, vec_col, train_df, persist)
-    cb = _maybe_persist(cb, persist)
+    sv, cb = _pq_train(embeddings, m, k, iters, dim, id_col, vec_col, train_df)
+    cb = cached(cb)
     asg = _pq_assign(sv, cb, id_col)
     err = (
         sv.join(asg, [id_col, "sub"])
@@ -2164,7 +2134,7 @@ def ann_frontier(
         .select((F.col("qn") * (F.col("nn") - 1)).alias("c"))
     )
 
-    buckets = lsh_buckets(embeddings, id_col, vec_col).persist()
+    buckets = cached(lsh_buckets(embeddings, id_col, vec_col))
     qb = buckets.join(qids, id_col).select(F.col(id_col).alias("qid"), "bucket")
     lsh_cand = (
         qb.join(buckets, "bucket")
@@ -2192,7 +2162,7 @@ def ann_frontier(
         .agg(F.count("*").alias("c"))
     )
 
-    assign = ivf_assign(embeddings, id_col, vec_col).select(id_col, "cell").persist()
+    assign = cached(ivf_assign(embeddings, id_col, vec_col).select(id_col, "cell"))
     qa = assign.join(qids, id_col).select(F.col(id_col).alias("qid"), "cell")
     ivf_cand = (
         qa.join(assign, "cell")
@@ -2202,7 +2172,7 @@ def ann_frontier(
     # ivf probe2: the query's top-2 coarse cells (exact-scored, so the
     # probe1-subset guarantee holds); centroids trained once, shared
     # with the probe2 top-k below
-    cents = ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col).persist()
+    cents = cached(ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col))
     qv = embeddings.join(qids, id_col).select(F.col(id_col), as_double(vec_col).alias("v"))
     q2 = _assign_topc(qv, cents, id_col, 2).select(
         F.col(id_col).alias("qid"), "cell"
@@ -2325,9 +2295,9 @@ def topk_graph(
         # and an UNPERSISTED lazy build re-runs the whole topk_grid
         # block-matmul once per hop (measured 12.0s -> ~6s at sf0.01,
         # hops=3). A caller-passed store is already materialized.
-        edges = topk_grid(
+        edges = cached(topk_grid(
             embeddings, embeddings, k=k_graph, id_col=id_col, vec_col=vec_col
-        ).persist()
+        ))
     ed = edges.select(
         F.col("query_id").alias("_src"), F.col("neighbor_id").alias("_dst")
     )
@@ -2468,15 +2438,15 @@ def knn_graph_ivf(
             # centroid table — the pre-r15 shape ran two bit-identical
             # unrolled trainings, one inside ivf_assign and one for
             # src_cells (guide §2.4; the topk_ivf persist lesson)
-            centroids = ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col).persist()
+            centroids = cached(ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col))
             v0 = embeddings.select(F.col(id_col), as_double(vec_col).alias("v"))
-            assign = _assign_to(v0, centroids, id_col).persist()
+            assign = cached(_assign_to(v0, centroids, id_col))
         else:
             # the assignment must cover the CANDIDATE side (== embeddings
             # for the self-graph; the stored corpus in append mode)
-            assign = ivf_assign(
+            assign = cached(ivf_assign(
                 candidates if candidates is not None else embeddings, id_col, vec_col
-            ).persist()
+            ))
     if probes > 1:
         cents = (
             centroids

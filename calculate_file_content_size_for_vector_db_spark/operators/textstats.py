@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from calculate_file_content_size_for_vector_db_spark.session import cached
+
 # marker ("stop") words per language for the n-gram/marker heuristic
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "of", "and", "to", "in", "is"),
@@ -1041,9 +1043,9 @@ def bm25_search(
     # so every value is unchanged)
     if tf_df is not None:
         tf, dl, meta = tf_df, dl_df, meta_df
-        ptf = tf.join(
+        ptf = cached(tf.join(
             F.broadcast(qterms.select("term").distinct()), "term", "left_semi"
-        ).persist()
+        ))
         scoring_rows = ptf.join(dl, key)
         stats = meta.crossJoin(F.broadcast(dl.agg(F.avg("dl").alias("avgdl"))))
     else:
@@ -1061,13 +1063,12 @@ def bm25_search(
         exploded = df.select(F.col(key), toks.alias("_toks")).select(
             key, F.size("_toks").cast("long").alias("dl"), F.explode("_toks").alias("term")
         )
-        ptf = (
+        ptf = cached(
             exploded.join(
                 F.broadcast(qterms.select("term").distinct()), "term", "left_semi"
             )
             .groupBy(key, "dl", "term")
             .agg(F.count("*").cast("long").alias("tf"))
-            .persist()
         )
         scoring_rows = ptf
         stats = df.agg(

@@ -94,7 +94,8 @@ class SizeReport:
       subfolders stay separate rows.
 
     Each action recomputes from the scan; a caller that reads a frame
-    more than once persists it (the CLI does, ``cli._cached``).
+    more than once caches it (the CLI does, in one ``cache_scope`` per
+    folder).
     """
 
     per_file: DataFrame

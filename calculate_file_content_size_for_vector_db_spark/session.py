@@ -12,13 +12,19 @@ every pipeline in this package assumes:
   the 1,652-page-file-among-15-page-files skew of README.md:20 at scale),
 - shuffle partitions sized to local cores for tests; a real cluster
   deployment overrides via spark-submit conf.
+
+It also owns the one lifetime rule for cached frames (``cache_scope``,
+``cached``, ``release_cache``).
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -42,3 +48,87 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
     return builder.getOrCreate()
+
+
+# Serializes scopes within one driver process. The release below
+# diffs the JVM-global persistent-RDD set, so without mutual exclusion
+# one scope's release could sweep a concurrent scope's in-flight
+# localCheckpoint (unrecoverable: checkpoints truncate lineage). Under
+# the lock, a diff window never overlaps another scope, so everything
+# in it belongs to the releasing scope. Store heals belong inside too:
+# a heal that observes another trigger's in-flight swap_rewrite would
+# restore the live path under the owner's overwrite, then delete the
+# swap. Remaining caveat: session activity OUTSIDE any scope that
+# localCheckpoints concurrently with a running scope shares the risk;
+# run long-lived streams on their own SparkSession in that case.
+_FACE_TRIGGER_LOCK = threading.RLock()
+
+# frames cached in the current thread's outermost open scope; None
+# when no scope is open
+_SCOPE = threading.local()
+
+
+@contextmanager
+def cache_scope(spark: SparkSession):
+    """The lifetime of everything cached for one unit of work: a face
+    trigger, a batch verb, one CLI folder.
+
+    The rule, stated once for the package: a frame passed to
+    ``cached`` inside a scope, and every persistent RDD created after
+    the scope's entry (``localCheckpoint`` included), is released when
+    the thread's OUTERMOST scope exits, normally or by an exception.
+    Nested scopes only re-enter the lock, so a sub-body can hand a
+    checkpoint back to its enclosing scope. Nothing cached in a scope
+    may be read after the outermost exit unless it was written out.
+    Outside any scope ``cached`` is a plain persist, and such frames
+    (the query registry's lazy results) live until the next
+    ``release_cache``. A body that returns a checkpoint past its own
+    end (``gate_batch``) takes ``_FACE_TRIGGER_LOCK`` alone and leaves
+    the release to its caller's scope.
+
+    Scopes hold ``_FACE_TRIGGER_LOCK`` (see its comment) throughout."""
+    with _FACE_TRIGGER_LOCK:
+        if getattr(_SCOPE, "frames", None) is not None:
+            yield
+            return
+        before = _persistent_rdd_ids(spark)
+        _SCOPE.frames = []
+        try:
+            yield
+        finally:
+            frames, _SCOPE.frames = _SCOPE.frames, None
+            _release(spark, frames, before)
+
+
+def cached(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER) -> DataFrame:
+    """``df`` persisted at ``level`` (default: DataFrame.persist's),
+    released with the current thread's outermost ``cache_scope`` (see
+    its lifetime rule)."""
+    frames = getattr(_SCOPE, "frames", None)
+    if frames is not None:
+        frames.append(df)
+    return df.persist(level)
+
+
+def release_cache(spark: SparkSession) -> None:
+    """Release every cached frame and persistent RDD of the session.
+    The query registry runs this at each entry: a query returns a lazy
+    frame, so its caches can only die once the next query starts."""
+    with _FACE_TRIGGER_LOCK:
+        spark.catalog.clearCache()
+        _release(spark, [], set())
+
+
+def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _release(spark: SparkSession, frames: list[DataFrame], before: set[int]) -> None:
+    # unpersist() drops a frame's cache entry; it does not release a
+    # localCheckpoint, so every RDD persisted since ``before`` goes too
+    for df in frames:
+        df.unpersist()
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for jid in jmap.keySet().toArray():
+        if int(jid) not in before:
+            jmap.get(jid).unpersist(False)

@@ -51,13 +51,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from calculate_file_content_size_for_vector_db_spark.session import cache_scope
 from calculate_file_content_size_for_vector_db_spark.streaming.datacard import append_card_partials
 from calculate_file_content_size_for_vector_db_spark.streaming.drift import append_drift_marginals
 from calculate_file_content_size_for_vector_db_spark.streaming.index_maintenance import (
     maintain_index_batch,
 )
 from calculate_file_content_size_for_vector_db_spark.streaming.neardup import gate_batch
-from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import face_scope
 
 
 def composed_ingest_batch(
@@ -75,13 +75,10 @@ def composed_ingest_batch(
     admitted/ (gate), index/{centroids,assign,bloom,metrics} (index
     face), card/{scalars,langs,sources,hll} (datacard face),
     drift/{hist,langs} (drift face)."""
-    # One face_scope around all four bodies (ADVICE r13: every face
-    # trigger runs under _FACE_TRIGGER_LOCK): the gate's admitted
-    # checkpoint is created under the reentrant inner lock and stays
-    # alive for the three downstream faces; this OUTERMOST scope
-    # releases it — with the whole trigger's persisted state — once
-    # every store write committed.
-    with face_scope(batch_df.sparkSession):
+    # One scope around all four bodies: the gate's admitted checkpoint
+    # stays alive for the three downstream faces, and this outermost
+    # scope releases it with the rest of the trigger's state.
+    with cache_scope(batch_df.sparkSession):
         admitted = gate_batch(
             batch_df,
             f"{store_dir}/bands",

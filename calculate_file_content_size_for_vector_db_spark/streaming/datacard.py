@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import face_scope
+from calculate_file_content_size_for_vector_db_spark.session import cache_scope, cached
 from calculate_file_content_size_for_vector_db_spark.operators.textstats import tokens
 
 _HLL_P = 8
@@ -174,24 +174,24 @@ def append_card_partials(
     function (the solo face and streaming/composed.py both call exactly
     this): four bounded, batch_id-tagged partial appends."""
     bid = F.lit(batch_id).cast("long").alias("batch_id")
-    batch_df = batch_df.persist()
     t = F.size(tokens(text_col)).cast("long")
-    batch_df.agg(
-        F.count("*").cast("long").alias("_n"),
-        F.sum(t).alias("_tok"),
-        F.sum(F.length(text_col)).alias("_ch"),
-        F.sum(F.when(t == 0, 1).otherwise(0)).alias("_emp"),
-    ).select(bid, "*").write.mode("append").parquet(f"{card_dir}/scalars")
-    batch_df.groupBy("lang").agg(F.count("*").alias("_c")).select(
-        bid, "*"
-    ).write.mode("append").parquet(f"{card_dir}/langs")
-    batch_df.groupBy("source").agg(F.count("*").alias("_c")).select(
-        bid, "*"
-    ).write.mode("append").parquet(f"{card_dir}/sources")
-    _hll_regs(batch_df, text_col, p).select(bid, "*").write.mode(
-        "append"
-    ).parquet(f"{card_dir}/hll")
-    batch_df.unpersist()
+    with cache_scope(batch_df.sparkSession):
+        batch_df = cached(batch_df)
+        batch_df.agg(
+            F.count("*").cast("long").alias("_n"),
+            F.sum(t).alias("_tok"),
+            F.sum(F.length(text_col)).alias("_ch"),
+            F.sum(F.when(t == 0, 1).otherwise(0)).alias("_emp"),
+        ).select(bid, "*").write.mode("append").parquet(f"{card_dir}/scalars")
+        batch_df.groupBy("lang").agg(F.count("*").alias("_c")).select(
+            bid, "*"
+        ).write.mode("append").parquet(f"{card_dir}/langs")
+        batch_df.groupBy("source").agg(F.count("*").alias("_c")).select(
+            bid, "*"
+        ).write.mode("append").parquet(f"{card_dir}/sources")
+        _hll_regs(batch_df, text_col, p).select(bid, "*").write.mode(
+            "append"
+        ).parquet(f"{card_dir}/hll")
 
 
 def refold_card_takedown(
@@ -225,18 +225,14 @@ def refold_card_takedown(
     (heal first), so a crash mid-rewrite never destroys untouched
     partials (ADVICE r11 item 2)."""
     from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
-        face_scope,
         heal_store,
         swap_rewrite,
     )
 
     spark = admitted.sparkSession
-    # face_scope (ADVICE r13): the refold localCheckpoints and heals —
-    # both must stay inside the trigger lock whether this runs as the
-    # takedown face's sub-body (reentrant) or as a batch query
-    # concurrent with live faces; the scope also releases the touched
-    # snapshot on exit.
-    with face_scope(spark):
+    # the refold localCheckpoints and heals, so it runs in a scope
+    # whether it is the takedown face's sub-body or a batch query
+    with cache_scope(spark):
         for sub in ("scalars", "langs", "sources", "hll"):
             heal_store(spark, f"{card_dir}/{sub}")
         td = takedown.select("doc_id").distinct()
@@ -246,10 +242,9 @@ def refold_card_takedown(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        surv = (
+        surv = cached(
             admitted.join(F.broadcast(touched), "batch_id", "left_semi")
             .join(F.broadcast(td), "doc_id", "left_anti")
-            .persist()
         )
         t = F.size(tokens(text_col)).cast("long")
         recomputed = {
@@ -268,7 +263,6 @@ def refold_card_takedown(
                 F.broadcast(touched), "batch_id", "left_anti"
             )
             swap_rewrite(spark, f"{card_dir}/{sub}", kept.unionByName(fresh))
-        surv.unpersist()
 
 
 def datacard_face(
@@ -284,13 +278,7 @@ def datacard_face(
     `read_datacard`."""
 
     def _maintain(batch_df: DataFrame, batch_id: int) -> None:
-        # every face trigger body runs under the trigger lock
-        # (store_swap.face_scope comment, ADVICE r13): persist-only
-        # bodies survive a sweep (lineage recomputes) but must not
-        # have their in-flight persists released by a concurrent
-        # upsert/takedown trigger's diff mid-body
-        with face_scope(batch_df.sparkSession):
-            append_card_partials(batch_df, batch_id, card_dir, text_col, p)
+        append_card_partials(batch_df, batch_id, card_dir, text_col, p)
 
     return (
         stream.writeStream.foreachBatch(_maintain)

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import face_scope
+from calculate_file_content_size_for_vector_db_spark.session import cache_scope, cached
 from calculate_file_content_size_for_vector_db_spark.operators.textstats import (
     psi_from_marginals,
     psi_lang_marginal,
@@ -62,14 +62,14 @@ def append_drift_marginals(
     function (the solo face and streaming/composed.py both call exactly
     this): two bounded, batch_id-tagged marginal appends."""
     bid = F.lit(batch_id).cast("long").alias("batch_id")
-    batch_df = batch_df.persist()
-    psi_length_hist(batch_df, text_col, n_bins, bin_width).select(
-        bid, "*"
-    ).write.mode("append").parquet(f"{marginals_dir}/hist")
-    psi_lang_marginal(batch_df).select(bid, "*").write.mode(
-        "append"
-    ).parquet(f"{marginals_dir}/langs")
-    batch_df.unpersist()
+    with cache_scope(batch_df.sparkSession):
+        batch_df = cached(batch_df)
+        psi_length_hist(batch_df, text_col, n_bins, bin_width).select(
+            bid, "*"
+        ).write.mode("append").parquet(f"{marginals_dir}/hist")
+        psi_lang_marginal(batch_df).select(bid, "*").write.mode(
+            "append"
+        ).parquet(f"{marginals_dir}/langs")
 
 
 def drift_face(
@@ -85,15 +85,9 @@ def drift_face(
     read the current drift number with `read_drift`."""
 
     def _maintain(batch_df: DataFrame, batch_id: int) -> None:
-        # every face trigger body runs under the trigger lock
-        # (store_swap.face_scope comment, ADVICE r13): persist-only
-        # bodies survive a sweep (lineage recomputes) but must not
-        # have their in-flight persists released by a concurrent
-        # upsert/takedown trigger's diff mid-body
-        with face_scope(batch_df.sparkSession):
-            append_drift_marginals(
-                batch_df, batch_id, marginals_dir, text_col, n_bins, bin_width
-            )
+        append_drift_marginals(
+            batch_df, batch_id, marginals_dir, text_col, n_bins, bin_width
+        )
 
     return (
         stream.writeStream.foreachBatch(_maintain)
@@ -133,18 +127,14 @@ def refold_drift_takedown(
     untouched partials survive via a metadata-scale anti-join on
     batch_id."""
     from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
-        face_scope,
         heal_store,
         swap_rewrite,
     )
 
     spark = admitted.sparkSession
-    # face_scope (ADVICE r13): the refold localCheckpoints and heals —
-    # both must stay inside the trigger lock whether this runs as the
-    # takedown face's sub-body (reentrant) or as a batch query
-    # concurrent with live faces; the scope also releases the touched
-    # snapshot on exit.
-    with face_scope(spark):
+    # the refold localCheckpoints and heals, so it runs in a scope
+    # whether it is the takedown face's sub-body or a batch query
+    with cache_scope(spark):
         for sub in ("hist", "langs"):
             heal_store(spark, f"{marginals_dir}/{sub}")
         td = takedown.select("doc_id").distinct()
@@ -154,10 +144,9 @@ def refold_drift_takedown(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        surv = (
+        surv = cached(
             admitted.join(F.broadcast(touched), "batch_id", "left_semi")
             .join(F.broadcast(td), "doc_id", "left_anti")
-            .persist()
         )
         recomputed = {
             "hist": psi_length_hist(
@@ -170,7 +159,6 @@ def refold_drift_takedown(
                 F.broadcast(touched), "batch_id", "left_anti"
             )
             swap_rewrite(spark, f"{marginals_dir}/{sub}", kept.unionByName(fresh))
-        surv.unpersist()
 
 
 def read_ingest_marginals(

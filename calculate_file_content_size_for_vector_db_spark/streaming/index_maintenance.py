@@ -51,6 +51,7 @@ from calculate_file_content_size_for_vector_db_spark.operators.similarity import
     ivf_append_assign,
     ivf_centroids,
 )
+from calculate_file_content_size_for_vector_db_spark.session import cache_scope, cached
 
 
 def read_bloom_bitmap(spark, index_dir: str) -> DataFrame:
@@ -90,35 +91,33 @@ def maintain_index_batch(
         except AnalysisException:
             return None
 
-    batch_df = batch_df.persist()
-    vec = batch_df.select(F.col(key).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    cents = _read_centroids()
-    if cents is None:
-        # cold start: trigger 0's batch trains the quantizer, then
-        # it FREEZES — every later trigger serves the stored one
-        ivf_centroids(vec).write.parquet(f"{index_dir}/centroids")
-        cents = spark.read.parquet(f"{index_dir}/centroids")
-    assigned = ivf_append_assign(vec, cents).persist()
-    assigned.write.mode("append").parquet(f"{index_dir}/assign")
+    with cache_scope(spark):
+        batch_df = cached(batch_df)
+        vec = batch_df.select(F.col(key).alias("vec_id"), F.col(vec_col).alias("embedding"))
+        cents = _read_centroids()
+        if cents is None:
+            # cold start: trigger 0's batch trains the quantizer, then
+            # it FREEZES — every later trigger serves the stored one
+            ivf_centroids(vec).write.parquet(f"{index_dir}/centroids")
+            cents = spark.read.parquet(f"{index_dir}/centroids")
+        assigned = cached(ivf_append_assign(vec, cents))
+        assigned.write.mode("append").parquet(f"{index_dir}/assign")
 
-    bands = minhash_bands(minhash_signature(batch_df.select(key, text_col)))
-    delta = bloom_bitmap(bands, m_bits=m_bits, n_hashes=n_hashes).persist()
-    delta.write.mode("append").parquet(f"{index_dir}/bloom")
+        bands = minhash_bands(minhash_signature(batch_df.select(key, text_col)))
+        delta = cached(bloom_bitmap(bands, m_bits=m_bits, n_hashes=n_hashes))
+        delta.write.mode("append").parquet(f"{index_dir}/bloom")
 
-    stats = assigned.agg(
-        F.count("*").cast("long").alias("n_vectors"),
-        F.round(F.avg("cell_cosine"), 6).alias("mean_cc_batch"),
-    ).crossJoin(
-        F.broadcast(
-            delta.agg(F.count("*").cast("long").alias("n_bloom_delta_words"))
+        stats = assigned.agg(
+            F.count("*").cast("long").alias("n_vectors"),
+            F.round(F.avg("cell_cosine"), 6).alias("mean_cc_batch"),
+        ).crossJoin(
+            F.broadcast(
+                delta.agg(F.count("*").cast("long").alias("n_bloom_delta_words"))
+            )
         )
-    )
-    stats.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
-        "append"
-    ).parquet(f"{index_dir}/metrics")
-    assigned.unpersist()
-    delta.unpersist()
-    batch_df.unpersist()
+        stats.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
+            "append"
+        ).parquet(f"{index_dir}/metrics")
 
 
 def index_maintenance_face(
@@ -138,17 +137,9 @@ def index_maintenance_face(
     per trigger)."""
 
     def _maintain(batch_df: DataFrame, batch_id: int) -> None:
-        # every face trigger body runs under the trigger lock
-        # (store_swap.face_scope comment, ADVICE r13): persist-only
-        # bodies survive a sweep (lineage recomputes) but must not
-        # have their in-flight persists released by a concurrent
-        # upsert/takedown trigger's diff mid-body
-        from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import face_scope
-
-        with face_scope(batch_df.sparkSession):
-            maintain_index_batch(
-                batch_df, batch_id, index_dir, key, text_col, vec_col, m_bits, n_hashes
-            )
+        maintain_index_batch(
+            batch_df, batch_id, index_dir, key, text_col, vec_col, m_bits, n_hashes
+        )
 
     return (
         stream.writeStream.foreachBatch(_maintain)

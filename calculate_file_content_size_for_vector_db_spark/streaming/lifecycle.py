@@ -8,7 +8,7 @@ documents together, and both must land atomically with respect to
 the trigger — a reader between the two halves of a split trigger
 would observe a store where a forgotten doc still serves while its
 neighbor's re-delivery already landed. This face runs both verbs
-under ONE ``face_scope`` (one critical section, one heal pass at
+under ONE ``cache_scope`` (one critical section, one heal pass at
 entry via the inner verbs, one persistent-RDD release at exit — the
 nested scopes inside the reused verbs are pure lock reentries after
 ADVICE r14 item 3).
@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import face_scope
+from calculate_file_content_size_for_vector_db_spark.session import cache_scope
 from calculate_file_content_size_for_vector_db_spark.streaming.takedown import (
     takedown_store_batch,
 )
@@ -77,7 +77,7 @@ def lifecycle_store_batch(
     """One composed trigger: split ``batch_df`` on its ``action``
     column, run the takedown verb, then the upsert verb with the
     taken-down ids anti-joined OUT (takedown wins — the ghost
-    contract), all inside one ``face_scope``. Batch-callable like
+    contract), all inside one ``cache_scope``. Batch-callable like
     every face body; the stream test pins THIS function against the
     solo-sequence end state.
 
@@ -95,7 +95,7 @@ def lifecycle_store_batch(
             f"schema {batch_df.columns}"
         )
     bad = batch_df.where(~F.col("action").isin(*_ACTIONS))
-    with face_scope(spark):
+    with cache_scope(spark):
         # loud on unknown actions: a silently dropped 'delete' row
         # would leave a doc serving that the producer believes gone
         if bad.limit(1).count() > 0:
@@ -117,7 +117,7 @@ def lifecycle_store_batch(
             .drop("action")
             .localCheckpoint(eager=True)
         )
-        # the solo verbs verbatim — their inner face_scope calls are
+        # the solo verbs verbatim — their inner cache_scope calls are
         # pure reentries; heal runs at each verb's entry (idempotent),
         # the outer scope releases the whole trigger's state once
         if td.count() > 0:

@@ -121,13 +121,11 @@ def lake_maintenance_face(
             return None
 
     def _maintain(batch_df: DataFrame, batch_id: int) -> None:
-        # every face trigger body runs under the trigger lock
-        # (store_swap.face_scope comment, ADVICE r13)
-        from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import face_scope
+        from calculate_file_content_size_for_vector_db_spark.session import cache_scope, cached
 
-        with face_scope(batch_df.sparkSession):
+        with cache_scope(batch_df.sparkSession):
             spark = batch_df.sparkSession
-            batch_df = batch_df.persist()
+            batch_df = cached(batch_df)
             store = _read_store(spark)
             if store is None:
                 store = batch_df.limit(0).withColumn("_v", F.lit(0).cast("long"))
@@ -151,7 +149,6 @@ def lake_maintenance_face(
             plan.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
                 "append"
             ).parquet(plan_dir)
-            batch_df.unpersist()
 
     return (
         stream.writeStream.foreachBatch(_maintain)

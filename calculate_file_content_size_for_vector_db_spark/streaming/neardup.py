@@ -41,9 +41,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
+from calculate_file_content_size_for_vector_db_spark.session import (
     _FACE_TRIGGER_LOCK,
-    face_scope,
+    cache_scope,
+    cached,
 )
 from calculate_file_content_size_for_vector_db_spark.operators.dedup import (
     bands_from_shingle_sets,
@@ -134,14 +135,8 @@ def gate_batch(
     Missing store dirs bootstrap as an empty corpus (admits everything);
     the first trigger's appends create them.
 
-    CALLER CONTRACT (ADVICE r14 item 2): this body takes the bare
-    _FACE_TRIGGER_LOCK and deliberately does NOT release the admitted
-    localCheckpoint it returns — the enclosing ``face_scope`` (the
-    solo/composed faces' trigger scope) releases it at trigger exit.
-    A standalone caller without a surrounding ``face_scope`` therefore
-    leaks one lineage-truncated checkpoint per call; wrap the call in
-    ``store_swap.face_scope(spark)`` (if the snapshot is discarded) or
-    release it yourself via ``persistent_rdd_ids``/``release_rdds_since``."""
+    Call it inside a ``cache_scope``: the snapshot it returns and the
+    frames it caches die when that scope exits."""
 
     def _read_store(spark, path: str, empty_like: DataFrame) -> DataFrame:
         from pyspark.errors import AnalysisException
@@ -152,15 +147,12 @@ def gate_batch(
             return empty_like
 
     spark = batch_df.sparkSession
-    # The bare lock, not face_scope: the admitted checkpoint below is
-    # the RETURN VALUE (the composed face keeps evaluating it), so
-    # this body must not release it — the enclosing trigger scope
-    # does. Holding the lock during CREATION is what matters (ADVICE
-    # r13): it keeps the checkpoint out of any concurrent face's
-    # persistent-RDD diff window, so an upsert/takedown release can
-    # never sweep an in-flight gate trigger's snapshot.
+    # The bare lock, not a scope: the admitted checkpoint below is the
+    # return value, so the caller's scope releases it. Holding the
+    # lock while it is created keeps it out of a concurrent scope's
+    # release window.
     with _FACE_TRIGGER_LOCK:
-        batch_df = batch_df.persist()
+        batch_df = cached(batch_df)
         empty = batch_df.limit(0)
         admitted = admit_batch(
             batch_df,
@@ -181,13 +173,11 @@ def gate_batch(
         # band append derives from the persisted shingle sets (r16,
         # bands_from_shingle_sets — bit-identical): the admitted text
         # tokenizes+shingles once per trigger, not twice
-        adm_sh = shingle_sets(admitted, text_col, key).persist()
+        adm_sh = cached(shingle_sets(admitted, text_col, key))
         adm_sh.write.mode("append").parquet(shingles_dir)
         bands_from_shingle_sets(adm_sh, key=key).write.mode("append").parquet(
             bands_dir
         )
-        adm_sh.unpersist()
-        batch_df.unpersist()
         return admitted
 
 
@@ -214,11 +204,9 @@ def neardup_ingest_gate(
     everything), and the first trigger's appends create them."""
 
     def _gate(batch_df: DataFrame, _batch_id: int) -> None:
-        # face_scope (reentrant around gate_batch's bare lock): the
-        # solo face discards the admitted snapshot, so the trigger
-        # scope releases it here — a long-running gate stream must
-        # not leak one checkpointed batch per trigger (ADVICE r12)
-        with face_scope(batch_df.sparkSession):
+        # the solo face discards the admitted snapshot: the scope
+        # releases it with the trigger's caches
+        with cache_scope(batch_df.sparkSession):
             gate_batch(
                 batch_df,
                 bands_dir,

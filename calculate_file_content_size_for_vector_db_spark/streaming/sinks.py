@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from calculate_file_content_size_for_vector_db_spark.operators.maintenance import merge_upsert
-from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import face_scope
+from calculate_file_content_size_for_vector_db_spark.session import cache_scope
 
 
 def stream_upsert_parquet(
@@ -36,11 +36,8 @@ def stream_upsert_parquet(
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # face_scope (ADVICE r13: every face body under the trigger
-        # lock) — keeps the merged checkpoint out of a concurrent
-        # face's release window AND releases it at trigger end
-        # instead of leaking one checkpointed batch per trigger
-        with face_scope(spark):
+        # the scope releases the merged checkpoint at trigger end
+        with cache_scope(spark):
             batch = batch_df.dropDuplicates([key])
             try:
                 target = spark.read.parquet(target_path)

@@ -42,9 +42,6 @@ instead).
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 
 _SWAP_SUFFIX = "__swap"
@@ -81,100 +78,3 @@ def swap_rewrite(spark: SparkSession, path: str, df: DataFrame) -> None:
     spark.read.schema(df.schema).parquet(swap).write.mode("overwrite").parquet(path)
     fs, sp, _ = _fs(spark, swap)
     fs.delete(sp, True)
-
-
-# Serializes face trigger bodies WITHIN one driver process: the
-# release below diffs the JVM-GLOBAL persistent-RDD set, so without
-# mutual exclusion one face's end-of-trigger release could sweep a
-# concurrent face's in-flight localCheckpoints (unrecoverable —
-# checkpoints truncate lineage). With the lock, the diff window of
-# one trigger never overlaps another face's trigger, so everything
-# in the diff belongs to the releasing trigger. EVERY face trigger
-# body — upsert, takedown, gate/ingest, composed, index-maintenance,
-# datacard, drift, lake, the parquet-merge sink — runs under this
-# lock (ADVICE r13: the gate face localCheckpoints too, so a
-# lock-free ingest trigger could still be swept by a concurrent
-# upsert/takedown release). heal_store calls also belong INSIDE the
-# critical section: a heal that observes another face's in-flight
-# swap_rewrite would "restore" the live path concurrently with the
-# owner's step-2 overwrite and then delete the swap — the exact
-# survivor-loss window swap_rewrite exists to close (ADVICE r13).
-# Remaining caveat (documented, not enforced): NON-face session
-# activity that localCheckpoints frames concurrently with a running
-# trigger shares the same risk — run the faces on their own
-# SparkSession in deployments that also checkpoint elsewhere (plain
-# persist() frames are safe either way: their lineage survives an
-# unpersist and they recompute).
-_FACE_TRIGGER_LOCK = threading.RLock()
-
-
-# face_scope reentry depth, per thread: a nested scope (a composed
-# face's sub-body that itself calls face_scope) must NOT run its own
-# release diff — only the outermost scope releases, exactly once, so
-# a sub-body may hand a localCheckpoint back to the outer trigger
-# without it being swept at inner exit (ADVICE r14 item 3).
-_SCOPE_DEPTH = threading.local()
-
-
-@contextmanager
-def face_scope(spark: SparkSession):
-    """The per-trigger critical section every face body runs in:
-    acquire _FACE_TRIGGER_LOCK, snapshot the persistent-RDD set, and
-    on exit release everything the trigger persisted (then the lock).
-    Reentrant (RLock), so a composed face can hold the scope around
-    sub-bodies that also acquire the lock; the OUTERMOST scope's diff
-    then releases the whole trigger's state exactly once — inner
-    scopes are pure lock reentries with no snapshot/release of their
-    own (per-thread depth counter), so a sub-body can hand a
-    localCheckpoint back to the outer trigger safely. Bodies that
-    must hand a localCheckpoint back past the OUTERMOST scope
-    (gate_batch's admitted snapshot in the composed face) take the
-    bare lock instead and leave the release to the enclosing trigger
-    scope."""
-    _FACE_TRIGGER_LOCK.acquire()
-    depth = getattr(_SCOPE_DEPTH, "d", 0)
-    _SCOPE_DEPTH.d = depth + 1
-    before = persistent_rdd_ids(spark) if depth == 0 else None
-    try:
-        yield
-    finally:
-        _SCOPE_DEPTH.d = depth
-        try:
-            if depth == 0:
-                release_rdds_since(spark, before)
-        finally:
-            _FACE_TRIGGER_LOCK.release()
-
-
-def persistent_rdd_ids(spark: SparkSession) -> set[int]:
-    """Snapshot of the JVM's persistent-RDD id set. Both persist()
-    and localCheckpoint() register here; DataFrame.unpersist() does
-    NOT release a localCheckpoint (it only uncaches cacheManager
-    entries), so the faces release per-trigger state by diffing this
-    snapshot instead (ADVICE r12: a long-running stream otherwise
-    leaks one checkpointed batch + artifact set per trigger until
-    driver GC happens to collect them). Callers must hold
-    _FACE_TRIGGER_LOCK from this snapshot through the matching
-    release_rdds_since (see the lock's comment)."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(i) for i in jmap.keySet().toArray()}
-    except Exception:  # pragma: no cover - non-JVM backends
-        return set()
-
-
-def release_rdds_since(spark: SparkSession, before: set[int]) -> None:
-    """Unpersist every RDD persisted since ``before`` was snapshotted
-    (non-blocking). Run in a finally block at the end of a face
-    trigger, under _FACE_TRIGGER_LOCK: the lock guarantees no other
-    face's trigger ran inside the diff window, so the diff contains
-    only this trigger's localCheckpoints and the batch verbs'
-    internal persists — all dead once the trigger's store writes
-    committed."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jid in jmap.keySet().toArray():
-            if int(jid) not in before:
-                jmap.get(jid).unpersist(False)
-    except Exception:  # pragma: no cover - non-JVM backends
-        pass

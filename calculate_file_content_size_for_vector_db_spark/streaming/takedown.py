@@ -68,9 +68,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from calculate_file_content_size_for_vector_db_spark.operators.dedup import cluster_takedown
+from calculate_file_content_size_for_vector_db_spark.session import cache_scope
 from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
     _fs,
-    face_scope,
     heal_store,
     swap_rewrite,
 )
@@ -134,7 +134,7 @@ def takedown_store_batch(
     replay: the ledger is caller-owned (never purged here), so a
     re-run recomputes byte-identical touched-batch partials."""
     spark = requests.sparkSession
-    with face_scope(spark):
+    with cache_scope(spark):
         # self-heal any swap a crashed prior trigger left behind
         # INSIDE the critical section (ADVICE r13: healing another
         # face's in-flight swap loses survivors), BEFORE reading the

@@ -93,8 +93,8 @@ from calculate_file_content_size_for_vector_db_spark.operators.dedup import (
     dedup_upsert,
     shingle_sets,
 )
+from calculate_file_content_size_for_vector_db_spark.session import cache_scope
 from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
-    face_scope,
     heal_store,
     swap_rewrite,
 )
@@ -137,7 +137,7 @@ def upsert_store_batch(
             "document's content, so content-free batches are a producer bug"
         )
     rest = [c for c in batch_df.columns if c != key]
-    with face_scope(spark):
+    with cache_scope(spark):
         # self-heal INSIDE the critical section (ADVICE r13: a heal
         # that observes another face's in-flight swap_rewrite would
         # restore live from the swap concurrently with the owner's

@@ -20,7 +20,7 @@ import sys
 import time
 
 from calculate_file_content_size_for_vector_db_spark.entry_queries import REGISTRY
-from calculate_file_content_size_for_vector_db_spark.session import get_spark
+from calculate_file_content_size_for_vector_db_spark.session import get_spark, release_cache
 from tests.oracle_harness import duck_connection, run_one
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -65,12 +65,13 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             problems = [f"EXCEPTION: {type(e).__name__}: {e}"]
         dt = time.time() - t0
-        # drop every frame the row persisted (several operators persist
-        # internal artifacts per call — bands/shingles, edge stores):
-        # without this the cache accumulates across all ~273 rows, and
-        # late rows pay eviction/GC pressure for early rows' leftovers
-        # (the same per-op hygiene tools/scale_check.py applies)
-        spark.catalog.clearCache()
+        # drop every frame and checkpoint the row persisted (several
+        # operators cache internal artifacts per call — bands/shingles,
+        # edge stores): without this the cache accumulates across all
+        # ~290 rows, and late rows pay eviction/GC pressure for early
+        # rows' leftovers (the same per-op hygiene tools/scale_check.py
+        # applies)
+        release_cache(spark)
         tag = "no-oracle" if q.oracle is None else "oracle"
         rows[name] = {
             "status": ("fail" if problems else ("green_rows_only" if q.oracle is None else "green")),

@@ -46,5 +46,16 @@ def spark_jobs(spark):
     return count
 
 
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of the JVM's persistent RDDs: persist() and localCheckpoint()
+    both register here."""
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def cached_plan_count(spark) -> int:
+    """Entries in the session's CacheManager (one per cached plan)."""
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_ORACLE = "/root/testdata/sf0.01"

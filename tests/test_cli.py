@@ -12,6 +12,7 @@ from calculate_file_content_size_for_vector_db_spark.operators.metrics import SU
 from calculate_file_content_size_for_vector_db_spark.plans import pipeline
 from calculate_file_content_size_for_vector_db_spark.plans.pipeline import pdf_size_report
 from calculate_file_content_size_for_vector_db_spark.sources.extract import make_simple_pdf
+from tests.conftest import cached_plan_count, persistent_rdd_ids
 from tests.test_preprocess_property import reference_preprocess
 
 
@@ -41,13 +42,14 @@ def test_cli_end_to_end(spark, tmp_path, capsys):
 
     out_dir = tmp_path / "out"
     out_dir.mkdir()
-    persisted = spark.sparkContext._jsc.getPersistentRDDs
-    before = set(persisted().keys())
+    before = persistent_rdd_ids(spark)
+    entries = cached_plan_count(spark)
     rc = main([str(pdf_dir), "--chunk-size", "50", "--output-dir", str(out_dir)])
     assert rc == 0
     # main() releases what it caches. Compare ids, not counts: Spark's
     # cleaner may drop RDDs an earlier test left persisted meanwhile.
-    assert set(persisted().keys()) <= before
+    assert persistent_rdd_ids(spark) <= before
+    assert cached_plan_count(spark) == entries
     printed = capsys.readouterr().out
     assert "a.pdf" in printed and "b.PDF" in printed
     assert "ignore.txt" not in printed  # extension filter (case-insensitive)
@@ -67,14 +69,15 @@ def test_cli_progress_streams_per_file_rows(spark, tmp_path, capsys):
     (pdf_dir / "y.pdf").write_bytes(make_simple_pdf(["gamma delta"]))
     out_dir = tmp_path / "out_p"
     out_dir.mkdir()
-    persisted = spark.sparkContext._jsc.getPersistentRDDs
-    before = set(persisted().keys())
+    before = persistent_rdd_ids(spark)
+    entries = cached_plan_count(spark)
     args = [str(pdf_dir), "--chunk-size", "40", "--output-dir", str(out_dir)]
     rc = main([*args, "--progress", "--print-metadata"])
     assert rc == 0
     # main() releases what it caches. Compare ids, not counts: Spark's
     # cleaner may drop RDDs an earlier test left persisted meanwhile.
-    assert set(persisted().keys()) <= before
+    assert persistent_rdd_ids(spark) <= before
+    assert cached_plan_count(spark) == entries
     printed = capsys.readouterr().out
     # one 'done <file>' line per input file, before the summary table
     assert printed.count("done x.pdf:") == 1

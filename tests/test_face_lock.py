@@ -23,17 +23,15 @@ RLock can't observe its own holder from the holding thread).
 
 import threading
 import time
-from contextlib import contextmanager
+from contextlib import nullcontext
 
 import pytest
 from pyspark.sql import functions as F
 
-from calculate_file_content_size_for_vector_db_spark.streaming import store_swap, takedown, upsert
-from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
-    _FACE_TRIGGER_LOCK,
-    persistent_rdd_ids,
-    release_rdds_since,
-)
+from calculate_file_content_size_for_vector_db_spark import session
+from calculate_file_content_size_for_vector_db_spark.session import _FACE_TRIGGER_LOCK, cache_scope
+from calculate_file_content_size_for_vector_db_spark.streaming import takedown, upsert
+from tests.conftest import persistent_rdd_ids
 
 
 def _checkpointed_ids(spark, df):
@@ -43,18 +41,15 @@ def _checkpointed_ids(spark, df):
     return ck, persistent_rdd_ids(spark) - before
 
 
-@contextmanager
-def _noop_lock():
-    yield
-
-
-def _interleaved_release(spark, lock_ctx, b_wait_timeout):
+def _interleaved_release(spark, b_wait_timeout):
     """Deterministic two-trigger interleaving.
 
-    Trigger A (thread): enter lock_ctx, snapshot the persistent-RDD
-    set, signal entry, then WAIT for B's checkpoint before running its
-    release diff. Trigger B (main thread): after A is inside,
-    localCheckpoint a frame under the REAL face lock.
+    Trigger A (thread): enter a cache_scope (it snapshots the
+    persistent-RDD set), signal entry, then WAIT for B's checkpoint
+    before the scope's exit runs its release diff. Trigger B (main
+    thread): after A is inside, localCheckpoint a frame under the REAL
+    face lock. The falsifier test neuters the lock A's scope takes by
+    patching ``session._FACE_TRIGGER_LOCK``.
 
     With the real lock, B blocks until A finishes -> A's wait times
     out (the timeout IS the expected path, so keep it short), A
@@ -71,11 +66,9 @@ def _interleaved_release(spark, lock_ctx, b_wait_timeout):
 
     def trigger_a():
         try:
-            with lock_ctx():
-                before = persistent_rdd_ids(spark)
+            with cache_scope(spark):
                 a_entered.set()
                 b_created.wait(timeout=b_wait_timeout)
-                release_rdds_since(spark, before)
         except Exception as e:  # pragma: no cover - surfaced below
             errs.append(e)
             a_entered.set()
@@ -98,8 +91,8 @@ def _interleaved_release(spark, lock_ctx, b_wait_timeout):
     return b_ids, survived
 
 
-def test_nested_face_scope_releases_once_at_outermost_exit(spark):
-    """ADVICE r14 item 3: a NESTED face_scope (a composed face's
+def test_nested_cache_scope_releases_once_at_outermost_exit(spark):
+    """ADVICE r14 item 3: a NESTED cache_scope (a composed face's
     sub-body) must be a pure lock reentry — no snapshot, no release of
     its own — so a checkpoint the sub-body hands back to the outer
     trigger survives the inner exit and the OUTERMOST exit releases
@@ -108,15 +101,15 @@ def test_nested_face_scope_releases_once_at_outermost_exit(spark):
     from pyspark.sql import functions as F
 
     outer_before = persistent_rdd_ids(spark)
-    with store_swap.face_scope(spark):
+    with cache_scope(spark):
         _, a_ids = _checkpointed_ids(spark, spark.range(32).withColumn("x", F.rand(3)))
-        with store_swap.face_scope(spark):
+        with cache_scope(spark):
             ck_b, b_ids = _checkpointed_ids(
                 spark, spark.range(32).withColumn("x", F.rand(5))
             )
         # the inner exit must NOT have swept the sub-body's checkpoint
         assert b_ids and b_ids <= persistent_rdd_ids(spark), (
-            "inner face_scope released the sub-body's checkpoint"
+            "inner cache_scope released the sub-body's checkpoint"
         )
         # ...and the outer trigger can still evaluate it
         assert ck_b.count() == 32
@@ -129,17 +122,16 @@ def test_nested_face_scope_releases_once_at_outermost_exit(spark):
 def test_lock_prevents_cross_trigger_sweep(spark):
     """With the face lock on both sides, trigger A's release can never
     contain trigger B's checkpoint — B's persistent RDDs survive."""
-    b_ids, survived = _interleaved_release(
-        spark, lambda: store_swap._FACE_TRIGGER_LOCK, b_wait_timeout=3
-    )
+    b_ids, survived = _interleaved_release(spark, b_wait_timeout=3)
     assert b_ids and survived == b_ids
 
 
-def test_sweep_happens_without_lock(spark):
+def test_sweep_happens_without_lock(spark, monkeypatch):
     """The falsifier: the IDENTICAL interleaving with trigger A's lock
     neutered sweeps B's in-flight checkpoint — so removing the lock
-    from a face body turns the test above red, deterministically."""
-    b_ids, survived = _interleaved_release(spark, _noop_lock, b_wait_timeout=None)
+    from cache_scope turns the test above red, deterministically."""
+    monkeypatch.setattr(session, "_FACE_TRIGGER_LOCK", nullcontext())
+    b_ids, survived = _interleaved_release(spark, b_wait_timeout=None)
     assert b_ids and survived == set()
 
 
@@ -200,9 +192,9 @@ def test_concurrent_upsert_takedown_triggers(spark, tmp_path):
             "doc_id string, text string",
         )
         # gate_batch's caller contract: the admitted snapshot is
-        # released by an enclosing face_scope — a bare call here would
+        # released by an enclosing cache_scope — a bare call here would
         # leak one checkpoint per seed (ADVICE r14 item 2)
-        with store_swap.face_scope(spark):
+        with cache_scope(spark):
             gate_batch(docs, f"{store}/bands", f"{store}/shingles", f"{store}/admitted")
 
     s_up, s_td = str(tmp_path / "up"), str(tmp_path / "td")

@@ -307,21 +307,24 @@ def test_recall_fixture_goldens(spark):
     assert got["binary_recall_at_10"] >= got["pq_recall_at_10"]
 
 
-def test_pq_persist_false_caches_nothing(spark):
+def test_pq_encode_in_cache_scope_caches_nothing(spark):
     import random
+
+    from calculate_file_content_size_for_vector_db_spark.session import cache_scope, release_cache
 
     rng = random.Random(41)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(30)]
     df = _emb(spark, rows)
-    spark.catalog.clearCache()
+    release_cache(spark)
     baseline = sim.pq_encode(df).collect()
-    spark.catalog.clearCache()
-    # persist=False: identical result, zero cache residency afterwards
-    # (the opt-out for long-lived library sessions, ADVICE r05)
-    got = sim.pq_encode(df, persist=False).collect()
+    release_cache(spark)
+    # collected inside a scope: identical result, zero cache residency
+    # afterwards (how a long-lived library session stays clean)
+    with cache_scope(spark):
+        got = sim.pq_encode(df).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, baseline))
     jsm = spark._jsparkSession.sharedState().cacheManager()
-    assert jsm.isEmpty(), "persist=False must leave no cached plans behind"
+    assert jsm.isEmpty(), "cache_scope must leave no cached plans behind"
 
 
 def test_knn_graph_matches_bruteforce(spark):

@@ -22,7 +22,7 @@ from bench import HEADLINE  # noqa: E402
 from calculate_file_content_size_for_vector_db_spark.entry_queries import (  # noqa: E402
     REGISTRY,
 )
-from calculate_file_content_size_for_vector_db_spark.session import get_spark  # noqa: E402
+from calculate_file_content_size_for_vector_db_spark.session import get_spark, release_cache  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT_DIR = os.path.join(
@@ -62,7 +62,7 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(plan)
         print(f"{name}: {_shape(plan)}")
-        spark.catalog.clearCache()
+        release_cache(spark)
 
 
 if __name__ == "__main__":

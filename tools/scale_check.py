@@ -37,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from calculate_file_content_size_for_vector_db_spark.session import get_spark
+from calculate_file_content_size_for_vector_db_spark.session import get_spark, release_cache
 
 VOCAB = (
     "the a of and to in is key agg row scan slow fast table value part hash "
@@ -123,7 +123,7 @@ def run_tier(spark, n_docs: int, n_vec: int, only: set[str] | None = None) -> di
         df.write.mode("overwrite").format("noop").save()
         timings[name] = round(time.perf_counter() - t0, 2)
         print(f"# {name}: {timings[name]}s", file=sys.stderr)
-        spark.catalog.clearCache()
+        release_cache(spark)
 
     t("chunk_rollup", DocumentPipeline(spark, chunk_size=100).summary(docs))
     t("exact_dedup", dedup.exact_dedup(docs))
