@@ -9,11 +9,14 @@ C2/S1-S4 preprocessing chain (pdf_reader.py:390-403), order-sensitive
      actual unicode code points                 (pdf_reader.py:399)
   4. lowercase                                  (pdf_reader.py:401)
 
-Everything here stays inside whole-stage codegen — at 100 TB this chain
-runs JVM-side on the scan output with zero Python involvement.
+The Column chain stays inside whole-stage codegen. ``preprocess_str``
+is the same chain on a Python str, for the PDF sizing pass, which
+measures chunk text inside the Python loop that parses each file.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -27,6 +30,25 @@ def preprocess_text(col: Column | str) -> Column:
     # Java regex for a literal backslash is \\ -> python "\\\\"
     c = F.regexp_replace(c, "\\\\u[0-9a-fA-F]{4}", "")
     return F.lower(c)
+
+
+_NEWLINES_2 = re.compile(r"\n{2,}")
+_NEWLINES = re.compile(r"\n+")
+_ESCAPES = re.compile(r"\\u[0-9a-fA-F]{4}")
+
+
+def preprocess_str(s: str) -> str:
+    """``preprocess_text`` on a Python str, step for step.
+
+    The two agree on ``len`` for every string without surrogates
+    (tests/test_preprocess_property.py sweeps every BMP code point).
+    They can differ in the string itself: Spark's ``lower`` uses the
+    JVM's Unicode case tables and ``str.lower`` CPython's, and their
+    Unicode versions map a few code points differently (e.g. U+1C89,
+    U+A7CB). Callers compare lengths, not strings."""
+    s = _NEWLINES_2.sub("\n", s)
+    s = _NEWLINES.sub(" ", s)
+    return _ESCAPES.sub("", s).lower()
 
 
 def basename(col: Column | str) -> Column:

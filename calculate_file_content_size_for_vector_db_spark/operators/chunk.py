@@ -20,10 +20,11 @@ Two implementations:
 
 Scale notes: both are narrow transforms — no shuffle. The PDF sizing
 path does not go through ``chunk_recursive``: ``sources.extract.
-extract_chunks`` calls ``split_text_recursive`` in the same Python loop
-that parses each file, so page text never makes a second Python hop. A
-file is parsed and split inside one task, so one huge file (the
-reference's 1,652-page doc, README.md:20) is one task's work.
+extract_sizes`` calls ``split_text_recursive`` in the same Python loop
+that parses each file and keeps only each file's chunk count and text
+size, so no chunk text leaves that loop. A file is parsed and split
+inside one task, so one huge file (the reference's 1,652-page doc,
+README.md:20) is one task's work.
 """
 
 from __future__ import annotations

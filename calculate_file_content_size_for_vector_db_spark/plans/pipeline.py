@@ -3,30 +3,33 @@ section 3) re-expressed as lazy DataFrame graphs.
 
 Reference lifecycle (pdf_reader.py:505-546): scan -> sort-by-size ->
 process pool -> per-file record list -> driver-side accumulate/print.
-Spark lifecycle: scan -> extract -> chunk -> window -> agg -> rollup,
-one action at the sink; Catalyst fuses the narrow stages, the per-doc
-agg is the only shuffle.
 
 Two input modes:
 - ``DocumentPipeline`` — the fixture/`documents`-table mode: text is
   already extracted (the `documents` parquet stands in for
-  post-extraction PDF text, FIXTURES.md A).
-- ``pdf_size_report`` — the CLI's mode: binaryFile scan of one folder,
-  then one fused extract + split pass (``sources.extract.extract_chunks``;
-  pypdf is an optional dependency).
+  post-extraction PDF text, FIXTURES.md A). scan -> chunk -> window ->
+  agg -> rollup, one action at the sink; the per-doc agg and the rollup
+  are its shuffles.
+- ``pdf_size_report`` + ``size_table`` — the CLI's mode. The first is a
+  binaryFile scan of one folder and one Python pass that emits a row
+  per file (``sources.extract.extract_sizes``; pypdf is an optional
+  dependency): one stage, no shuffle. The second adds SUM TOTAL to
+  those rows once they are on the Spark driver, which the CLI needs anyway
+  to print them.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from calculate_file_content_size_for_vector_db_spark.functions.text import basename, preprocess_text
 from calculate_file_content_size_for_vector_db_spark.operators import chunk as chunk_ops
 from calculate_file_content_size_for_vector_db_spark.operators import metrics
-from calculate_file_content_size_for_vector_db_spark.sources.extract import extract_chunks
+from calculate_file_content_size_for_vector_db_spark.sources.extract import OK, extract_sizes
 from calculate_file_content_size_for_vector_db_spark.sources.io import read_table, scan_files
 
 
@@ -82,24 +85,8 @@ class DocumentPipeline:
         return self.per_file(docs), self.chunks(docs), self.summary(docs)
 
 
-@dataclass
-class SizeReport:
-    """One folder's size report, lazily built.
-
-    - ``per_file``: path, pages, file_size, chunks, text_size, ratio
-      (2 decimals), filename.
-    - ``summary``: the CSV table (filename, file_size, text_size, chunks,
-      ratio) with one row per file plus SUM TOTAL, built on ``per_file``.
-      It rolls up on ``path``, so same-named files in different
-      subfolders stay separate rows.
-
-    Each action recomputes from the scan; a caller that reads a frame
-    more than once caches it (the CLI does, in one ``cache_scope`` per
-    folder).
-    """
-
-    per_file: DataFrame
-    summary: DataFrame
+# the report table's integer columns, in CSV order around ratio
+_TABLE_COUNTS = ["file_size", "text_size", "chunks", "files_unreadable", "bytes_unreadable"]
 
 
 def pdf_size_report(
@@ -108,29 +95,63 @@ def pdf_size_report(
     chunk_size: int = chunk_ops.DEFAULT_CHUNK_SIZE,
     chunk_overlap: int = 0,
     file_type: str = ".pdf",
-) -> SizeReport:
+) -> DataFrame:
     """The reference's process_files (pdf_reader.py:505-546) over one
-    folder of files: scan -> fused extract + split -> preprocess ->
-    per-file agg -> rollup. Raises at once when the folder is missing
-    (the scan lists files eagerly); nothing else runs until an action.
+    folder of files, one row per listed file: path, pages, file_size,
+    chunks, text_size, status (``ok`` or ``unreadable``), error (why a
+    file is unreadable), ratio (2 decimals) and filename. Raises at once when the folder is
+    missing (the scan lists files eagerly); nothing else runs until an
+    action.
     """
     files = scan_files(spark, folder, extension=file_type)
-    chunked = extract_chunks(files, chunk_size, chunk_overlap).withColumn(
-        "chunk_length", F.length(preprocess_text("chunk_text")).cast("int")
-    )
-    per_file = (
-        chunked.groupBy("path")
-        .agg(
-            F.first("n_pages").alias("pages"),
-            F.first("file_size").alias("file_size"),
-            F.count("*").alias("chunks"),
-            F.sum("chunk_length").cast("long").alias("text_size"),
-        )
+    return (
+        extract_sizes(files, chunk_size, chunk_overlap)
         .withColumn("ratio", metrics.ratio("file_size", "text_size", 2))
         .withColumn("filename", basename("path"))
     )
-    # the SUM TOTAL label has no "/", so basename keeps it as it is
-    summary = metrics.rollup_summary(per_file, name_col="path").select(
-        basename("path").alias("filename"), "file_size", "text_size", "chunks", "ratio"
+
+
+def size_table(spark: SparkSession, per_file: list[Row], listed: int) -> DataFrame:
+    """The report table over the collected ``pdf_size_report`` rows of a
+    folder that lists ``listed`` files (``sources.io.listed_files``):
+    filename, file_size, text_size, chunks, ratio, files_unreadable,
+    bytes_unreadable.
+
+    One row per readable file, then SUM TOTAL, whose sums are exact
+    integer sums over the readable files (Q7: its ratio is a ratio of
+    sums). Unreadable files are not listed; SUM TOTAL counts them and
+    their bytes in the last two columns, which are NULL on file rows.
+    The count includes zero-byte files, which have no row. No SUM TOTAL
+    when the folder lists no file. The frame is a local relation, so
+    reading it runs no Spark job; the ratios are Spark's own rounding,
+    as in ``metrics.rollup_summary``.
+    """
+    readable = [r for r in per_file if r.status == OK]
+    unreadable = [r for r in per_file if r.status != OK]
+    rows = [(r.path, r.file_size, r.text_size, r.chunks, None, None) for r in readable]
+    if listed:
+        rows.append(
+            (
+                # the label has no "/", so basename keeps it as it is
+                metrics.SUM_TOTAL_LABEL,
+                sum(r.file_size for r in readable),
+                sum(r.text_size for r in readable),
+                sum(r.chunks for r in readable),
+                listed - len(readable),
+                sum(r.file_size for r in unreadable),
+            )
+        )
+    pdf = pd.DataFrame(rows, columns=["path", *_TABLE_COUNTS])
+    table = spark.createDataFrame(
+        pdf.astype({c: "Int64" for c in _TABLE_COUNTS}),
+        "path string, " + ", ".join(f"{c} long" for c in _TABLE_COUNTS),
     )
-    return SizeReport(per_file, summary)
+    return table.select(
+        basename("path").alias("filename"),
+        "file_size",
+        "text_size",
+        "chunks",
+        metrics.ratio("file_size", "text_size").alias("ratio"),
+        "files_unreadable",
+        "bytes_unreadable",
+    )

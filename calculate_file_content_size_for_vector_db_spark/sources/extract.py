@@ -8,15 +8,19 @@ that loop:
 
 - ``extract_pages`` emits one row per page (path, page_number,
   page_text, n_pages, file_size);
-- ``extract_chunks`` also runs the recursive split on every page in the
-  same loop and emits one row per chunk (path, n_pages, file_size,
-  chunk_text). This is the sizing path: page text never crosses Arrow
-  into the JVM and back into a second Python worker for splitting.
+- ``extract_sizes`` emits one row per file (path, pages, file_size,
+  chunks, text_size, status, error). It splits every page, preprocesses every
+  chunk and sums the lengths in the same loop. This is the sizing path:
+  no text crosses Arrow, and the per-file rows need no shuffle.
 
 A file is parsed, and its pages split, inside one task either way: PDFs
 are not splittable mid-file, so one huge file (the reference's
 1,652-page outlier, README.md:20) is one task's work. Parallelism comes
-from spreading files over tasks (``partitioning.spread``).
+from spreading files over tasks.
+
+A file whose content is NULL, whose parser raises, or that yields no
+page is unreadable: it has no page rows, and one size row with status
+``unreadable`` whose ``error`` says why. It never fails the job.
 
 Parsing backend: pypdf when importable (not in this container). The
 fallback is a minimal parser for the uncompressed single-stream PDFs
@@ -41,6 +45,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from calculate_file_content_size_for_vector_db_spark.functions.text import preprocess_str
 from calculate_file_content_size_for_vector_db_spark.operators.chunk import (
     DEFAULT_CHUNK_SIZE,
     split_text_recursive,
@@ -63,14 +68,20 @@ PAGE_SCHEMA = StructType(
     ]
 )
 
-CHUNK_SCHEMA = StructType(
+SIZE_SCHEMA = StructType(
     [
         StructField("path", StringType()),
-        StructField("n_pages", IntegerType()),
+        StructField("pages", IntegerType()),
         StructField("file_size", LongType()),
-        StructField("chunk_text", StringType()),
+        StructField("chunks", IntegerType()),
+        StructField("text_size", LongType()),
+        StructField("status", StringType()),
+        StructField("error", StringType()),
     ]
 )
+
+OK = "ok"
+UNREADABLE = "unreadable"
 
 
 def _escape_pdf_string(s: str) -> str:
@@ -145,55 +156,81 @@ def extract_pdf_text(data: bytes) -> list[str]:
     return _extract_pages_fallback(data)
 
 
+def _read(content: bytes | None) -> tuple[list[str], int, str | None]:
+    """(pages, file_size, error) of one file. A file whose content is
+    NULL or whose parser raises has no pages, and error says which."""
+    if content is None:
+        return [], 0, "NULL content"
+    data = bytes(content)
+    try:
+        return extract_pdf_text(data), len(data), None
+    except Exception as e:  # noqa: BLE001 — one bad file is a row, not a failed job
+        return [], len(data), f"{type(e).__name__}: {e}"
+
+
 def _map_files(
     files: DataFrame,
     schema: StructType,
-    rows_for: Callable[[str, list[str], int], Iterable[tuple]],
-    path_col: str,
-    content_col: str,
+    rows_for: Callable[[str, list[str], int, str | None], Iterable[tuple]],
 ) -> DataFrame:
-    """Parse every file once and emit ``rows_for(path, pages, file_size)``;
+    """Parse every file once and emit ``rows_for(path, *_read(content))``;
     one Arrow-batched Python loop per partition."""
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf_batch in batches:
             rows = []
-            for path, content in zip(pdf_batch[path_col], pdf_batch[content_col]):
-                data = bytes(content)
-                rows.extend(rows_for(path, extract_pdf_text(data), len(data)))
+            for path, content in zip(pdf_batch["path"], pdf_batch["content"]):
+                rows.extend(rows_for(path, *_read(content)))
             yield pd.DataFrame(rows, columns=schema.fieldNames())
 
+    return files.select("path", "content").mapInPandas(_parse, schema)
+
+
+def extract_pages(files: DataFrame) -> DataFrame:
+    """binaryFile rows -> one row per page (path, page_number 0-based,
+    page_text, n_pages, file_size). Arrow-batched per partition; the
+    input is spread over the session's cores first, as a fixture frame
+    may arrive in one partition."""
     from calculate_file_content_size_for_vector_db_spark.partitioning import spread
 
-    return spread(files.select(path_col, content_col)).mapInPandas(_parse, schema)
-
-
-def extract_pages(files: DataFrame, path_col: str = "path", content_col: str = "content") -> DataFrame:
-    """binaryFile rows -> one row per page (path, page_number 0-based,
-    page_text, n_pages, file_size). Arrow-batched per partition."""
-
-    def _pages(path: str, pages: list[str], size: int) -> Iterator[tuple]:
+    def _pages(path: str, pages: list[str], size: int, error: str | None) -> Iterator[tuple]:
         return ((path, i, text, len(pages), size) for i, text in enumerate(pages))
 
-    return _map_files(files, PAGE_SCHEMA, _pages, path_col, content_col)
+    return _map_files(spread(files.select("path", "content")), PAGE_SCHEMA, _pages)
 
 
-def extract_chunks(
+def extract_sizes(
     files: DataFrame, chunk_size: int = DEFAULT_CHUNK_SIZE, chunk_overlap: int = 0
 ) -> DataFrame:
-    """binaryFile rows -> one row per chunk (path, n_pages, file_size,
-    chunk_text): ``extract_pages`` then ``chunk_recursive`` on page_text,
-    fused into one Python pass. A file whose pages hold no text emits no
-    rows, as a page with no chunks does in ``chunk_recursive``."""
+    """binaryFile rows -> one row per file (path, pages, file_size,
+    chunks, text_size, status, error): ``extract_pages``, then
+    ``chunk_recursive`` on page_text, then ``preprocess_text`` on each
+    chunk, summed per file, all in one Python pass. text_size counts
+    code points of the preprocessed chunks, as Spark's ``length`` does.
 
-    def _chunks(path: str, pages: list[str], size: int) -> Iterator[tuple]:
-        return (
-            (path, len(pages), size, chunk)
+    A readable file whose pages hold no text is an ``ok`` row with 0
+    chunks and text_size 0. An unreadable file (see the module
+    docstring) is an ``unreadable`` row with 0 pages, chunks and
+    text_size; error is NULL on ``ok`` rows.
+
+    The input is not repartitioned. Spark charges every file at least
+    ``spark.sql.files.openCostInBytes`` when it packs a scan's splits,
+    so a folder scan yields one file per partition while it has fewer
+    files than cores, and about one partition per core beyond that; a
+    repartition would add no parallelism, only a shuffle of file
+    content."""
+
+    def _sizes(path: str, pages: list[str], size: int, error: str | None) -> list[tuple]:
+        if not pages:
+            return [(path, 0, size, 0, 0, UNREADABLE, error or "no pages")]
+        lengths = [
+            len(preprocess_str(chunk))
             for text in pages
             for chunk in split_text_recursive(text, chunk_size, chunk_overlap)
-        )
+        ]
+        return [(path, len(pages), size, len(lengths), sum(lengths), OK, None)]
 
-    return _map_files(files, CHUNK_SCHEMA, _chunks, "path", "content")
+    return _map_files(files, SIZE_SCHEMA, _sizes)
 
 
 def text_to_pdf_udf(first_page_chars: int = 100):

@@ -76,9 +76,7 @@ def scan_files(
     reference (pdf_reader.py:332-333: lowercased, dot-prefixed) and
     matched case-insensitively (pdf_reader.py:343).
     """
-    ext = extension.lower()
-    if not ext.startswith("."):
-        ext = "." + ext
+    ext = _extension(extension)
     df = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
@@ -90,6 +88,20 @@ def scan_files(
         # plain column pruning — Catalyst never reads the bytes.
         df = df.select("path", "modificationTime", "length")
     return df
+
+
+def _extension(extension: str) -> str:
+    ext = extension.lower()
+    return ext if ext.startswith(".") else "." + ext
+
+
+def listed_files(files: DataFrame, extension: str = ".pdf") -> list[str]:
+    """Every file a ``scan_files`` frame (or a frame built on one) lists
+    with ``extension``, zero-byte files included: Spark's file scan
+    makes no split for a zero-byte file, so no row of the scan names
+    it. Read on the Spark driver from the scan's file index; runs no job."""
+    ext = _extension(extension)
+    return [p for p in files.inputFiles() if p.lower().endswith(ext)]
 
 
 def write_csv(df: DataFrame, out_path: str, single_file: bool = True) -> None:

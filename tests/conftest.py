@@ -25,25 +25,42 @@ def spark():
     yield s
 
 
-@pytest.fixture
-def spark_jobs(spark):
-    """count(fn) -> the number of Spark jobs ``fn()`` runs, read through
-    a job group and the status tracker."""
+def _job_ids(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` runs, read through a job group and
+    the status tracker."""
     import uuid
 
     sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
-    def count(fn) -> int:
-        group = f"count-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    return count
+@pytest.fixture
+def spark_jobs(spark):
+    """count(fn) -> the number of Spark jobs ``fn()`` runs."""
+    return lambda fn: len(_job_ids(spark, fn))
+
+
+@pytest.fixture
+def spark_stages(spark):
+    """work(fn) -> (jobs, stages, tasks) that ``fn()`` runs. Stages are
+    every stage of those jobs, skipped ones included, read through the
+    status tracker; tasks are the tasks those stages completed."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def work(fn) -> tuple[int, int, int]:
+        jobs = _job_ids(spark, fn)
+        stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+        tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+        return len(jobs), len(stages), tasks
+
+    return work
 
 
 def persistent_rdd_ids(spark) -> set[int]:

@@ -4,16 +4,19 @@ check console table + CSV output (the reference's section 3.1 flow)."""
 import csv
 import glob
 import os
-import re
 
 from calculate_file_content_size_for_vector_db_spark.cli import folder_to_csv_name, main
+from calculate_file_content_size_for_vector_db_spark.functions.text import preprocess_str
 from calculate_file_content_size_for_vector_db_spark.operators.chunk import split_text_recursive
 from calculate_file_content_size_for_vector_db_spark.operators.metrics import SUM_TOTAL_LABEL
 from calculate_file_content_size_for_vector_db_spark.plans import pipeline
 from calculate_file_content_size_for_vector_db_spark.plans.pipeline import pdf_size_report
 from calculate_file_content_size_for_vector_db_spark.sources.extract import make_simple_pdf
 from tests.conftest import cached_plan_count, persistent_rdd_ids
-from tests.test_preprocess_property import reference_preprocess
+
+COLUMNS = [
+    "filename", "file_size", "text_size", "chunks", "ratio", "files_unreadable", "bytes_unreadable"
+]
 
 
 def _csv_rows(out_dir, folder) -> list[dict]:
@@ -62,7 +65,7 @@ def test_cli_end_to_end(spark, tmp_path, capsys):
     assert csv_df.count() == 3  # 2 files + SUM TOTAL
 
 
-def test_cli_progress_streams_per_file_rows(spark, tmp_path, capsys):
+def test_cli_progress_streams_per_file_rows(spark, spark_stages, tmp_path, capsys):
     pdf_dir = tmp_path / "pdfs_p"
     pdf_dir.mkdir()
     (pdf_dir / "x.pdf").write_bytes(make_simple_pdf(["alpha beta " * 20]))
@@ -72,8 +75,15 @@ def test_cli_progress_streams_per_file_rows(spark, tmp_path, capsys):
     before = persistent_rdd_ids(spark)
     entries = cached_plan_count(spark)
     args = [str(pdf_dir), "--chunk-size", "40", "--output-dir", str(out_dir)]
-    rc = main([*args, "--progress", "--print-metadata"])
-    assert rc == 0
+    rc = []
+    run = [*args, "--progress", "--print-metadata"]
+    jobs, stages, tasks = spark_stages(lambda: rc.append(main(run)))
+    assert rc == [0]
+    # each file is parsed once: one task per scan partition, then the
+    # CSV write; no stage re-reads a file
+    partitions = pdf_size_report(spark, str(pdf_dir)).rdd.getNumPartitions()
+    assert stages == jobs
+    assert tasks == partitions + 1
     # main() releases what it caches. Compare ids, not counts: Spark's
     # cleaner may drop RDDs an earlier test left persisted meanwhile.
     assert persistent_rdd_ids(spark) <= before
@@ -107,7 +117,7 @@ def test_cli_csv_matches_python_recomputation(tmp_path, capsys):
     for rel, texts in pages.items():
         chunks = [c for t in texts for c in split_text_recursive(t, 60, 0)]
         size = len(make_simple_pdf(texts))
-        text_size = sum(len(reference_preprocess(c)) for c in chunks)
+        text_size = sum(len(preprocess_str(c)) for c in chunks)
         want[os.path.basename(rel)] = (size, len(chunks), text_size)
     want[SUM_TOTAL_LABEL] = tuple(sum(v[i] for v in want.values()) for i in range(3))
     assert got == want
@@ -123,7 +133,7 @@ def test_cli_same_basename_in_two_subfolders_stays_two_rows(tmp_path, capsys):
     table = [l for l in capsys.readouterr().out.splitlines() if l.startswith("report.pdf")]
     assert len(table) == 2
     rows = _csv_rows(out_dir, pdf_dir)
-    assert list(rows[0]) == ["filename", "file_size", "text_size", "chunks", "ratio"]
+    assert list(rows[0]) == COLUMNS
     files = sorted(int(r["chunks"]) for r in rows if r["filename"] == "report.pdf")
     assert files == [1, 4]
     (total,) = [r for r in rows if r["filename"] == SUM_TOTAL_LABEL]
@@ -159,25 +169,57 @@ def test_cli_unreadable_folders_do_not_stop_later_folders(tmp_path, capsys, monk
     assert f"No readable .pdf files in {empty}." in printed
     assert f"No readable .pdf files in {junk}." in printed
     assert f"== {gone}: skipped (" in printed
-    assert printed.count(SUM_TOTAL_LABEL) == 1
-    assert [r["filename"] for r in _csv_rows(out_dir, junk)] == []
+    # junk and good print a SUM TOTAL; junk's counts only its unreadable file
+    assert sum(l.startswith(SUM_TOTAL_LABEL) for l in printed.splitlines()) == 2
+    assert _csv_rows(out_dir, empty) == []
+    (junk_total,) = _csv_rows(out_dir, junk)
+    assert junk_total == {
+        "filename": SUM_TOTAL_LABEL, "file_size": "0", "text_size": "0", "chunks": "0",
+        "ratio": "", "files_unreadable": "1", "bytes_unreadable": str(len(b"JUNK, not a pdf")),
+    }
     assert {r["filename"] for r in _csv_rows(out_dir, good)} == {"g.pdf", SUM_TOTAL_LABEL}
 
 
-def test_cli_report_reads_files_in_one_python_pass(spark, tmp_path):
-    """Per folder, file content is scanned once and crosses into Python
-    once: the executed report plan holds at most one scan and at most one
-    Python-evaluation node (parse and split are fused)."""
+def test_cli_lists_textless_pdfs_and_counts_unreadable_files(tmp_path, capsys):
+    """A PDF with pages but no text is a row with text_size 0 and no
+    ratio; files that cannot be read are not rows but are counted, with
+    their bytes, on SUM TOTAL, whose other sums stay readable-only."""
+    pdf_dir = tmp_path / "mixed"
+    _write_pdfs(pdf_dir, {"text.pdf": ["some words here"], "blank.pdf": ["", ""]})
+    (pdf_dir / "junk.pdf").write_bytes(b"JUNK" * 10)
+    (pdf_dir / "empty.pdf").write_bytes(b"")
+    out_dir = tmp_path / "out"
+    assert main([str(pdf_dir), "--chunk-size", "50", "--output-dir", str(out_dir)]) == 0
+    printed = capsys.readouterr().out
+    assert "Unreadable: 2 files, 40 bytes" in printed
+    rows = {r["filename"]: r for r in _csv_rows(out_dir, pdf_dir)}
+    assert set(rows) == {"text.pdf", "blank.pdf", SUM_TOTAL_LABEL}
+    blank, text, total = rows["blank.pdf"], rows["text.pdf"], rows[SUM_TOTAL_LABEL]
+    assert (blank["chunks"], blank["text_size"], blank["ratio"]) == ("0", "0", "")
+    assert blank["files_unreadable"] == blank["bytes_unreadable"] == ""
+    assert int(total["file_size"]) == int(blank["file_size"]) + int(text["file_size"])
+    assert (total["text_size"], total["chunks"]) == ("15", "1")
+    assert (total["files_unreadable"], total["bytes_unreadable"]) == ("2", "40")
+
+
+def test_cli_folder_run_takes_two_jobs_and_no_shuffle(spark_stages, tmp_path, capsys):
+    """A default folder run is one Python pass over the files and one
+    CSV write: at most two jobs, one stage each, so nothing shuffles and
+    nothing is read twice."""
     pdf_dir = tmp_path / "plan"
-    _write_pdfs(pdf_dir, {"p.pdf": ["some text " * 30, "more"], "q.pdf": ["q"]})
-    summary = pdf_size_report(spark, str(pdf_dir), 50).summary
-    assert len(summary.collect()) == 3
-    plan = summary._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]  # AQE prints the plan twice
-    python_nodes = re.findall(r"\b\w*(?:EvalPython|InPandas|InArrow|PythonUDTF)\w*\b", final)
-    assert "MapInPandas" in python_nodes
-    assert len(python_nodes) <= 1, python_nodes
-    assert final.count("FileScan binaryFile") <= 1
+    _write_pdfs(
+        pdf_dir, {"p.pdf": ["some text " * 30, "more"], "q.pdf": ["q"], "sub/r.pdf": ["r " * 90]}
+    )
+    (pdf_dir / "junk.pdf").write_bytes(b"JUNK")
+    out_dir = tmp_path / "out"
+    rc = []
+    jobs, stages, _ = spark_stages(
+        lambda: rc.append(main([str(pdf_dir), "--chunk-size", "50", "--output-dir", str(out_dir)]))
+    )
+    assert rc == [0]
+    assert len(_csv_rows(out_dir, pdf_dir)) == 4
+    assert jobs <= 2
+    assert stages == jobs
 
 
 def test_compact_parquet_reduces_files(spark, tmp_path):

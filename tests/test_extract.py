@@ -83,16 +83,20 @@ def test_corrupt_pdf_among_good_files(spark):
     assert out[0].page_text == "fine text"
 
 
-def test_extract_chunks_matches_pages_then_chunk_recursive(spark):
-    """The fused extract + split pass emits exactly the chunk rows of
-    extract_pages followed by chunk_recursive on page_text: golden
-    bytes, corrupt/empty files, a multi-page file with a page far over
+def test_extract_sizes_matches_pages_then_chunk_recursive(spark):
+    """The one-pass size rows equal extract_pages, then chunk_recursive
+    on page_text, then preprocess_text on each chunk, summed per file
+    by a groupBy: golden bytes, a multi-page file with a page far over
     chunk_size (and one unbroken run that falls back to the character
-    separator), with overlap and without."""
-    from calculate_file_content_size_for_vector_db_spark.operators.chunk import chunk_recursive
-    from calculate_file_content_size_for_vector_db_spark.sources.extract import extract_chunks
+    separator), with overlap and without. Corrupt and empty files have
+    no pages, so they are size rows marked unreadable."""
+    from pyspark.sql import functions as F
 
-    long_page = " ".join(f"word{i}" for i in range(120)) + "\n\nnext para " + "x" * 90
+    from calculate_file_content_size_for_vector_db_spark.functions.text import preprocess_text
+    from calculate_file_content_size_for_vector_db_spark.operators.chunk import chunk_recursive
+    from calculate_file_content_size_for_vector_db_spark.sources.extract import extract_sizes
+
+    long_page = " ".join(f"word{i}" for i in range(120)) + "\n\nnext Para \\u00e9 " + "X" * 90
     rows = [
         ("golden.pdf", GOLDEN_PDF),
         ("multi.pdf", make_simple_pdf(["short", long_page, "", "tail page"])),
@@ -101,14 +105,61 @@ def test_extract_chunks_matches_pages_then_chunk_recursive(spark):
     ]
     files = spark.createDataFrame(rows, "path string, content binary")
     for size, overlap in [(40, 10), (64, 0)]:
-        fused = sorted(tuple(r) for r in extract_chunks(files, size, overlap).collect())
-        staged = chunk_recursive(
-            extract_pages(files),
-            size,
-            overlap,
-            text_col="page_text",
-            keep_cols=["path", "n_pages", "file_size"],
-        ).select("path", "n_pages", "file_size", "chunk_text")
-        assert fused == sorted(tuple(r) for r in staged.collect()), (size, overlap)
-        assert {p for p, *_ in fused} == {"golden.pdf", "multi.pdf"}
-        assert sum(p == "multi.pdf" for p, *_ in fused) > 4
+        got = {r.path: tuple(r)[1:] for r in extract_sizes(files, size, overlap).collect()}
+        staged = (
+            chunk_recursive(
+                extract_pages(files),
+                size,
+                overlap,
+                text_col="page_text",
+                keep_cols=["path", "n_pages", "file_size"],
+            )
+            .groupBy("path")
+            .agg(
+                F.first("n_pages"),
+                F.first("file_size"),
+                F.count("*"),
+                F.sum(F.length(preprocess_text("chunk_text"))),
+            )
+        )
+        want = {p: (*rest, "ok", None) for p, *rest in staged.collect()}
+        want["corrupt.pdf"] = (0, len(rows[2][1]), 0, 0, "unreadable", "no pages")
+        want["empty.pdf"] = (0, 0, 0, 0, "unreadable", "no pages")
+        assert got == want, (size, overlap)
+        assert got["multi.pdf"][2] > 4
+
+
+def test_extract_sizes_accounts_for_every_file(spark):
+    """One row per input file, and no file fails the job: NULL content,
+    a file that parses to zero pages and a non-PDF are unreadable; a
+    PDF whose pages hold no text is a readable row with no text."""
+    from calculate_file_content_size_for_vector_db_spark.sources.extract import extract_sizes
+
+    rows = [
+        ("good.pdf", make_simple_pdf(["fine text"])),
+        ("null.pdf", None),
+        ("no_pages.pdf", b"%PDF-1.4\n1 0 obj\n<< /Type /Catalog >>\nendobj\n%%EOF\n"),
+        ("not_a.pdf", b"JUNK, not a pdf"),
+        ("textless.pdf", make_simple_pdf(["", ""])),
+    ]
+    files = spark.createDataFrame(rows, "path string, content binary")
+    got = {r.path: tuple(r)[1:] for r in extract_sizes(files, 50).collect()}
+    size = {p: len(c or b"") for p, c in rows}
+    assert got == {
+        "good.pdf": (1, size["good.pdf"], 1, 9, "ok", None),
+        "null.pdf": (0, 0, 0, 0, "unreadable", "NULL content"),
+        "no_pages.pdf": (0, size["no_pages.pdf"], 0, 0, "unreadable", "no pages"),
+        "not_a.pdf": (0, size["not_a.pdf"], 0, 0, "unreadable", "no pages"),
+        "textless.pdf": (2, size["textless.pdf"], 0, 0, "ok", None),
+    }
+
+
+def test_parser_error_reads_as_unreadable_not_a_failure(monkeypatch):
+    from calculate_file_content_size_for_vector_db_spark.sources import extract
+
+    def boom(data: bytes) -> list[str]:
+        raise ValueError("broken xref")
+
+    monkeypatch.setattr(extract, "extract_pdf_text", boom)
+    data = make_simple_pdf(["fine text"])
+    assert extract._read(data) == ([], len(data), "ValueError: broken xref")
