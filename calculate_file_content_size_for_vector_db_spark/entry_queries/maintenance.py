@@ -122,7 +122,7 @@ SELECT doc_id, lang FROM updates
 """,
 )
 def cdc_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from calculate_file_content_size_for_vector_db_spark.operators.maintenance import merge_upsert
+    from calculate_file_content_size_for_vector_db_spark.operators.maintenance import keyed_upsert
 
     docs = _docs(spark, sf_dir).select("doc_id", "lang")
     updates = (
@@ -132,7 +132,7 @@ def cdc_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.sparkSession.createDataFrame([(-1, "new")], "doc_id long, lang string")
         )
     )
-    return merge_upsert(docs, updates, "doc_id")
+    return keyed_upsert(docs, updates.select("doc_id"), updates, "doc_id")
 
 
 @register(

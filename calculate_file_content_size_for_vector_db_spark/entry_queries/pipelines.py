@@ -1173,7 +1173,7 @@ def ingest_takedown_readmit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     influence. Delivery 1 admits the batch and writes the
     band/shingle/ledger stores; then every admitted doc with
     doc_id % 14 == 0 is FORGOTTEN — all three stores are rewritten
-    with an anti-join purge (the per-doc-row stores where purge ==
+    by keyed_takedown (the per-doc-row stores where purge ==
     rebuild structurally; the one store where it is not, the cluster
     labeling, has its own row in dedup_takedown_recluster). The full
     batch is then RE-SUBMITTED against the purged stores:
@@ -1194,7 +1194,7 @@ def ingest_takedown_readmit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     would flip readmitted). The oracle rebuilds delivery, purge, and
     resubmission declaratively; the hash therefore pins the purge
     seam of all three stores at once. At 100 TB the purge is one
-    anti-join rewrite per store (request-sized broadcast against the
+    keyed_takedown per store (request-sized broadcast against the
     scan a compaction pays anyway) and resubmission costs one
     ordinary gate pass."""
     import tempfile
@@ -1207,6 +1207,7 @@ def ingest_takedown_readmit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signature,
         shingle_sets,
     )
+    from calculate_file_content_size_for_vector_db_spark.operators.maintenance import keyed_takedown
 
     docs = _docs(spark, sf_dir)
     mod = _INCR_BATCH_MOD
@@ -1248,12 +1249,12 @@ def ingest_takedown_readmit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands_from_shingle_sets(adm1_sh).write.mode("append").parquet(f"{store}/bands")
     adm1.select("doc_id").write.parquet(f"{store}/ledger")
 
-    # takedown: purge-rewrite each store with an anti-join (new
+    # takedown: purge-rewrite each store with keyed_takedown (new
     # versioned paths — a parquet store cannot be overwritten from a
     # plan that reads it)
     td = adm1.where(F.col("doc_id") % (2 * mod) == 0).select("doc_id")
     for t in ("bands", "shingles", "ledger"):
-        spark.read.parquet(f"{store}/{t}").join(td, "doc_id", "left_anti").write.parquet(
+        keyed_takedown(spark.read.parquet(f"{store}/{t}"), td, "doc_id").write.parquet(
             f"{store}/{t}_v2"
         )
 
@@ -1543,7 +1544,7 @@ def upsert_face_relabel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     store = tempfile.mkdtemp(prefix="upsert_face_store_")
     # admitted carries exactly the columns a re-delivery replaces
-    # (doc_id, text) — the face's _purge_rewrite swaps full rows, so
+    # (doc_id, text) — the face's keyed_upsert swaps full rows, so
     # store schema == re-delivery schema is the producer contract.
     # Band store derived from the shingle store (r16,
     # bands_from_shingle_sets — bit-identical): one tokenize+shingle

@@ -368,7 +368,7 @@ def sim_ivf_takedown_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     half of right-to-be-forgotten ("the deleted doc still shows up in
     retrieval" is THE classic leak). Every 13th vector (the takedown
     family's split) is purged from the STORED assignment table with one
-    anti-join rewrite (centroids stay frozen — takedown does not
+    keyed_takedown (centroids stay frozen — takedown does not
     retrain; quantizer drift is ivf_staleness's separate concern), and
     then the FORGOTTEN vectors themselves are served as queries via
     2-probe routing against the frozen centroid store. The forgotten
@@ -379,12 +379,11 @@ def sim_ivf_takedown_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate side only, i.e. serve-from-purged-store == serve-over-
     survivors. Candidate flow exercises the real store seam: query
     cells from the centroid parquet (top-2, ties to the smaller cell),
-    candidates only from the purged assignment parquet. At 100 TB the
-    purge is a request-sized broadcast anti-join against the assignment
-    scan a compaction pays anyway; the serve is the ordinary cell-
-    pruned equi-join."""
+    candidates only from the purged assignment parquet. The serve is
+    the ordinary cell-pruned equi-join."""
     import tempfile
 
+    from calculate_file_content_size_for_vector_db_spark.operators.maintenance import keyed_takedown
     from calculate_file_content_size_for_vector_db_spark.operators.similarity import (
         ivf_assign,
         ivf_centroids,
@@ -396,8 +395,8 @@ def sim_ivf_takedown_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_centroids(emb).write.parquet(f"{idx}/centroids")
     ivf_assign(emb).write.parquet(f"{idx}/assign")
     forgotten = emb.where(F.col("vec_id") % 13 == 0).select("vec_id")
-    spark.read.parquet(f"{idx}/assign").join(
-        forgotten, "vec_id", "left_anti"
+    keyed_takedown(
+        spark.read.parquet(f"{idx}/assign"), forgotten, "vec_id"
     ).write.parquet(f"{idx}/assign_v2")
     return topk_ivf(
         emb,
@@ -856,18 +855,18 @@ def sim_pq_takedown_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier's lifecycle (build / stored serve / filtered / upsert /
     takedown — every other store registered its takedown in r10-r13):
     every 13th vector is purged from the stored packed code table
-    with one anti-join rewrite (codebooks stay frozen — takedown does
+    with one keyed_takedown (codebooks stay frozen — takedown does
     not retrain), then the FORGOTTEN vectors themselves serve as ADC
     queries against the purged store. The forgotten vector is the
     sharpest probe on this tier too: a leaked code row puts the query
     at ADC distance exactly 0 at rank 1 — maximally visible in the
     hash. Oracle: the same frozen-codebook chain, candidates filtered
     to survivors only, i.e. serve-from-purged-store == serve-over-
-    survivors. At 100 TB the purge is a request-sized broadcast
-    anti-join over the code-table scan a compaction pays anyway; the
-    serve is the ordinary broadcast-LUT ADC aggregation."""
+    survivors. The serve is the ordinary broadcast-LUT ADC
+    aggregation."""
     import tempfile
 
+    from calculate_file_content_size_for_vector_db_spark.operators.maintenance import keyed_takedown
     from calculate_file_content_size_for_vector_db_spark.operators.similarity import (
         pq_codebooks,
         pq_encode,
@@ -880,8 +879,8 @@ def sim_pq_takedown_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = spark.read.parquet(f"{idx}/codebooks")
     pq_encode(emb, codebooks=cb).write.parquet(f"{idx}/codes")
     forgotten = emb.where(F.col("vec_id") % 13 == 0).select("vec_id")
-    spark.read.parquet(f"{idx}/codes").join(
-        forgotten, "vec_id", "left_anti"
+    keyed_takedown(
+        spark.read.parquet(f"{idx}/codes"), forgotten, "vec_id"
     ).write.parquet(f"{idx}/codes_v2")
     return pq_topk(
         emb,
@@ -3524,9 +3523,9 @@ def sim_maxsim_takedown_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The serve-side GHOST CHECK for the MaxSim token index —
     right-to-be-forgotten for the multi-vector store, mirroring
     sim_ivf_takedown_serve: every 13th doc's token rows are purged
-    from the STORED index (maxsim_takedown — ONE broadcast anti-join
-    is the complete purge, since token rows are keyed by their own
-    doc; no graph-style ghost direction exists), and the FORGOTTEN
+    from the STORED index (keyed_takedown on doc_id is the complete
+    purge, since token rows are keyed by their own doc; no
+    graph-style ghost direction exists), and the FORGOTTEN
     docs' own bags are then served as queries from the purged store.
     A forgotten doc is the sharpest probe: a leaked token row would
     surface the doc itself at maxsim == 4.0 (four exact-match tokens)
@@ -3537,9 +3536,9 @@ def sim_maxsim_takedown_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     — never retrains."""
     import tempfile
 
+    from calculate_file_content_size_for_vector_db_spark.operators.maintenance import keyed_takedown
     from calculate_file_content_size_for_vector_db_spark.operators.similarity import (
         ivf_centroids,
-        maxsim_takedown,
         maxsim_token_index,
         topk_maxsim_from_index,
     )
@@ -3558,8 +3557,8 @@ def sim_maxsim_takedown_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     forgotten = emb.where(F.col("vec_id") % 13 == 0).select(
         F.col("vec_id").alias("doc_id")
     )
-    maxsim_takedown(
-        spark.read.parquet(f"{store}/index_v1"), forgotten
+    keyed_takedown(
+        spark.read.parquet(f"{store}/index_v1"), forgotten, "doc_id"
     ).write.parquet(f"{store}/index_v2")
     return topk_maxsim_from_index(
         spark.read.parquet(f"{store}/index_v2"),

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from calculate_file_content_size_for_vector_db_spark.operators.maintenance import keyed_takedown
 from calculate_file_content_size_for_vector_db_spark.session import cached
 from calculate_file_content_size_for_vector_db_spark.operators.textstats import (
     token_hash,
@@ -1265,8 +1266,8 @@ def dedup_upsert(
         stored_labels, changed_ids, corpus_bands, corpus_shingles, threshold, key,
         max_bucket_size,
     )
-    surv_bands = corpus_bands.join(F.broadcast(changed_ids), key, "left_anti")
-    surv_shingles = corpus_shingles.join(F.broadcast(changed_ids), key, "left_anti")
+    surv_bands = keyed_takedown(corpus_bands, changed_ids, key)
+    surv_shingles = keyed_takedown(corpus_shingles, changed_ids, key)
     vs_corpus = incremental_neardup_pairs(
         changed_docs,
         surv_bands,

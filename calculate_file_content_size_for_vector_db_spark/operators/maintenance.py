@@ -10,9 +10,12 @@ analytic operators:
   a second tiny aggregation merges the partials. Result is IDENTICAL
   to the direct groupBy — which is exactly what the oracle checks.
 
-- ``merge_upsert``: MERGE INTO emulation without Delta/Iceberg
-  (guide: 'CDC/SCD2 -> anti-join + union'): updated rows replace
-  matched target rows, unmatched updates are inserted.
+- ``keyed_takedown`` / ``keyed_upsert``: the purge and replace verbs
+  of every keyed store (MERGE INTO emulation without Delta/Iceberg,
+  guide: 'CDC/SCD2 -> anti-join + union'). Every store family's
+  takedown and upsert, the streaming faces' store legs and the
+  parquet upsert sink go through these two; their contract is stated
+  once, on ``keyed_takedown``.
 
 - bucketed join: writing both sides bucketed by the join key lets
   Spark join without ANY shuffle (SortMergeJoin with zero Exchange).
@@ -42,11 +45,40 @@ def salted_count(
     )
 
 
-def merge_upsert(target: DataFrame, updates: DataFrame, key: str) -> DataFrame:
-    """MERGE emulation: rows of ``target`` whose key appears in
-    ``updates`` are replaced; new update keys are appended."""
-    kept = target.join(updates.select(key), key, "left_anti")
-    return kept.unionByName(updates)
+def keyed_takedown(store: DataFrame, ids: DataFrame, key: str) -> DataFrame:
+    """``store`` without its rows whose ``key`` is in ``ids`` — the
+    contract every keyed store's purge and replace shares:
+
+    - ``ids`` is a one-column, request-sized frame of keys (a takedown
+      set, a re-delivered batch), renamed to ``key`` and broadcast, so
+      the store is scanned once and never shuffled. A right side that
+      grows with the corpus (a dup-id drop, an admitted ledger) is not
+      a keyed purge: leave it to AQE, a forced broadcast can OOM.
+    - No ``distinct``: a LEFT ANTI join ignores duplicate ids, and a
+      distinct would add an exchange to every call.
+    - A NULL id purges nothing; a second purge with the same ids is a
+      no-op (replay-safe)."""
+    return store.join(F.broadcast(ids.toDF(key)), key, "left_anti")
+
+
+def keyed_upsert(
+    store: DataFrame, ids: DataFrame, fresh: DataFrame, key: str
+) -> DataFrame:
+    """``keyed_takedown(store, ids, key)`` plus the ``fresh`` rows,
+    matched to the store's columns by name (extra columns dropped).
+
+    The purge set is ``ids``, not the keys of ``fresh``: a re-delivered
+    doc may yield no fresh rows (no shingles, no tokens, a shorter
+    token bag), and its old rows must still go. A replay gives the
+    same store, since the purge removes exactly what the first append
+    wrote — except for a NULL key, which no anti-join matches, so a
+    NULL key in ``fresh`` fails the plan (a projection, no extra job)."""
+    checked = F.when(
+        F.col(key).isNull(),
+        F.raise_error(f"keyed_upsert: NULL {key!r} in the fresh rows; it could never be purged"),
+    ).otherwise(F.col(key))
+    fresh = fresh.select(*(checked.alias(c) if c == key else c for c in store.columns))
+    return keyed_takedown(store, ids, key).unionByName(fresh)
 
 
 ZORDER_BITS = 4

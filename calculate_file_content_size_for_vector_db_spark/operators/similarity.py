@@ -30,6 +30,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from calculate_file_content_size_for_vector_db_spark.session import cached
+from calculate_file_content_size_for_vector_db_spark.operators.maintenance import (
+    keyed_takedown,
+    keyed_upsert,
+)
 from calculate_file_content_size_for_vector_db_spark.partitioning import spread
 
 N_PLANES = 16
@@ -425,29 +429,23 @@ def ivf_upsert(
 ) -> DataFrame:
     """UPSERT into the stored IVF assignment table — the lifecycle
     verb between append (new ids) and takedown (forgotten ids): a
-    re-ingested CHANGED document replaces its own index rows. One
-    plan, takedown + append composed:
+    re-ingested CHANGED document replaces its own index rows —
+    ``keyed_upsert`` (operators/maintenance.py, the purge/replace
+    contract) with the batch's assignment against the FROZEN
+    centroids as the fresh rows.
 
-        purge  = stored_assign ANTI-JOIN batch ids   (request-sized)
-        append = assign(batch, frozen centroids)     (batch-sized)
-        upsert = purge UNION append
-
-    Equivalences this buys (both hash-pinned by sim_ivf_upsert):
-    - upsert == rebuild-on-current-corpus: per-vector assignment
-      depends only on the frozen centroids, so replacing a vector's
-      row with its re-assignment is exactly what a from-scratch
-      assignment over (survivors + changed vectors) produces.
-    - replay-safe: upserting the same batch twice == once — the
-      second purge removes exactly the rows the first append wrote
-      and the second append rewrites them verbatim.
-
-    Handles new ids for free (anti-join drops nothing, append adds
-    them) — upsert subsumes append. At 100 TB both legs are
-    batch-sized against a store scan; the caller persists the result
-    to a VERSIONED sibling path and swaps last (the crash-safe
-    pattern — never overwrite the live store in place)."""
-    purged = stored_assign.join(batch.select(id_col), id_col, "left_anti")
-    return purged.unionByName(ivf_append_assign(batch, stored_centroids, id_col, vec_col))
+    upsert == rebuild-on-current-corpus (hash-pinned by
+    sim_ivf_upsert): per-vector assignment depends only on the frozen
+    centroids, so replacing a vector's row with its re-assignment is
+    exactly what a from-scratch assignment over (survivors + changed
+    vectors) produces. The caller writes the result through
+    store_swap.swap_rewrite — never over the live store in place."""
+    return keyed_upsert(
+        stored_assign,
+        batch.select(id_col),
+        ivf_append_assign(batch, stored_centroids, id_col, vec_col),
+        id_col,
+    )
 
 
 def ivf_staleness(
@@ -1105,23 +1103,15 @@ def pq_upsert(
     codes) output) — ivf_upsert's contract on the PQ tier, completing
     the PQ store's lifecycle next to build (pq_codebooks/pq_encode),
     stored serve (pq_topk codebooks=/codes=) and the semantic-dedup
-    append (dedup_semantic_append): a re-ingested CHANGED vector
-    replaces its own code row. One plan, takedown + append composed:
+    append (dedup_semantic_append): ``keyed_upsert`` with the batch
+    encoded against the FROZEN codebooks as the fresh rows.
 
-        purge  = stored_codes ANTI-JOIN batch ids      (request-sized)
-        append = encode(batch, FROZEN codebooks)       (batch-sized)
-        upsert = purge UNION append
-
-    Same two hash-pinned equivalences as ivf_upsert (sim_pq_upsert):
-    upsert == re-encode of the current corpus (per-vector codes
-    depend only on the frozen codebooks), and replay-safe (twice ==
-    once). New ids subsume append; codebooks never retrain on upsert
-    (quantizer drift is the staleness QA's concern). At 100 TB both
-    legs are batch-sized against one linear store scan; the caller
-    writes to a versioned sibling path and swaps last."""
-    purged = stored_codes.join(batch.select(id_col), id_col, "left_anti")
+    upsert == re-encode of the current corpus (hash-pinned by
+    sim_pq_upsert): per-vector codes depend only on the frozen
+    codebooks, which never retrain on upsert (quantizer drift is the
+    staleness QA's concern)."""
     fresh = pq_encode(batch, m, k, iters, dim, id_col, vec_col, codebooks=codebooks)
-    return purged.unionByName(fresh.select(*purged.columns))
+    return keyed_upsert(stored_codes, batch.select(id_col), fresh, id_col)
 
 
 def semantic_dedup_pq(
@@ -1829,24 +1819,6 @@ def maxsim_token_index(
     )
 
 
-def maxsim_takedown(
-    token_index: DataFrame,
-    forgotten: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The stored MaxSim token index with every forgotten doc's token
-    rows removed — right-to-be-forgotten for the multi-vector family.
-    Unlike the graph store (where edges point BETWEEN docs and a
-    one-direction purge leaves ghosts), token rows are keyed by their
-    own doc only, so ONE broadcast anti-join is the complete purge:
-    no candidate generation or rescoring path can surface a doc with
-    zero token rows. At 100 TB this is a linear scan of the token
-    store a compaction pays anyway — the store itself never shuffles."""
-    return token_index.join(
-        F.broadcast(forgotten.select(id_col)), id_col, "left_anti"
-    )
-
-
 def maxsim_upsert(
     token_index: DataFrame,
     batch_tokens: DataFrame,
@@ -1854,27 +1826,22 @@ def maxsim_upsert(
     tokens_per_doc: int = 4,
 ) -> DataFrame:
     """UPSERT a re-embedded doc's WHOLE token bag into the stored
-    MaxSim token index — takedown + append composed in one plan, the
-    ivf_upsert contract extended to multi-vector stores. Replacing
-    the bag wholesale (rather than diffing token ordinals) is the
-    correct unit: a re-embedding changes every token vector, and a
-    doc whose new bag is SHORTER must not keep stale tail tokens —
-    the anti-join on doc_id guarantees it cannot.
-
-        purge  = token_index ANTI-JOIN batch doc_ids   (request-sized)
-        append = maxsim_token_index(batch, frozen cents) (batch-sized)
-        upsert = purge UNION append
-
-    Equivalences (test-pinned): upsert == rebuild-on-current-corpus
-    (per-token assignment depends only on the frozen centroids), and
-    replay-safe (upserting the same batch twice == once — the second
-    purge removes exactly what the first append wrote). New doc ids
-    come through for free, so upsert subsumes append. The caller
-    persists to a versioned sibling path and swaps last (the
-    crash-safe store_swap pattern — never overwrite the live store)."""
-    purged = maxsim_takedown(token_index, batch_tokens.select("doc_id").distinct())
-    return purged.unionByName(
-        maxsim_token_index(batch_tokens, stored_centroids, tokens_per_doc)
+    MaxSim token index — ``keyed_upsert`` on doc_id with the batch's
+    tokens assigned against the frozen centroids as the fresh rows,
+    the ivf_upsert contract extended to multi-vector stores. Token
+    rows are keyed by their own doc only, so ``keyed_takedown`` on
+    doc_id alone is the complete purge of this store (no graph-style
+    ghost direction exists). Replacing the bag wholesale (rather than
+    diffing token ordinals) is the correct unit: a re-embedding
+    changes every token vector, and a doc whose new bag is SHORTER
+    must not keep stale tail tokens — the purge by doc_id guarantees
+    it cannot. upsert == rebuild-on-current-corpus (test-pinned): per-
+    token assignment depends only on the frozen centroids."""
+    return keyed_upsert(
+        token_index,
+        batch_tokens.select("doc_id"),
+        maxsim_token_index(batch_tokens, stored_centroids, tokens_per_doc),
+        "doc_id",
     )
 
 
@@ -2498,14 +2465,25 @@ def graph_takedown(
     analogue), so the contract this purge pins is "no path through a
     forgotten node", not "equal to a survivor rebuild".
 
-    Plan shape: two broadcast LEFT ANTI joins against the
-    request-sized takedown set — at 100 TB this is a linear scan of
-    the edge store that a compaction pays anyway, with no shuffle of
-    the store itself."""
+    Plan shape: ``keyed_takedown`` once per endpoint column — at
+    100 TB a linear scan of the edge store that a compaction pays
+    anyway, with no shuffle of the store itself."""
     f = forgotten.select(id_col)
-    return edges.join(
-        F.broadcast(f.withColumnRenamed(id_col, src_col)), src_col, "left_anti"
-    ).join(F.broadcast(f.withColumnRenamed(id_col, dst_col)), dst_col, "left_anti")
+    return keyed_takedown(keyed_takedown(edges, f, src_col), f, dst_col)
+
+
+def _sources_into(
+    edges: DataFrame, ids: DataFrame, id_col: str, src_col: str, dst_col: str
+) -> DataFrame:
+    """(id_col): the nodes outside ``ids`` holding an edge into
+    ``ids`` — the lists a purge of ``ids`` shortens. One broadcast
+    semi-join of the edge store, so it is request-sized."""
+    into = edges.join(
+        F.broadcast(ids.withColumnRenamed(id_col, dst_col)), dst_col, "left_semi"
+    )
+    return keyed_takedown(
+        into.select(F.col(src_col).alias(id_col)).distinct(), ids, id_col
+    )
 
 
 def graph_takedown_repair(
@@ -2543,15 +2521,8 @@ def graph_takedown_repair(
     so the recompute frame is request-sized, never corpus-sized."""
     f = forgotten.select(id_col)
     purged = graph_takedown(edges, f, src_col, dst_col, id_col)
-    touched = (
-        edges.join(
-            F.broadcast(f.withColumnRenamed(id_col, dst_col)), dst_col, "left_semi"
-        )
-        .select(F.col(src_col).alias(id_col))
-        .distinct()
-        .join(F.broadcast(f), id_col, "left_anti")
-    )
-    surv_emb = embeddings.join(F.broadcast(f), id_col, "left_anti")
+    touched = _sources_into(edges, f, id_col, src_col, dst_col)
+    surv_emb = keyed_takedown(embeddings, f, id_col)
     recomputed = topk_grid(
         surv_emb,
         surv_emb.join(F.broadcast(touched), id_col),
@@ -2559,9 +2530,7 @@ def graph_takedown_repair(
         id_col=id_col,
         vec_col=vec_col,
     ).select(F.col("query_id").alias(src_col), F.col("neighbor_id").alias(dst_col))
-    kept = purged.join(
-        F.broadcast(touched.withColumnRenamed(id_col, src_col)), src_col, "left_anti"
-    ).select(src_col, dst_col)
+    kept = keyed_takedown(purged, touched, src_col).select(src_col, dst_col)
     return kept.unionByName(recomputed)
 
 
@@ -2632,10 +2601,8 @@ def graph_upsert(
     along any supported lifecycle; a caller splicing stores from
     different epochs must reconcile them first."""
     b_ids = batch.select(id_col)
-    surv_emb = embeddings.join(F.broadcast(b_ids), id_col, "left_anti")
-    current = surv_emb.select(id_col, vec_col).unionByName(
-        batch.select(id_col, vec_col)
-    )
+    surv_emb = keyed_takedown(embeddings, b_ids, id_col)
+    current = keyed_upsert(embeddings.select(id_col, vec_col), b_ids, batch, id_col)
     # 1. exact survivor graph, touched lists recomputed (localized)
     e_s = graph_takedown_repair(
         edges, b_ids, embeddings, k_graph, id_col, vec_col, src_col, dst_col
@@ -2666,9 +2633,7 @@ def graph_upsert(
     )
     # 3. transpose the survivor-side rows of the same frame and
     #    re-truncate each survivor's list under the same comparator
-    cross = pairs.join(
-        F.broadcast(b_ids.withColumnRenamed(id_col, dst_col)), dst_col, "left_anti"
-    ).select(
+    cross = keyed_takedown(pairs, b_ids, dst_col).select(
         F.col(dst_col).alias(src_col), F.col(src_col).alias(dst_col), "cosine"
     )
     surv_new = (
@@ -2756,26 +2721,16 @@ def graph_upsert_ivf(
             "the store with knn_graph_ivf or migrate it by re-scoring."
         )
     b_ids = batch.select(id_col)
-    surv_emb = embeddings.join(F.broadcast(b_ids), id_col, "left_anti")
-    cur_emb = surv_emb.select(id_col, vec_col).unionByName(
-        batch.select(id_col, vec_col)
-    )
-    surv_assign = stored_assign.select(id_col, "cell").join(
-        F.broadcast(b_ids), id_col, "left_anti"
+    surv_emb = keyed_takedown(embeddings, b_ids, id_col)
+    cur_emb = keyed_upsert(embeddings.select(id_col, vec_col), b_ids, batch, id_col)
+    cur_assign = ivf_upsert(
+        stored_assign.select(id_col, "cell"), batch, stored_centroids, id_col, vec_col
     )
     batch_assign = ivf_append_assign(batch, stored_centroids, id_col, vec_col).select(
         id_col, "cell"
     )
-    cur_assign = surv_assign.unionByName(batch_assign)
     # leg 1: survivors whose stored list holds an edge into the batch
-    touched = (
-        edges.join(
-            F.broadcast(b_ids.withColumnRenamed(id_col, dst_col)), dst_col, "left_semi"
-        )
-        .select(F.col(src_col).alias(id_col))
-        .distinct()
-        .join(F.broadcast(b_ids), id_col, "left_anti")
-    )
+    touched = _sources_into(edges, b_ids, id_col, src_col, dst_col)
     sources = (
         surv_emb.select(id_col, vec_col)
         .join(touched, id_col, "left_semi")

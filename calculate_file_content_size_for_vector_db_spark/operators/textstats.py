@@ -16,6 +16,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from calculate_file_content_size_for_vector_db_spark.operators.maintenance import (
+    keyed_takedown,
+    keyed_upsert,
+)
 from calculate_file_content_size_for_vector_db_spark.session import cached
 
 # marker ("stop") words per language for the n-gram/marker heuristic
@@ -930,7 +934,8 @@ def postings_takedown(
     A forgotten doc influences ranking three ways: its own tf rows
     (it can be RETURNED — the direct leak), its dl row (it shifts
     avgdl for every other doc), and its +1 in n_docs (it shifts idf
-    for every term). The first two purge by broadcast anti-join; the
+    for every term). The first two purge by ``keyed_takedown``
+    (operators/maintenance.py, the purge/replace contract); the
     third cannot be row-deleted from an append-only meta store, so it
     returns a COMPENSATING NEGATIVE partial (n_docs = -|forgotten
     docs actually in the store|, so takedown ids that never existed
@@ -949,18 +954,15 @@ def postings_takedown(
     fail to subtract a forgotten EMPTY doc and leave every idf
     slightly wrong (caught by the randomized takedown test).
 
-    Plan shape: two broadcast anti-joins against the request-sized
-    takedown set + one broadcast semi-join count; the posting store
-    itself never shuffles."""
+    Plan shape: two keyed takedowns + one broadcast semi-join count;
+    the posting store itself never shuffles."""
     f = forgotten.select(key)
-    tf2 = tf.join(F.broadcast(f), key, "left_anti")
-    dl2 = dl.join(F.broadcast(f), key, "left_anti")
     universe = admitted.select(key) if admitted is not None else dl
     meta_delta = (
         universe.join(F.broadcast(f), key, "left_semi")
         .agg((-F.count("*")).cast("long").alias("n_docs"))
     )
-    return tf2, dl2, meta_delta
+    return keyed_takedown(tf, f, key), keyed_takedown(dl, f, key), meta_delta
 
 
 def postings_upsert(
@@ -972,26 +974,28 @@ def postings_upsert(
     admitted: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(tf', dl', meta_delta): UPSERT into the BM25 posting store —
-    re-ingest of CHANGED documents as takedown + append composed (the
-    lexical twin of similarity.ivf_upsert): purge the batch ids' tf/dl
-    rows (broadcast anti-joins), tokenize ONLY the batch into fresh
-    postings, and union them in; the meta delta nets the compensating
-    negative partial (−|batch ∩ store universe|, via ``admitted`` for
-    zero-token-doc exactness — postings_takedown's contract) against
-    the batch's +|batch| partial, so the append-and-sum meta store
-    stays exact. Because df/idf/avgdl derive from tf/dl at query time,
+    re-ingest of CHANGED documents (the lexical twin of
+    similarity.ivf_upsert): ``keyed_upsert`` of the tf and dl tables
+    with ONLY the batch tokenized into fresh postings (a doc with no
+    tokens still loses its old rows: the purge set is the batch ids);
+    the meta delta nets the compensating negative partial (−|batch ∩
+    store universe|, via ``admitted`` for zero-token-doc exactness —
+    postings_takedown's contract) against the batch's +|batch|
+    partial, so the append-and-sum meta store stays exact. Because df/idf/avgdl derive from tf/dl at query time,
     upsert == rebuild-on-current-corpus exactly, and replaying the
-    same batch is idempotent (the second purge removes exactly what
-    the first append wrote) — both pinned by
+    same batch is idempotent — both pinned by
     tests/test_takedown.py::test_postings_upsert_equals_rebuild_and_replay.
-    New ids are handled for free (anti-join drops nothing; the
-    positive partial counts them) — upsert subsumes append. Cost:
-    batch-sized tokenize + request-sized anti-joins; the store never
-    shuffles."""
-    tf2, dl2, mdelta = postings_takedown(tf, dl, batch.select(key), key, admitted)
+    New ids are handled for free (the positive partial counts them) —
+    upsert subsumes append. Cost: batch-sized tokenize + request-sized
+    keyed purges; the store never shuffles."""
+    ids = batch.select(key)
+    _, _, mdelta = postings_takedown(tf, dl, ids, key, admitted)
     btf, bdl, bmeta = bm25_postings(batch, text_col, key)
-    meta_delta = mdelta.unionByName(bmeta)
-    return tf2.unionByName(btf), dl2.unionByName(bdl), meta_delta
+    return (
+        keyed_upsert(tf, ids, btf, key),
+        keyed_upsert(dl, ids, bdl, key),
+        mdelta.unionByName(bmeta),
+    )
 
 
 def bm25_search(

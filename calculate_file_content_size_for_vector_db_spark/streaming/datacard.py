@@ -29,10 +29,16 @@ safe end-to-end (pinned by the face test's replay shape).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from calculate_file_content_size_for_vector_db_spark.operators.maintenance import (
+    keyed_takedown,
+    keyed_upsert,
+)
 from calculate_file_content_size_for_vector_db_spark.session import cache_scope, cached
 from calculate_file_content_size_for_vector_db_spark.operators.textstats import tokens
 
@@ -194,6 +200,51 @@ def append_card_partials(
         ).parquet(f"{card_dir}/hll")
 
 
+def refold_touched_batches(
+    admitted: DataFrame,
+    takedown: DataFrame,
+    store_dir: str,
+    refold: Callable[[DataFrame], dict[str, DataFrame]],
+) -> None:
+    """The takedown of a sum-fold partial store (the card and drift
+    stores): a forgotten doc's contribution is blended into its
+    batch's partial and cannot be subtracted row-wise, so every
+    TOUCHED batch — one holding a takedown doc in the batch-tagged
+    ``admitted`` ledger — is re-folded from its surviving rows, and
+    each sub-store under ``store_dir`` gets a keyed_upsert on
+    batch_id; untouched batches' partials stay byte-verbatim.
+    ``refold(survivors)`` returns {sub-store name: fresh partials}.
+
+    Cost at 100 TB: one broadcast semi-join of the ledger finds the
+    touched batch ids; the refold scans only those batches' rows; each
+    rewrite is a metadata-scale keyed_upsert through
+    store_swap.swap_rewrite, healed first, so a crash mid-rewrite
+    never destroys untouched partials (ADVICE r11 item 2). Runs in a
+    cache_scope whether it is the takedown face's sub-body or a batch
+    query."""
+    from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
+        heal_store,
+        swap_rewrite,
+    )
+
+    spark = admitted.sparkSession
+    with cache_scope(spark):
+        td = takedown.select("doc_id").distinct()
+        touched = (
+            admitted.join(F.broadcast(td), "doc_id", "left_semi")
+            .select("batch_id")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        batches = admitted.join(F.broadcast(touched), "batch_id", "left_semi")
+        surv = cached(keyed_takedown(batches, td, "doc_id"))
+        for sub, fresh in refold(surv).items():
+            path = f"{store_dir}/{sub}"
+            heal_store(spark, path)
+            stored = spark.read.parquet(path)
+            swap_rewrite(spark, path, keyed_upsert(stored, touched, fresh, "batch_id"))
+
+
 def refold_card_takedown(
     admitted: DataFrame,
     takedown: DataFrame,
@@ -203,51 +254,23 @@ def refold_card_takedown(
 ) -> None:
     """Right-to-be-forgotten for the SUM-FOLD card store — the honest
     contract from PLANS.md ("Sum-fold stores are takedown-INCAPABLE"):
-    a forgotten doc's contribution is blended into its batch's partial
-    and cannot be subtracted row-wise (HLL registers are max-folded —
-    strictly irreversible; scalar sums lose the doc boundary), so the
-    batch is the blast radius — RE-FOLD every touched batch from its
-    admitted-minus-takedown source rows, keep every untouched batch's
-    partial rows byte-verbatim, and rewrite the four partial stores.
-    Because per-key sum and per-register max are associative, the
-    refolded store folds to exactly the card of the survivor corpus
-    (the equality datacard_takedown_refold's oracle hashes); dropping
-    a touched batch's partials WITHOUT recomputing loses that batch's
-    SURVIVORS too (the naive-purge falsifier the test pins).
+    HLL registers are max-folded (strictly irreversible) and scalar
+    sums lose the doc boundary, so the batch is the blast radius —
+    refold_touched_batches re-folds every touched batch's four
+    partials from its admitted-minus-takedown rows. Because per-key
+    sum and per-register max are associative, the refolded store
+    folds to exactly the card of the survivor corpus (the equality
+    datacard_takedown_refold's oracle hashes); dropping a touched
+    batch's partials WITHOUT recomputing loses that batch's SURVIVORS
+    too (the naive-purge falsifier the test pins).
 
     ``admitted`` carries the batch-tagged admitted ledger
     (batch_id, doc_id, text, lang, source) — the raw rows a
-    production ingest already keeps per trigger. Cost at 100 TB: the
-    takedown set broadcast-semi-joins the ledger once to find touched
-    batch ids; recomputation scans ONLY those batches' rows; each
-    store rewrite keeps untouched partials via a metadata-scale
-    anti-join on batch_id. Rewrites go through store_swap.swap_rewrite
-    (heal first), so a crash mid-rewrite never destroys untouched
-    partials (ADVICE r11 item 2)."""
-    from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
-        heal_store,
-        swap_rewrite,
-    )
+    production ingest already keeps per trigger."""
 
-    spark = admitted.sparkSession
-    # the refold localCheckpoints and heals, so it runs in a scope
-    # whether it is the takedown face's sub-body or a batch query
-    with cache_scope(spark):
-        for sub in ("scalars", "langs", "sources", "hll"):
-            heal_store(spark, f"{card_dir}/{sub}")
-        td = takedown.select("doc_id").distinct()
-        touched = (
-            admitted.join(F.broadcast(td), "doc_id", "left_semi")
-            .select("batch_id")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        surv = cached(
-            admitted.join(F.broadcast(touched), "batch_id", "left_semi")
-            .join(F.broadcast(td), "doc_id", "left_anti")
-        )
+    def refold(surv: DataFrame) -> dict[str, DataFrame]:
         t = F.size(tokens(text_col)).cast("long")
-        recomputed = {
+        return {
             "scalars": surv.groupBy("batch_id").agg(
                 F.count("*").cast("long").alias("_n"),
                 F.sum(t).alias("_tok"),
@@ -258,11 +281,8 @@ def refold_card_takedown(
             "sources": surv.groupBy("batch_id", "source").agg(F.count("*").alias("_c")),
             "hll": _hll_regs(surv, text_col, p, group_cols=["batch_id"]),
         }
-        for sub, fresh in recomputed.items():
-            kept = spark.read.parquet(f"{card_dir}/{sub}").join(
-                F.broadcast(touched), "batch_id", "left_anti"
-            )
-            swap_rewrite(spark, f"{card_dir}/{sub}", kept.unionByName(fresh))
+
+    refold_touched_batches(admitted, takedown, card_dir, refold)
 
 
 def datacard_face(

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from calculate_file_content_size_for_vector_db_spark.session import cache_scope, cached
+from calculate_file_content_size_for_vector_db_spark.streaming.datacard import refold_touched_batches
 from calculate_file_content_size_for_vector_db_spark.operators.textstats import (
     psi_from_marginals,
     psi_lang_marginal,
@@ -110,55 +111,27 @@ def refold_drift_takedown(
     contract (VERDICT r11 item 7: a forgotten doc's length/lang
     contributions otherwise persist in the reference marginals): per-
     batch (bin,c)/(lang,c) counts cannot be row-subtracted once the
-    doc boundary is folded away, so the TOUCHED BATCH is the blast
-    radius — recompute every touched batch's two marginals from its
+    doc boundary is folded away, so datacard.refold_touched_batches
+    recomputes every touched batch's two marginals from its
     admitted-minus-takedown rows (one grouped pass each, via the
-    group_cols hook of the SAME builders the appender uses), keep
-    every untouched batch's rows byte-verbatim, and rewrite the two
-    stores through the crash-safe swap. Per-key sum is associative,
-    so the refolded store folds to exactly the marginals of the
-    survivor ingest — refold == rebuild, the equality
-    drift_takedown_refold's oracle hashes.
+    group_cols hook of the SAME builders the appender uses). Per-key
+    sum is associative, so the refolded store folds to exactly the
+    marginals of the survivor ingest — refold == rebuild, the
+    equality drift_takedown_refold's oracle hashes.
 
     ``admitted`` carries the batch-tagged admitted ledger
     (batch_id, doc_id, text, lang, ...) a production ingest already
-    keeps. Cost at 100 TB: one broadcast semi-join finds touched
-    batch ids; recomputation scans only those batches' rows;
-    untouched partials survive via a metadata-scale anti-join on
-    batch_id."""
-    from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
-        heal_store,
-        swap_rewrite,
-    )
+    keeps."""
 
-    spark = admitted.sparkSession
-    # the refold localCheckpoints and heals, so it runs in a scope
-    # whether it is the takedown face's sub-body or a batch query
-    with cache_scope(spark):
-        for sub in ("hist", "langs"):
-            heal_store(spark, f"{marginals_dir}/{sub}")
-        td = takedown.select("doc_id").distinct()
-        touched = (
-            admitted.join(F.broadcast(td), "doc_id", "left_semi")
-            .select("batch_id")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        surv = cached(
-            admitted.join(F.broadcast(touched), "batch_id", "left_semi")
-            .join(F.broadcast(td), "doc_id", "left_anti")
-        )
-        recomputed = {
+    def refold(surv: DataFrame) -> dict[str, DataFrame]:
+        return {
             "hist": psi_length_hist(
                 surv, text_col, n_bins, bin_width, group_cols=["batch_id"]
             ),
             "langs": psi_lang_marginal(surv, group_cols=["batch_id"]),
         }
-        for sub, fresh in recomputed.items():
-            kept = spark.read.parquet(f"{marginals_dir}/{sub}").join(
-                F.broadcast(touched), "batch_id", "left_anti"
-            )
-            swap_rewrite(spark, f"{marginals_dir}/{sub}", kept.unionByName(fresh))
+
+    refold_touched_batches(admitted, takedown, marginals_dir, refold)
 
 
 def read_ingest_marginals(

@@ -15,11 +15,11 @@ ADVICE r14 item 3).
 
 Semantics — takedown WINS inside a trigger: a doc_id carried by both
 an upsert re-delivery and a takedown request in the same trigger is
-FORGOTTEN, and the upsert leg is anti-joined against the takedown
-set so the forgotten id cannot reappear through it (the ghost
-contract; the registered row's oracle-hash equality with a rebuild
-on survivors ∪ re-deliveries pins exactly this — a resurrected id
-would change the labels hash). Right-to-be-forgotten composed with
+FORGOTTEN, and the takedown set is purged from the upsert leg
+(keyed_takedown) so the forgotten id cannot reappear through it
+(the ghost contract; the registered row's oracle-hash equality with
+a rebuild on survivors ∪ re-deliveries pins exactly this — a
+resurrected id would change the labels hash). Right-to-be-forgotten composed with
 anything must leave the forgotten doc gone.
 
 Ordering inside the trigger: takedown FIRST (purge + localized label
@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from calculate_file_content_size_for_vector_db_spark.operators.maintenance import keyed_takedown
 from calculate_file_content_size_for_vector_db_spark.session import cache_scope
 from calculate_file_content_size_for_vector_db_spark.streaming.takedown import (
     takedown_store_batch,
@@ -112,8 +113,7 @@ def lifecycle_store_batch(
         # takedown precedence: a doc both re-delivered and forgotten
         # in one trigger must NOT resurface through the upsert leg
         up = (
-            batch_df.where(F.col("action") == "upsert")
-            .join(F.broadcast(td.withColumnRenamed("doc_id", key)), key, "left_anti")
+            keyed_takedown(batch_df.where(F.col("action") == "upsert"), td, key)
             .drop("action")
             .localCheckpoint(eager=True)
         )

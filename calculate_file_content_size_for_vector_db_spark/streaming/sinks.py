@@ -2,17 +2,14 @@
 into a parquet target (the streaming-CDC landing pattern without
 Delta/Iceberg).
 
-Each microbatch runs the same ``merge_upsert`` used by the batch CDC
-query (operators/maintenance.py): matched keys are replaced, new keys
-appended. foreachBatch gives exactly-once per-batch semantics under a
-checkpointed trigger — replays of a batch overwrite with the same
-merged result, so the sink is idempotent by construction.
-
-Scale notes: the anti-join inside merge_upsert shuffles on the key;
-with a real lakehouse table format this becomes a metadata-level
-MERGE INTO. The overwrite-while-reading pitfall (the merged frame's
-lineage points at the files being overwritten) is broken with an
-eager localCheckpoint before the write.
+Each microbatch is one ``keyed_upsert`` (operators/maintenance.py, the
+contract the batch CDC query shares) written through
+store_swap.swap_rewrite, with heal_store at trigger start — the first
+batch too. foreachBatch replays a batch after a crash, and a replayed
+upsert gives the same rows, so the sink is idempotent. A batch whose
+columns differ from the target's fails the trigger and leaves the
+target as it was. With a lakehouse table format this becomes a
+metadata-level MERGE INTO.
 """
 
 from __future__ import annotations
@@ -20,8 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from calculate_file_content_size_for_vector_db_spark.operators.maintenance import merge_upsert
+from calculate_file_content_size_for_vector_db_spark.operators.maintenance import keyed_upsert
 from calculate_file_content_size_for_vector_db_spark.session import cache_scope
+from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
+    heal_store,
+    swap_rewrite,
+)
+from calculate_file_content_size_for_vector_db_spark.streaming.takedown import _exists
 
 
 def stream_upsert_parquet(
@@ -36,18 +38,16 @@ def stream_upsert_parquet(
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # the scope releases the merged checkpoint at trigger end
+        # heal inside the scope's lock, before the target is read
         with cache_scope(spark):
+            heal_store(spark, target_path)
             batch = batch_df.dropDuplicates([key])
-            try:
+            if _exists(spark, target_path):
                 target = spark.read.parquet(target_path)
-                merged = merge_upsert(target, batch, key)
-            except Exception:  # noqa: BLE001 — first batch: no target yet
-                merged = batch
-            # materialize BEFORE overwriting: the merged plan reads
-            # the same files the write replaces
-            merged = merged.localCheckpoint(eager=True)
-            merged.write.mode("overwrite").parquet(target_path)
+                if sorted(batch.columns) != sorted(target.columns):
+                    raise ValueError(f"batch columns {batch.columns} != target's {target.columns}")
+                batch = keyed_upsert(target, batch.select(key), batch, key)
+            swap_rewrite(spark, target_path, batch)
 
     return (
         stream.writeStream.foreachBatch(_merge)

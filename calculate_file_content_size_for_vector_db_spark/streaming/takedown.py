@@ -7,11 +7,12 @@ micro-batch drives the round-10/11 batch takedown operators against
 the SAME shared store the composed ingest face maintains:
 
 - ``admitted/``, ``bands/``, ``shingles/``: per-doc-row stores where
-  purge == rebuild-on-survivors exactly — one broadcast anti-join
-  rewrite each (the ingest_takedown_readmit purge, per trigger).
-- ``index/assign``: the IVF assignment store — anti-join on vec_id
-  (the sim_ivf_takedown_serve purge; centroids stay frozen, takedown
-  never retrains).
+  purge == rebuild-on-survivors exactly — one ``keyed_takedown``
+  rewrite each (operators/maintenance.py; the ingest_takedown_readmit
+  purge, per trigger).
+- ``index/assign``: the IVF assignment store — ``keyed_takedown`` on
+  vec_id (the sim_ivf_takedown_serve purge; centroids stay frozen,
+  takedown never retrains).
 - ``labels/`` (optional — present when a clustering job materializes
   it): repaired with dedup.cluster_takedown — untouched clusters
   verbatim, touched clusters re-paired from the PURGED band/shingle
@@ -35,8 +36,8 @@ What this face deliberately does NOT touch:
   admitted-minus-takedown (see PLANS.md "Sum-fold stores are
   takedown-INCAPABLE").
 
-Idempotence (the replay contract every face carries): anti-join
-purges are no-ops on a second delivery (the rows are already gone),
+Idempotence (the replay contract every face carries): keyed purges
+are no-ops on a second delivery (the rows are already gone),
 cluster_takedown degenerates to identity when the labels store no
 longer contains any takedown doc (touched-cluster set comes back
 empty), and the audit append is batch_id-tagged for distinct()-fold —
@@ -58,7 +59,8 @@ tests pin — are format-independent.
 State model: like every face, ZERO executor/state-store bytes — the
 store is the cross-trigger memory. Per-trigger cost: one linear scan
 per purged store (a compaction pays the same scan) with the
-request-sized takedown set broadcast; the corpus never shuffles.
+request-sized takedown set broadcast (keyed_takedown); the corpus
+never shuffles.
 """
 
 from __future__ import annotations
@@ -68,6 +70,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from calculate_file_content_size_for_vector_db_spark.operators.dedup import cluster_takedown
+from calculate_file_content_size_for_vector_db_spark.operators.maintenance import keyed_takedown
 from calculate_file_content_size_for_vector_db_spark.session import cache_scope
 from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
     _fs,
@@ -88,26 +91,6 @@ def _exists(spark, path: str) -> bool:
         not st.getPath().getName().startswith(("_", "."))
         for st in fs.listStatus(hp)
     )
-
-
-def _purge_rewrite(
-    spark, path: str, td: DataFrame, join_key: str, replacement: DataFrame | None = None
-) -> None:
-    """Anti-join rewrite of one per-doc-row store through the
-    crash-safe swap (survivors committed to {path}__swap before the
-    live path is touched — store_swap module docstring).
-
-    ``replacement``: optional fresh rows appended after the purge —
-    the whole-row REPLACEMENT shape the upsert face shares (selected
-    in the store's own column order, so extra batch columns are
-    dropped); None keeps the pure purge."""
-    store = spark.read.parquet(path)
-    kept = store.join(
-        F.broadcast(td.withColumnRenamed("doc_id", join_key)), join_key, "left_anti"
-    )
-    if replacement is not None:
-        kept = kept.unionByName(replacement.select(*store.columns))
-    swap_rewrite(spark, path, kept)
 
 
 def takedown_store_batch(
@@ -166,8 +149,9 @@ def _takedown_body(
         ("shingles", "doc_id"),
         ("index/assign", "vec_id"),
     ):
-        if _exists(spark, f"{store_dir}/{sub}"):
-            _purge_rewrite(spark, f"{store_dir}/{sub}", td, key)
+        path = f"{store_dir}/{sub}"
+        if _exists(spark, path):
+            swap_rewrite(spark, path, keyed_takedown(spark.read.parquet(path), td, key))
     if _exists(spark, f"{store_dir}/labels"):
         # repair AFTER the band/shingle purge: cluster_takedown
         # semi-joins survivors internally, so purged and pre-purge

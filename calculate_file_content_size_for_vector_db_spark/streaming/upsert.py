@@ -11,8 +11,8 @@ batch upsert verbs against the SAME shared store the composed ingest
 face maintains:
 
 - ``admitted/``, ``bands/``, ``shingles/``: per-doc-row stores —
-  whole-row replacement (one broadcast anti-join + the batch's
-  freshly derived rows appended), the ivf_upsert shape on doc rows.
+  whole-row replacement by ``keyed_upsert`` (operators/maintenance.py)
+  with the batch's freshly derived rows as the fresh rows.
 - ``labels/`` (optional): dedup_upsert — the takedown repair edges
   of the touched clusters plus batch-sized edge discovery against the
   survivor artifacts, merged into the untouched clusters by ONE
@@ -57,13 +57,12 @@ through store_swap.swap_rewrite (survivors + replacements committed
 to the {path}__swap sibling before the live path is touched);
 heal_store at trigger start completes anything a crash interrupted.
 
-Idempotence (the replay contract every face carries): whole-row
-replacement replays to the same rows (the anti-join removes exactly
-what the first run appended, the append rewrites it verbatim);
+Idempotence (the replay contract every face carries): the keyed
+store legs, ivf_upsert included, are keyed_upserts (a NULL key fails
+the trigger, leaving an uncommitted swap the next heal drops);
 dedup_upsert against the post-upsert stores is the pinned identity
-(tests/test_dedup.py::test_dedup_upsert_replay_idempotent);
-ivf_upsert is replay-safe by the same argument; the audit append is
-batch_id-tagged for distinct()-fold.
+(tests/test_dedup.py::test_dedup_upsert_replay_idempotent); the audit
+append is batch_id-tagged for distinct()-fold.
 
 State model: ZERO executor/state-store bytes — the store is the
 cross-trigger memory. Per-trigger cost: one linear scan per touched
@@ -93,15 +92,13 @@ from calculate_file_content_size_for_vector_db_spark.operators.dedup import (
     dedup_upsert,
     shingle_sets,
 )
+from calculate_file_content_size_for_vector_db_spark.operators.maintenance import keyed_upsert
 from calculate_file_content_size_for_vector_db_spark.session import cache_scope
 from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
     heal_store,
     swap_rewrite,
 )
-from calculate_file_content_size_for_vector_db_spark.streaming.takedown import (
-    _exists,
-    _purge_rewrite,
-)
+from calculate_file_content_size_for_vector_db_spark.streaming.takedown import _exists
 
 
 def upsert_store_batch(
@@ -183,16 +180,16 @@ def upsert_store_batch(
                 batch_bands=fresh_bands,
                 batch_shingles=fresh_shingles,
             ).localCheckpoint(eager=True)
-        if _exists(spark, f"{store_dir}/admitted"):
-            _purge_rewrite(spark, f"{store_dir}/admitted", ids, key, replacement=batch)
-        if _exists(spark, f"{store_dir}/bands"):
-            _purge_rewrite(
-                spark, f"{store_dir}/bands", ids, key, replacement=fresh_bands
-            )
-        if _exists(spark, f"{store_dir}/shingles"):
-            _purge_rewrite(
-                spark, f"{store_dir}/shingles", ids, key, replacement=fresh_shingles
-            )
+        for sub, fresh in (
+            ("admitted", batch),
+            ("bands", fresh_bands),
+            ("shingles", fresh_shingles),
+        ):
+            path = f"{store_dir}/{sub}"
+            if _exists(spark, path):
+                swap_rewrite(
+                    spark, path, keyed_upsert(spark.read.parquet(path), ids, fresh, key)
+                )
         if new_labels is not None:
             swap_rewrite(spark, f"{store_dir}/labels", new_labels)
         if (

@@ -1,0 +1,225 @@
+"""The keyed verb pair (operators/maintenance.py: keyed_takedown /
+keyed_upsert) and the stores rewritten through it: the broadcast
+policy pinned once at the verb, the NULL-key guard that keeps a
+replayed upsert equal to one run, the job counts of one upsert and one
+takedown trigger, and the parquet upsert sink's crash-safe rewrite."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.errors import StreamingQueryException
+
+from calculate_file_content_size_for_vector_db_spark.operators import dedup
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_keyed_takedown_broadcasts_ids_and_never_shuffles_the_store(spark, tmp_path):
+    """The ids side is broadcast even when its size estimate is above
+    the broadcast threshold (16 MB for this range), so the LEFT ANTI
+    join is a BroadcastHashJoin and the store scan meets it without
+    an exchange."""
+    from calculate_file_content_size_for_vector_db_spark.operators.maintenance import (
+        keyed_takedown,
+    )
+
+    path = str(tmp_path / "store")
+    spark.range(1000).selectExpr("id AS doc_id", "id % 7 AS v").write.parquet(path)
+    ids = spark.range(0, 2_000_000).where("id IN (3, 5)")
+    out = keyed_takedown(spark.read.parquet(path), ids, "doc_id")
+    assert sorted(r.doc_id for r in out.collect()) == [
+        i for i in range(1000) if i not in (3, 5)
+    ]
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    anti = [line for line in plan.splitlines() if "LeftAnti" in line]
+    assert anti and all("BroadcastHashJoin" in line for line in anti), plan
+    exchanges = [line for line in plan.splitlines() if "Exchange" in line]
+    assert exchanges and all("BroadcastExchange" in line for line in exchanges), plan
+
+
+def test_keyed_upsert_replaces_by_ids_and_replays_to_the_same_rows(spark):
+    """The purge set is ``ids``, not the keys of ``fresh``: a key with
+    no fresh rows still loses its old rows. Fresh rows are matched to
+    the store's columns by name, extra columns dropped, and a replay
+    gives the same rows as one run."""
+    from calculate_file_content_size_for_vector_db_spark.operators.maintenance import (
+        keyed_upsert,
+    )
+
+    store = spark.createDataFrame(
+        [(1, "a", 10), (1, "b", 11), (2, "c", 20), (3, "d", 30)],
+        "doc_id long, term string, tf long",
+    )
+    ids = spark.createDataFrame([(1,), (2,), (4,)], "id long")
+    fresh = spark.createDataFrame(
+        [(9, "x", 1, "extra"), (11, "y", 4, "extra")],
+        "tf long, term string, doc_id long, note string",
+    )
+    once = keyed_upsert(store, ids, fresh, "doc_id")
+    want = [(1, "x", 9), (3, "d", 30), (4, "y", 11)]
+    assert _rows(once.select("doc_id", "term", "tf")) == want
+    twice = keyed_upsert(once, ids, fresh, "doc_id")
+    assert _rows(twice.select("doc_id", "term", "tf")) == want
+
+
+def _doc_store(spark, store: str):
+    docs = spark.createDataFrame(
+        [(i, f"doc number {i} alpha beta gamma") for i in range(6)],
+        "doc_id long, text string",
+    )
+    docs.write.parquet(f"{store}/admitted")
+    dedup.shingle_sets(docs).write.parquet(f"{store}/shingles")
+    dedup.bands_from_shingle_sets(spark.read.parquet(f"{store}/shingles")).write.parquet(
+        f"{store}/bands"
+    )
+    return docs
+
+
+def test_upsert_replay_with_a_null_key_fails_and_keeps_the_store(spark, tmp_path):
+    """A re-delivery holding a NULL doc_id fails the trigger, on every
+    replay, instead of appending one more NULL row per run (an
+    anti-join never matches NULL). The failed write leaves at most an
+    uncommitted swap, which the next trigger's heal drops; the store
+    keeps its rows."""
+    from calculate_file_content_size_for_vector_db_spark.streaming.upsert import (
+        upsert_store_batch,
+    )
+
+    store = str(tmp_path / "store")
+    docs = _doc_store(spark, store)
+    bad = spark.createDataFrame(
+        [(None, "null keyed text here"), (5, "doc five rewritten")],
+        "doc_id long, text string",
+    )
+    for replay in range(2):
+        with pytest.raises(Exception, match="NULL 'doc_id'"):
+            upsert_store_batch(bad, replay, store)
+        assert _rows(spark.read.parquet(f"{store}/admitted")) == _rows(docs)
+        assert not os.path.exists(f"{store}/admitted__swap/_SUCCESS")
+
+    good = bad.where("doc_id IS NOT NULL")
+    upsert_store_batch(good, 2, store)
+    want = _rows(docs.where("doc_id <> 5").unionByName(good))
+    assert _rows(spark.read.parquet(f"{store}/admitted")) == want
+    assert not [p for p in os.listdir(store) if p.endswith("__swap")]
+
+
+def test_upsert_and_takedown_triggers_run_no_more_jobs_than_before(
+    spark, spark_jobs, tmp_path
+):
+    """One upsert trigger and one takedown trigger against a store
+    carrying every leg (per-doc rows, near-dup labels, IVF index) run
+    no more Spark jobs than before the keyed verbs replaced the
+    per-family purges: 74 and 52 jobs on the test session's local[8]
+    before, the bounds here."""
+    from calculate_file_content_size_for_vector_db_spark.operators.similarity import (
+        ivf_append_assign,
+        ivf_centroids,
+    )
+    from calculate_file_content_size_for_vector_db_spark.streaming.takedown import (
+        takedown_store_batch,
+    )
+    from calculate_file_content_size_for_vector_db_spark.streaming.upsert import (
+        upsert_store_batch,
+    )
+
+    groups = ["alpha beta gamma delta epsilon", "omega psi chi phi upsilon"]
+    rows = [(g * 10 + m, groups[g]) for g in range(2) for m in range(3)]
+    rows.append((30, "lonely words with no duplicate here"))
+
+    def emb(i):
+        return [float((i * 7 + d * 3) % 11) for d in range(8)]
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    vecs = spark.createDataFrame(
+        [(i, emb(i)) for i, _ in rows], "vec_id long, embedding array<double>"
+    )
+    store = str(tmp_path / "store")
+    docs.write.parquet(f"{store}/admitted")
+    dedup.shingle_sets(docs).write.parquet(f"{store}/shingles")
+    dedup.bands_from_shingle_sets(spark.read.parquet(f"{store}/shingles")).write.parquet(
+        f"{store}/bands"
+    )
+    dedup.neardup_clusters(docs).write.parquet(f"{store}/labels")
+    ivf_centroids(vecs).write.parquet(f"{store}/index/centroids")
+    cents = spark.read.parquet(f"{store}/index/centroids")
+    ivf_append_assign(vecs, cents).write.parquet(f"{store}/index/assign")
+
+    batch = spark.createDataFrame(
+        [(0, groups[1], emb(100)), (99, groups[0], emb(99))],
+        "doc_id long, text string, embedding array<double>",
+    )
+    takedown = spark.createDataFrame([(1,), (20,)], "doc_id long")
+    upsert_jobs = spark_jobs(lambda: upsert_store_batch(batch, 0, store))
+    takedown_jobs = spark_jobs(lambda: takedown_store_batch(takedown, 1, store))
+    assert upsert_jobs <= 74, upsert_jobs
+    assert takedown_jobs <= 52, takedown_jobs
+    assert _rows(spark.read.parquet(f"{store}/admitted").select("doc_id")) == [
+        (i,) for i in (0, 2, 10, 11, 12, 30, 99)
+    ]
+
+
+def _events(spark, ids, payload: str):
+    return spark.createDataFrame(
+        [(i, f"{payload}{i}") for i in ids], "event_id long, payload string"
+    )
+
+
+def test_stream_upsert_sink_rejects_a_schema_mismatch_and_keeps_the_target(
+    spark, tmp_path
+):
+    """A micro-batch lacking one of the target's columns fails the
+    stream; the target keeps every row (it is not overwritten by the
+    batch alone)."""
+    from calculate_file_content_size_for_vector_db_spark.streaming.sinks import (
+        stream_upsert_parquet,
+    )
+
+    target = str(tmp_path / "target")
+    _events(spark, range(100), "old").write.parquet(target)
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(7,)], "event_id long").write.parquet(src)
+    q = stream_upsert_parquet(
+        spark.readStream.schema("event_id long").parquet(src),
+        target,
+        str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert _rows(spark.read.parquet(target)) == _rows(_events(spark, range(100), "old"))
+
+
+def test_stream_upsert_sink_heals_a_rewrite_interrupted_after_the_swap_commit(
+    spark, tmp_path
+):
+    """A crash after the swap committed but before the live overwrite
+    finished leaves the truth in ``{target}__swap`` and a partial live
+    target. The next trigger heals first (live restored from the swap,
+    swap dropped), then upserts its batch into the restored rows."""
+    from calculate_file_content_size_for_vector_db_spark.streaming.sinks import (
+        stream_upsert_parquet,
+    )
+
+    target = str(tmp_path / "target")
+    _events(spark, range(100), "old").write.parquet(target + "__swap")
+    _events(spark, range(10), "old").write.parquet(target)
+    src = str(tmp_path / "src")
+    _events(spark, (5, 100), "new").write.parquet(src)
+    q = stream_upsert_parquet(
+        spark.readStream.schema("event_id long, payload string").parquet(src),
+        target,
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    want = _rows(
+        _events(spark, [i for i in range(100) if i != 5], "old").unionByName(
+            _events(spark, (5, 100), "new")
+        )
+    )
+    assert _rows(spark.read.parquet(target)) == want
+    assert not os.path.exists(target + "__swap")

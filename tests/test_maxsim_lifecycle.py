@@ -1,6 +1,7 @@
 """Lifecycle verbs for the MaxSim (multi-vector) token index —
-maxsim_token_index / maxsim_takedown / maxsim_upsert /
-topk_maxsim_from_index (operators/similarity.py).
+maxsim_token_index / maxsim_upsert / topk_maxsim_from_index
+(operators/similarity.py), with the takedown as
+operators/maintenance.keyed_takedown on doc_id.
 
 The token index (cell-assigned doc tokens) is a store like any other
 in the lifecycle matrix (PLANS.md round-13 candidates): these tests
@@ -23,6 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import calculate_file_content_size_for_vector_db_spark.operators.similarity as sim
+from calculate_file_content_size_for_vector_db_spark.operators.maintenance import keyed_takedown
 from calculate_file_content_size_for_vector_db_spark.sources.io import read_table
 from tests.conftest import SF_DIR
 
@@ -146,7 +148,7 @@ def test_maxsim_takedown_no_ghosts_and_equals_survivor_rebuild(spark):
     fids = {r.doc_id for r in forgotten.collect()}
     assert fids, "fixture must yield a non-empty takedown set"
 
-    purged = sim.maxsim_takedown(store, forgotten).persist()
+    purged = keyed_takedown(store, forgotten, "doc_id").persist()
     survivors = toks.join(forgotten, "doc_id", "left_anti")
     rebuilt = sim.maxsim_token_index(survivors, cents)
     assert _rows(purged) == _rows(rebuilt)
@@ -198,7 +200,7 @@ def test_maxsim_upsert_empty_batch_is_identity(spark):
 
     empty = toks.where("doc_id < 0").select("doc_id", "tok", "tv")
     assert _rows(sim.maxsim_upsert(store, empty, cents)) == _rows(store)
-    assert _rows(sim.maxsim_takedown(store, empty.select("doc_id"))) == _rows(store)
+    assert _rows(keyed_takedown(store, empty.select("doc_id"), "doc_id")) == _rows(store)
     toks.unpersist()
     cents.unpersist()
     store.unpersist()
