@@ -30,7 +30,7 @@ from calculate_file_content_size_for_vector_db_spark.entry_queries._core import 
     _pipe,
     _sql_bpe_chain,
     _sql_hashed_features,
-    _sql_kmeans_chain,
+    _sql_lloyd,
     _sql_logreg_chain,
     _sql_pq_chain,
     register,

@@ -218,61 +218,93 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF ANN (operators/similarity.py): k-means centroids, assignment,
-# cell search. The oracle unrolls the same Lloyd rounds as the Spark
-# implementation (similarity.ivf_centroids): init = k smallest-id
-# vectors, per-round rounded-cosine argmax assignment (ties -> smallest
-# cell) and per-dimension avg rounded to 6 decimals.
+# Lloyd k-means quantizers (operators/similarity.py::_lloyd): IVF
+# centroids and PQ codebooks. The oracle unrolls the same rounds as the
+# Spark trainer: init = the points of the k smallest training ids;
+# per round the nearest codeword per point (rounded score, ties ->
+# smallest code), then per-dimension means rounded to 6 decimals. IVF
+# ranks by cosine (descending, over one codebook), PQ by squared L2
+# (ascending, one codebook per ``sub``).
 # ---------------------------------------------------------------------------
 
 
-def _sql_kmeans_chain(
-    k: int = 8, iters: int = 3, src: str = "e", tag: str = "", dims: int = 64
+# metric -> (point vector, code, codebook CTE prefix, assignment CTE
+# prefix), the SQL twin of similarity._LAYOUT
+_SQL_LAYOUT = {
+    "cosine": ("v", "cell", "cent", "assign"),
+    "sqdist": ("sv", "code", "cb", "asg"),
+}
+
+
+def _sql_score(metric: str, a: str, b: str, dims: int) -> str:
+    """The rounded score of point vector ``a`` against codeword ``b``,
+    in best-first ORDER BY form."""
+    if metric == "cosine":
+        return f"round(list_cosine_similarity({a}, {b}), 6) DESC"
+    return (
+        f"round(list_sum(list_transform(range(1, {dims + 1}), "
+        f"j -> ({a}[j] - {b}[j]) * ({a}[j] - {b}[j]))), 6)"
+    )
+
+
+def _sql_nearest(src: str, book: str, dims: int, metric: str, keys: tuple = ()) -> str:
+    """SELECT of (vec_id, *keys, code): each ``src`` point's nearest
+    ``book`` codeword (book columns *keys, code, cv)."""
+    vec, code = _SQL_LAYOUT[metric][:2]
+    s_keys = "".join(f", s.{c}" for c in keys)
+    on = " AND ".join(f"s.{c} = c.{c}" for c in keys) or "true"
+    return f"""SELECT vec_id{"".join(f", {c}" for c in keys)}, {code} FROM (
+        SELECT s.vec_id{s_keys}, c.{code},
+               row_number() OVER (PARTITION BY s.vec_id{s_keys}
+                   ORDER BY {_sql_score(metric, f"s.{vec}", "c.cv", dims)}, c.{code}) AS rn
+        FROM {src} s JOIN {book} c ON {on}
+    ) WHERE rn = 1"""
+
+
+def _sql_lloyd(
+    k: int = 8,
+    iters: int = 3,
+    src: str = "e",
+    tag: str = "",
+    dims: int = 64,
+    metric: str = "cosine",
+    keys: tuple = (),
 ) -> str:
-    """Unrolled Lloyd chain over ``src``; ``tag`` namespaces the CTEs
-    (cent{tag}{i} / assign{tag}{i}) so two trainings — e.g. the
-    base-corpus store and a fresh full-corpus retrain in
-    ivf_staleness — can coexist in one oracle. ``dims`` sizes the
-    per-dimension centroid average (64 for the embeddings table; 16
-    for the MaxSim token subvectors)."""
+    """Unrolled Lloyd chain over ``src`` (vec_id, *keys, vector). For
+    the cosine metric (IVF over (vec_id, v), ``dims`` 64 for the
+    embeddings table, 16 for the MaxSim token subvectors) the CTEs are
+    cent{tag}0..{iters} (cell, cv) and assign{tag}1..{iters} (vec_id,
+    cell); for sqdist (PQ over (vec_id, sub, sv)) cb{tag}* (sub, code,
+    cv) and asg{tag}*. ``tag`` lets two trainings — e.g. a base-corpus
+    store and a fresh full-corpus retrain in ivf_staleness — coexist in
+    one oracle."""
+    vec, code, cent, asg = _SQL_LAYOUT[metric]
+    cent, asg = cent + tag, asg + tag
+    g = "".join(f"{c}, " for c in keys)
+    a_g = "".join(f"a.{c}, " for c in keys)
+    on = "".join(f" AND s.{c} = a.{c}" for c in keys)
+    part = f"PARTITION BY {', '.join(keys)} " if keys else ""
     parts = [
-        f"cent{tag}0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell, v AS cv"
-        f" FROM (SELECT vec_id, v FROM {src} ORDER BY vec_id LIMIT {k}))"
+        f"""{cent}0 AS (
+    SELECT {g}CAST(row_number() OVER ({part}ORDER BY vec_id) - 1 AS INT) AS {code}, {vec} AS cv
+    FROM {src} WHERE vec_id IN (SELECT DISTINCT vec_id FROM {src} ORDER BY vec_id LIMIT {k})
+)"""
     ]
     for i in range(1, iters + 1):
-        prev = f"cent{tag}{i - 1}"
         parts.append(
-            f"""assign{tag}{i} AS (
-    SELECT vec_id, cell FROM (
-        SELECT a.vec_id, c.cell,
-               row_number() OVER (PARTITION BY a.vec_id
-                   ORDER BY round(list_cosine_similarity(a.v, c.cv), 6) DESC, c.cell) AS rn
-        FROM {src} a, {prev} c
-    ) WHERE rn = 1
-)"""
+            f"{asg}{i} AS (\n    {_sql_nearest(src, f'{cent}{i - 1}', dims, metric, keys)}\n)"
         )
         parts.append(
-            f"""cent{tag}{i} AS (
-    SELECT cell, list(cx ORDER BY pos) AS cv FROM (
-        SELECT s.cell, t.pos AS pos, round(avg(a.v[t.pos]), 6) AS cx
-        FROM {src} a JOIN assign{tag}{i} s ON a.vec_id = s.vec_id,
+            f"""{cent}{i} AS (
+    SELECT {g}{code}, list(cx ORDER BY pos) AS cv FROM (
+        SELECT {a_g}a.{code}, t.pos AS pos, round(avg(s.{vec}[t.pos]), 6) AS cx
+        FROM {src} s JOIN {asg}{i} a ON s.vec_id = a.vec_id{on},
              (SELECT unnest(range(1, {dims + 1})) AS pos) t
-        GROUP BY s.cell, t.pos
-    ) GROUP BY cell
+        GROUP BY {a_g}a.{code}, t.pos
+    ) GROUP BY {g}{code}
 )"""
         )
     return ",\n".join(parts)
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (operators/similarity.py pq_*): per-subspace
-# k-means codebooks, the compressed code table, and ADC top-k. The
-# oracle unrolls the identical Lloyd rounds per subspace: init =
-# subvectors of the k smallest-id vectors; assignment by squared-L2
-# rounded to 6 decimals BEFORE argmin (ties -> smallest code);
-# per-dimension means rounded to 6 decimals each round. The `lut`
-# CTE bakes in the query set (vec_id < 10) used by both topk queries.
-# ---------------------------------------------------------------------------
 
 
 def _sql_pq_chain(
@@ -282,19 +314,13 @@ def _sql_pq_chain(
     dim: int = 64,
     train_filter: str | None = None,
 ) -> str:
+    """PQ over e: the subvector table sv (vec_id, sub, sv), codebooks
+    cb0..cb{iters} (sub, code, cv), the corpus code table ``codes``
+    (vec_id, sub, code) and the ADC lookup table ``lut`` for the query
+    set vec_id < 10. ``train_filter`` restricts training (seed ids,
+    assignments and means) to a subset of e while ``codes`` still
+    covers every vector — the SQL mirror of pq_encode's train_df."""
     d = dim // m
-
-    def sq(a: str, b: str) -> str:
-        return (
-            f"round(list_sum(list_transform(range(1, {d + 1}), "
-            f"j -> ({a}[j] - {b}[j]) * ({a}[j] - {b}[j]))), 6)"
-        )
-
-    # train_filter restricts the TRAINING side (seed rows, Lloyd
-    # assignments and centroid updates) to a subset of e while the
-    # final `codes` assignment still covers every vector — the SQL
-    # mirror of pq_encode's train_df / stored-codebook path. None
-    # keeps the original full-corpus chain byte-for-byte.
     tsrc = "tsv" if train_filter else "sv"
     parts = [
         f"""sv AS (
@@ -305,56 +331,16 @@ def _sql_pq_chain(
     ]
     if train_filter:
         parts.append(f"tsv AS (SELECT * FROM sv WHERE {train_filter})")
-    first_src = (
-        f"(SELECT vec_id FROM e WHERE {train_filter} ORDER BY vec_id LIMIT {k})"
-        if train_filter
-        else f"(SELECT vec_id FROM e ORDER BY vec_id LIMIT {k})"
-    )
+    book = f"cb{iters}"
     parts += [
-        f"""firstk AS (
-    SELECT vec_id, CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code
-    FROM {first_src}
-)""",
-        f"cb0 AS (SELECT s.sub, f.code, s.sv AS cv FROM {tsrc} s JOIN firstk f USING (vec_id))",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"""asg{i} AS (
-    SELECT vec_id, sub, code FROM (
-        SELECT s.vec_id, s.sub, c.code,
-               row_number() OVER (PARTITION BY s.vec_id, s.sub
-                   ORDER BY {sq("s.sv", "c.cv")}, c.code) AS rn
-        FROM {tsrc} s JOIN cb{i - 1} c ON s.sub = c.sub
-    ) WHERE rn = 1
-)"""
-        )
-        parts.append(
-            f"""cb{i} AS (
-    SELECT sub, code, list(cx ORDER BY pos) AS cv FROM (
-        SELECT a.sub, a.code, t.pos AS pos, round(avg(s.sv[t.pos]), 6) AS cx
-        FROM {tsrc} s JOIN asg{i} a ON s.vec_id = a.vec_id AND s.sub = a.sub,
-             (SELECT unnest(range(1, {d + 1})) AS pos) t
-        GROUP BY a.sub, a.code, t.pos
-    ) GROUP BY sub, code
-)"""
-        )
-    parts.append(
-        f"""codes AS (
-    SELECT vec_id, sub, code FROM (
-        SELECT s.vec_id, s.sub, c.code,
-               row_number() OVER (PARTITION BY s.vec_id, s.sub
-                   ORDER BY {sq("s.sv", "c.cv")}, c.code) AS rn
-        FROM sv s JOIN cb{iters} c ON s.sub = c.sub
-    ) WHERE rn = 1
-)"""
-    )
-    parts.append(
+        _sql_lloyd(k, iters, tsrc, dims=d, metric="sqdist", keys=("sub",)),
+        f"codes AS (\n    {_sql_nearest('sv', book, d, 'sqdist', ('sub',))}\n)",
         f"""lut AS (
-    SELECT s.vec_id AS query_id, c.sub, c.code, {sq("s.sv", "c.cv")} AS d2
-    FROM sv s JOIN cb{iters} c ON s.sub = c.sub
+    SELECT s.vec_id AS query_id, c.sub, c.code, {_sql_score("sqdist", "s.sv", "c.cv", d)} AS d2
+    FROM sv s JOIN {book} c ON s.sub = c.sub
     WHERE s.vec_id < 10
-)"""
-    )
+)""",
+    ]
     return ",\n".join(parts)
 
 
@@ -409,7 +395,7 @@ _BPE_N = 8  # keep in sync with textstats.BPE_MERGES
 # ---------------------------------------------------------------------------
 # Wave 9 (round 7): trained quality classifier — hashed-bag-of-words
 # logistic regression, full-batch GD unrolled in pure DataFrame ops
-# (the unrolled-Lloyd pattern of the kmeans chain, same 6-decimal
+# (the unrolled-Lloyd pattern of _sql_lloyd, same 6-decimal
 # per-round rounding for bit-exact cross-engine training parity).
 # ---------------------------------------------------------------------------
 

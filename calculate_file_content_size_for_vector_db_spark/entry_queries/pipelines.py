@@ -22,7 +22,7 @@ from calculate_file_content_size_for_vector_db_spark.entry_queries._core import 
     _pipe,
     _sql_bpe_chain,
     _sql_hashed_features,
-    _sql_kmeans_chain,
+    _sql_lloyd,
     _sql_logreg_chain,
     register,
 )
@@ -333,7 +333,7 @@ zf AS (SELECT f.doc_id, round(sum(f.x * w.wgt ORDER BY f.b), 6) AS z
 {_SQL_EMB},
 eb AS (SELECT * FROM e WHERE vec_id % 17 <> 0),
 es AS (SELECT * FROM e WHERE vec_id % 17 = 0),
-{_sql_kmeans_chain(src="eb", tag="v")},
+{_sql_lloyd(src="eb", tag="v")},
 centx AS (SELECT cell, cv FROM centv3),
 routeb AS (
     SELECT vec_id, cell FROM (
@@ -512,7 +512,7 @@ dups AS (
 ),
 {_SQL_EMB},
 e7 AS (SELECT * FROM e WHERE vec_id % {_INCR_BATCH_MOD} <> 0),
-{_sql_kmeans_chain(src="e7", tag="i")},
+{_sql_lloyd(src="e7", tag="i")},
 centi AS (SELECT cell, cv FROM centi3),
 assign AS (
     SELECT vec_id, cell, cell_cosine FROM (
@@ -680,7 +680,7 @@ adm1 AS (
 admitted AS (SELECT doc_id FROM adm0 UNION ALL SELECT doc_id FROM adm1),
 {_SQL_EMB},
 e7 AS (SELECT * FROM e WHERE vec_id % {_INCR_BATCH_MOD} <> 0),
-{_sql_kmeans_chain(src="e7", tag="h")},
+{_sql_lloyd(src="e7", tag="h")},
 centh AS (SELECT cell, cv FROM centh3),
 sv AS (
     SELECT e.* FROM e WHERE e.vec_id % {_INCR_BATCH_MOD} <> 0

@@ -13,7 +13,7 @@ from calculate_file_content_size_for_vector_db_spark.entry_queries._core import 
     REGISTRY,
     _SQL_EMB,
     _emb,
-    _sql_kmeans_chain,
+    _sql_lloyd,
     _sql_pq_chain,
     register,
 )
@@ -115,7 +115,7 @@ def sim_topk_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_IVF = f"""
 {_SQL_EMB},
-{_sql_kmeans_chain()},
+{_sql_lloyd()},
 cent AS (SELECT cell, cv FROM cent3),
 assign AS (
     SELECT vec_id, cell, cell_cosine FROM (
@@ -426,7 +426,7 @@ def sim_ivf_takedown_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_IVF_BASE_STORE = f"""
 {_SQL_EMB},
 eb AS (SELECT * FROM e WHERE vec_id % 10 <> 0),
-{_sql_kmeans_chain(src="eb", tag="b")},
+{_sql_lloyd(src="eb", tag="b")},
 centb AS (SELECT cell, cv FROM centb3),
 assignb AS (
     SELECT vec_id, cell, cell_cosine FROM (
@@ -604,7 +604,7 @@ def knn_graph_append_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ivf_staleness",
     f"""
 WITH {_SQL_IVF_BASE_STORE},
-{_sql_kmeans_chain()},
+{_sql_lloyd()},
 centf AS (SELECT cell, cv FROM cent3),
 assignf AS (
     SELECT vec_id, cell, cell_cosine FROM (
@@ -2225,7 +2225,7 @@ _SQL_MAXSIM_TOKENS = """dt AS (
     f"""
 WITH {_SQL_EMB},
 {_SQL_MAXSIM_TOKENS},
-{_sql_kmeans_chain(k=32, src="dt", tag="m", dims=16)},
+{_sql_lloyd(k=32, src="dt", tag="m", dims=16)},
 centm AS (SELECT cell, cv FROM centm3),
 dassign AS (
     SELECT did, cell FROM (
@@ -2303,7 +2303,7 @@ def sim_topk_maxsim_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH {_SQL_EMB},
 {_SQL_MAXSIM_TOKENS},
-{_sql_kmeans_chain(k=32, src="dt", tag="m", dims=16)},
+{_sql_lloyd(k=32, src="dt", tag="m", dims=16)},
 centm AS (SELECT cell, cv FROM centm3),
 dassign AS (
     SELECT did, cell FROM (
@@ -3356,7 +3356,7 @@ def sim_topk_maxsim_filtered_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH {_SQL_EMB},
 {_SQL_MAXSIM_TOKENS},
-{_sql_kmeans_chain(k=32, src="dt", tag="m", dims=16)},
+{_sql_lloyd(k=32, src="dt", tag="m", dims=16)},
 centm AS (SELECT cell, cv FROM centm3),
 ct AS (
     SELECT e.vec_id * 4 + t.tok AS vec_id, e.vec_id AS did, t.tok AS tok,
@@ -3477,7 +3477,7 @@ def sim_maxsim_upsert_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH {_SQL_EMB},
 {_SQL_MAXSIM_TOKENS},
-{_sql_kmeans_chain(k=32, src="dt", tag="m", dims=16)},
+{_sql_lloyd(k=32, src="dt", tag="m", dims=16)},
 centm AS (SELECT cell, cv FROM centm3),
 dassign AS (
     SELECT did, cell FROM (
@@ -3675,7 +3675,7 @@ def sim_graph_upsert_serve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH {_SQL_EMB},
 {_SQL_MAXSIM_TOKENS},
-{_sql_kmeans_chain(k=32, src="dt", tag="m", dims=16)},
+{_sql_lloyd(k=32, src="dt", tag="m", dims=16)},
 centm AS (SELECT cell, cv FROM centm3),
 dassign AS (
     SELECT did, cell FROM (
@@ -3764,7 +3764,7 @@ def sim_topk_maxsim_ivf_filtered_q(spark: SparkSession, sf_dir: str) -> DataFram
     f"""
 WITH {_SQL_EMB},
 {_SQL_MAXSIM_TOKENS},
-{_sql_kmeans_chain(k=32, src="dt", tag="m", dims=16)},
+{_sql_lloyd(k=32, src="dt", tag="m", dims=16)},
 centm AS (SELECT cell, cv FROM centm3),
 dassign AS (
     SELECT did, cell FROM (

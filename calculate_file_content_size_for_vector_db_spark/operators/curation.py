@@ -490,7 +490,7 @@ def cap_per_source(
 # vocabulary). Each GD round is a narrow map (packed 1-row weight
 # broadcast → logit, sigmoid, residual per doc row, no shuffle) plus
 # one n_buckets-group agg (the gradient) — the packed-broadcast
-# pattern of similarity._assign_to, with the same determinism
+# pattern of similarity._nearest, with the same determinism
 # discipline: every logit, probability, gradient, and weight rounds
 # to 6 decimals per round, so the DuckDB oracle reproduces training
 # bit-for-bit. At 100 TB, training runs on a labeled SAMPLE (pass
@@ -555,7 +555,7 @@ def _doc_features(
 def _packed_weights(w: DataFrame) -> DataFrame:
     """1-row (wm) frame: the (b, wgt) weight table folded into a map
     for narrow per-doc dot products — the bpe_apply_stored /
-    similarity._assign_to packed-broadcast pattern. Attached by
+    similarity._nearest packed-broadcast pattern. Attached by
     crossJoin(broadcast(...)): a 1-row broadcast nested loop, bounded
     by construction and allowlisted per consumer in the registry plan
     sweep (an equi-join on a constant key compiles to the same nested

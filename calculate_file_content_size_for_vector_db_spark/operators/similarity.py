@@ -294,58 +294,156 @@ def topk_lsh_multiprobe(
 
 
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN: coarse quantizer -> cell assignment -> search
-# within the probed cell. The classic scale path when LSH recall is not
-# enough: centroid training is a few Lloyd (k-means) rounds — each one
-# broadcast join (k rows) + one hash-agg — cell assignment is the same
-# broadcast join, and search is an equi-join on cell id.
+# Lloyd k-means quantizers: IVF cells and PQ codebooks are trained and
+# applied by the same three private pieces, which differ only in the
+# grouping keys and the metric.
 #
-# Determinism (the oracle must reproduce the quantizer bit-for-bit):
-# initial centroids are the k vectors with the smallest ids; every
-# cosine and every centroid component is rounded to 6 decimals each
-# round; assignment ties break to the smallest cell id. Cells that
-# attract no vectors in a round drop out (both engines agree).
+# - _nearest maps points to their nearest codeword: the codebook is
+#   packed into one broadcast row per ``keys`` group (one row for IVF,
+#   one per subspace joined on ``sub`` for PQ), and the arg-best runs as
+#   a higher-order array_max/array_min per point — a narrow map, no
+#   per-point window, no shuffle;
+# - _means is the per-dimension mean step: a 6-decimal avg per (group,
+#   dimension), reassembled in dimension order;
+# - _lloyd unrolls ``iters`` rounds of the two into the lazy plan;
+#   nothing is collected (k or m*k rows flow between rounds).
+#
+# Determinism (the oracle, entry_queries/_core.py::_sql_lloyd, mirrors
+# it bit-for-bit): the initial codewords are the points of the k
+# smallest training ids; every score and every codeword component is
+# rounded to 6 decimals; ties break to the smallest code. Codewords that
+# attract no points in a round drop out (both engines agree).
+# ---------------------------------------------------------------------------
+
+# metric -> (point vector, codebook code, codebook vector, score). IVF
+# ranks by rounded cosine, maximized, a NULL cosine (zero vector)
+# scoring -2.0 so it never wins; PQ ranks by rounded L2², minimized.
+_LAYOUT = {
+    "cosine": ("v", "cell", "centroid", "cell_cosine"),
+    "sqdist": ("sv", "code", "cv", "code_d2"),
+}
+
+
+def _nearest(
+    points: DataFrame,
+    book: DataFrame,
+    id_col: str,
+    keys: tuple = (),
+    metric: str = "cosine",
+    c: int = 1,
+    keep: tuple = (),
+) -> DataFrame:
+    """(id, *keys, *keep, code, score): each point's nearest codeword
+    (``c`` > 1: its top-``c`` codewords, one row each, for multi-probe
+    search). Column names follow ``_LAYOUT[metric]``. ``keep`` columns
+    pass through untouched — training carries the vector itself, and
+    callers with composite keys (token bags keyed (doc_id, tok)) carry
+    the extra key columns instead of packing a synthetic id."""
+    vec, code, cv, score = _LAYOUT[metric]
+    packed = book.groupBy(*keys).agg(F.collect_list(F.struct(code, cv)).alias("_book"))
+    if metric == "cosine":
+        # maximize (score, -code): the negated code sends ties to the
+        # smallest code
+        scored = F.transform(
+            F.col("_book"),
+            lambda b: F.struct(
+                F.coalesce(cosine(F.col(vec), b[cv]), F.lit(-2.0)).alias("s"),
+                (-b[code]).alias("o"),
+            ),
+        )
+        best, ranked, code_of = F.array_max(scored), F.reverse(F.array_sort(scored)), -F.col("_b.o")
+    else:
+        scored = F.transform(
+            F.col("_book"),
+            lambda b: F.struct(sqdist(F.col(vec), b[cv]).alias("s"), b[code].alias("o")),
+        )
+        best, ranked, code_of = F.array_min(scored), F.array_sort(scored), F.col("_b.o")
+    joined = (
+        points.join(F.broadcast(packed), list(keys))
+        if keys
+        else points.crossJoin(F.broadcast(packed))
+    )
+    # c == 1 stays sort-free; c > 1 sorts the k structs inside codegen
+    pick = best if c == 1 else F.explode(F.slice(ranked, 1, c))
+    return joined.select(F.col(id_col), *keys, *keep, pick.alias("_b")).select(
+        id_col, *keys, *keep, code_of.cast("int").alias(code), F.col("_b.s").alias(score)
+    )
+
+
+def _pack(per_dim: DataFrame, keys: tuple, out: str) -> DataFrame:
+    """(*keys, out): (*keys, pos, cx) rows reassembled into one vector
+    per keys group, in pos order."""
+    return per_dim.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "cx"))), lambda s: s["cx"]
+        ).alias(out)
+    )
+
+
+def _means(rows: DataFrame, keys: tuple, vec: str, out: str) -> DataFrame:
+    """(*keys, out): the per-dimension mean of ``vec`` over each keys
+    group, every component rounded to 6 decimals (the Lloyd mean step;
+    also label centroids and the power-iteration start)."""
+    return _pack(
+        rows.select(*keys, F.posexplode(vec).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg(F.round(F.avg("x"), 6).alias("cx")),
+        keys,
+        out,
+    )
+
+
+def _lloyd(
+    points: DataFrame,
+    id_col: str,
+    keys: tuple,
+    metric: str,
+    k: int,
+    iters: int,
+    train_ids: DataFrame | None = None,
+) -> DataFrame:
+    """(*keys, code, vector): the codebook after ``iters`` Lloyd rounds
+    over ``points`` (column names per ``_LAYOUT[metric]``).
+
+    The initial codewords are the points of the k smallest ids. With
+    one point per id (IVF) that is a distributed partial top-k of the
+    points; with several points per id (PQ's m subvectors)
+    ``train_ids`` gives the ids, and the k smallest join back to all of
+    their points. Either way the window only ever sees k rows."""
+    vec, code, cv, _ = _LAYOUT[metric]
+    rank = (F.row_number().over(Window.orderBy(id_col)) - 1).cast("int").alias(code)
+    if train_ids is None:
+        seed = points.orderBy(id_col).limit(k).select(*keys, rank, vec)
+    else:
+        first_k = train_ids.select(id_col).orderBy(id_col).limit(k).select(id_col, rank)
+        seed = points.join(first_k, id_col)
+    book = seed.select(*keys, code, F.col(vec).alias(cv))
+    for _ in range(iters):
+        # keep=(vec,): the vector rides through the narrow assignment
+        # map — re-joining it by id (the pre-r15 shape) cost two corpus
+        # exchanges + a sort-merge join per round (guide §2.4).
+        # coalesce(1): the inter-round frame is k (or m*k) rows;
+        # collapsing it removes a round's worth of near-empty reduce
+        # tasks from the next round's broadcast build (measured
+        # ~10%/training at fixture scale, PLANS.md r14; values
+        # unchanged — the avg is computed BEFORE the coalesce)
+        assigned = _nearest(points, book, id_col, keys, metric, keep=(vec,))
+        book = _means(assigned, (*keys, code), vec, cv).coalesce(1)
+    return book
+
+
+# ---------------------------------------------------------------------------
+# IVF (inverted-file) ANN: coarse quantizer -> cell assignment -> search
+# within the probed cells. The classic scale path when LSH recall is not
+# enough: the centroids are _lloyd over the full vectors (each round one
+# packed 1-row broadcast map + one hash-agg), cell assignment is the
+# same _nearest map, and search is an equi-join on cell id. IVF is PQ
+# with one full-width subspace only up to the metric: IVF ranks by
+# rounded cosine, PQ by rounded L2².
 # ---------------------------------------------------------------------------
 
 IVF_CELLS = 8
 IVF_ITERS = 3
-
-
-def _assign_to(
-    vectors: DataFrame, centroids: DataFrame, id_col: str, keep: tuple = ()
-) -> DataFrame:
-    """(id, *keep, cell, cell_cosine): nearest centroid by rounded
-    cosine, ties -> smallest cell id. ``keep`` columns pass through
-    untouched — callers with composite keys (e.g. token bags keyed
-    (doc_id, tok)) carry the extra key columns here instead of
-    packing a collision-prone synthetic id and joining back.
-
-    Shuffle-free: the k centroids are packed into ONE broadcast row and
-    the argmax runs as a higher-order array_max per vector — a narrow
-    map, no per-vector window. (A window/row_number formulation would
-    shuffle every (vector, centroid) pair on vector id each round.)"""
-    packed = centroids.groupBy().agg(
-        F.collect_list(F.struct("cell", "centroid")).alias("cents")
-    )
-    best = F.array_max(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.coalesce(cosine(F.col("v"), c["centroid"]), F.lit(-2.0)).alias("cc"),
-                (-c["cell"]).alias("negcell"),
-            ),
-        )
-    )
-    return (
-        vectors.crossJoin(F.broadcast(packed))
-        .select(F.col(id_col), *[F.col(c) for c in keep], best.alias("best"))
-        .select(
-            id_col,
-            *keep,
-            (-F.col("best.negcell")).cast("int").alias("cell"),
-            F.col("best.cc").alias("cell_cosine"),
-        )
-    )
 
 
 def ivf_centroids(
@@ -356,45 +454,10 @@ def ivf_centroids(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(cell, centroid): k-means centroids after ``iters`` Lloyd
-    rounds, trained in pure DataFrame ops (no driver-side data).
-
-    The loop is unrolled into the lazy plan: each round is a broadcast
-    join against the k current centroids plus one per-dimension
-    hash-agg. k rows flow between rounds — nothing is collected."""
+    rounds of rounded-cosine assignment (_lloyd), trained in pure
+    DataFrame ops (no driver-side data)."""
     v = spread(embeddings).select(F.col(id_col), as_double(vec_col).alias("v"))
-    # init = the k vectors with the smallest ids. limit(k) is a
-    # distributed partial top-k; the single-partition window then only
-    # ever sees k rows.
-    w0 = Window.orderBy(id_col)
-    cents = (
-        v.orderBy(id_col)
-        .limit(k)
-        .withColumn("cell", (F.row_number().over(w0) - 1).cast("int"))
-        .select("cell", F.col("v").alias("centroid"))
-    )
-    for _ in range(iters):
-        # keep=("v",): the assignment is a narrow map over v, so the
-        # vector rides along for free — re-joining v by id here (the
-        # pre-r15 shape) cost two corpus exchanges + a sort-merge join
-        # PER ROUND for data the assign row already held (guide §2.4)
-        assigned = _assign_to(v, cents, id_col, keep=("v",))
-        per_dim = (
-            assigned
-            .select("cell", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.round(F.avg("x"), 6).alias("cx"))
-        )
-        # coalesce(1): the inter-round frame is k rows; collapsing it
-        # removes a round's worth of near-empty reduce tasks from the
-        # next round's broadcast build (measured ~10%/training at
-        # fixture scale, PLANS.md r14; values unchanged — the avg is
-        # computed BEFORE the coalesce)
-        cents = per_dim.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cx"))), lambda s: s["cx"]
-            ).alias("centroid")
-        ).coalesce(1)
-    return cents
+    return _lloyd(v, id_col, (), "cosine", k, iters)
 
 
 def ivf_append_assign(
@@ -417,7 +480,7 @@ def ivf_append_assign(
     the DATA drifts away from the frozen quantizer as appends
     accumulate; ivf_staleness measures that drift."""
     v = batch.select(F.col(id_col), as_double(vec_col).alias("v"))
-    return _assign_to(v, stored_centroids, id_col)
+    return _nearest(v, stored_centroids, id_col)
 
 
 def ivf_upsert(
@@ -522,7 +585,7 @@ def ivf_assign(
     """(id, cell, cell_cosine): nearest learned centroid per vector."""
     cents = ivf_centroids(embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
     v = embeddings.select(F.col(id_col), as_double(vec_col).alias("v"))
-    return _assign_to(v, cents, id_col)
+    return _nearest(v, cents, id_col)
 
 
 def topk_ivf(
@@ -566,7 +629,15 @@ def topk_ivf(
     parquet scan as a pushed filter. Callers with a stored assignment
     table (ann_frontier, a parquet index at scale) pass it via
     ``assign`` (its corpus-side cells are always the argmax
-    assignment; only the query side multi-probes)."""
+    assignment; only the query side multi-probes). With ``probes`` > 1
+    a stored ``assign`` needs the ``centroids`` it was made with:
+    retrained centroids would route queries by cells the stored
+    assignment does not use, so that case raises."""
+    if assign is not None and probes > 1 and centroids is None:
+        raise ValueError(
+            "topk_ivf with a stored assign and probes > 1 needs the centroids "
+            "that assignment was made with (centroids=)"
+        )
     if assign is None:
         # Inline build: train once (tiny persisted frame), assign each
         # side with the packed 1-row centroid broadcast. The pre-r15
@@ -595,7 +666,7 @@ def topk_ivf(
             *[F.col(c) for c in embeddings.columns if c != vec_col],
             as_double(vec_col).alias("v"),
         )
-        emb_c = _assign_to(
+        emb_c = _nearest(
             vv, centroids, id_col, keep=tuple(c for c in vv.columns if c != id_col)
         ).drop("cell_cosine")
     else:
@@ -603,17 +674,12 @@ def topk_ivf(
             "v", as_double(vec_col)
         )
     if probes > 1:
-        cents = (
-            centroids
-            if centroids is not None
-            else ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col)
-        )
         # one corpus⨝queries join; the vector rides through the top-c
         # assignment via keep= instead of a second join back by id
         qv = embeddings.join(queries.select(id_col), id_col).select(
             F.col(id_col), as_double(vec_col).alias("v")
         )
-        q = _assign_topc(qv, cents, id_col, probes, keep=("v",)).select(
+        q = _nearest(qv, centroids, id_col, c=probes, keep=("v",)).select(
             F.col(id_col).alias("query_id"), F.col("v").alias("qv"), "cell"
         )
     elif assign is None:
@@ -623,7 +689,7 @@ def topk_ivf(
         qv = embeddings.join(queries.select(id_col), id_col).select(
             F.col(id_col), as_double(vec_col).alias("v")
         )
-        q = _assign_to(qv, centroids, id_col, keep=("v",)).select(
+        q = _nearest(qv, centroids, id_col, keep=("v",)).select(
             F.col(id_col).alias("query_id"), F.col("v").alias("qv"), "cell"
         )
     else:
@@ -813,21 +879,21 @@ def nearest_neighbor_blocked(
 # never a full-dimension dot product.
 #
 # Spark shape (the 100 TB design):
-# - codebooks are m*k rows total — they train via the same unrolled
-#   Lloyd rounds as ivf_centroids and BROADCAST everywhere;
-# - encoding is a narrow broadcast join + argmin, no shuffle beyond
-#   the subvector explode;
+# - codebooks are m*k rows total — they train through the same _lloyd
+#   as ivf_centroids (keyed on ``sub``, metric sqdist) and BROADCAST
+#   everywhere;
+# - encoding is _nearest: a broadcast equi-join on ``sub`` + argmin, no
+#   shuffle beyond the subvector explode;
 # - the ADC scan is an equi-join of the (id, sub, code) code table
 #   against the broadcast per-query LUT, then ONE keyed aggregation
 #   (map-side partial sums) — shuffle bounded by N*m code rows, which
 #   are ~16x smaller than the raw vectors.
 #
-# Determinism (oracle parity): init codewords = subvectors of the k
-# smallest-id vectors; squared L2 distances are sequential-fold summed
-# and rounded to 6 decimals BEFORE argmin/ranking; ties break on the
-# smaller code / neighbor id; per-dimension means round to 6 decimals
-# each round — mirrored bit-for-bit by _sql_pq_chain in
-# entry_queries.py (queries pq_codes / pq_topk / sim_topk_ivfpq).
+# Determinism (oracle parity): the Lloyd contract above, with squared
+# L2 distances sequential-fold summed and rounded to 6 decimals BEFORE
+# argmin/ranking, ties on the smaller code / neighbor id — mirrored
+# bit-for-bit by _sql_pq_chain in entry_queries/_core.py (queries
+# pq_codes / pq_topk / sim_topk_ivfpq).
 # ---------------------------------------------------------------------------
 
 PQ_SUBS = 4
@@ -867,37 +933,6 @@ def subvectors(
     return spread(embeddings).select(F.col(id_col), F.inline(subs))
 
 
-def _pq_assign(
-    sv: DataFrame, codebooks: DataFrame, id_col: str = "vec_id", keep: tuple = ()
-) -> DataFrame:
-    """(id, sub, *keep, code): nearest codeword per subvector (rounded
-    L2², ties -> smallest code). The m packed codebook rows broadcast;
-    the argmin is a higher-order array_min per row — no per-candidate
-    window, no shuffle. ``keep`` columns pass through untouched (the
-    _assign_to pattern): training carries the subvector itself so the
-    centroid update never re-joins the subvector table by id."""
-    packed = codebooks.groupBy("sub").agg(
-        F.collect_list(F.struct("code", "cv")).alias("cents")
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                sqdist(F.col("sv"), c["cv"]).alias("d"), c["code"].alias("code")
-            ),
-        )
-    )
-    return (
-        sv.join(F.broadcast(packed), "sub")
-        .select(
-            F.col(id_col),
-            "sub",
-            *[F.col(c) for c in keep],
-            best.getField("code").alias("code"),
-        )
-    )
-
-
 def _pq_train(
     embeddings: DataFrame,
     m: int = PQ_SUBS,
@@ -909,9 +944,8 @@ def _pq_train(
     train_df: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(sv, cb): the cached subvector table plus the per-subspace
-    k-means codebooks after ``iters`` Lloyd rounds, trained in pure
-    DataFrame ops (nothing collected; m*k rows flow between rounds).
-    Empty codewords drop out, exactly as in the SQL mirror.
+    codebooks after ``iters`` Lloyd rounds (_lloyd keyed on ``sub``,
+    rounded L2²), trained in pure DataFrame ops.
 
     ``train_df``: optional subset to train the codebooks on. At 100 TB
     nobody runs Lloyd over the full corpus — pass a deterministic
@@ -927,32 +961,7 @@ def _pq_train(
     else:
         tids = train_df
         tsv = cached(sv.join(train_df.select(id_col), id_col))
-    first_k = (
-        tids.select(id_col)
-        .orderBy(id_col)
-        .limit(k)
-        .withColumn("code", (F.row_number().over(Window.orderBy(id_col)) - 1).cast("int"))
-    )
-    cb = tsv.join(first_k, id_col).select("sub", "code", F.col("sv").alias("cv"))
-    for _ in range(iters):
-        # keep=("sv",): ride the subvector through the narrow assign
-        # map instead of re-joining tsv on (id, sub) each round — the
-        # pre-r15 shape paid two corpus-sized exchanges + an SMJ per
-        # Lloyd round for data the assign row already held (guide §2.4)
-        asg = _pq_assign(tsv, cb, id_col, keep=("sv",))
-        per_dim = (
-            asg
-            .select("sub", "code", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("sub", "code", "pos")
-            .agg(F.round(F.avg("x"), 6).alias("cx"))
-        )
-        # coalesce(1): m x k rows between rounds (see ivf_centroids)
-        cb = per_dim.groupBy("sub", "code").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cx"))), lambda s: s["cx"]
-            ).alias("cv")
-        ).coalesce(1)
-    return sv, cb
+    return sv, _lloyd(tsv, id_col, ("sub",), "sqdist", k, iters, train_ids=tids)
 
 
 def pq_codebooks(
@@ -996,7 +1005,7 @@ def pq_encode(
     else:
         sv, cb = _pq_train(embeddings, m, k, iters, dim, id_col, vec_col, train_df)
         cb = cached(cb)
-    asg = _pq_assign(sv, cb, id_col)
+    asg = _nearest(sv, cb, id_col, ("sub",), "sqdist")
     return asg.groupBy(id_col).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("sub", "code"))), lambda s: s["code"]
@@ -1062,7 +1071,7 @@ def pq_topk(
     else:
         sv, cb = _pq_train(embeddings, m, k, iters, dim, id_col, vec_col, train_df)
         cb = cached(cb)
-        code_rows = _pq_assign(sv, cb, id_col)  # corpus code table, N*m rows
+        code_rows = _nearest(sv, cb, id_col, ("sub",), "sqdist")  # N*m code rows
     if candidate_filter is not None:
         allowed = embeddings.where(candidate_filter).select(id_col)
         code_rows = code_rows.join(allowed, id_col, "left_semi")
@@ -1219,34 +1228,6 @@ def recall_vs_exact(exact: DataFrame, approx: DataFrame) -> DataFrame:
     )
 
 
-def _assign_topc(
-    vectors: DataFrame, centroids: DataFrame, id_col: str, c: int, keep: tuple = ()
-) -> DataFrame:
-    """(id, *keep, cell): each vector's top-``c`` nearest centroids by
-    rounded cosine (ties -> smaller cell), for multi-probe search.
-    ``keep`` columns pass through untouched (composite keys, see
-    _assign_to). Same packed 1-row broadcast as _assign_to; the
-    per-vector sort runs over k structs inside codegen, then explodes
-    to c rows."""
-    packed = centroids.groupBy().agg(
-        F.collect_list(F.struct("cell", "centroid")).alias("cents")
-    )
-    scored = F.transform(
-        F.col("cents"),
-        lambda x: F.struct(
-            F.coalesce(cosine(F.col("v"), x["centroid"]), F.lit(-2.0)).alias("cc"),
-            (-x["cell"]).alias("negcell"),
-        ),
-    )
-    # ascending sort by (cc, negcell), reversed = cc desc, cell asc on ties
-    topc = F.slice(F.reverse(F.array_sort(scored)), 1, c)
-    return (
-        vectors.crossJoin(F.broadcast(packed))
-        .select(F.col(id_col), *[F.col(k_) for k_ in keep], F.explode(topc).alias("b"))
-        .select(id_col, *keep, (-F.col("b.negcell")).cast("int").alias("cell"))
-    )
-
-
 def topk_ivfpq(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -1272,15 +1253,15 @@ def topk_ivfpq(
     corpus. ``train_df``: optional deterministic sample for codebook
     training (see _pq_train)."""
     # cache the k centroid rows: with probes >= 2 they feed BOTH the
-    # corpus assignment and the query-side _assign_topc, and an
+    # corpus assignment and the query-side top-c map, and an
     # uncached cents would re-run the whole unrolled Lloyd lineage
     # for the second consumer (Spark does not dedupe common subplans)
     cents = cached(ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col))
     v = embeddings.select(F.col(id_col), as_double(vec_col).alias("v"))
-    assign = cached(_assign_to(v, cents, id_col).select(id_col, "cell"))
+    assign = cached(_nearest(v, cents, id_col).select(id_col, "cell"))
     sv, cb = _pq_train(embeddings, m, k, iters, dim, id_col, vec_col, train_df)
     cb = cached(cb)
-    codes = _pq_assign(sv, cb, id_col).join(assign, id_col)
+    codes = _nearest(sv, cb, id_col, ("sub",), "sqdist").join(assign, id_col)
     qsv = sv.join(queries.select(id_col), id_col).select(
         F.col(id_col).alias("query_id"), "sub", F.col("sv").alias("qsv")
     )
@@ -1290,7 +1271,7 @@ def topk_ivfpq(
         )
     else:
         qv = v.join(queries.select(id_col), id_col)
-        qcell = _assign_topc(qv, cents, id_col, probes).select(
+        qcell = _nearest(qv, cents, id_col, c=probes).select(
             F.col(id_col).alias("query_id"), "cell"
         )
     lut = (
@@ -1539,17 +1520,7 @@ def label_centroid_quality(
     v = spread(embeddings).select(
         F.col(id_col), F.col(label_col).alias("label"), as_double(vec_col).alias("v")
     )
-    cent = (
-        v.select("label", F.posexplode("v").alias("dim", "x"))
-        .groupBy("label", "dim")
-        .agg(F.round(F.avg("x"), 6).alias("m"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]
-            ).alias("cv")
-        )
-    )
+    cent = _means(v, ("label",), "v", "cv")
     scored = v.join(F.broadcast(cent), "label").select(
         "label", cosine(F.col("v"), F.col("cv")).alias("c")
     )
@@ -1810,11 +1781,11 @@ def maxsim_token_index(
     quantizer-training helper (topk_maxsim_ivf derives unique ids for
     k-means init from it) but no longer affects assignment: the
     token key is carried as (doc_id, tok) directly through
-    _assign_to's ``keep`` pass-through, so ragged bags with
+    _nearest's ``keep`` pass-through, so ragged bags with
     tok >= tokens_per_doc can no longer collide (ADVICE r12)."""
     del tokens_per_doc  # see docstring — assignment keys (doc_id, tok)
     dt = doc_tokens.select("doc_id", "tok", as_double("tv").alias("v"))
-    return _assign_to(dt, stored_centroids, "doc_id", keep=("tok", "v")).select(
+    return _nearest(dt, stored_centroids, "doc_id", keep=("tok", "v")).select(
         "doc_id", "tok", F.col("v").alias("tv"), "cell"
     )
 
@@ -1882,9 +1853,7 @@ def topk_maxsim_from_index(
     qt = query_tokens.select(
         "query_id", F.col("tok").alias("_qtok"), as_double("tv").alias("v")
     )
-    qcells = _assign_topc(
-        qt, stored_centroids, "query_id", probes, keep=("_qtok", "v")
-    )
+    qcells = _nearest(qt, stored_centroids, "query_id", c=probes, keep=("_qtok", "v"))
     cand = (
         qcells.select("query_id", "cell")
         .join(idx.select("doc_id", "cell"), "cell")
@@ -2024,17 +1993,13 @@ def pq_reconstruction_error(
     that decides m and k before an index is built at scale.
 
     Plan shape: reuses the shared _pq_train path (sampled via
-    ``train_df`` at 100 TB), then one (sub, code) broadcast join of
-    the m*k codebook onto the subvector table and one m-group
-    hash-agg that collapses map-side. Linear in the corpus, no
-    pairwise stage."""
+    ``train_df`` at 100 TB), then the encode map, whose score IS the
+    squared error to the assigned codeword, and one m-group hash-agg
+    that collapses map-side. Linear in the corpus, no pairwise
+    stage."""
     sv, cb = _pq_train(embeddings, m, k, iters, dim, id_col, vec_col, train_df)
-    cb = cached(cb)
-    asg = _pq_assign(sv, cb, id_col)
-    err = (
-        sv.join(asg, [id_col, "sub"])
-        .join(F.broadcast(cb), ["sub", "code"])
-        .select("sub", sqdist(F.col("sv"), F.col("cv")).alias("d2"))
+    err = _nearest(sv, cb, id_col, ("sub",), "sqdist").select(
+        "sub", F.col("code_d2").alias("d2")
     )
     return err.groupBy("sub").agg(
         F.count("*").cast("long").alias("n_subvectors"),
@@ -2141,7 +2106,7 @@ def ann_frontier(
     # with the probe2 top-k below
     cents = cached(ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col))
     qv = embeddings.join(qids, id_col).select(F.col(id_col), as_double(vec_col).alias("v"))
-    q2 = _assign_topc(qv, cents, id_col, 2).select(
+    q2 = _nearest(qv, cents, id_col, c=2).select(
         F.col(id_col).alias("qid"), "cell"
     )
     ivf2_cand = (
@@ -2407,7 +2372,7 @@ def knn_graph_ivf(
             # src_cells (guide §2.4; the topk_ivf persist lesson)
             centroids = cached(ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col))
             v0 = embeddings.select(F.col(id_col), as_double(vec_col).alias("v"))
-            assign = cached(_assign_to(v0, centroids, id_col))
+            assign = cached(_nearest(v0, centroids, id_col))
         else:
             # the assignment must cover the CANDIDATE side (== embeddings
             # for the self-graph; the stored corpus in append mode)
@@ -2421,7 +2386,7 @@ def knn_graph_ivf(
             else ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col)
         )
         v = embeddings.select(F.col(id_col), as_double(vec_col).alias("v"))
-        src_cells = _assign_topc(v, cents, id_col, probes)
+        src_cells = _nearest(v, cents, id_col, c=probes)
     else:
         src_cells = assign.select(id_col, "cell")
     cand = candidates if candidates is not None else embeddings
@@ -2752,7 +2717,7 @@ def graph_upsert_ivf(
     # NEW assignment (probe cells derive from their unchanged vectors:
     # one narrow packed-centroid map over the survivor scan)
     sv = surv_emb.select(F.col(id_col), as_double(vec_col).alias("v"))
-    sprobe = _assign_topc(sv, stored_centroids, id_col, probes)
+    sprobe = _nearest(sv, stored_centroids, id_col, c=probes)
     leg2_pairs = (
         sprobe.join(touched, id_col, "left_anti")
         .join(
@@ -2825,11 +2790,8 @@ def pca_power_iteration(
         ).alias("_t2")
     )
 
-    def _normalize_packed(w64: DataFrame) -> DataFrame:
-        """(pos, w) 64-row frame -> 1-row packed unit vector, rounded."""
-        packed = w64.agg(
-            F.array_sort(F.collect_list(F.struct("pos", "w"))).alias("_sw"),
-        ).select(F.transform("_sw", lambda s: s["w"]).alias("_w"))
+    def _unit_row(packed: DataFrame) -> DataFrame:
+        """1-row packed vector (_w) -> 1-row unit vector (bv), rounded."""
         norm = F.sqrt(
             F.aggregate(
                 F.transform("_w", lambda x: x * x), F.lit(0.0), lambda a, b: a + b
@@ -2839,12 +2801,7 @@ def pca_power_iteration(
             F.transform("_w", lambda x: F.round(x / norm, 6)).alias("bv")
         )
 
-    mean = (
-        e.select(F.posexplode("v").alias("pos", "x"))
-        .groupBy("pos")
-        .agg(F.round(F.avg("x"), 6).alias("w"))
-    )
-    v = _normalize_packed(mean)
+    v = _unit_row(_means(e, (), "v", "_w"))
     rows = []
     for r in range(1, rounds + 1):
         scored = e.crossJoin(F.broadcast(v)).select(
@@ -2866,9 +2823,9 @@ def pca_power_iteration(
         w64 = (
             scored.select(F.posexplode("v").alias("pos", "x"), "_d")
             .groupBy("pos")
-            .agg(F.round(F.sum(F.col("x") * F.col("_d")), 6).alias("w"))
+            .agg(F.round(F.sum(F.col("x") * F.col("_d")), 6).alias("cx"))
         )
-        v = _normalize_packed(w64)
+        v = _unit_row(_pack(w64, (), "_w"))
         rows.append(
             ray.crossJoin(F.broadcast(v)).select(
                 "round",

@@ -1,22 +1,6 @@
-import os
-
 import pytest
 
 from calculate_file_content_size_for_vector_db_spark.session import get_spark
-
-
-def pytest_collection_modifyitems(config, items):
-    """Apply the ``slow`` marker from tests/slow_tests.txt (node ids
-    measured >=5s in the r16 full-suite duration capture) so the
-    default `-m "not slow"` tier stays inside the driver's verify
-    window. A renamed/removed test simply drops off the list (it runs
-    in the default tier until re-measured); new tests default to fast."""
-    path = os.path.join(os.path.dirname(__file__), "slow_tests.txt")
-    with open(path) as f:
-        slow = {line.strip() for line in f if line.strip()}
-    for item in items:
-        if item.nodeid in slow:
-            item.add_marker(pytest.mark.slow)
 
 
 @pytest.fixture(scope="session")
@@ -51,13 +35,16 @@ def spark_jobs(spark):
 def spark_stages(spark):
     """work(fn) -> (jobs, stages, tasks) that ``fn()`` runs. Stages are
     every stage of those jobs, skipped ones included, read through the
-    status tracker; tasks are the tasks those stages completed."""
+    status tracker; tasks are the tasks those stages completed. Once a
+    session has run more stages than the UI retains, the tracker drops
+    skipped stages' info first; they completed no tasks."""
     tracker = spark.sparkContext.statusTracker()
 
     def work(fn) -> tuple[int, int, int]:
         jobs = _job_ids(spark, fn)
         stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
-        tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+        infos = [tracker.getStageInfo(s) for s in stages]
+        tasks = sum(i.numCompletedTasks for i in infos if i is not None)
         return len(jobs), len(stages), tasks
 
     return work

@@ -1,6 +1,8 @@
 """Behavioral tests for the analytics queries (funnel ordering,
 islands run-splitting) on crafted event sequences."""
 
+import pytest
+
 from calculate_file_content_size_for_vector_db_spark.entry_queries import REGISTRY
 
 
@@ -13,6 +15,7 @@ def _events(spark, rows):
     return df
 
 
+@pytest.mark.slow
 def test_funnel_requires_stage_order(spark, tmp_path):
     rows = [
         # user 1: full ordered funnel
@@ -36,6 +39,7 @@ def test_funnel_requires_stage_order(spark, tmp_path):
     assert got == {"view": 2, "click_after_view": 2, "purchase_after_click": 1}
 
 
+@pytest.mark.slow
 def test_islands_split_on_interleave(spark, tmp_path):
     rows = [
         (1, "2024-01-01 00:00:00", 1, "view", 0.0, "{}"),
@@ -56,6 +60,7 @@ def test_islands_split_on_interleave(spark, tmp_path):
     ]
 
 
+@pytest.mark.slow
 def test_unigram_logprob_ranks_common_text_higher(spark):
     from calculate_file_content_size_for_vector_db_spark.operators.textstats import (
         unigram_logprob,
@@ -75,6 +80,7 @@ def test_unigram_logprob_ranks_common_text_higher(spark):
     assert s[0] > s[2] and s[1] > s[2]
 
 
+@pytest.mark.slow
 def test_source_reputation_separates_sources(spark):
     from calculate_file_content_size_for_vector_db_spark.operators.textstats import (
         source_reputation,
@@ -93,6 +99,7 @@ def test_source_reputation_separates_sources(spark):
     assert rep["clean"][1] > rep["spam"][1]
 
 
+@pytest.mark.slow
 def test_approx_distinct_within_error_bound(spark):
     """The HLL estimate must sit within 5x the configured rsd of the
     exact count on both fixture scales (VERDICT r05 item 6)."""
@@ -122,6 +129,7 @@ def _docs_df(spark, texts):
     )
 
 
+@pytest.mark.slow
 def test_cms_estimate_never_undercounts(spark):
     from calculate_file_content_size_for_vector_db_spark.operators.textstats import (
         cms_heavy_hitters,
@@ -140,6 +148,7 @@ def test_cms_estimate_never_undercounts(spark):
     assert max(r.est_count for r in rows) == by_word[[r.word for r in rows if r.rank == 1][0]].est_count
 
 
+@pytest.mark.slow
 def test_cms_narrow_sketch_overcounts_but_keeps_bound(spark):
     from calculate_file_content_size_for_vector_db_spark.operators.textstats import (
         cms_heavy_hitters,
@@ -153,6 +162,7 @@ def test_cms_narrow_sketch_overcounts_but_keeps_bound(spark):
         assert r.exact_count <= r.est_count <= n_total
 
 
+@pytest.mark.slow
 def test_temperature_recipe_weights_normalize_and_flatten(spark):
     from calculate_file_content_size_for_vector_db_spark.operators.textstats import (
         temperature_mix_recipe,
@@ -358,6 +368,7 @@ def test_salted_join_identical_to_plain_join(spark):
     assert got == want and len(got) == 50
 
 
+@pytest.mark.slow
 def test_bm25_ranks_exact_phrase_doc_first(spark):
     from calculate_file_content_size_for_vector_db_spark.operators.textstats import bm25_search
 
@@ -555,6 +566,7 @@ def test_compaction_plan_greedy_first_fit_properties(spark):
     assert b == {"g0": 0, "g1": 5}
 
 
+@pytest.mark.slow
 def test_repetition_filters_goldens(spark):
     """Gopher repetition fractions on crafted docs, hand-derived:
     token-char totals, top-bigram coverage, duplicated-5-gram
@@ -857,6 +869,7 @@ def test_token_budget_recipe_epochs_flags_and_conservation(spark):
     assert out["und"].epochs is None and out["und"].upsampled is None
 
 
+@pytest.mark.slow
 def test_retrieval_recall_families_hybrid_beats_lexical(spark):
     from calculate_file_content_size_for_vector_db_spark.entry_queries import REGISTRY
     from tests.conftest import SF_DIR
@@ -899,6 +912,7 @@ def test_bpe_fertility_bounds_and_merge_benefit(spark):
     assert out["a"].fertility < out["b"].fertility
 
 
+@pytest.mark.slow
 def test_serving_pipeline_covers_batch_with_artifact_outputs(spark):
     from calculate_file_content_size_for_vector_db_spark.entry_queries import REGISTRY
     from calculate_file_content_size_for_vector_db_spark.sources.io import read_table
@@ -1075,6 +1089,7 @@ def test_scd2_temporal_join_point_in_time_semantics(spark):
     assert got == {200: None, 201: "view", 202: "click", 203: "click", 204: None}
 
 
+@pytest.mark.slow
 def test_drift_psi_identical_and_shifted_distributions(spark):
     from calculate_file_content_size_for_vector_db_spark.operators.textstats import (
         drift_psi,

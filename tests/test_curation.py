@@ -201,6 +201,7 @@ class TestQualityCalibrate:
         # interpolated median cutoff keeps at least half the docs
         assert got[0.5].n_pass >= 5
 
+    @pytest.mark.slow
     def test_null_scores_fail_but_count(self, spark):
         from calculate_file_content_size_for_vector_db_spark.operators.textstats import (
             calibrate_quality_threshold,
@@ -300,6 +301,7 @@ def test_cap_per_source_negative_and_null_keys_one_bucket_each(spark):
     assert sorted(map(tuple, got)) == sorted(map(tuple, plain.collect()))
 
 
+@pytest.mark.slow
 def test_quality_classifier_learns_separable_corpus(spark):
     """Two token-disjoint classes: after 2 GD rounds every positive doc
     must score above every negative doc, the intercept row must exist,
@@ -327,6 +329,7 @@ def test_quality_classifier_learns_separable_corpus(spark):
     assert min(pos_scores) > max(neg_scores)
 
 
+@pytest.mark.slow
 def test_quality_classifier_sampled_training_scores_full_corpus(spark):
     """The 100-TB contract: train on a labeled SAMPLE (train_df),
     score everything — scores must come from the sample-trained
@@ -367,6 +370,7 @@ def test_quality_classifier_rejects_duplicate_stored_weights(spark):
         quality_classifier_score(df, F.col("lang") == "en", weights_df=weights).collect()
 
 
+@pytest.mark.slow
 def test_leakage_safe_split_clusters_never_straddle(spark):
     """Every near-dup cluster must land wholly on one side; singletons
     split by their own id; ids in the output cover the corpus."""

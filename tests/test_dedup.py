@@ -26,12 +26,14 @@ def test_shingles_window_and_guard(spark):
     assert got[1] == []  # fewer than 3 tokens -> no shingles
 
 
+@pytest.mark.slow
 def test_ngram_jaccard_identical_docs(spark):
     df = _docs(spark, [(0, "w x y z q"), (1, "w x y z q"), (2, "totally other words here now")])
     pairs = dedup.ngram_jaccard_pairs(df, threshold=0.5).collect()
     assert [(p.a_id, p.b_id, p.jaccard) for p in pairs] == [(0, 1, 1.0)]
 
 
+@pytest.mark.slow
 def test_ngram_jaccard_hub_shingle_cap(spark):
     # every doc shares the hub shingle "the same boiler"; real dup pair
     # (0,1) also shares its own distinct shingles. With the cap below
@@ -118,6 +120,7 @@ def test_minhash_lsh_bucket_cap_bounds_low_entropy_corpus(spark):
     )
 
 
+@pytest.mark.slow
 def test_capped_lsh_registration_neutral_at_fixture_scale(spark):
     # the registered production default (dedup_minhash_lsh_capped) must
     # produce the exact query's output wherever no bucket exceeds the
@@ -130,6 +133,7 @@ def test_capped_lsh_registration_neutral_at_fixture_scale(spark):
     assert exact == capped
 
 
+@pytest.mark.slow
 def test_simhash_equal_for_equal_token_multisets(spark):
     df = _docs(spark, [(0, "m n o"), (1, "o n m"), (2, "aa bb cc dd ee")])
     s = {r.doc_id: r.simhash for r in dedup.simhash(df).collect()}
@@ -137,12 +141,14 @@ def test_simhash_equal_for_equal_token_multisets(spark):
     assert isinstance(s[2], int)
 
 
+@pytest.mark.slow
 def test_simhash_pairs_hamming_zero_for_dups(spark):
     df = _docs(spark, [(0, "m n o p q"), (1, "m n o p q")])
     pairs = dedup.simhash_pairs(df, max_hamming=0).collect()
     assert [(p.a_id, p.b_id, p.hamming) for p in pairs] == [(0, 1, 0)]
 
 
+@pytest.mark.slow
 def test_simhash_pairs_wide_sketch_matches_narrow_semantics(spark):
     # the 28-bit scale sketch must agree with a brute-force hamming
     # computation over its own simhash values (pigeonhole banding is
@@ -176,6 +182,7 @@ def test_simhash_pairs_wide_sketch_matches_narrow_semantics(spark):
     assert any(h >= (1 << 16) for h in hashes)
 
 
+@pytest.mark.slow
 def test_simhash_wide_bucket_cap_bounds_low_entropy_corpus(spark):
     # adversarial low-entropy corpus for SimHash: identical docs
     # collapse every segment into one bucket -> quadratic candidates.
@@ -199,6 +206,7 @@ def test_simhash_wide_bucket_cap_bounds_low_entropy_corpus(spark):
     assert [(p.a_id, p.b_id, p.hamming) for p in capped] == [(100, 101, 0)]
 
 
+@pytest.mark.slow
 def test_wide_simhash_registration_is_bounded_subset(spark):
     # the synthetic fixture corpus is low-entropy enough that 28-bit
     # sketches collapse and segment buckets exceed the cap — exactly
@@ -254,6 +262,7 @@ def test_dedup_survivors_keeps_one_per_cluster(spark):
     assert kept == [0, 3, 4]
 
 
+@pytest.mark.slow
 def test_incremental_matches_full_lsh_cross_pairs(spark):
     """Incremental batch-vs-corpus pairs == the cross-boundary subset
     of full-corpus LSH pairs (same signatures, same verify)."""
@@ -340,6 +349,7 @@ def test_span_rewrite_short_and_empty_docs_pass_through(spark):
     assert got[1].clean_text == "" and got[1].n_tokens_kept == 0
 
 
+@pytest.mark.slow
 def test_span_rewrite_properties_random_corpora(spark):
     """Property sweep on seeded random corpora: (1) every clean_text is
     a subsequence of the original token stream; (2) kept + removed =
@@ -503,6 +513,7 @@ def test_neardup_clusters_chained_corpus_guard_and_convergence(spark):
     assert {r.cluster_id for r in out} == {0}  # ONE chain-connected cluster
 
 
+@pytest.mark.slow
 def test_dedup_pair_quality_matrix_semantics(spark):
     """LSH tiers verify by exact Jaccard -> precision exactly 1.0 and
     found = hits; the capped tier can only lose recall vs uncapped;
@@ -542,6 +553,7 @@ def test_bloom_bitmap_is_bounded_and_32bit(spark):
         assert 0 < r.word < (1 << 32)  # only the low 32 bits ever set
 
 
+@pytest.mark.slow
 def test_bloom_prefilter_no_false_negatives_vs_band_join(spark):
     # docs 0/8 and 3/21 are exact dups across the batch/corpus split
     # (batch = %7==0: docs 0,7,14,21); every doc the band join would
@@ -607,6 +619,7 @@ def test_bloom_prefilter_empty_text_is_false(spark):
     assert verdict == {0: False, 7: False, 14: False}
 
 
+@pytest.mark.slow
 def test_bloom_packed_probe_equals_position_set_membership(spark):
     # the packed-word probe must agree with direct membership of every
     # probe position in the corpus position set (packing is lossless)
@@ -728,6 +741,7 @@ def test_star_components_star_forest_input_stops_within_one_round(spark, spark_j
     assert spark_jobs(lambda: dedup.star_components(chain)) > one_round(chain)
 
 
+@pytest.mark.slow
 def test_cluster_append_merges_touched_keeps_untouched(spark):
     # stored: {10,20,30} labeled 10, {50,60} labeled 50, {70,80} labeled 70.
     # batch edges: new node 5 bridges the two first clusters (5-20, 5-60)
@@ -749,6 +763,7 @@ def test_cluster_append_merges_touched_keeps_untouched(spark):
     }
 
 
+@pytest.mark.slow
 def test_cluster_append_equals_full_recompute(spark):
     # incremental-from-store == star CC over the union edge set, on a
     # random-ish split of one synthetic pair graph.
@@ -782,6 +797,7 @@ def test_cluster_append_empty_batch_is_identity(spark):
     assert got == {10: 10, 20: 10, 50: 50}
 
 
+@pytest.mark.slow
 def test_neardup_clusters_component_min_labels(spark):
     import pytest
 
@@ -847,6 +863,7 @@ def test_line_dedup_rewrite_goldens(spark):
     assert got[3] == ("only\nunique\nlines", 3, 0)
 
 
+@pytest.mark.slow
 def test_bloom_bitmap_union_equals_rebuild_and_is_idempotent(spark):
     """The incremental-bitmap contract (VERDICT r07 item 3): unioning
     a batch's delta bitmap into the stored bitmap must equal the
@@ -999,6 +1016,7 @@ def _takedown_fixture(spark, rows, takedown_ids):
     return docs, stored, td, bands, sh
 
 
+@pytest.mark.slow
 def test_cluster_takedown_untouched_verbatim_relabel_and_singleton_drop(spark):
     # exact-dup groups: {1,2,3} (label 1), {10,11} (label 10),
     # {20,21,22} (label 20); 30 is a singleton (never labeled).
@@ -1024,6 +1042,7 @@ def test_cluster_takedown_untouched_verbatim_relabel_and_singleton_drop(spark):
     assert got == {2: 2, 3: 2, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
+@pytest.mark.slow
 def test_cluster_takedown_bridge_removal_splits_and_equals_rebuild(spark):
     # chain A(100)~B(101)~C(102) via token-window overlap (A and C do
     # not near-dup each other); removing the bridge B must SPLIT the
@@ -1055,6 +1074,7 @@ def test_cluster_takedown_bridge_removal_splits_and_equals_rebuild(spark):
     assert got == rebuild
 
 
+@pytest.mark.slow
 def test_cluster_takedown_equals_rebuild_on_mixed_corpus(spark):
     # a larger mixed corpus: several dup groups + chains, takedown a
     # scattering of members; the repaired labeling must equal a
@@ -1079,6 +1099,7 @@ def test_cluster_takedown_equals_rebuild_on_mixed_corpus(spark):
     assert got == rebuild
 
 
+@pytest.mark.slow
 def test_cluster_takedown_empty_and_unknown_ids_are_identity(spark):
     rows = [
         (1, "alpha beta gamma delta epsilon"),
@@ -1106,6 +1127,7 @@ def test_cluster_takedown_empty_and_unknown_ids_are_identity(spark):
     assert got == before
 
 
+@pytest.mark.slow
 def test_cluster_takedown_bucket_cap_bounds_repair(spark):
     """max_bucket_size passthrough (ADVICE r10): the hub-bucket cap
     applies to the SURVIVOR band table of touched clusters. cap=1
@@ -1137,6 +1159,7 @@ def test_cluster_takedown_bucket_cap_bounds_repair(spark):
     assert roomy == uncapped == {2: 2, 3: 2, 10: 10, 11: 10}
 
 
+@pytest.mark.slow
 def test_cluster_takedown_cap_counts_corpus_wide_survivors(spark):
     """ADVICE r11 item 1: the hub-bucket cap must count a bucket over
     ALL survivor rows corpus-wide — the capped-REBUILD universe — not
@@ -1176,6 +1199,7 @@ def test_cluster_takedown_cap_counts_corpus_wide_survivors(spark):
     assert got == set()  # == capped rebuild on survivors; slice-count gave {(2,2),(3,2)}
 
 
+@pytest.mark.slow
 def test_cluster_takedown_whole_cluster_vanishes(spark):
     rows = [
         (1, "alpha beta gamma delta epsilon"),
@@ -1272,6 +1296,7 @@ def test_dedup_upsert_min_doc_split_joins_untouched_cluster(spark):
     assert got == {(2, 2), (3, 2), (1, 1), (4, 1), (7, 1), (20, 1), (21, 1)}
 
 
+@pytest.mark.slow
 def test_dedup_upsert_to_singleton_drops_row(spark):
     """A doc rewritten to match NOTHING must vanish from the labeling
     (singletons carry no row — the neardup_clusters convention), and
@@ -1287,6 +1312,7 @@ def test_dedup_upsert_to_singleton_drops_row(spark):
     assert got == {(2, 2), (3, 2)}
 
 
+@pytest.mark.slow
 def test_dedup_upsert_empty_batch_is_identity(spark):
     rows = [
         (1, "alpha beta gamma delta epsilon"),
@@ -1299,6 +1325,7 @@ def test_dedup_upsert_empty_batch_is_identity(spark):
     assert _labels(dedup.dedup_upsert(stored, empty, bands, sh)) == _labels(stored)
 
 
+@pytest.mark.slow
 def test_dedup_upsert_replay_idempotent(spark):
     """Re-delivering the same changed batch against the post-upsert
     store (labels + rewritten band/shingle artifacts, as production
@@ -1319,6 +1346,7 @@ def test_dedup_upsert_replay_idempotent(spark):
     assert _labels(twice) == _labels(once)
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("seed", [23, 41])
 def test_dedup_upsert_randomized_equals_rebuild(spark, seed):
     """Randomized sweep: shuffled dup-group corpora, a random batch of

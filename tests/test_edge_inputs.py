@@ -394,6 +394,7 @@ def test_bpe_vocab_coverage_empty_batch_keeps_null_rates(spark):
     assert row.oov_word_rate is None and row.oov_token_rate is None
 
 
+@pytest.mark.slow
 def test_filtered_search_empty_filter_returns_no_rows(spark):
     """A predicate matching NOTHING is a legal filtered query: every
     tier must return an empty frame (not error, not fall back to
@@ -421,6 +422,7 @@ def test_filtered_search_empty_filter_returns_no_rows(spark):
     assert sim.topk_graph(emb, q, k=3, edges=edges, candidate_filter=nothing).count() == 0
 
 
+@pytest.mark.slow
 def test_upsert_empty_batch_is_identity(spark):
     """Upserting an EMPTY batch must leave both stores untouched
     (anti-join drops nothing, append adds nothing, meta delta nets 0)."""

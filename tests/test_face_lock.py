@@ -179,6 +179,7 @@ def test_heal_runs_inside_face_lock(spark, tmp_path, face, monkeypatch):
     assert len(calls) == 5 and all(calls)  # every heal under the lock
 
 
+@pytest.mark.slow
 def test_concurrent_upsert_takedown_triggers(spark, tmp_path):
     """Two real faces, two threads, one session, separate stores — the
     end-state of each store must equal its solo-run result. A gross

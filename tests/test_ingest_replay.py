@@ -5,6 +5,7 @@ the admission LEDGER can reject on replay. Batch split = doc_id % 7."""
 
 import duckdb
 import pandas as pd
+import pytest
 
 from calculate_file_content_size_for_vector_db_spark.entry_queries import REGISTRY
 from tests.oracle_harness import compare_frames
@@ -32,6 +33,7 @@ def _crafted_corpus(tmp_path):
     return str(tmp_path)
 
 
+@pytest.mark.slow
 def test_replay_ledger_rejects_shingleless_doc(spark, tmp_path):
     sf_dir = _crafted_corpus(tmp_path)
     q = REGISTRY["ingest_replay_idempotent"]
@@ -67,6 +69,7 @@ def test_replay_ledger_rejects_shingleless_doc(spark, tmp_path):
     assert r.loc[21, "n_store_dups_replay"] == 2
 
 
+@pytest.mark.slow
 def test_takedown_readmit_twin_stays_rejected(spark, tmp_path):
     """ingest_takedown_readmit on the same crafted corpus: doc 14
     (taken down, % 14 == 0) must stay REJECTED on resubmission because

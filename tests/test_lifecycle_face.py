@@ -14,6 +14,7 @@ Pins the composition seam the solo-face tests cannot see:
 (e) unknown actions fail loud.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from calculate_file_content_size_for_vector_db_spark.operators import dedup
@@ -83,6 +84,7 @@ def _lifecycle_batch(spark):
     return spark.createDataFrame(rows, "doc_id long, action string, text string")
 
 
+@pytest.mark.slow
 def test_lifecycle_face_composes_solo_verbs_and_keeps_ghosts_out(spark, tmp_path):
     s_face, s_solo = str(tmp_path / "face"), str(tmp_path / "solo")
     _seed(spark, s_face)
@@ -140,6 +142,7 @@ def test_lifecycle_face_composes_solo_verbs_and_keeps_ghosts_out(spark, tmp_path
     assert _snapshot(spark, s_face) == face_snap
 
 
+@pytest.mark.slow
 def test_lifecycle_face_drives_index_store_both_verbs(spark, tmp_path):
     """The composed trigger against a store WITH an IVF index: the
     takedown leg must purge the forgotten ids' assign rows, and the
@@ -191,6 +194,7 @@ def test_lifecycle_face_drives_index_store_both_verbs(spark, tmp_path):
     assert 40 not in {v for v, _, _ in got} and 12 not in {v for v, _, _ in got}
 
 
+@pytest.mark.slow
 def test_lifecycle_face_passes_ledger_to_takedown_refolds(spark, tmp_path):
     """The admitted_ledger pass-through: ONE composed trigger with the
     batch-tagged ledger provided must drive the takedown leg's card/
@@ -241,6 +245,7 @@ def test_lifecycle_face_passes_ledger_to_takedown_refolds(spark, tmp_path):
     assert adm[5] == "rewritten body five"
 
 
+@pytest.mark.slow
 def test_lifecycle_face_rejects_unknown_action(spark, tmp_path):
     store = str(tmp_path / "store")
     _seed(spark, store)

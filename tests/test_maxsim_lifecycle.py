@@ -66,6 +66,7 @@ def _served(df):
     return {(r.query_id, r.doc_id): (r.maxsim, r.rank) for r in df.collect()}
 
 
+@pytest.mark.slow
 def test_maxsim_index_serve_composition_matches_inline_ivf(spark):
     """Splitting train+index+serve (maxsim_token_index +
     topk_maxsim_from_index) must reproduce the inline topk_maxsim_ivf
@@ -131,6 +132,7 @@ def test_maxsim_upsert_replay_idempotent(spark):
     once.unpersist()
 
 
+@pytest.mark.slow
 def test_maxsim_takedown_no_ghosts_and_equals_survivor_rebuild(spark):
     """Purging forgotten docs from the token index (a) removes every
     one of their token rows, (b) equals an index rebuilt over the
@@ -261,6 +263,7 @@ def test_maxsim_upsert_randomized_sequence_equals_rebuild(spark, seed):
     store.unpersist()
     after1.unpersist()
 
+@pytest.mark.slow
 def test_maxsim_filtered_prefilter_semantics(spark):
     """candidate_filter on the multi-vector tier: crafted corpus where
     the query's nearest docs all FAIL the predicate, so post-filtering
@@ -318,6 +321,7 @@ def test_maxsim_filtered_prefilter_semantics(spark):
     cents.unpersist()
 
 
+@pytest.mark.slow
 def test_maxsim_filtered_empty_match_serves_nothing(spark):
     """Edge input: a predicate matching no doc serves zero rows on
     both the brute and stored paths (the honest empty result, not an

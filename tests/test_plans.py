@@ -302,7 +302,7 @@ def test_ivfpq_adc_join_is_cell_pruned(spark):
     # outside the query's IVF cell are pruned IN the join, never
     # scored. (The BroadcastNestedLoopJoin Cross entries in this plan
     # are the documented 1-row packed-centroid crossJoins from
-    # _assign_to — constant-size, not data-dependent.)
+    # _nearest — constant-size, not data-dependent.)
     import re
 
     plan = _physical(spark, "sim_topk_ivfpq")
@@ -462,7 +462,7 @@ _BNLJ_ALLOWED = {
     "pq_recall_at_10", "quality_calibrate",
     "quality_classifier_score_sampled",  # 1-row n_train (sample-size) broadcast in the GD chain
     "sim_range_search",  # broadcast-queries x corpus radius scan
-    "sim_ivf_append",  # packed 1-row centroid broadcast (the _assign_to map)
+    "sim_ivf_append",  # packed 1-row centroid broadcast (the _nearest map)
     "ivf_staleness",  # two packed-centroid assignment maps + 1-row stat broadcasts
     "sim_ivf_assign", "sim_ivf_centroids", "sim_topk_binary",
     "sim_topk_bruteforce", "sim_topk_ivf", "sim_topk_ivfpq",
@@ -511,6 +511,7 @@ _BNLJ_ALLOWED = {
 }
 
 
+@pytest.mark.slow
 def test_registry_wide_plan_anti_pattern_sweep(spark):
     """EVERY registered query's physical plan, swept for the three
     anti-patterns that kill 100-TB runs: CartesianProduct (quadratic
@@ -705,3 +706,27 @@ def test_bloom_bitmap_union_is_bounded_equi_join(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_lloyd_trainer_and_assign_map_job_and_stage_budget(spark, spark_stages, tmp_path):
+    """The benchmark's training and assignment path, pinned by counts
+    instead of plan strings: one ivf_centroids, one pq_codebooks and
+    one stored-centroid ivf_append_assign collect (the ingest store
+    build trains; each upsert assigns through ivf_upsert) run at most
+    12 jobs / 32 stages, 13 / 29 and 3 / 4 on the sf0.001 fixture
+    (8 shuffle partitions)."""
+    from calculate_file_content_size_for_vector_db_spark.operators import similarity as sim
+    from calculate_file_content_size_for_vector_db_spark.session import cache_scope
+    from calculate_file_content_size_for_vector_db_spark.sources.io import read_table
+
+    emb = read_table(spark, SF_DIR, "embeddings")
+    sim.ivf_centroids(emb).write.parquet(str(tmp_path / "cents"))
+    cents = spark.read.parquet(str(tmp_path / "cents"))
+    for fn, budget in (
+        (lambda: sim.ivf_centroids(emb).collect(), (12, 32)),
+        (lambda: sim.pq_codebooks(emb).collect(), (13, 29)),
+        (lambda: sim.ivf_append_assign(emb, cents).collect(), (3, 4)),
+    ):
+        with cache_scope(spark):
+            jobs, stages, _ = spark_stages(fn)
+        assert jobs <= budget[0] and stages <= budget[1], (jobs, stages, budget)

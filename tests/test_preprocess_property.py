@@ -7,6 +7,7 @@ length."""
 import string
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -34,6 +35,7 @@ def _spark_lengths(spark, texts: list[str]) -> list[int]:
     return df.select(F.length(preprocess_text("text")).alias("n")).toPandas()["n"].tolist()
 
 
+@pytest.mark.slow
 @settings(max_examples=30, deadline=None)
 @given(st.lists(TEXTS, min_size=1, max_size=30))
 def test_spark_matches_python_reference(spark, texts):
@@ -45,6 +47,7 @@ def test_spark_matches_python_reference(spark, texts):
         assert got[i] == preprocess_str(t), repr(t)
 
 
+@pytest.mark.slow
 @settings(max_examples=30, deadline=None)
 @given(st.lists(TEXTS, min_size=1, max_size=30))
 def test_preprocess_idempotent_modulo_escapes(spark, texts):

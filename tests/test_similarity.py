@@ -2,6 +2,8 @@
 
 import math
 
+import pytest
+
 from calculate_file_content_size_for_vector_db_spark.operators import similarity as sim
 
 
@@ -169,6 +171,7 @@ def test_pq_topk_and_codebooks_share_one_training_path(spark):
             assert (sub, code) in cb
 
 
+@pytest.mark.slow
 def test_ivfpq_candidates_are_cell_restricted(spark):
     import random
 
@@ -203,6 +206,7 @@ def test_semantic_dedup_pq_groups_twins(spark):
     assert all(g.dup_count > 1 for g in groups)
 
 
+@pytest.mark.slow
 def test_ivfpq_multiprobe_recall_monotone(spark):
     import random
 
@@ -276,6 +280,7 @@ def test_recall_vs_exact_arithmetic(spark):
     assert (row.n_exact, row.n_hits, row.recall) == (6, 3, 0.5)
 
 
+@pytest.mark.slow
 def test_recall_fixture_goldens(spark):
     """Recall@10 of every registered approximate tier, pinned against
     the deterministic sf0.001 fixture (the values the driver's oracle
@@ -345,6 +350,7 @@ def test_knn_graph_matches_bruteforce(spark):
     assert len({q for q, _ in grid}) == 60  # an edge list for EVERY vector
 
 
+@pytest.mark.slow
 def test_candidate_pruned_recall_monotone_and_goldens(spark):
     """For candidate-pruned EXACT search (LSH/IVF tiers), more probes
     can only add candidates that score by true cosine, so recall IS
@@ -557,6 +563,7 @@ def test_pq_reconstruction_error_shape_and_training_helps(spark):
         assert r.avg_sq_error <= untrained[s].avg_sq_error + 1e-5
 
 
+@pytest.mark.slow
 def test_ivf_list_stats_dead_cells_flags_collapsed_quantizer(spark):
     """ADVICE r06: balance_ratio normalizes by LIVE cells, so a fully
     collapsed quantizer (every vector in one cell) reads ~1.0 —
@@ -577,6 +584,7 @@ def test_ivf_list_stats_dead_cells_flags_collapsed_quantizer(spark):
     assert hrows[0].dead_cells == 4 - len(hrows)
 
 
+@pytest.mark.slow
 def test_ann_frontier_monotone_for_candidate_pruned_tiers(spark):
     """VERDICT r06 item 7: the frontier frame must itself witness the
     monotone property — for EXACT-scored tiers, a candidate superset
@@ -650,6 +658,7 @@ def test_ivf_staleness_zero_appends_zero_drift(spark):
     assert row.max_share_stored == row.max_share_fresh
 
 
+@pytest.mark.slow
 def test_ivf_staleness_detects_distribution_shift(spark):
     """An appended batch from a DIFFERENT distribution (orthant the
     base never saw) must show positive drift: the fresh retrain fits
@@ -673,6 +682,7 @@ def test_ivf_staleness_detects_distribution_shift(spark):
     assert row.cc_drift > 0.05, row
 
 
+@pytest.mark.slow
 def test_topk_graph_recall_monotone_in_hops_and_beam(spark):
     """Graph beam search with EXACT rescoring: the visited/answer
     candidate sets nest as hops or beam grow, and exactly-scored
@@ -718,6 +728,7 @@ def test_topk_graph_recall_monotone_in_hops_and_beam(spark):
     edges.unpersist()
 
 
+@pytest.mark.slow
 def test_knn_graph_ivf_probe2_keeps_graph_navigable(spark):
     """The pathology the probe-2 build exists for: in-cell-only
     (probe-1) edges partition into per-cell islands, so the beam
@@ -809,6 +820,7 @@ def test_pq_encode_stored_codebooks_equals_trained(spark):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_topk_ivf_candidate_filter_prefilter_semantics(spark):
     """Pre-filter returns the true top-k OF THE FILTERED corpus: the
     unfiltered nearest neighbor (same label as nothing in the filter)
@@ -878,6 +890,7 @@ def _starvation_corpus(spark):
     )
 
 
+@pytest.mark.slow
 def test_topk_graph_candidate_filter_expand_then_filter(spark):
     """ACORN-style filtered graph search: the beam navigates the
     UNFILTERED graph (non-matching nodes stay routing waypoints) and
@@ -943,6 +956,7 @@ def test_topk_maxsim_term_interaction_and_scores(spark):
     assert got == {1: (2.0, 1), 2: (1.0, 2), 3: (0.0, 3)}
 
 
+@pytest.mark.slow
 def test_topk_maxsim_ivf_full_probe_equals_brute(spark):
     """The PLAID-layout correctness anchor: when every cell is probed
     the candidate set is the whole corpus and topk_maxsim_ivf must
@@ -1004,6 +1018,7 @@ def test_topk_int8_candidate_filter_prefilter_semantics(spark):
     assert [(r.neighbor_id, r.rank) for r in filtered.collect()] == [(28, 1), (29, 2)]
 
 
+@pytest.mark.slow
 def test_filtered_ivf_recall_probe_monotone(spark):
     """The ivf_filtered_recall_at_10 docstring's pinned property: with
     exact in-cell scoring, the filtered probe-1 candidate set nests
@@ -1086,3 +1101,109 @@ def test_pq_topk_stored_serve_requires_both_artifacts(spark):
         sim.pq_topk(df, df.where("vec_id < 2"), codebooks=cb)
     with _pytest.raises(ValueError, match="BOTH codebooks and codes"):
         sim.pq_topk(df, df.where("vec_id < 2"), codes=sim.pq_encode(df, codebooks=cb))
+
+
+def test_topk_ivf_stored_assign_probe2_requires_centroids(spark):
+    """A stored assignment served with probes > 1 must come with the
+    centroids it was made with: retrained centroids could route queries
+    by cells the stored assignment does not use, so the call raises
+    instead of retraining."""
+    import random
+
+    rng = random.Random(43)
+    df = _emb(spark, [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(20)])
+    assign = sim.ivf_assign(df)
+    with pytest.raises(ValueError, match="centroids"):
+        sim.topk_ivf(df, df.where("vec_id < 2"), assign=assign, probes=2)
+
+
+def _r6(x):
+    """Spark's round(x, 6): HALF_UP on the double's decimal string."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def _fold_dot(a, b):
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def _ref_cosine(a, b):
+    den = math.sqrt(_fold_dot(a, a)) * math.sqrt(_fold_dot(b, b))
+    return -2.0 if den == 0 else _r6(_fold_dot(a, b) / den)  # NULL scores -2.0
+
+
+def _ref_sqdist(a, b):
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + (x - y) * (x - y)
+    return _r6(acc)
+
+
+def _ref_lloyd(points, k, iters, rank):
+    """Plain-Python Lloyd: init = the points of the k smallest ids;
+    each point joins the code minimizing (rank(point, codeword), code);
+    each codeword becomes the 6-decimal per-dimension mean of its
+    members; codes with no members drop out."""
+    book = {c: points[i] for c, i in enumerate(sorted(points)[:k])}
+    for _ in range(iters):
+        members = {}
+        for p in points.values():
+            best = min(book, key=lambda c: (rank(p, book[c]), c))
+            members.setdefault(best, []).append(p)
+        book = {
+            c: [_r6(sum(col) / len(col)) for col in zip(*ps)] for c, ps in members.items()
+        }
+    return book
+
+
+def _eighths_corpus():
+    """Seeded 8-dim vectors whose components are multiples of 1/8, so
+    every mean is an exact sum whatever the summation order. The first
+    rows plant the edge cases for k=4 (init = ids 0-3) and m=2:
+    ids 0 and 1 point the same way, so cosine ties every point between
+    cells 0 and 1 and cell 1 empties; ids 0 and 2 share their second
+    subvector, so PQ code 2 of sub 1 empties; id 3 is the zero vector
+    written as -0.0, whose cosine is NULL (-2.0) against every centroid
+    and, as a centroid, against every point; id 4 is equidistant
+    (cosine, and L2 on sub 0) from ids 0 and 2."""
+    import random
+
+    rng = random.Random(17)
+    u, e2, h = [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [0.5, 0.5, 0.0, 0.0]
+    rows = {0: u + u, 1: [2.0, 0.0, 0.0, 0.0] * 2, 2: e2 + u, 3: [-0.0] * 8, 4: h + h}
+    for i in range(5, 30):
+        rows[i] = [rng.randint(-8, 8) / 8 for _ in range(8)]
+    return rows
+
+
+def test_lloyd_trainers_match_plain_python_reference(spark):
+    """ivf_centroids and pq_codebooks against a third judge: a plain
+    Python Lloyd with the same init, HALF_UP 6-decimal rounding,
+    sequential-fold scores and smallest-code tie rule. The corpus holds
+    a zero vector, exact ties and codewords that empty, and the
+    reference must see them happen for the check to mean anything."""
+    dim, m, k = 8, 2, 4
+    rows = _eighths_corpus()
+    df = spark.createDataFrame(sorted(rows.items()), "vec_id long, embedding array<double>")
+
+    ref_ivf = _ref_lloyd(rows, k, 2, lambda p, c: -_ref_cosine(p, c))
+    assert len(ref_ivf) < k  # a cell emptied
+    got_ivf = {r.cell: list(r.centroid) for r in sim.ivf_centroids(df, k=k, iters=2).collect()}
+    assert got_ivf == ref_ivf
+
+    d = dim // m
+    ref_pq = {}
+    for s in range(m):
+        subs = {i: v[s * d:(s + 1) * d] for i, v in rows.items()}
+        for c, cv in _ref_lloyd(subs, k, 2, _ref_sqdist).items():
+            ref_pq[(s, c)] = cv
+    assert len(ref_pq) < m * k  # a codeword emptied
+    got_pq = {
+        (r.sub, r.code): list(r.cv)
+        for r in sim.pq_codebooks(df, m=m, k=k, iters=2, dim=dim).collect()
+    }
+    assert got_pq == ref_pq

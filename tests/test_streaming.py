@@ -85,6 +85,7 @@ def test_streaming_session_window_runs(spark, batch_events, stream_dir):
     assert len(got) >= 0.9 * len(expected)
 
 
+@pytest.mark.slow
 def test_stateful_running_totals(spark, batch_events, stream_dir):
     from calculate_file_content_size_for_vector_db_spark.streaming.stateful import (
         running_user_totals,
@@ -123,6 +124,7 @@ def test_stateful_running_totals(spark, batch_events, stream_dir):
         assert abs(got[u][1] - expected[u][1]) < 1e-6
 
 
+@pytest.mark.slow
 def test_stream_stream_interval_join(spark, batch_events, stream_dir):
     # canonical watermarked stream-stream join: both sides watermarked,
     # time-range condition bounds buffered state
@@ -283,6 +285,7 @@ def test_streaming_incremental_dedup_foreachbatch(spark, tmp_path):
     assert got == want == {0, 2}  # the near-dup of corpus doc 105 is rejected
 
 
+@pytest.mark.slow
 def test_streaming_cms_sketch_merges_to_batch_sketch(spark, tmp_path):
     """CMS is linear: the union's sketch is the cell-wise SUM of
     per-batch sketches. Deployed as a stream, each micro-batch writes
@@ -327,6 +330,7 @@ def test_streaming_cms_sketch_merges_to_batch_sketch(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_streaming_neardup_gate_equals_sequential_greedy(spark, tmp_path):
     """The streaming-native near-dup gate (streaming/neardup.py): one
     doc per trigger, every admitted doc's band/shingle artifacts land
@@ -399,6 +403,7 @@ def test_streaming_neardup_gate_equals_sequential_greedy(spark, tmp_path):
     assert got == sorted(want) == [0, 3]
 
 
+@pytest.mark.slow
 def test_streaming_neardup_gate_cold_start_bootstraps_store(spark, tmp_path):
     """ADVICE r07: a brand-new pipeline has NO pre-seeded corpus store —
     bands_dir/shingles_dir don't exist until the first trigger appends.
@@ -444,6 +449,7 @@ def test_streaming_neardup_gate_cold_start_bootstraps_store(spark, tmp_path):
     ) == [0, 2]
 
 
+@pytest.mark.slow
 def test_streaming_lake_maintenance_face_diffs_and_compaction_bins(spark, tmp_path):
     """The ops counterpart of the near-dup gate (streaming/
     maintenance.py): per trigger, the batch is diffed against the
@@ -531,6 +537,7 @@ def test_streaming_lake_maintenance_face_diffs_and_compaction_bins(spark, tmp_pa
     assert got_plan == want_plan and len(got_plan) >= 3
 
 
+@pytest.mark.slow
 def test_streaming_index_maintenance_face_matches_batch_artifacts(spark, tmp_path):
     """The serving-artifact face (streaming/index_maintenance.py),
     completing the face triad: near-dup gate = quality, lake face =
@@ -622,6 +629,7 @@ def test_streaming_index_maintenance_face_matches_batch_artifacts(spark, tmp_pat
     assert all(-1.0 <= m.mean_cc_batch <= 1.0 for m in metrics.values())
 
 
+@pytest.mark.slow
 def test_streaming_datacard_face_matches_batch_card(spark, tmp_path):
     """The observability face (streaming/datacard.py): after three
     triggers, the folded card store must equal corpus_datacard_merge
@@ -694,6 +702,7 @@ def test_streaming_datacard_face_matches_batch_card(spark, tmp_path):
     assert replayed == want
 
 
+@pytest.mark.slow
 def test_streaming_drift_face_matches_batch_psi(spark, tmp_path):
     """The monitoring face (streaming/drift.py): after three triggers,
     read_drift over the folded marginal store must equal drift_psi
@@ -801,6 +810,7 @@ def test_drift_face_cold_read_bootstraps_empty_store(spark, tmp_path):
     assert row.psi_lang == 0.0 and 0.0 <= row.psi_length < 0.2
 
 
+@pytest.mark.slow
 def test_streaming_composed_faces_share_one_store(spark, tmp_path):
     """VERDICT r09 item 5: the four per-trigger faces composed over ONE
     shared store (streaming/composed.py) — one foreachBatch admitting
@@ -978,6 +988,7 @@ def test_streaming_composed_faces_share_one_store(spark, tmp_path):
     assert [metrics[b].n_vectors for b in (0, 1, 2)] == [8, 3, 2]
 
 
+@pytest.mark.slow
 def test_streaming_takedown_face_purges_all_stores_and_is_idempotent(spark, tmp_path):
     """VERDICT r10 item 9: right-to-be-forgotten as a streaming face
     (streaming/takedown.py) — a purge-request stream whose triggers
@@ -1094,6 +1105,7 @@ def test_streaming_takedown_face_purges_all_stores_and_is_idempotent(spark, tmp_
     assert audit2 == {(0, 1), (1, 22)}
 
 
+@pytest.mark.slow
 def test_takedown_face_over_composed_ingest_store(spark, tmp_path):
     """Integration of the two lifecycle faces over ONE store: the
     composed ingest face (gate -> index -> card -> drift) builds the
@@ -1153,6 +1165,7 @@ def test_takedown_face_over_composed_ingest_store(spark, tmp_path):
     assert spark.read.parquet(f"{store}/card/scalars").collect()[0]._n == 8
     assert {(r.batch_id, r.doc_id) for r in spark.read.parquet(f"{store}/takedowns").collect()} == {(1, 3)}
 
+@pytest.mark.slow
 def test_streaming_upsert_face_rewrites_all_stores_and_is_idempotent(spark, tmp_path):
     """The write-path sibling of the takedown face
     (streaming/upsert.py): a re-delivery stream whose triggers drive
@@ -1303,6 +1316,7 @@ def test_streaming_upsert_face_rewrites_all_stores_and_is_idempotent(spark, tmp_
     }
     assert audit2 == {(0, 11), (0, 99), (1, 21)}
 
+@pytest.mark.slow
 def test_upsert_face_over_composed_ingest_store(spark, tmp_path):
     """Integration of the upsert face with the composed ingest face's
     real store layout: ingest 8 docs through the gate, then re-deliver
@@ -1430,6 +1444,7 @@ def test_upsert_face_spark_job_count_bounded(spark, spark_jobs, tmp_path):
     assert got == {tuple(r) for r in dedup.neardup_clusters(current).collect()}
 
 
+@pytest.mark.slow
 def test_upsert_face_duplicate_deliveries_in_one_trigger_deterministic(spark, tmp_path):
     """Two deliveries of the SAME doc inside one trigger collapse to
     one row picked deterministically (max over the non-key columns as

@@ -71,6 +71,7 @@ def _serve(emb, edges, query_id, entry_ids):
     return {r.neighbor_id for r in out.collect()}
 
 
+@pytest.mark.slow
 def test_graph_takedown_removes_both_endpoint_directions(bridge_edges, spark):
     forgotten = spark.createDataFrame([(0,)], "vec_id long")
     purged = graph_takedown(bridge_edges, forgotten).collect()
@@ -87,6 +88,7 @@ def test_graph_takedown_removes_both_endpoint_directions(bridge_edges, spark):
     }
 
 
+@pytest.mark.slow
 def test_purged_bridge_never_served_and_region_b_honestly_unreachable(
     spark, bridge_emb, bridge_edges
 ):
@@ -103,6 +105,7 @@ def test_purged_bridge_never_served_and_region_b_honestly_unreachable(
     assert got == {1, 2, 3}
 
 
+@pytest.mark.slow
 def test_src_only_purge_leaks_forgotten_node_as_neighbor(
     spark, bridge_emb, bridge_edges
 ):
@@ -118,6 +121,7 @@ def test_src_only_purge_leaks_forgotten_node_as_neighbor(
     assert 0 in got  # the ghost-edge leak this family of rows exists to catch
 
 
+@pytest.mark.slow
 def test_unrestricted_entry_would_start_at_forgotten_node(
     spark, bridge_emb, bridge_edges
 ):
@@ -155,6 +159,7 @@ def _search_from(parts, spark):
     }
 
 
+@pytest.mark.slow
 def test_postings_takedown_equals_rebuild_on_survivors(spark):
     docs = spark.createDataFrame(_DOCS, "doc_id long, text string")
     forgotten = spark.createDataFrame([(1,), (4,)], "doc_id long")
@@ -174,6 +179,7 @@ def test_postings_takedown_equals_rebuild_on_survivors(spark):
     assert {q for q, _ in purged} == {1}
 
 
+@pytest.mark.slow
 def test_stale_meta_shifts_every_idf(spark):
     """The easiest takedown bug — purge tf/dl but forget n_docs — must
     be visible: with the stale 4-doc meta every surviving score
@@ -205,6 +211,7 @@ def test_meta_delta_counts_only_docs_present_in_store(spark):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_refold_card_takedown_equals_rebuild_and_naive_drop_does_not(spark, tmp_path):
     """PLANS.md "Sum-fold stores are takedown-INCAPABLE": the honest
     takedown is a re-fold of the TOUCHED batch from its survivors —
@@ -265,6 +272,7 @@ def test_refold_card_takedown_equals_rebuild_and_naive_drop_does_not(spark, tmp_
     assert naive_card["n_docs"] == 8.0
 
 
+@pytest.mark.slow
 def test_graph_takedown_repair_equals_survivor_rebuild(spark, bridge_emb, bridge_edges):
     """The localization theorem behind sim_graph_takedown_repair: only
     node 3 holds an edge into the forgotten bridge 0, so repair must
@@ -296,6 +304,7 @@ def test_graph_takedown_repair_equals_survivor_rebuild(spark, bridge_emb, bridge
         assert {p for p in repaired if p[0] == u} == {p for p in stored if p[0] == u}
 
 
+@pytest.mark.slow
 def test_graph_takedown_repair_edge_cases(spark, bridge_emb, bridge_edges):
     """Identity and degenerate shapes, mirroring cluster_takedown's
     edge tests: empty takedown = byte-identical store; forgetting a
@@ -350,6 +359,7 @@ def test_graph_takedown_repair_edge_cases(spark, bridge_emb, bridge_edges):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("seed", [7, 19, 43])
 def test_postings_takedown_randomized_equals_rebuild(spark, seed):
     import random
@@ -383,6 +393,7 @@ def test_postings_takedown_randomized_equals_rebuild(spark, seed):
     assert purged == rebuilt
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("seed", [5, 23])
 def test_graph_takedown_repair_randomized_equals_rebuild(spark, seed):
     import random
@@ -431,6 +442,7 @@ def test_postings_takedown_empty_doc_counts_in_meta(spark):
     assert delta_fallback.collect()[0].n_docs == 0  # the documented caveat
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("seed", [11, 31])
 def test_refold_card_takedown_randomized_multibatch(spark, tmp_path, seed):
     """The registered refold row confines the takedown to one batch;
@@ -548,6 +560,7 @@ def test_exists_answers_from_a_listing_without_spark_jobs(spark, spark_jobs, tmp
     assert jobs == 0
 
 
+@pytest.mark.slow
 def test_postings_upsert_equals_rebuild_and_replay(spark):
     """postings_upsert (the lexical upsert verb, twin of ivf_upsert):
     re-ingest CHANGED docs 1 and 4 with new text, plus a brand-NEW doc
@@ -593,6 +606,7 @@ def test_postings_upsert_equals_rebuild_and_replay(spark):
     assert _search_from(twice, spark) == got
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("seed", [3, 17])
 def test_postings_upsert_randomized_equals_rebuild(spark, seed):
     """Randomized upsert sweep (the takedown sweep's re-ingest twin):
@@ -678,6 +692,7 @@ def test_ivf_upsert_randomized_equals_rebuild(spark, seed):
     up1.unpersist()
 
 
+@pytest.mark.slow
 def test_takedown_face_drives_sum_fold_refolds(spark, tmp_path):
     """The takedown face's optional admitted_ledger hook (round 12):
     when the batch-tagged ledger is provided, ONE purge trigger also
@@ -745,6 +760,7 @@ def _pairs(df):
     return {(r.query_id, r.neighbor_id) for r in df.collect()}
 
 
+@pytest.mark.slow
 def test_graph_upsert_equals_rebuild_bridge_motion(spark, bridge_emb, bridge_edges):
     """Move the bridge node 0 from 45deg into cluster B (86deg) and
     ingest a NEW node 8 inside cluster A (2deg), one batch. The upsert
@@ -776,6 +792,7 @@ def test_graph_upsert_empty_batch_is_identity(spark, bridge_emb, bridge_edges):
     assert _pairs(up) == _pairs(bridge_edges)
 
 
+@pytest.mark.slow
 def test_graph_upsert_replay_idempotent(spark, bridge_emb, bridge_edges):
     """Upserting the same batch twice == once. The second pass runs
     against the CURRENT corpus (survivors + the batch's new vectors) —
@@ -871,6 +888,7 @@ def _ivf_rebuild(current, batch, assign, cents):
     return knn_graph_ivf(current, k_graph=4, assign=cur_assign, centroids=cents)
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("seed", [13, 37])
 def test_graph_upsert_ivf_randomized_equals_ivf_rebuild(spark, seed):
     """Random re-embedded nodes + brand-new ids against a stored
@@ -903,6 +921,7 @@ def test_graph_upsert_ivf_randomized_equals_ivf_rebuild(spark, seed):
     assert {tuple(r) for r in up.collect()} == {tuple(r) for r in rebuilt.collect()}
 
 
+@pytest.mark.slow
 def test_graph_upsert_ivf_empty_batch_is_identity(spark):
     from calculate_file_content_size_for_vector_db_spark.operators.similarity import (
         graph_upsert_ivf,
@@ -917,6 +936,7 @@ def test_graph_upsert_ivf_empty_batch_is_identity(spark):
     assert {tuple(r) for r in up.collect()} == {tuple(r) for r in edges.collect()}
 
 
+@pytest.mark.slow
 def test_graph_upsert_ivf_replay_idempotent(spark):
     """The same batch twice == once; the second pass sees the upserted
     edge store (and, as in production, unchanged survivor stores — the

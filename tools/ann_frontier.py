@@ -87,7 +87,7 @@ def main() -> None:
     # IVFxPQ probe2: query probes its top-2 coarse cells
     v = emb.select("vec_id", sim.as_double("embedding").alias("v"))
     cents = sim.ivf_centroids(emb)
-    top2 = sim._assign_topc(v.join(q.select("vec_id"), "vec_id"), cents, "vec_id", 2)
+    top2 = sim._nearest(v.join(q.select("vec_id"), "vec_id"), cents, "vec_id", c=2)
     p2_cand = (
         top2.select(F.col("vec_id").alias("qid"), "cell")
         .join(assign, "cell")
@@ -133,12 +133,17 @@ def main() -> None:
     ).persist()
     mcents = sim.ivf_centroids(dtt, k=32, id_col="_tid", vec_col="v")
     mdc = dtt.join(
-        sim._assign_to(dtt.select("_tid", "v"), mcents, "_tid").select("_tid", "cell"),
+        sim._nearest(dtt.select("_tid", "v"), mcents, "_tid").select("_tid", "cell"),
         "_tid",
     )
     mqc = (
         dtt.where(F.col("doc_id") < 10)
-        .join(sim._assign_topc(dtt.where(F.col("doc_id") < 10).select("_tid", "v"), mcents, "_tid", 2), "_tid")
+        .join(
+            sim._nearest(
+                dtt.where(F.col("doc_id") < 10).select("_tid", "v"), mcents, "_tid", c=2
+            ).select("_tid", "cell"),
+            "_tid",
+        )
     )
     maxsim_cand_docs = (
         mqc.select(F.col("doc_id").alias("qid"), "cell")
