@@ -1517,8 +1517,8 @@ def upsert_face_relabel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING upsert face end-to-end (VERDICT r13 item 6: the
     one face without a registered row) — and oracle-backed rather
     than the rows-only registration the budget note anticipated: a
-    real readStream -> writeStream.foreachBatch(upsert_store_batch)
-    query drains one availableNow trigger carrying every 13th doc's
+    real readStream -> start_face(upsert_store_batch) query drains
+    one availableNow trigger carrying every 13th doc's
     edited re-delivery against the full dedup store (admitted + bands
     + shingles + labels, artifact-first build), and the returned
     labels STORE must hash-equal dedup_upsert_relabel's oracle: a
@@ -1526,8 +1526,10 @@ def upsert_face_relabel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     One hash therefore pins the whole face stack — checkpointed
     trigger plumbing, in-trigger heal, the deterministic
     duplicate-delivery collapse, the crash-safe swap rewrites of all
-    four stores, and the upsert verb itself — not just the batch verb
-    the relabel row already covers. Replay/crash seams are pinned
+    four stores, and the one purge-and-insert trigger body the
+    takedown and lifecycle faces share (streaming/upsert.py) — not
+    just the batch verb the relabel row already covers. Replay/crash
+    seams are pinned
     suite-side (tests/test_streaming.py upsert-face tests; the face
     runs under session.cache_scope). At 100 TB the
     trigger is batch-sized by construction (the face's contract);
@@ -1539,7 +1541,8 @@ def upsert_face_relabel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         neardup_clusters,
         shingle_sets,
     )
-    from calculate_file_content_size_for_vector_db_spark.streaming.upsert import upsert_face
+    from calculate_file_content_size_for_vector_db_spark.streaming import start_face
+    from calculate_file_content_size_for_vector_db_spark.streaming.upsert import upsert_store_batch
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     store = tempfile.mkdtemp(prefix="upsert_face_store_")
@@ -1566,7 +1569,9 @@ def upsert_face_relabel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     redeliveries = tempfile.mkdtemp(prefix="upsert_face_batch_")
     changed.coalesce(1).write.mode("overwrite").parquet(redeliveries)
     stream = spark.readStream.schema("doc_id long, text string").parquet(redeliveries)
-    q = upsert_face(stream, store, tempfile.mkdtemp(prefix="upsert_face_ckpt_"))
+    q = start_face(
+        stream, tempfile.mkdtemp(prefix="upsert_face_ckpt_"), upsert_store_batch, store
+    )
     # availableNow must DRAIN before the labels store is read: a False
     # return means the trigger may still be mid-rewrite, and reading
     # now would be a wrong-but-quiet hash (ADVICE r14 item 1) — fail
@@ -1591,11 +1596,11 @@ _REG["upsert_face_relabel"].oracle = _REG["dedup_upsert_relabel"].oracle
 # sim_ivf_upsert's convention). The IVF store is the VERDICT-named
 # cheap composition target: its repair verbs are broadcast
 # anti-joins + frozen-centroid re-assignment, no iterative CC — the
-# dedup-store composition (three star-CC blocks, measured ~29-32s
-# structural floor at any fixture scale, PLANS.md r15) is pinned
-# byte-for-byte against the solo verb sequence suite-side instead
-# (tests/test_lifecycle_face.py), and those solo verbs are
-# themselves oracle-hashed against full rebuilds
+# dedup-store leg (one star-CC solve per trigger since the mixed
+# trigger became one pass) is pinned byte-for-byte against the
+# takedown-then-upsert sequence suite-side instead
+# (tests/test_lifecycle_face.py), and the solo takedown and upsert
+# triggers are themselves oracle-hashed against full rebuilds
 # (dedup_takedown_recluster / dedup_upsert_relabel).
 _LC_TD_MOD = 17
 
@@ -1642,10 +1647,10 @@ def lifecycle_takedown_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     17th vector) and upsert re-deliveries (every 13th vector,
     deterministically re-embedded) against ONE stored IVF index,
     driven through a real readStream ->
-    writeStream.foreachBatch(lifecycle_store_batch) query
-    (streaming/lifecycle.py): the takedown verb purges first, then
-    the upsert verb re-assigns against the FROZEN stored centroids
-    over the post-purge store, both under one cache_scope. The
+    start_face(lifecycle_store_batch) query (streaming/upsert.py):
+    ONE pass purges the forgotten and the re-delivered ids and
+    re-assigns the re-delivered vectors against the FROZEN stored
+    centroids, under one cache_scope. The
     returned assignment STORE must hash-equal a from-scratch
     frozen-centroid assignment of the post-trigger corpus (survivors,
     with the re-delivered vectors reversed) — which is simultaneously
@@ -1658,15 +1663,18 @@ def lifecycle_takedown_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     and unknown-action loudness are pinned suite-side
     (tests/test_lifecycle_face.py). At 100 TB the trigger stays
     request/batch-sized: broadcast anti-joins against one linear
-    store scan, a batch-sized frozen-centroid re-assignment —
-    composing the verbs adds only the batch-sized split."""
+    store scan, a batch-sized frozen-centroid re-assignment — the
+    mixed trigger adds only the batch-sized split."""
     import tempfile
 
     from calculate_file_content_size_for_vector_db_spark.operators.similarity import (
         ivf_append_assign,
         ivf_centroids,
     )
-    from calculate_file_content_size_for_vector_db_spark.streaming.lifecycle import lifecycle_face
+    from calculate_file_content_size_for_vector_db_spark.streaming import start_face
+    from calculate_file_content_size_for_vector_db_spark.streaming.upsert import (
+        lifecycle_store_batch,
+    )
 
     emb = _emb(spark, sf_dir).where(F.col("vec_id") < _LC_CAP)
     store = tempfile.mkdtemp(prefix="lifecycle_store_")
@@ -1703,7 +1711,9 @@ def lifecycle_takedown_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         "doc_id long, action string, text string, embedding array<double>"
     ).parquet(batch_dir)
-    q = lifecycle_face(stream, store, tempfile.mkdtemp(prefix="lifecycle_ckpt_"))
+    q = start_face(
+        stream, tempfile.mkdtemp(prefix="lifecycle_ckpt_"), lifecycle_store_batch, store
+    )
     if not q.awaitTermination(600):
         q.stop()
         raise RuntimeError("lifecycle face did not drain in 600s")

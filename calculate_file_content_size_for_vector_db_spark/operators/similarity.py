@@ -2361,35 +2361,32 @@ def knn_graph_ivf(
     side, ONE cell equi-join, one per-node window. Probe cells are
     distinct and a candidate has one argmax cell, so each (src, dst)
     pair meets at most once — no dedup. At scale the join is
-    co-partitioned by cell; no cell's block leaves its executor."""
-    if assign is None:
-        if probes > 1 and centroids is None and candidates is None:
-            # self-graph: the candidate-side assignment and the source-
-            # side probe cells quantize the SAME corpus with the same
-            # defaults, so train Lloyd ONCE and persist the k-row
-            # centroid table — the pre-r15 shape ran two bit-identical
-            # unrolled trainings, one inside ivf_assign and one for
-            # src_cells (guide §2.4; the topk_ivf persist lesson)
-            centroids = cached(ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col))
-            v0 = embeddings.select(F.col(id_col), as_double(vec_col).alias("v"))
-            assign = cached(_nearest(v0, centroids, id_col))
-        else:
-            # the assignment must cover the CANDIDATE side (== embeddings
-            # for the self-graph; the stored corpus in append mode)
-            assign = cached(ivf_assign(
-                candidates if candidates is not None else embeddings, id_col, vec_col
-            ))
-    if probes > 1:
-        cents = (
-            centroids
-            if centroids is not None
-            else ivf_centroids(embeddings, id_col=id_col, vec_col=vec_col)
+    co-partitioned by cell; no cell's block leaves its executor.
+
+    Sources and candidates are routed by the SAME centroids: without
+    ``assign``, the candidates are assigned against ``centroids`` (or
+    against centroids trained once on the candidate side); a stored
+    ``assign`` with ``probes`` > 1 needs the ``centroids`` it was made
+    with, or the call raises (as topk_ivf does)."""
+    if assign is not None and probes > 1 and centroids is None:
+        raise ValueError(
+            "knn_graph_ivf with a stored assign and probes > 1 needs the "
+            "centroids that assignment was made with (centroids=)"
         )
+    cand = candidates if candidates is not None else embeddings
+    if assign is None:
+        # train Lloyd once and persist the k-row centroid table: the
+        # candidate assignment and the source probe cells both read it
+        if centroids is None:
+            centroids = ivf_centroids(cand, id_col=id_col, vec_col=vec_col)
+        centroids = cached(centroids)
+        v0 = cand.select(F.col(id_col), as_double(vec_col).alias("v"))
+        assign = cached(_nearest(v0, centroids, id_col))
+    if probes > 1:
         v = embeddings.select(F.col(id_col), as_double(vec_col).alias("v"))
-        src_cells = _nearest(v, cents, id_col, c=probes)
+        src_cells = _nearest(v, centroids, id_col, c=probes)
     else:
         src_cells = assign.select(id_col, "cell")
-    cand = candidates if candidates is not None else embeddings
     a = embeddings.join(src_cells, id_col).select(
         F.col(id_col).alias("query_id"), as_double(vec_col).alias("_av"), "cell"
     )

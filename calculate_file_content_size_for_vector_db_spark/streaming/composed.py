@@ -49,7 +49,6 @@ sum of the four batch-sized bodies; the corpus appears in no plan.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
 
 from calculate_file_content_size_for_vector_db_spark.session import cache_scope
 from calculate_file_content_size_for_vector_db_spark.streaming.datacard import append_card_partials
@@ -101,35 +100,3 @@ def composed_ingest_batch(
         append_card_partials(admitted, batch_id, f"{store_dir}/card", text_col)
         append_drift_marginals(admitted, batch_id, f"{store_dir}/drift", text_col)
 
-
-def composed_ingest_face(
-    stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    key: str = "doc_id",
-    vec_col: str = "embedding",
-    max_bucket_size: int | None = None,
-) -> StreamingQuery:
-    """Start the composed face. ``stream`` rows carry
-    (doc_id, text, lang, source, embedding)."""
-
-    def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        composed_ingest_batch(
-            batch_df,
-            batch_id,
-            store_dir,
-            threshold,
-            text_col,
-            key,
-            vec_col,
-            max_bucket_size,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -33,7 +33,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from calculate_file_content_size_for_vector_db_spark.operators.maintenance import (
     keyed_takedown,
@@ -178,7 +177,10 @@ def append_card_partials(
 ) -> None:
     """One trigger's worth of card maintenance, as a plain batch
     function (the solo face and streaming/composed.py both call exactly
-    this): four bounded, batch_id-tagged partial appends."""
+    this): four bounded, batch_id-tagged partial appends under
+    ``card_dir`` — scalars/, langs/, sources/, hll/; read the current
+    card with `read_datacard`. ``batch_df`` rows carry (doc_id, text,
+    lang, source)."""
     bid = F.lit(batch_id).cast("long").alias("batch_id")
     t = F.size(tokens(text_col)).cast("long")
     with cache_scope(batch_df.sparkSession):
@@ -283,26 +285,3 @@ def refold_card_takedown(
         }
 
     refold_touched_batches(admitted, takedown, card_dir, refold)
-
-
-def datacard_face(
-    stream: DataFrame,
-    card_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    p: int = _HLL_P,
-) -> StreamingQuery:
-    """Start the face. ``stream`` rows carry (doc_id, text, lang,
-    source). Partial state appends under ``card_dir``: scalars/,
-    langs/, sources/, hll/ — read the current card with
-    `read_datacard`."""
-
-    def _maintain(batch_df: DataFrame, batch_id: int) -> None:
-        append_card_partials(batch_df, batch_id, card_dir, text_col, p)
-
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -40,10 +40,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from calculate_file_content_size_for_vector_db_spark.session import cache_scope, cached
 from calculate_file_content_size_for_vector_db_spark.streaming.datacard import refold_touched_batches
+from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import _exists
 from calculate_file_content_size_for_vector_db_spark.operators.textstats import (
     psi_from_marginals,
     psi_lang_marginal,
@@ -61,7 +61,9 @@ def append_drift_marginals(
 ) -> None:
     """One trigger's worth of drift maintenance, as a plain batch
     function (the solo face and streaming/composed.py both call exactly
-    this): two bounded, batch_id-tagged marginal appends."""
+    this): two bounded, batch_id-tagged marginal appends under
+    ``marginals_dir`` — hist/, langs/; read the current drift number
+    with `read_drift`."""
     bid = F.lit(batch_id).cast("long").alias("batch_id")
     with cache_scope(batch_df.sparkSession):
         batch_df = cached(batch_df)
@@ -71,31 +73,6 @@ def append_drift_marginals(
         psi_lang_marginal(batch_df).select(bid, "*").write.mode(
             "append"
         ).parquet(f"{marginals_dir}/langs")
-
-
-def drift_face(
-    stream: DataFrame,
-    marginals_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    n_bins: int = 256,
-    bin_width: int = 8,
-) -> StreamingQuery:
-    """Start the face. ``stream`` rows carry (doc_id, text, lang, ...).
-    Marginal partials append under ``marginals_dir``: hist/, langs/ —
-    read the current drift number with `read_drift`."""
-
-    def _maintain(batch_df: DataFrame, batch_id: int) -> None:
-        append_drift_marginals(
-            batch_df, batch_id, marginals_dir, text_col, n_bins, bin_width
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def refold_drift_takedown(
@@ -141,8 +118,7 @@ def read_ingest_marginals(
     partial store folded by key-sum, distinct() first so a replayed
     (re-appended, byte-identical) partial is a no-op.
 
-    Bootstrap: before the first trigger neither store dir exists, and
-    spark.read.parquet on a missing dir raises AnalysisException — a
+    Bootstrap: before the first trigger neither store dir exists — a
     cold read means ZERO admitted docs, so substitute empty marginals
     (same contract as the near-dup gate's empty-corpus bootstrap).
     PSI stays finite under Laplace smoothing but is NOT an alarm —
@@ -151,12 +127,11 @@ def read_ingest_marginals(
     operator-facing cold signal is n_batch == 0 in the output row."""
 
     def _read(path: str, schema: str, key: str) -> DataFrame:
-        from pyspark.sql.utils import AnalysisException
-
-        try:
-            raw = spark.read.parquet(path)
-        except AnalysisException:
-            raw = spark.createDataFrame([], f"batch_id long, {schema}")
+        raw = (
+            spark.read.parquet(path)
+            if _exists(spark, path)
+            else spark.createDataFrame([], f"batch_id long, {schema}")
+        )
         return (
             raw.distinct()
             .groupBy(key)

@@ -38,7 +38,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from calculate_file_content_size_for_vector_db_spark.operators.dedup import (
     BLOOM_BITS,
@@ -52,6 +51,7 @@ from calculate_file_content_size_for_vector_db_spark.operators.similarity import
     ivf_centroids,
 )
 from calculate_file_content_size_for_vector_db_spark.session import cache_scope, cached
+from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import _exists
 
 
 def read_bloom_bitmap(spark, index_dir: str) -> DataFrame:
@@ -80,26 +80,20 @@ def maintain_index_batch(
     function (the solo face and streaming/composed.py both call exactly
     this, so the composed test pins the composition seam, not a
     reimplementation): frozen-centroid assignment append, Bloom delta
-    append, one metrics row."""
+    append, one metrics row. ``batch_df`` rows carry (key, text,
+    embedding); the artifacts live under ``index_dir``: centroids/
+    (written once, by trigger 0), assign/ (appended per trigger),
+    bloom/ (append-only delta bitmaps — read via `read_bloom_bitmap`),
+    metrics/ (one row per trigger)."""
     spark = batch_df.sparkSession
-
-    def _read_centroids() -> DataFrame | None:
-        from pyspark.errors import AnalysisException
-
-        try:
-            return spark.read.parquet(f"{index_dir}/centroids")
-        except AnalysisException:
-            return None
-
     with cache_scope(spark):
         batch_df = cached(batch_df)
         vec = batch_df.select(F.col(key).alias("vec_id"), F.col(vec_col).alias("embedding"))
-        cents = _read_centroids()
-        if cents is None:
+        if not _exists(spark, f"{index_dir}/centroids"):
             # cold start: trigger 0's batch trains the quantizer, then
             # it FREEZES — every later trigger serves the stored one
             ivf_centroids(vec).write.parquet(f"{index_dir}/centroids")
-            cents = spark.read.parquet(f"{index_dir}/centroids")
+        cents = spark.read.parquet(f"{index_dir}/centroids")
         assigned = cached(ivf_append_assign(vec, cents))
         assigned.write.mode("append").parquet(f"{index_dir}/assign")
 
@@ -118,32 +112,3 @@ def maintain_index_batch(
         stats.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
             "append"
         ).parquet(f"{index_dir}/metrics")
-
-
-def index_maintenance_face(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    key: str = "doc_id",
-    text_col: str = "text",
-    vec_col: str = "embedding",
-    m_bits: int = BLOOM_BITS,
-    n_hashes: int = BLOOM_HASHES,
-) -> StreamingQuery:
-    """Start the face. ``stream`` rows carry (key, text, embedding).
-    Artifacts live under ``index_dir``: centroids/ (written once, by
-    trigger 0), assign/ (appended per trigger), bloom/ (append-only
-    delta bitmaps — read via `read_bloom_bitmap`), metrics/ (one row
-    per trigger)."""
-
-    def _maintain(batch_df: DataFrame, batch_id: int) -> None:
-        maintain_index_batch(
-            batch_df, batch_id, index_dir, key, text_col, vec_col, m_bits, n_hashes
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -37,7 +37,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from calculate_file_content_size_for_vector_db_spark.operators.maintenance import (
     compaction_plan,
@@ -45,6 +44,8 @@ from calculate_file_content_size_for_vector_db_spark.operators.maintenance impor
 from calculate_file_content_size_for_vector_db_spark.operators.relational import (
     snapshot_diff,
 )
+from calculate_file_content_size_for_vector_db_spark.session import cache_scope, cached
+from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import _exists
 
 
 def lake_file_listing(
@@ -94,65 +95,48 @@ def batch_maintenance(
     return snapshot_diff(prev, batch.select(key, text_col), key, text_col)
 
 
-def lake_maintenance_face(
-    stream: DataFrame,
+def lake_maintenance_batch(
+    batch_df: DataFrame,
+    batch_id: int,
     lake_dir: str,
     diff_dir: str,
     plan_dir: str,
-    checkpoint_dir: str,
     target_bytes: int = 128 * 1024 * 1024,
     key: str = "doc_id",
     text_col: str = "text",
     partition_col: str = "source",
-) -> StreamingQuery:
-    """Start the maintenance face. Each trigger appends one row per
-    diff outcome (key, status, batch_id) to ``diff_dir`` and the
-    compaction bins of the partitions it dirtied (partition, path,
-    size_bytes, compact_bin, batch_id) to ``plan_dir``. Cold start
-    needs no pre-seeded lake: a missing ``lake_dir`` is an empty
-    store (everything diffs 'added'), created by the first append."""
-
-    def _read_store(spark) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        try:
-            return spark.read.parquet(lake_dir)
-        except AnalysisException:
-            return None
-
-    def _maintain(batch_df: DataFrame, batch_id: int) -> None:
-        from calculate_file_content_size_for_vector_db_spark.session import cache_scope, cached
-
-        with cache_scope(batch_df.sparkSession):
-            spark = batch_df.sparkSession
-            batch_df = cached(batch_df)
-            store = _read_store(spark)
-            if store is None:
-                store = batch_df.limit(0).withColumn("_v", F.lit(0).cast("long"))
-            diff = batch_maintenance(batch_df, store, key, text_col)
-            diff.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
-                "append"
-            ).parquet(diff_dir)
-            batch_df.withColumn("_v", F.lit(batch_id).cast("long")).write.partitionBy(
-                partition_col
-            ).mode("append").parquet(lake_dir)
-            dirty = batch_df.select(partition_col).distinct()
-            plan = compaction_plan(
-                lake_file_listing(spark, lake_dir, partition_col).join(
-                    F.broadcast(dirty), partition_col, "left_semi"
-                ),
-                target_bytes,
-                partition_col=partition_col,
-                size_col="size_bytes",
-                key="path",
-            )
-            plan.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
-                "append"
-            ).parquet(plan_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_maintain)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+) -> None:
+    """One trigger of the maintenance face: append one row per diff
+    outcome (key, status, batch_id) to ``diff_dir``, the batch to the
+    lake, and the compaction bins of the partitions it dirtied
+    (partition, path, size_bytes, compact_bin, batch_id) to
+    ``plan_dir``. Cold start needs no pre-seeded lake: a missing
+    ``lake_dir`` is an empty store (everything diffs 'added'), created
+    by the first append."""
+    spark = batch_df.sparkSession
+    with cache_scope(spark):
+        batch_df = cached(batch_df)
+        if _exists(spark, lake_dir):
+            store = spark.read.parquet(lake_dir)
+        else:
+            store = batch_df.limit(0).withColumn("_v", F.lit(0).cast("long"))
+        diff = batch_maintenance(batch_df, store, key, text_col)
+        diff.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
+            "append"
+        ).parquet(diff_dir)
+        batch_df.withColumn("_v", F.lit(batch_id).cast("long")).write.partitionBy(
+            partition_col
+        ).mode("append").parquet(lake_dir)
+        dirty = batch_df.select(partition_col).distinct()
+        plan = compaction_plan(
+            lake_file_listing(spark, lake_dir, partition_col).join(
+                F.broadcast(dirty), partition_col, "left_semi"
+            ),
+            target_bytes,
+            partition_col=partition_col,
+            size_col="size_bytes",
+            key="path",
+        )
+        plan.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
+            "append"
+        ).parquet(plan_dir)

@@ -39,7 +39,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from calculate_file_content_size_for_vector_db_spark.session import (
     _FACE_TRIGGER_LOCK,
@@ -55,6 +54,7 @@ from calculate_file_content_size_for_vector_db_spark.operators.dedup import (
     minhash_signature,
     shingle_sets,
 )
+from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import _exists
 
 
 def admit_batch(
@@ -137,15 +137,6 @@ def gate_batch(
 
     Call it inside a ``cache_scope``: the snapshot it returns and the
     frames it caches die when that scope exits."""
-
-    def _read_store(spark, path: str, empty_like: DataFrame) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException:
-            return empty_like
-
     spark = batch_df.sparkSession
     # The bare lock, not a scope: the admitted checkpoint below is the
     # return value, so the caller's scope releases it. Holding the
@@ -154,16 +145,20 @@ def gate_batch(
     with _FACE_TRIGGER_LOCK:
         batch_df = cached(batch_df)
         empty = batch_df.limit(0)
+        bands = (
+            spark.read.parquet(bands_dir)
+            if _exists(spark, bands_dir)
+            else minhash_bands(minhash_signature(empty, text_col=text_col, key=key), key=key)
+        )
+        shingles = (
+            spark.read.parquet(shingles_dir)
+            if _exists(spark, shingles_dir)
+            else shingle_sets(empty, text_col, key)
+        )
         admitted = admit_batch(
             batch_df,
-            _read_store(
-                spark,
-                bands_dir,
-                minhash_bands(
-                    minhash_signature(empty, text_col=text_col, key=key), key=key
-                ),
-            ),
-            _read_store(spark, shingles_dir, shingle_sets(empty, text_col, key)),
+            bands,
+            shingles,
             threshold,
             text_col,
             key,
@@ -181,46 +176,12 @@ def gate_batch(
         return admitted
 
 
-def neardup_ingest_gate(
-    stream: DataFrame,
-    bands_dir: str,
-    shingles_dir: str,
-    admitted_dir: str,
-    checkpoint_dir: str,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    key: str = "doc_id",
-    max_bucket_size: int | None = None,
-) -> StreamingQuery:
-    """Start the gate on a streaming document frame. Rate-limit the
-    source (``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger``) so each
+def gate_trigger(batch_df: DataFrame, _batch_id: int, *args, **kwargs) -> None:
+    """One trigger of the solo gate: ``gate_batch(batch_df, *args,
+    **kwargs)`` with its admitted snapshot discarded — the scope
+    releases it with the trigger's caches. Rate-limit the source
+    (``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger``) so each
     trigger's signature work is bounded; the corpus side never
-    recomputes regardless of batch size. Admitted docs append to
-    ``admitted_dir`` AND their band/shingle artifacts append to the
-    corpus store, so cross-micro-batch near-dups are rejected.
-
-    Cold start needs no pre-seeded store: missing ``bands_dir`` /
-    ``shingles_dir`` are treated as an empty corpus (which admits
-    everything), and the first trigger's appends create them."""
-
-    def _gate(batch_df: DataFrame, _batch_id: int) -> None:
-        # the solo face discards the admitted snapshot: the scope
-        # releases it with the trigger's caches
-        with cache_scope(batch_df.sparkSession):
-            gate_batch(
-                batch_df,
-                bands_dir,
-                shingles_dir,
-                admitted_dir,
-                threshold,
-                text_col,
-                key,
-                max_bucket_size,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    recomputes regardless of batch size."""
+    with cache_scope(batch_df.sparkSession):
+        gate_batch(batch_df, *args, **kwargs)

@@ -15,43 +15,30 @@ metadata-level MERGE INTO.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
 
 from calculate_file_content_size_for_vector_db_spark.operators.maintenance import keyed_upsert
 from calculate_file_content_size_for_vector_db_spark.session import cache_scope
 from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
+    _exists,
     heal_store,
     swap_rewrite,
 )
-from calculate_file_content_size_for_vector_db_spark.streaming.takedown import _exists
 
 
-def stream_upsert_parquet(
-    stream: DataFrame,
-    target_path: str,
-    checkpoint_path: str,
-    key: str = "event_id",
-) -> StreamingQuery:
-    """writeStream.foreachBatch sink merging each microbatch into a
-    parquet target by ``key``. Returns the started query (availableNow
-    trigger — drains the source then stops)."""
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # heal inside the scope's lock, before the target is read
-        with cache_scope(spark):
-            heal_store(spark, target_path)
-            batch = batch_df.dropDuplicates([key])
-            if _exists(spark, target_path):
-                target = spark.read.parquet(target_path)
-                if sorted(batch.columns) != sorted(target.columns):
-                    raise ValueError(f"batch columns {batch.columns} != target's {target.columns}")
-                batch = keyed_upsert(target, batch.select(key), batch, key)
-            swap_rewrite(spark, target_path, batch)
-
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+def upsert_parquet_batch(
+    batch_df: DataFrame, _batch_id: int, target_path: str, key: str = "event_id"
+) -> None:
+    """One trigger of the sink: merge ``batch_df`` into the parquet
+    target by ``key``. Start it on a stream with
+    ``start_face(stream, checkpoint_dir, upsert_parquet_batch, target_path)``."""
+    spark = batch_df.sparkSession
+    # heal inside the scope's lock, before the target is read
+    with cache_scope(spark):
+        heal_store(spark, target_path)
+        batch = batch_df.dropDuplicates([key])
+        if _exists(spark, target_path):
+            target = spark.read.parquet(target_path)
+            if sorted(batch.columns) != sorted(target.columns):
+                raise ValueError(f"batch columns {batch.columns} != target's {target.columns}")
+            batch = keyed_upsert(target, batch.select(key), batch, key)
+        swap_rewrite(spark, target_path, batch)

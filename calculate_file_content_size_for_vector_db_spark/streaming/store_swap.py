@@ -38,6 +38,10 @@ A production deployment still wants a table format with atomic commit
 guarantee on plain parquet at the cost of one extra store-sized write
 per rewrite (the price localCheckpoint paid in executor memory
 instead).
+
+``_exists`` is the one store probe every face uses ("is there a store
+to read here?"): a Hadoop listing, so a missing or empty store costs
+no Spark job and raises nothing.
 """
 
 from __future__ import annotations
@@ -51,6 +55,20 @@ def _fs(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
     hp = jvm.org.apache.hadoop.fs.Path(path)
     return hp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hp, jvm
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    """True iff ``path`` exists and holds a non-hidden entry (a name not
+    starting with ``_`` or ``.``) — the stores spark.read.parquet can
+    read. Answered from one Hadoop FS listing, so it runs no Spark job
+    (a parquet read would run a schema-inference job per call)."""
+    fs, hp, _ = _fs(spark, path)
+    if not fs.exists(hp):
+        return False
+    return any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(hp)
+    )
 
 
 def heal_store(spark: SparkSession, path: str) -> bool:

@@ -125,8 +125,9 @@ def _drift(spark, out):
 
 
 def _lake(spark, out):
+    from calculate_file_content_size_for_vector_db_spark.streaming import start_face
     from calculate_file_content_size_for_vector_db_spark.streaming.maintenance import (
-        lake_maintenance_face,
+        lake_maintenance_batch,
     )
 
     src = f"{out}/in"
@@ -134,8 +135,8 @@ def _lake(spark, out):
         [(1, "alpha", "s1"), (2, "beta", "s2")], "doc_id long, text string, source string"
     ).write.parquet(src)
     stream = spark.readStream.schema("doc_id long, text string, source string").parquet(src)
-    q = lake_maintenance_face(
-        stream, f"{out}/lake", f"{out}/diff", f"{out}/plan", f"{out}/ckpt"
+    q = start_face(
+        stream, f"{out}/ckpt", lake_maintenance_batch, f"{out}/lake", f"{out}/diff", f"{out}/plan"
     )
     q.awaitTermination()
 

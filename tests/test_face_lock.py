@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from calculate_file_content_size_for_vector_db_spark import session
 from calculate_file_content_size_for_vector_db_spark.session import _FACE_TRIGGER_LOCK, cache_scope
-from calculate_file_content_size_for_vector_db_spark.streaming import takedown, upsert
+from calculate_file_content_size_for_vector_db_spark.streaming import upsert
 from tests.conftest import persistent_rdd_ids
 
 
@@ -160,7 +160,7 @@ def test_heal_runs_inside_face_lock(spark, tmp_path, face, monkeypatch):
     via a second-thread probe, that the lock is held at every call."""
     store = str(tmp_path / "store")
     calls = []
-    mod = upsert if face == "upsert" else takedown
+    mod = upsert
     real_heal = mod.heal_store
 
     def spying_heal(sp, path):
@@ -215,7 +215,7 @@ def test_concurrent_upsert_takedown_triggers(spark, tmp_path):
     def run_takedown():
         try:
             reqs = spark.createDataFrame([("d5",)], "doc_id string")
-            takedown.takedown_store_batch(reqs, 1, s_td)
+            upsert.takedown_store_batch(reqs, 1, s_td)
         except Exception as e:
             errs.append(("takedown", e))
 

@@ -109,37 +109,20 @@ def test_upsert_replay_with_a_null_key_fails_and_keeps_the_store(spark, tmp_path
     assert not [p for p in os.listdir(store) if p.endswith("__swap")]
 
 
-def test_upsert_and_takedown_triggers_run_no_more_jobs_than_before(
-    spark, spark_jobs, tmp_path
-):
-    """One upsert trigger and one takedown trigger against a store
-    carrying every leg (per-doc rows, near-dup labels, IVF index) run
-    no more Spark jobs than before the keyed verbs replaced the
-    per-family purges: 74 and 52 jobs on the test session's local[8]
-    before, the bounds here."""
+def _all_legs_store(spark, store: str) -> None:
+    """Per-doc rows, near-dup labels and an IVF index: every leg a
+    store trigger rewrites."""
     from calculate_file_content_size_for_vector_db_spark.operators.similarity import (
         ivf_append_assign,
         ivf_centroids,
     )
-    from calculate_file_content_size_for_vector_db_spark.streaming.takedown import (
-        takedown_store_batch,
-    )
-    from calculate_file_content_size_for_vector_db_spark.streaming.upsert import (
-        upsert_store_batch,
-    )
 
-    groups = ["alpha beta gamma delta epsilon", "omega psi chi phi upsilon"]
-    rows = [(g * 10 + m, groups[g]) for g in range(2) for m in range(3)]
+    rows = [(g * 10 + m, _GROUPS[g]) for g in range(2) for m in range(3)]
     rows.append((30, "lonely words with no duplicate here"))
-
-    def emb(i):
-        return [float((i * 7 + d * 3) % 11) for d in range(8)]
-
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     vecs = spark.createDataFrame(
-        [(i, emb(i)) for i, _ in rows], "vec_id long, embedding array<double>"
+        [(i, _emb(i)) for i, _ in rows], "vec_id long, embedding array<double>"
     )
-    store = str(tmp_path / "store")
     docs.write.parquet(f"{store}/admitted")
     dedup.shingle_sets(docs).write.parquet(f"{store}/shingles")
     dedup.bands_from_shingle_sets(spark.read.parquet(f"{store}/shingles")).write.parquet(
@@ -150,9 +133,40 @@ def test_upsert_and_takedown_triggers_run_no_more_jobs_than_before(
     cents = spark.read.parquet(f"{store}/index/centroids")
     ivf_append_assign(vecs, cents).write.parquet(f"{store}/index/assign")
 
+
+_GROUPS = ["alpha beta gamma delta epsilon", "omega psi chi phi upsilon"]
+
+
+def _emb(i):
+    return [float((i * 7 + d * 3) % 11) for d in range(8)]
+
+
+def test_upsert_and_takedown_triggers_run_no_more_jobs_than_before(
+    spark, spark_jobs, tmp_path, monkeypatch
+):
+    """One upsert trigger and one takedown trigger against a store
+    carrying every leg (per-doc rows, near-dup labels, IVF index) run
+    no more Spark jobs than before the keyed verbs replaced the
+    per-family purges: 74 and 52 jobs on the test session's local[8]
+    before, the bounds here. A mixed lifecycle trigger (the same
+    takedown and re-delivery, on a fresh copy of the store) is one
+    pass: it rewrites each of the five stores once, and measured 77
+    jobs, where running the takedown and then the upsert ran 134 and
+    rewrote every store twice."""
+    from pyspark.sql import DataFrameWriter
+
+    from calculate_file_content_size_for_vector_db_spark.streaming.upsert import (
+        lifecycle_store_batch,
+        takedown_store_batch,
+        upsert_store_batch,
+    )
+
+    store, mixed = str(tmp_path / "store"), str(tmp_path / "mixed")
+    _all_legs_store(spark, store)
+    _all_legs_store(spark, mixed)
+    redelivered = [(0, _GROUPS[1], _emb(100)), (99, _GROUPS[0], _emb(99))]
     batch = spark.createDataFrame(
-        [(0, groups[1], emb(100)), (99, groups[0], emb(99))],
-        "doc_id long, text string, embedding array<double>",
+        redelivered, "doc_id long, text string, embedding array<double>"
     )
     takedown = spark.createDataFrame([(1,), (20,)], "doc_id long")
     upsert_jobs = spark_jobs(lambda: upsert_store_batch(batch, 0, store))
@@ -162,6 +176,31 @@ def test_upsert_and_takedown_triggers_run_no_more_jobs_than_before(
     assert _rows(spark.read.parquet(f"{store}/admitted").select("doc_id")) == [
         (i,) for i in (0, 2, 10, 11, 12, 30, 99)
     ]
+
+    swaps = []
+    real_parquet = DataFrameWriter.parquet
+
+    def counting_parquet(self, path, *args, **kwargs):
+        if path.endswith("__swap"):
+            swaps.append(path)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
+    lifecycle = spark.createDataFrame(
+        [(i, "takedown", None, None) for i in (1, 20)]
+        + [(i, "upsert", t, e) for i, t, e in redelivered],
+        "doc_id long, action string, text string, embedding array<double>",
+    )
+    lifecycle_jobs = spark_jobs(lambda: lifecycle_store_batch(lifecycle, 2, mixed))
+    assert lifecycle_jobs <= 77, lifecycle_jobs
+    assert sorted(swaps) == sorted(
+        f"{mixed}/{sub}__swap"
+        for sub in ("admitted", "bands", "shingles", "labels", "index/assign")
+    )
+    for sub in ("admitted", "bands", "shingles", "labels", "index/assign"):
+        assert _rows(spark.read.parquet(f"{mixed}/{sub}")) == _rows(
+            spark.read.parquet(f"{store}/{sub}")
+        ), sub
 
 
 def _events(spark, ids, payload: str):
@@ -176,18 +215,20 @@ def test_stream_upsert_sink_rejects_a_schema_mismatch_and_keeps_the_target(
     """A micro-batch lacking one of the target's columns fails the
     stream; the target keeps every row (it is not overwritten by the
     batch alone)."""
+    from calculate_file_content_size_for_vector_db_spark.streaming import start_face
     from calculate_file_content_size_for_vector_db_spark.streaming.sinks import (
-        stream_upsert_parquet,
+        upsert_parquet_batch,
     )
 
     target = str(tmp_path / "target")
     _events(spark, range(100), "old").write.parquet(target)
     src = str(tmp_path / "src")
     spark.createDataFrame([(7,)], "event_id long").write.parquet(src)
-    q = stream_upsert_parquet(
+    q = start_face(
         spark.readStream.schema("event_id long").parquet(src),
-        target,
         str(tmp_path / "ckpt"),
+        upsert_parquet_batch,
+        target,
     )
     with pytest.raises(StreamingQueryException):
         q.awaitTermination(120)
@@ -201,8 +242,9 @@ def test_stream_upsert_sink_heals_a_rewrite_interrupted_after_the_swap_commit(
     finished leaves the truth in ``{target}__swap`` and a partial live
     target. The next trigger heals first (live restored from the swap,
     swap dropped), then upserts its batch into the restored rows."""
+    from calculate_file_content_size_for_vector_db_spark.streaming import start_face
     from calculate_file_content_size_for_vector_db_spark.streaming.sinks import (
-        stream_upsert_parquet,
+        upsert_parquet_batch,
     )
 
     target = str(tmp_path / "target")
@@ -210,10 +252,11 @@ def test_stream_upsert_sink_heals_a_rewrite_interrupted_after_the_swap_commit(
     _events(spark, range(10), "old").write.parquet(target)
     src = str(tmp_path / "src")
     _events(spark, (5, 100), "new").write.parquet(src)
-    q = stream_upsert_parquet(
+    q = start_face(
         spark.readStream.schema("event_id long, payload string").parquet(src),
-        target,
         str(tmp_path / "ckpt"),
+        upsert_parquet_batch,
+        target,
     )
     q.awaitTermination(120)
     want = _rows(

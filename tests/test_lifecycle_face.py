@@ -1,10 +1,13 @@
-"""Composed day-2 lifecycle face (streaming/lifecycle.py — VERDICT
-r14 item 2): takedown + upsert in ONE trigger against ONE store.
+"""Composed day-2 lifecycle face (streaming/upsert.py,
+lifecycle_store_batch): takedown + upsert in ONE trigger against ONE
+store.
 
 Pins the composition seam the solo-face tests cannot see:
-(a) the composed end-state equals the solo takedown-then-upsert
-    sequence byte-for-byte on every store (the face IS the verbs,
-    composed, not a reimplementation),
+(a) the mixed trigger — one purge-and-insert pass over every store —
+    equals the solo takedown-then-upsert sequence byte-for-byte on
+    every store (both equal a from-scratch clustering, dedup_upsert's
+    argument; test_keyed_store.py pins that the pass rewrites each
+    store once),
 (b) the ghost contract — a doc_id carried by BOTH a takedown request
     and an upsert re-delivery in the same trigger is forgotten and
     does NOT resurface through the upsert leg, on any store,
@@ -18,14 +21,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from calculate_file_content_size_for_vector_db_spark.operators import dedup
-from calculate_file_content_size_for_vector_db_spark.streaming.lifecycle import (
-    lifecycle_face,
-    lifecycle_store_batch,
-)
-from calculate_file_content_size_for_vector_db_spark.streaming.takedown import (
-    takedown_store_batch,
-)
+from calculate_file_content_size_for_vector_db_spark.streaming import start_face
 from calculate_file_content_size_for_vector_db_spark.streaming.upsert import (
+    lifecycle_store_batch,
+    takedown_store_batch,
     upsert_store_batch,
 )
 
@@ -96,7 +95,7 @@ def test_lifecycle_face_composes_solo_verbs_and_keeps_ghosts_out(spark, tmp_path
     stream = spark.readStream.schema("doc_id long, action string, text string").parquet(
         str(batch_dir)
     )
-    q = lifecycle_face(stream, s_face, str(tmp_path / "ckpt"))
+    q = start_face(stream, str(tmp_path / "ckpt"), lifecycle_store_batch, s_face)
     assert q.awaitTermination(300)
 
     # twin store: the solo verbs in the face's documented order, with
@@ -154,9 +153,6 @@ def test_lifecycle_face_drives_index_store_both_verbs(spark, tmp_path):
         ivf_append_assign,
         ivf_centroids,
     )
-    from calculate_file_content_size_for_vector_db_spark.streaming.lifecycle import (
-        lifecycle_store_batch,
-    )
 
     def emb(i):
         return [float((i * 7 + d * 3) % 11) for d in range(8)]
@@ -209,9 +205,6 @@ def test_lifecycle_face_passes_ledger_to_takedown_refolds(spark, tmp_path):
     from calculate_file_content_size_for_vector_db_spark.streaming.datacard import (
         append_card_partials,
         read_datacard,
-    )
-    from calculate_file_content_size_for_vector_db_spark.streaming.lifecycle import (
-        lifecycle_store_batch,
     )
 
     ledger = spark.createDataFrame(

@@ -1117,6 +1117,39 @@ def test_topk_ivf_stored_assign_probe2_requires_centroids(spark):
         sim.topk_ivf(df, df.where("vec_id < 2"), assign=assign, probes=2)
 
 
+def test_knn_graph_ivf_routes_sources_and_candidates_by_the_same_centroids(spark):
+    """Without a stored assign, the candidates are assigned against the
+    centroids the sources probe with — trained once on the candidate
+    side, or the ones given — so the inline build equals the
+    stored-assign build made with those centroids. Sources drawn from
+    one orthant make centroids trained on them differ from the
+    candidates'. A stored assign with probes > 1 and no centroids
+    raises instead of retraining."""
+    import random
+
+    rng = random.Random(47)
+    cand = _emb(spark, [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(40)])
+    src = _emb(
+        spark, [(100 + i, [rng.uniform(0, 1) for _ in range(64)]) for i in range(20)]
+    )
+
+    def edges(**kw):
+        return sorted(
+            (r.query_id, r.neighbor_id, r.rank)
+            for r in sim.knn_graph_ivf(src, k_graph=4, probes=2, candidates=cand, **kw).collect()
+        )
+
+    for cents in (sim.ivf_centroids(cand), sim.ivf_centroids(src)):
+        stored = edges(assign=sim.ivf_append_assign(cand, cents), centroids=cents)
+        assert edges(centroids=cents) == stored
+    assert edges() == edges(
+        assign=sim.ivf_append_assign(cand, sim.ivf_centroids(cand)),
+        centroids=sim.ivf_centroids(cand),
+    )
+    with pytest.raises(ValueError, match="centroids"):
+        sim.knn_graph_ivf(src, probes=2, assign=sim.ivf_assign(cand), candidates=cand)
+
+
 def _r6(x):
     """Spark's round(x, 6): HALF_UP on the double's decimal string."""
     from decimal import ROUND_HALF_UP, Decimal

@@ -5,6 +5,7 @@ import pytest
 
 from calculate_file_content_size_for_vector_db_spark.sources.io import read_table
 from calculate_file_content_size_for_vector_db_spark.streaming import windows as W
+from calculate_file_content_size_for_vector_db_spark.streaming import start_face
 
 SF = "/root/testdata/sf0.001"
 
@@ -168,7 +169,7 @@ def test_foreachbatch_upsert_sink(spark, batch_events, stream_dir, tmp_path):
     # stream a DOUBLED source (same dir read twice) into the upsert
     # sink: the target must converge to exactly one row per event_id
     from calculate_file_content_size_for_vector_db_spark.streaming.sinks import (
-        stream_upsert_parquet,
+        upsert_parquet_batch,
     )
 
     stream = spark.readStream.schema(batch_events.schema).parquet(stream_dir)
@@ -176,8 +177,8 @@ def test_foreachbatch_upsert_sink(spark, batch_events, stream_dir, tmp_path):
         spark.readStream.schema(batch_events.schema).parquet(stream_dir)
     )
     target = str(tmp_path / "upsert_target")
-    q = stream_upsert_parquet(
-        doubled, target, str(tmp_path / "ckpt"), key="event_id"
+    q = start_face(
+        doubled, str(tmp_path / "ckpt"), upsert_parquet_batch, target, key="event_id"
     )
     q.awaitTermination(120)
     out = spark.read.parquet(target)
@@ -265,12 +266,7 @@ def test_streaming_incremental_dedup_foreachbatch(spark, tmp_path):
         )
 
     stream = spark.readStream.schema(new_docs.schema).parquet(d)
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = start_face(stream, str(tmp_path / "ckpt"), _ingest)
     q.awaitTermination(120)
 
     got = {r.doc_id for r in spark.read.parquet(admitted_dir).collect()}
@@ -309,12 +305,7 @@ def test_streaming_cms_sketch_merges_to_batch_sketch(spark, tmp_path):
         cms_sketch(batch_df).write.mode("append").parquet(parts_dir)
 
     stream = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src + "/p*")
-    q = (
-        stream.writeStream.foreachBatch(_sketch_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = start_face(stream, str(tmp_path / "ckpt"), _sketch_batch)
     q.awaitTermination(120)
 
     from pyspark.sql import functions as F
@@ -344,7 +335,7 @@ def test_streaming_neardup_gate_equals_sequential_greedy(spark, tmp_path):
     from calculate_file_content_size_for_vector_db_spark.operators import dedup
     from calculate_file_content_size_for_vector_db_spark.streaming.neardup import (
         admit_batch,
-        neardup_ingest_gate,
+        gate_trigger,
     )
 
     words = [f"w{i:03d}" for i in range(60)]
@@ -377,8 +368,8 @@ def test_streaming_neardup_gate_equals_sequential_greedy(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir / "*"))
     )
-    q = neardup_ingest_gate(
-        stream, bands_dir, sh_dir, admitted_dir, str(tmp_path / "ckpt")
+    q = start_face(
+        stream, str(tmp_path / "ckpt"), gate_trigger, bands_dir, sh_dir, admitted_dir
     )
     q.awaitTermination(180)
     got = sorted(r.doc_id for r in spark.read.parquet(admitted_dir).collect())
@@ -412,7 +403,7 @@ def test_streaming_neardup_gate_cold_start_bootstraps_store(spark, tmp_path):
     path-does-not-exist AnalysisException, and later triggers must
     still reject near-dups of cold-start admissions."""
     from calculate_file_content_size_for_vector_db_spark.streaming.neardup import (
-        neardup_ingest_gate,
+        gate_trigger,
     )
 
     words = [f"w{i:03d}" for i in range(40)]
@@ -437,8 +428,8 @@ def test_streaming_neardup_gate_cold_start_bootstraps_store(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir / "*"))
     )
-    q = neardup_ingest_gate(
-        stream, bands_dir, sh_dir, admitted_dir, str(tmp_path / "ckpt")
+    q = start_face(
+        stream, str(tmp_path / "ckpt"), gate_trigger, bands_dir, sh_dir, admitted_dir
     )
     q.awaitTermination(180)
     got = sorted(r.doc_id for r in spark.read.parquet(admitted_dir).collect())
@@ -465,7 +456,7 @@ def test_streaming_lake_maintenance_face_diffs_and_compaction_bins(spark, tmp_pa
     )
     from calculate_file_content_size_for_vector_db_spark.streaming.maintenance import (
         lake_file_listing,
-        lake_maintenance_face,
+        lake_maintenance_batch,
     )
 
     new_rows = [
@@ -489,8 +480,8 @@ def test_streaming_lake_maintenance_face_diffs_and_compaction_bins(spark, tmp_pa
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir / "*"))
     )
-    q = lake_maintenance_face(
-        stream, lake_dir, diff_dir, plan_dir, str(tmp_path / "ckpt"),
+    q = start_face(
+        stream, str(tmp_path / "ckpt"), lake_maintenance_batch, lake_dir, diff_dir, plan_dir,
         target_bytes=2048,
     )
     q.awaitTermination(180)
@@ -561,7 +552,7 @@ def test_streaming_index_maintenance_face_matches_batch_artifacts(spark, tmp_pat
         ivf_append_assign,
     )
     from calculate_file_content_size_for_vector_db_spark.streaming.index_maintenance import (
-        index_maintenance_face,
+        maintain_index_batch,
         read_bloom_bitmap,
     )
 
@@ -586,7 +577,7 @@ def test_streaming_index_maintenance_face_matches_batch_artifacts(spark, tmp_pat
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir / "*"))
     )
-    q = index_maintenance_face(stream, index_dir, str(tmp_path / "ckpt"))
+    q = start_face(stream, str(tmp_path / "ckpt"), maintain_index_batch, index_dir)
     q.awaitTermination(180)
 
     # (a) assignment store == batch assignment against the frozen store
@@ -644,7 +635,7 @@ def test_streaming_datacard_face_matches_batch_card(spark, tmp_path):
     )
     from calculate_file_content_size_for_vector_db_spark.streaming.datacard import (
         _hll_regs,
-        datacard_face,
+        append_card_partials,
         read_datacard,
     )
 
@@ -674,7 +665,7 @@ def test_streaming_datacard_face_matches_batch_card(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir / "*"))
     )
-    q = datacard_face(stream, card_dir, str(tmp_path / "ckpt"))
+    q = start_face(stream, str(tmp_path / "ckpt"), append_card_partials, card_dir)
     q.awaitTermination(180)
 
     all_rows = [r for rows in batches for r in rows]
@@ -719,7 +710,7 @@ def test_streaming_drift_face_matches_batch_psi(spark, tmp_path):
         psi_length_hist,
     )
     from calculate_file_content_size_for_vector_db_spark.streaming.drift import (
-        drift_face,
+        append_drift_marginals,
         read_drift,
     )
 
@@ -754,7 +745,7 @@ def test_streaming_drift_face_matches_batch_psi(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir / "*"))
     )
-    q = drift_face(stream, marg_dir, str(tmp_path / "ckpt"))
+    q = start_face(stream, str(tmp_path / "ckpt"), append_drift_marginals, marg_dir)
     q.awaitTermination(180)
 
     all_docs = spark.createDataFrame([r for rows in batches for r in rows], schema)
@@ -840,7 +831,7 @@ def test_streaming_composed_faces_share_one_store(spark, tmp_path):
         drift_psi,
     )
     from calculate_file_content_size_for_vector_db_spark.streaming.composed import (
-        composed_ingest_face,
+        composed_ingest_batch,
     )
     from calculate_file_content_size_for_vector_db_spark.streaming.datacard import read_datacard
     from calculate_file_content_size_for_vector_db_spark.streaming.drift import read_drift
@@ -902,7 +893,7 @@ def test_streaming_composed_faces_share_one_store(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_dir / "*"))
     )
-    q = composed_ingest_face(stream, store, str(tmp_path / "ckpt"))
+    q = start_face(stream, str(tmp_path / "ckpt"), composed_ingest_batch, store)
     q.awaitTermination(300)
 
     # (a) the gate's greedy admitted set, cross- and within-trigger
@@ -991,7 +982,7 @@ def test_streaming_composed_faces_share_one_store(spark, tmp_path):
 @pytest.mark.slow
 def test_streaming_takedown_face_purges_all_stores_and_is_idempotent(spark, tmp_path):
     """VERDICT r10 item 9: right-to-be-forgotten as a streaming face
-    (streaming/takedown.py) — a purge-request stream whose triggers
+    (streaming/upsert.py) — a purge-request stream whose triggers
     drive the batch takedown operators against the shared store. Pins
     (a) per-doc-row stores (admitted/bands/shingles/index-assign)
     purged exactly == the batch anti-join, (b) the labels store
@@ -1007,8 +998,7 @@ def test_streaming_takedown_face_purges_all_stores_and_is_idempotent(spark, tmp_
         ivf_append_assign,
         ivf_centroids,
     )
-    from calculate_file_content_size_for_vector_db_spark.streaming.takedown import (
-        takedown_face,
+    from calculate_file_content_size_for_vector_db_spark.streaming.upsert import (
         takedown_store_batch,
     )
 
@@ -1066,7 +1056,7 @@ def test_streaming_takedown_face_purges_all_stores_and_is_idempotent(spark, tmp_
         .option("maxFilesPerTrigger", 1)
         .parquet(str(req_dir / "*"))
     )
-    q = takedown_face(stream, store, str(tmp_path / "ckpt"))
+    q = start_face(stream, str(tmp_path / "ckpt"), takedown_store_batch, store)
     q.awaitTermination(300)
 
     gone = {1, 22}
@@ -1122,7 +1112,7 @@ def test_takedown_face_over_composed_ingest_store(spark, tmp_path):
     from calculate_file_content_size_for_vector_db_spark.streaming.composed import (
         composed_ingest_batch,
     )
-    from calculate_file_content_size_for_vector_db_spark.streaming.takedown import (
+    from calculate_file_content_size_for_vector_db_spark.streaming.upsert import (
         takedown_store_batch,
     )
 
@@ -1186,7 +1176,6 @@ def test_streaming_upsert_face_rewrites_all_stores_and_is_idempotent(spark, tmp_
         ivf_centroids,
     )
     from calculate_file_content_size_for_vector_db_spark.streaming.upsert import (
-        upsert_face,
         upsert_store_batch,
     )
 
@@ -1233,7 +1222,7 @@ def test_streaming_upsert_face_rewrites_all_stores_and_is_idempotent(spark, tmp_
         .option("maxFilesPerTrigger", 1)
         .parquet(str(req_dir / "*"))
     )
-    q = upsert_face(stream, store, str(tmp_path / "ckpt"))
+    q = start_face(stream, str(tmp_path / "ckpt"), upsert_store_batch, store)
     q.awaitTermination(300)
 
     current_rows = [

@@ -539,7 +539,7 @@ def test_exists_answers_from_a_listing_without_spark_jobs(spark, spark_jobs, tmp
     """The faces' store probe: True iff the path exists and holds a
     non-hidden entry (what spark.read.parquet can read), answered from
     a file-system listing, so probing runs no Spark job."""
-    from calculate_file_content_size_for_vector_db_spark.streaming.takedown import (
+    from calculate_file_content_size_for_vector_db_spark.streaming.store_swap import (
         _exists,
     )
 
@@ -712,7 +712,7 @@ def test_takedown_face_drives_sum_fold_refolds(spark, tmp_path):
         append_drift_marginals,
         read_drift,
     )
-    from calculate_file_content_size_for_vector_db_spark.streaming.takedown import (
+    from calculate_file_content_size_for_vector_db_spark.streaming.upsert import (
         takedown_store_batch,
     )
 

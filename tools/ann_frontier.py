@@ -16,7 +16,9 @@ here: compressed scoring voids that monotone guarantee (the pinned
 non-monotone probe finding), so their frontier rows are exhibit data,
 not an invariant.
 
-Writes FRONTIER.md next to the repo root and prints one JSON line.
+Rewrites the generated block of FRONTIER.md (everything before its
+first "## " section, which it keeps with the rest of the file) and
+prints one JSON line.
 """
 
 from __future__ import annotations
@@ -257,12 +259,23 @@ def main() -> None:
         "cells the scan ratio was 0.98 at recall 1.0); production sizes",
         "n_cells with the token count.",
         "",
-        f"Regenerate: `python tools/ann_frontier.py {SF_DIR}`.",
-        "",
     ]
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "FRONTIER.md")
+    # the generated block runs up to the first "## " section; keep
+    # everything from there on (hand-written sections, the footer)
+    try:
+        with open(out) as f:
+            old = f.read()
+    except FileNotFoundError:
+        old = ""
+    cut = old.find("\n## ")
+    tail = (
+        old[cut + 1 :]
+        if cut >= 0
+        else f"Regenerate: `python tools/ann_frontier.py {SF_DIR}`.\n"
+    )
     with open(out, "w") as f:
-        f.write("\n".join(md))
+        f.write("\n".join(md) + "\n" + tail)
     print(json.dumps({"sf_dir": SF_DIR, "n_vectors": n, "tiers": rows}))
 
 
