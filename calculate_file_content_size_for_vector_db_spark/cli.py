@@ -72,8 +72,13 @@ def _report_folder(spark: SparkSession, folder: str, args: argparse.Namespace) -
     t0 = time.time()
     per_file = pdf_size_report(spark, folder, args.chunk_size, args.chunk_overlap, args.file_type)
     files = []
-    # --progress streams the rows partition by partition, one job each
-    for r in per_file.toLocalIterator() if args.progress else per_file.collect():
+    # --progress streams the rows partition by partition, one job each;
+    # the next partition's job runs while the current one's rows print
+    if args.progress:
+        stream = per_file.toLocalIterator(prefetchPartitions=True)
+    else:
+        stream = per_file.collect()
+    for r in stream:
         files.append(r)
         if args.progress:
             print(

@@ -15,15 +15,32 @@ every pipeline in this package assumes:
 
 It also owns the one lifetime rule for cached frames (``cache_scope``,
 ``cached``, ``release_cache``).
+
+Importing this module inside a Python task (every package function a
+worker unpickles imports the package, and with it this module) makes
+``zipimport.zipimporter.invalidate_caches`` a no-op for the rest of
+that worker process (``_skip_zip_rescans``). PySpark's worker calls
+``importlib.invalidate_caches()`` before every task, and each
+zipimporter then re-reads its archive's whole central directory:
+pyspark.zip, the py4j zip and the spark-core jar are on a worker's
+path, and those re-reads were most of the 0.25-0.47 s each task
+waited before its function ran. Skipping them is safe because the
+archives on a worker's path do not change while the application
+runs, and a zip added to the path later gets a fresh importer, whose
+constructor reads its directory. The driver never installs the guard
+(it runs no task). The first task of each worker process still pays
+one rescan: the guard installs while that task unpickles its
+function, after the worker's call.
 """
 
 from __future__ import annotations
 
 import os
 import threading
+import zipimport
 from contextlib import contextmanager
 
-from pyspark import StorageLevel
+from pyspark import StorageLevel, TaskContext
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -132,3 +149,14 @@ def _release(spark: SparkSession, frames: list[DataFrame], before: set[int]) -> 
     for jid in jmap.keySet().toArray():
         if int(jid) not in before:
             jmap.get(jid).unpersist(False)
+
+
+def _skip_zip_rescans() -> None:
+    """In a Python worker, stop zipimporters re-reading their archives
+    on every ``importlib.invalidate_caches()`` (see module docstring).
+    Outside a task it does nothing."""
+    if TaskContext.get() is not None:
+        zipimport.zipimporter.invalidate_caches = lambda self: None
+
+
+_skip_zip_rescans()

@@ -175,7 +175,10 @@ def _purge_and_insert(
         if sub in stores:
             swap_rewrite(spark, paths[sub], keyed_upsert(stores[sub], purge, new[sub], key))
     if labels is not None:
-        swap_rewrite(spark, paths["labels"], labels)
+        # the labels come out of a shuffle, so a part file's row order
+        # would follow fetch order; a narrow sort in the write stage
+        # fixes it without another job
+        swap_rewrite(spark, paths["labels"], labels.sortWithinPartitions(key))
     if "index/assign" in stores:
         assign = stores["index/assign"]
         index_purge, assigned = gone, assign.limit(0)

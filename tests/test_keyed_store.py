@@ -2,7 +2,8 @@
 keyed_upsert) and the stores rewritten through it: the broadcast
 policy pinned once at the verb, the NULL-key guard that keeps a
 replayed upsert equal to one run, the job counts of one upsert and one
-takedown trigger, and the parquet upsert sink's crash-safe rewrite."""
+takedown trigger, the labels store's key order, and the parquet upsert
+sink's crash-safe rewrite."""
 
 from __future__ import annotations
 
@@ -109,9 +110,9 @@ def test_upsert_replay_with_a_null_key_fails_and_keeps_the_store(spark, tmp_path
     assert not [p for p in os.listdir(store) if p.endswith("__swap")]
 
 
-def _all_legs_store(spark, store: str) -> None:
+def _all_legs_store(spark, store: str):
     """Per-doc rows, near-dup labels and an IVF index: every leg a
-    store trigger rewrites."""
+    store trigger rewrites. Returns the admitted docs."""
     from calculate_file_content_size_for_vector_db_spark.operators.similarity import (
         ivf_append_assign,
         ivf_centroids,
@@ -132,6 +133,7 @@ def _all_legs_store(spark, store: str) -> None:
     ivf_centroids(vecs).write.parquet(f"{store}/index/centroids")
     cents = spark.read.parquet(f"{store}/index/centroids")
     ivf_append_assign(vecs, cents).write.parquet(f"{store}/index/assign")
+    return docs
 
 
 _GROUPS = ["alpha beta gamma delta epsilon", "omega psi chi phi upsilon"]
@@ -139,6 +141,18 @@ _GROUPS = ["alpha beta gamma delta epsilon", "omega psi chi phi upsilon"]
 
 def _emb(i):
     return [float((i * 7 + d * 3) % 11) for d in range(8)]
+
+
+def _assert_labels_files_in_key_order(store: str) -> None:
+    """Every part file of ``labels/`` holds its rows sorted by doc_id,
+    so their order does not depend on shuffle fetch order."""
+    import pyarrow.parquet as pq
+
+    parts = [f for f in os.listdir(f"{store}/labels") if f.endswith(".parquet")]
+    assert parts
+    for part in parts:
+        ids = pq.read_table(f"{store}/labels/{part}").column("doc_id").to_pylist()
+        assert ids == sorted(ids), part
 
 
 def test_upsert_and_takedown_triggers_run_no_more_jobs_than_before(
@@ -152,7 +166,9 @@ def test_upsert_and_takedown_triggers_run_no_more_jobs_than_before(
     takedown and re-delivery, on a fresh copy of the store) is one
     pass: it rewrites each of the five stores once, and measured 77
     jobs, where running the takedown and then the upsert ran 134 and
-    rewrote every store twice."""
+    rewrote every store twice. After the upsert the labels equal a
+    from-scratch clustering of the current corpus, and after every
+    trigger each ``labels/`` part file is in doc_id order."""
     from pyspark.sql import DataFrameWriter
 
     from calculate_file_content_size_for_vector_db_spark.streaming.upsert import (
@@ -162,7 +178,7 @@ def test_upsert_and_takedown_triggers_run_no_more_jobs_than_before(
     )
 
     store, mixed = str(tmp_path / "store"), str(tmp_path / "mixed")
-    _all_legs_store(spark, store)
+    docs = _all_legs_store(spark, store)
     _all_legs_store(spark, mixed)
     redelivered = [(0, _GROUPS[1], _emb(100)), (99, _GROUPS[0], _emb(99))]
     batch = spark.createDataFrame(
@@ -170,7 +186,13 @@ def test_upsert_and_takedown_triggers_run_no_more_jobs_than_before(
     )
     takedown = spark.createDataFrame([(1,), (20,)], "doc_id long")
     upsert_jobs = spark_jobs(lambda: upsert_store_batch(batch, 0, store))
+    # doc 0 (its cluster's minimum) moved to group 1, doc 99 is new: the
+    # labels equal a from-scratch clustering of the current corpus
+    current = docs.where("doc_id <> 0").unionByName(batch.drop("embedding"))
+    assert _rows(spark.read.parquet(f"{store}/labels")) == _rows(dedup.neardup_clusters(current))
+    _assert_labels_files_in_key_order(store)
     takedown_jobs = spark_jobs(lambda: takedown_store_batch(takedown, 1, store))
+    _assert_labels_files_in_key_order(store)
     assert upsert_jobs <= 74, upsert_jobs
     assert takedown_jobs <= 52, takedown_jobs
     assert _rows(spark.read.parquet(f"{store}/admitted").select("doc_id")) == [
@@ -193,6 +215,7 @@ def test_upsert_and_takedown_triggers_run_no_more_jobs_than_before(
     )
     lifecycle_jobs = spark_jobs(lambda: lifecycle_store_batch(lifecycle, 2, mixed))
     assert lifecycle_jobs <= 77, lifecycle_jobs
+    _assert_labels_files_in_key_order(mixed)
     assert sorted(swaps) == sorted(
         f"{mixed}/{sub}__swap"
         for sub in ("admitted", "bands", "shingles", "labels", "index/assign")

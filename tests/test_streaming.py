@@ -1380,59 +1380,6 @@ def test_upsert_face_over_composed_ingest_store(spark, tmp_path):
     } == {(1, 3)}
 
 
-def test_upsert_face_spark_job_count_bounded(spark, spark_jobs, tmp_path):
-    """One upsert trigger against a store carrying every leg (per-doc
-    rows, near-dup labels, IVF index) runs a bounded number of Spark
-    jobs: one connected-components solve, edges discovered once, no
-    schema-inference job per store probe or swap re-read. Measured 81
-    jobs on the test session's local[8] (the two-contraction upsert
-    ran 182); the bound leaves headroom for adaptive-execution
-    variation. The labels stay equal to a from-scratch clustering of
-    the current corpus."""
-    from calculate_file_content_size_for_vector_db_spark.operators import dedup
-    from calculate_file_content_size_for_vector_db_spark.operators.similarity import (
-        ivf_append_assign,
-        ivf_centroids,
-    )
-    from calculate_file_content_size_for_vector_db_spark.streaming.upsert import (
-        upsert_store_batch,
-    )
-
-    groups = ["alpha beta gamma delta epsilon", "omega psi chi phi upsilon"]
-    rows = [(g * 10 + m, groups[g]) for g in range(2) for m in range(3)]
-    rows.append((30, "lonely words with no duplicate here"))
-
-    def emb(i):
-        return [float((i * 7 + d * 3) % 11) for d in range(8)]
-
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    vecs = spark.createDataFrame(
-        [(i, emb(i)) for i, _ in rows], "vec_id long, embedding array<double>"
-    )
-    store = str(tmp_path / "store")
-    docs.write.parquet(f"{store}/admitted")
-    dedup.shingle_sets(docs).write.parquet(f"{store}/shingles")
-    dedup.bands_from_shingle_sets(spark.read.parquet(f"{store}/shingles")).write.parquet(
-        f"{store}/bands"
-    )
-    dedup.neardup_clusters(docs).write.parquet(f"{store}/labels")
-    ivf_centroids(vecs).write.parquet(f"{store}/index/centroids")
-    cents = spark.read.parquet(f"{store}/index/centroids")
-    ivf_append_assign(vecs, cents).write.parquet(f"{store}/index/assign")
-
-    # doc 0 (its cluster's minimum) moves to group 1; doc 99 is new
-    batch = spark.createDataFrame(
-        [(0, groups[1], emb(100)), (99, groups[0], emb(99))],
-        "doc_id long, text string, embedding array<double>",
-    )
-    jobs = spark_jobs(lambda: upsert_store_batch(batch, 0, store))
-    assert jobs <= 100, jobs
-
-    current = docs.where("doc_id <> 0").unionByName(batch.drop("embedding"))
-    got = {tuple(r) for r in spark.read.parquet(f"{store}/labels").collect()}
-    assert got == {tuple(r) for r in dedup.neardup_clusters(current).collect()}
-
-
 @pytest.mark.slow
 def test_upsert_face_duplicate_deliveries_in_one_trigger_deterministic(spark, tmp_path):
     """Two deliveries of the SAME doc inside one trigger collapse to
